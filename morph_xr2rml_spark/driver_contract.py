@@ -2303,7 +2303,7 @@ SELECT 'has_zz_status',
 def q_sparql_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sparql import sparql_describe
 
-    return sparql_describe(_rom_trip(spark, sf_dir), f"{EX}customer/1")
+    return sparql_describe(_rom_trip(spark, sf_dir), f"DESCRIBE <{EX}customer/1>")
 
 
 SQL_SPARQL_DESCRIBE = f"""
@@ -2526,7 +2526,7 @@ def q_sparql_virtual_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
                   unique_key=["o_orderkey"])
     )
     vg = VirtualGraph(spark, parse_mapping(ORDERS_TTL), catalog)
-    return vg.describe_where(SPARQL_VIRTUAL_DESCRIBE)
+    return vg.describe(SPARQL_VIRTUAL_DESCRIBE)
 
 
 SQL_SPARQL_VIRTUAL_DESCRIBE = f"""

@@ -1,16 +1,19 @@
 from .bgp import (
+    Graph,
     SelectQuery,
+    TripleTable,
     parse_sparql,
     sparql_construct,
     sparql_describe,
-    sparql_describe_where,
     sparql_select,
 )
 from .results import ask, parse_term, to_sparql_json, to_sparql_xml, write_csv, write_tsv
 from .virtual import VirtualGraph, bind_patterns
 
 __all__ = [
+    "Graph",
     "SelectQuery",
+    "TripleTable",
     "VirtualGraph",
     "ask",
     "bind_patterns",
@@ -18,7 +21,6 @@ __all__ = [
     "parse_term",
     "sparql_construct",
     "sparql_describe",
-    "sparql_describe_where",
     "sparql_select",
     "to_sparql_json",
     "to_sparql_xml",

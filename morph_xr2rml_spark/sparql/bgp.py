@@ -1,5 +1,10 @@
-"""SPARQL SELECT over the materialized triple table as DataFrame
-composition.
+"""SPARQL over a triple table as DataFrame composition.
+
+:func:`parse_sparql` is the one reader of query text: it parses every
+query form (SELECT, ASK, CONSTRUCT, DESCRIBE) into a
+:class:`SelectQuery`, which the :class:`Graph` interface answers over
+the query's fragment — the whole table for a :class:`TripleTable`, the
+bound mapping branches for a :class:`..virtual.VirtualGraph`.
 
 The reference evaluates SPARQL by rewriting it into MongoDB/SQL queries
 through a bespoke abstract-query algebra (binder + AbstractQuery tree +
@@ -160,6 +165,15 @@ class SelectQuery:
     # (unaliased conditions get a hidden __g{i} name, droppped from the
     # projection)
     group_exprs: list[tuple[object, str]] = field(default_factory=list)
+    # the query form: SELECT | ASK | CONSTRUCT | DESCRIBE. ASK, CONSTRUCT
+    # and DESCRIBE keep their WHERE pattern and modifiers here like a
+    # SELECT * (a DESCRIBE projects its variables in `variables`)
+    form: str = "SELECT"
+    # CONSTRUCT: the template triple patterns instantiated per solution
+    template: list[TriplePattern] = field(default_factory=list)
+    # DESCRIBE: the resources named, IRIs (expanded and BASE-resolved)
+    # or ?variables, in query order
+    describe: list[Term] = field(default_factory=list)
 
 
 # filter expression tree
@@ -174,22 +188,31 @@ class FilterNode:
 # ---------------------------------------------------------------------------
 
 _PREFIX_RE = re.compile(r"PREFIX\s+([\w.-]*):\s*<([^>]*)>", re.IGNORECASE)
-# WHERE is optional in the SPARQL grammar (SELECT * { ... } and
+_FORM_RE = re.compile(r"(SELECT|ASK|CONSTRUCT|DESCRIBE)\b", re.IGNORECASE)
+# DatasetClause* (FROM [NAMED] IRIref), then the WHERE group's opening
+# '{'. WHERE is optional in the SPARQL grammar (SELECT * { ... } and
 # ASK { ... } are valid); the lookbehind keeps a ?where variable from
 # being eaten as the keyword.
+_WHERE_PAT = (
+    r"\s*(?P<dataset>(?:FROM\s+(?:NAMED\s+)?"
+    r"(?:<[^<>\s]*>|\w+(?:\.\w+)*:[\w.%-]*)\s*)*)"
+    r"(?:(?<![?\w])WHERE\s*)?\{"
+)
+_WHERE_RE = re.compile(_WHERE_PAT, re.IGNORECASE)
+# the projection runs up to where the dataset clauses / WHERE block start
 _SELECT_RE = re.compile(
-    r"SELECT\s+(DISTINCT\s+|REDUCED\s+)?(.*?)\s*(?:(?<![?\w])WHERE\s*)?\{",
+    r"\s*SELECT\s+(DISTINCT\s+|REDUCED\s+)?(.*?)(?=" + _WHERE_PAT + ")",
     re.IGNORECASE | re.DOTALL,
 )
+# a DESCRIBE term: ?var, <iri> or a prefixed name
+_DESCRIBE_TERM_RE = re.compile(r"\s*(\?\w+|<[^<>\s]*>|[\w.-]*:[\w.%-]*)")
 # Solution modifiers after the WHERE block. SPARQL's LimitOffsetClauses
 # allows LIMIT/OFFSET in either order; the scanner accepts any clause
 # order and raises on unconsumed text (a silently-dropped OFFSET would
 # return extra rows).
 _CLAUSE_RE = re.compile(r"\b(GROUP\s+BY|ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
 
-# DatasetClause: FROM [NAMED] IRIref — sits between the projection and
-# the WHERE block, so it lands inside _SELECT_RE's projection capture
-# and is cut out of it before variable extraction
+# one DatasetClause of _WHERE_PAT's dataset capture
 _DATASET_RE = re.compile(
     r"\bFROM\s+(NAMED\s+)?(<[^<>\s]*>|\w+(?:\.\w+)*:[\w.%-]*)",
     re.IGNORECASE
@@ -250,14 +273,14 @@ def _expand(tok: str, prefixes: dict[str, str]) -> str:
     return tok
 
 
-def _parse_prologue(text: str) -> dict[str, str]:
-    """PREFIX map + the BASE IRI (under _BASE_KEY) from the prologue;
-    relative PREFIX IRIs themselves resolve against BASE."""
+def _parse_prologue(prologue: str) -> dict[str, str]:
+    """PREFIX map + the BASE IRI (under _BASE_KEY) from the
+    comment-free prologue text; relative PREFIX IRIs themselves resolve
+    against BASE."""
     from urllib.parse import urljoin
 
-    prefixes = dict(_PREFIX_RE.findall(text))
-    span = _PROLOGUE_RE.match(_strip_comments(text))
-    mb = re.search(r"\bBASE\s*<([^>]*)>", span.group(0), re.IGNORECASE)
+    prefixes = dict(_PREFIX_RE.findall(prologue))
+    mb = re.search(r"\bBASE\s*<([^>]*)>", prologue, re.IGNORECASE)
     if mb:
         base = mb.group(1)
         prefixes = {
@@ -273,26 +296,6 @@ def _parse_prologue(text: str) -> dict[str, str]:
 _PROLOGUE_RE = re.compile(
     r"\s*(?:(?:PREFIX\s+[\w.-]*:|BASE)\s*<[^>]*>\s*)*", re.IGNORECASE
 )
-
-
-def query_form(query: str) -> tuple[str, str, int, int]:
-    """(form, stripped_text, start, end): the query-form keyword
-    (SELECT/ASK/CONSTRUCT/DESCRIBE) that starts the query proper, with
-    comments removed and the prologue's PREFIX/BASE clauses skipped —
-    so an IRI like <http://x/ask/> inside a prologue line is never
-    mistaken for the keyword. Offsets index ``stripped_text``; callers
-    that rewrite the keyword splice there (comment removal is
-    semantics-preserving)."""
-    text = _strip_comments(query)
-    pos = _PROLOGUE_RE.match(text).end()
-    m = re.match(
-        r"(SELECT|ASK|CONSTRUCT|DESCRIBE)\b", text[pos:], re.IGNORECASE
-    )
-    if not m:
-        raise ValueError(
-            "not a SPARQL query form (SELECT/ASK/CONSTRUCT/DESCRIBE)"
-        )
-    return m.group(1).upper(), text, pos + m.start(1), pos + m.end(1)
 
 
 def _strip_comments(text: str) -> str:
@@ -355,93 +358,196 @@ def _now_term() -> str:
 
 
 def parse_sparql(text: str) -> SelectQuery:
+    """Parse a SPARQL query of any form — the one reader of query text.
+
+    Comments are stripped, the prologue's PREFIX/BASE declarations are
+    read (BASE resolves every relative IRI, DESCRIBE terms included)
+    and NOW() is stamped once for the whole query. Every form returns a
+    SelectQuery whose ``form`` names it: ASK keeps its pattern as a
+    SELECT *, CONSTRUCT adds its ``template``, and DESCRIBE lists its
+    terms in ``describe`` and projects its variables."""
     _QUERY_NOW.value = _now_term()
     text = _strip_comments(text)
-    prefixes = _parse_prologue(text)
     end = _PROLOGUE_RE.match(text).end()
-    text = (
-        re.sub(r"\bBASE\s*<[^>]*>", " ", text[:end], flags=re.IGNORECASE)
-        + text[end:]
-    )
-    body = _PREFIX_RE.sub("", text)
-    return _parse_select(body, prefixes)
+    prefixes = _parse_prologue(text[:end])
+    body = text[end:]
+    m = _FORM_RE.match(body)
+    if not m:
+        raise ValueError(
+            "not a SPARQL query form (SELECT/ASK/CONSTRUCT/DESCRIBE)"
+        )
+    form = m.group(1).upper()
+    if form == "SELECT":
+        return _parse_select(body, prefixes)
+    if form == "ASK":
+        q = _parse_where(body, m.end(), prefixes)
+    elif form == "CONSTRUCT":
+        q = _parse_construct(body, m.end(), prefixes)
+    else:
+        q = _parse_describe(body, m.end(), prefixes)
+    q.form = form
+    return q
 
 
-def _parse_select(body: str, prefixes: dict[str, str]) -> SelectQuery:
-    msel = _SELECT_RE.search(body)
-    if not msel:
-        raise ValueError("only SELECT queries are supported")
-    # REDUCED permits (without requiring) duplicate elimination
-    # (SPARQL 1.1 §18.2.5.3.3); evaluating it as DISTINCT is conformant
-    # and keeps results deterministic across plans
-    distinct = bool(msel.group(1))
-    proj = msel.group(2).strip()
-
-    from_graphs: list[str] = []
-    from_named: list[str] = []
-
-    def _take_dataset(m: re.Match) -> str:
-        term = _expand(m.group(2), prefixes)
-        (from_named if m.group(1) else from_graphs).append(term)
-        return " "
-
-    proj = _DATASET_RE.sub(_take_dataset, proj).strip()
-
-    variables: list[str] = []
-    aggregates: list[Aggregate] = []
-    projections: list[tuple[object, str]] = []
-    if proj != "*":
-        for item in _projection_items(proj):
-            if item.startswith("?"):
-                variables.append(item[1:])
-                continue
-            ma = _AGG_RE.match(item)
-            if ma:
-                arg = ma.group("arg")
-                sep = ma.group("sep")
-                aggregates.append(
-                    Aggregate(
-                        ma.group("func").lower(),
-                        None if arg == "*" else arg[1:],
-                        ma.group("alias"),
-                        distinct=bool(ma.group("distinct")),
-                        sep=" " if sep is None else re.sub(r"\\(.)", r"\1", sep),
-                    )
-                )
-                # keep the alias at its projection position so the
-                # result column order follows the SELECT clause
-                variables.append(ma.group("alias"))
-                continue
-            # general (expr AS ?alias) projection (SPARQL 1.1 §18.4);
-            # aggregate calls inside are legal and pulled post-group
-            node, alias = _parse_projection_expr(item, prefixes)
-            projections.append((node, alias))
-            variables.append(alias)
-
-    # WHERE block: the SELECT regex ends at the opening '{'
-    start = msel.end() - 1
-    i = _match_brace(body, start)
-    where_src = body[start + 1 : i]
-    tail = body[i + 1 :]
-
-    group = _parse_group(where_src, prefixes)
+def _parse_where(src: str, pos: int, prefixes: dict[str, str]) -> SelectQuery:
+    """``DatasetClause* WhereClause SolutionModifier`` at ``src[pos:]``
+    -> a SELECT * query over the pattern."""
+    m = _WHERE_RE.match(src, pos)
+    if not m:
+        raise ValueError(
+            f"expected a WHERE block at: {src[pos:pos + 60].strip()!r}"
+        )
+    q = SelectQuery([], Group())
+    for md in _DATASET_RE.finditer(m.group("dataset")):
+        (q.from_named if md.group(1) else q.from_graphs).append(
+            _expand(md.group(2), prefixes)
+        )
+    start = m.end() - 1
+    i = _match_brace(src, start)
+    q.where = _parse_group(src[start + 1 : i], prefixes)
+    tail = src[i + 1 :]
 
     # HAVING(expr) sits between GROUP BY and ORDER BY; cut it out
     # before the clause scan (its parens would confuse the clause split)
-    having: FilterNode | None = None
     mh = re.search(r"HAVING\s*\(", tail, re.IGNORECASE)
     if mh:
         j = _match_paren(tail, mh.end() - 1)
-        having = _parse_having(tail[mh.end() : j], prefixes)
+        q.having = _parse_having(tail[mh.end() : j], prefixes)
         tail = tail[: mh.start()] + tail[j + 1 :]
 
-    group_by, group_exprs, order_by, limit, offset = _parse_tail(
-        tail, prefixes
+    q.group_by, q.group_exprs, q.order_by, q.limit, q.offset = _parse_tail(
+        tail, prefixes, _in_scope(q.where)
     )
-    return SelectQuery(
-        variables, group, distinct, order_by, limit, offset, aggregates,
-        group_by, having, from_graphs, from_named, projections, group_exprs,
-    )
+    return q
+
+
+def _parse_select(body: str, prefixes: dict[str, str]) -> SelectQuery:
+    msel = _SELECT_RE.match(body)
+    if not msel:
+        raise ValueError(f"cannot parse SELECT query: {body[:60].strip()!r}")
+    q = _parse_where(body, msel.end(), prefixes)
+    # REDUCED permits (without requiring) duplicate elimination
+    # (SPARQL 1.1 §18.2.5.3.3); evaluating it as DISTINCT is conformant
+    # and keeps results deterministic across plans
+    q.distinct = bool(msel.group(1))
+    proj = msel.group(2).strip()
+    if proj == "*":
+        return q
+    # a projection alias must name a new variable (SPARQL 1.1 §18.2.4.1)
+    scope = _in_scope(q.where) | {n for _t, n in q.group_exprs}
+    for item in _projection_items(proj):
+        if item.startswith("?"):
+            q.variables.append(item[1:])
+            continue
+        ma = _AGG_RE.match(item)
+        if ma:
+            arg = ma.group("arg")
+            sep = ma.group("sep")
+            alias = _new_alias(ma.group("alias"), scope)
+            q.aggregates.append(
+                Aggregate(
+                    ma.group("func").lower(),
+                    None if arg == "*" else arg[1:],
+                    alias,
+                    distinct=bool(ma.group("distinct")),
+                    sep=" " if sep is None else re.sub(r"\\(.)", r"\1", sep),
+                )
+            )
+        else:
+            # general (expr AS ?alias) projection (SPARQL 1.1 §18.4);
+            # aggregate calls inside are legal and pulled post-group
+            node, alias = _parse_projection_expr(item, prefixes, scope)
+            q.projections.append((node, alias))
+        # keep the alias at its projection position so the result
+        # column order follows the SELECT clause
+        q.variables.append(alias)
+    return q
+
+
+def _parse_construct(
+    body: str, pos: int, prefixes: dict[str, str]
+) -> SelectQuery:
+    """``CONSTRUCT { template } DatasetClause* WhereClause ...``, or the
+    SPARQL 1.1 shorthand ``CONSTRUCT WHERE { triples }`` whose pattern
+    is its own template (a plain BGP, per the spec)."""
+    m = re.compile(r"\s*\{").match(body, pos)
+    if m:
+        end = _match_brace(body, m.end() - 1)
+        template = _parse_triples(body[m.end() : end], prefixes)
+        q = _parse_where(body, end + 1, prefixes)
+    else:
+        q = _parse_where(body, pos, prefixes)
+        template = list(q.where.patterns)
+        if q.where != Group(patterns=template):
+            raise ValueError(
+                "CONSTRUCT WHERE takes a basic graph pattern only"
+            )
+    if any(isinstance(tp.p, Path) for tp in template):
+        raise ValueError(
+            "property paths are not allowed in a CONSTRUCT template"
+        )
+    q.template = template
+    return q
+
+
+def _parse_describe(
+    body: str, pos: int, prefixes: dict[str, str]
+) -> SelectQuery:
+    """``DESCRIBE term+ DatasetClause* WhereClause? ...``: the terms are
+    IRIs, prefixed names or variables; variables need the WHERE."""
+    terms: list[str] = []
+    while m := _DESCRIBE_TERM_RE.match(body, pos):
+        terms.append(_expand(m.group(1), prefixes))
+        pos = m.end()
+    if not terms:
+        raise ValueError(
+            "DESCRIBE needs IRIs or variables (DESCRIBE * is not supported)"
+        )
+    has_where = bool(body[pos:].strip())
+    q = _parse_where(body, pos, prefixes) if has_where else SelectQuery([], Group())
+    q.describe = terms
+    q.variables = [t[1:] for t in terms if _is_var(t)]
+    if q.variables and not has_where:
+        raise ValueError("DESCRIBE ?var needs a WHERE clause")
+    return q
+
+
+def _in_scope(g: Group) -> set[str]:
+    """Names of the variables in scope in a group graph pattern (SPARQL
+    1.1 §18.2.1): those its triple patterns, OPTIONAL / UNION / GRAPH
+    parts, BIND, VALUES and subquery projections can bind — FILTER,
+    MINUS and EXISTS bind none."""
+    out = {
+        t[1:]
+        for tp in g.patterns
+        for t in (tp.s, tp.p, tp.o)
+        if isinstance(t, str) and _is_var(t)
+    }
+    out |= {t[1:] for t, _g in g.graphs if _is_var(t)}
+    out |= {v for _e, v in g.binds}
+    out |= {v for vs, _rows in g.values for v in vs}
+    for sub in (
+        g.optionals
+        + [b for br in g.unions for b in br]
+        + [sub for _t, sub in g.graphs]
+    ):
+        out |= _in_scope(sub)
+    for s in g.subselects:
+        out |= set(s.variables) or _in_scope(s.where)
+    return out
+
+
+def _new_alias(alias: str, scope: set[str]) -> str:
+    """``alias`` once checked to name no in-scope variable (SPARQL 1.1
+    §18.2.4.1) — rebinding one would silently overwrite its column.
+    The alias joins ``scope``."""
+    if alias in scope:
+        raise ValueError(
+            f"?{alias} is already in scope; (expr AS ?{alias}) must "
+            "bind a new variable"
+        )
+    scope.add(alias)
+    return alias
 
 
 def _projection_items(proj: str) -> list[str]:
@@ -471,11 +577,12 @@ def _projection_items(proj: str) -> list[str]:
 
 
 def _parse_projection_expr(
-    item: str, prefixes: dict[str, str]
+    item: str, prefixes: dict[str, str], scope: set[str]
 ) -> tuple[object, str]:
     """``(expr AS ?alias)`` -> (value tree, alias). The expr reuses the
     HAVING grammar: the FILTER value grammar plus aggregate calls at
-    the primary level (``(COUNT(?x) * 2 AS ?y)``)."""
+    the primary level (``(COUNT(?x) * 2 AS ?y)``). Raises when the
+    alias names a variable in ``scope``."""
     inner = item[1:-1].strip()
     m = _BIND_RE.match(inner)
     if not m:
@@ -487,11 +594,11 @@ def _parse_projection_expr(
     node = p.or_expr()
     if p._peek() is not None:
         raise ValueError(f"unsupported SELECT expression tail: {item!r}")
-    return node, m.group("var")
+    return node, _new_alias(m.group("var"), scope)
 
 
 def _parse_tail(
-    tail: str, prefixes: dict[str, str]
+    tail: str, prefixes: dict[str, str], scope: set[str]
 ) -> tuple[
     list[str],
     list[tuple[object, str]],
@@ -516,7 +623,7 @@ def _parse_tail(
         seg = tail[m.end() : end].strip()
         kw = re.sub(r"\s+", " ", m.group(1).upper())
         if kw == "GROUP BY":
-            group_by, group_exprs = _parse_group_by(seg, prefixes)
+            group_by, group_exprs = _parse_group_by(seg, prefixes, scope)
         elif kw == "ORDER BY":
             order_by = _parse_order(seg, prefixes)
         elif kw == "LIMIT":
@@ -531,12 +638,13 @@ def _parse_tail(
 
 
 def _parse_group_by(
-    seg: str, prefixes: dict[str, str]
+    seg: str, prefixes: dict[str, str], scope: set[str]
 ) -> tuple[list[str], list[tuple[object, str]]]:
     """GroupCondition list (SPARQL 1.1 grammar [20]): ?var |
     (expr AS ?alias) | (expr) | a bare function call. Expression
     conditions become (tree, name) pairs — aliased names are
-    projectable; unaliased ones get hidden __g{i} names."""
+    projectable (and must not name a variable in ``scope``); unaliased
+    ones get hidden __g{i} names."""
     names: list[str] = []
     exprs: list[tuple[object, str]] = []
     s = seg.strip()
@@ -563,7 +671,7 @@ def _parse_group_by(
             s = s[j + 1 :].strip()
             mb = _BIND_RE.match(inner)
             if mb:
-                name = mb.group("var")
+                name = _new_alias(mb.group("var"), scope)
                 exprs.append((_value(mb.group("expr")), name))
             else:
                 name = f"__g{gi}"
@@ -2271,8 +2379,16 @@ def _order_cols(df: DataFrame, order_by: list[tuple[object, bool]]) -> list[Colu
 def sparql_select(triples: DataFrame, query: str | SelectQuery) -> DataFrame:
     """Evaluate a SPARQL SELECT (subset) over a (subj, pred, obj)
     triple DataFrame; returns one column per projected variable."""
+    return _select_df(triples, _parsed(query))
+
+
+def _parsed(query: str | SelectQuery, form: str | None = None) -> SelectQuery:
+    """``query`` parsed (text) or as given (a parsed query), checked to
+    be of ``form`` when one is named."""
     q = parse_sparql(query) if isinstance(query, str) else query
-    return _select_df(triples, q)
+    if form is not None and q.form != form:
+        raise ValueError(f"not a {form} query: {q.form}")
+    return q
 
 
 def _select_df(
@@ -2416,123 +2532,119 @@ def _select_df_info(
     return df, mn & set(df.columns)
 
 
-_CONSTRUCT_RE = re.compile(
-    r"CONSTRUCT\s*\{(?P<template>.*?)\}\s*"
-    r"(?P<dataset>(?:FROM\s+(?:NAMED\s+)?\S+\s*)*)WHERE",
-    re.IGNORECASE | re.DOTALL,
-)
+class Graph:
+    """An RDF graph answering the four SPARQL query forms.
 
+    ``fragment(q)`` is the part of the graph query ``q`` needs: the
+    whole table for a materialized graph (:class:`TripleTable`), the
+    bound, pushed-down mapping branches for a virtual one
+    (:class:`..sparql.virtual.VirtualGraph`). SELECT, ASK, CONSTRUCT
+    and DESCRIBE of IRIs evaluate over it here, once for both kinds.
+    Each method takes query text or a query from :func:`parse_sparql`.
+    ``release()`` frees what the graph cached for the queries answered
+    so far (a no-op for a table)."""
 
-def sparql_construct(triples: DataFrame, query: str) -> DataFrame:
-    """CONSTRUCT (subset): instantiate the template triple patterns
-    from the WHERE bindings -> a new (subj, pred, obj) DataFrame
-    (S9's CONSTRUCT->RDF path). Unbound-variable rows are dropped per
-    SPARQL semantics; output is deduplicated (graph set semantics)."""
-    _QUERY_NOW.value = _now_term()  # fresh NOW() stamp for this query
-    prefixes = _parse_prologue(query)
-    body = _PREFIX_RE.sub(
-        "", re.sub(r"\bBASE\s*<[^>]*>", " ", query, flags=re.IGNORECASE)
-    )
-    mc = _CONSTRUCT_RE.search(body)
-    if mc:
-        template = _parse_triples(mc.group("template"), prefixes)
-        if mc.group("dataset"):
-            from_graphs: list[str] = []
-            from_named: list[str] = []
-            for md in _DATASET_RE.finditer(mc.group("dataset")):
-                (from_named if md.group(1) else from_graphs).append(
-                    _expand(md.group(2), prefixes)
-                )
-            triples = _apply_dataset(
-                triples,
-                SelectQuery(
-                    variables=[], where=Group(),
-                    from_graphs=from_graphs, from_named=from_named,
-                ),
+    def fragment(self, q: SelectQuery) -> DataFrame:
+        raise NotImplementedError
+
+    def release(self) -> None:
+        pass
+
+    def select(self, query: str | SelectQuery) -> DataFrame:
+        q = _parsed(query, "SELECT")
+        return sparql_select(self.fragment(q), q)
+
+    def ask(self, query: str | SelectQuery) -> bool:
+        q = _parsed(query, "ASK")
+        return bool(sparql_select(self.fragment(q), q).take(1))
+
+    def construct(self, query: str | SelectQuery) -> DataFrame:
+        """Instantiate the template triple patterns from the WHERE
+        solutions -> a (subj, pred, obj) frame (S9's CONSTRUCT->RDF
+        path). Rows with an unbound template variable are dropped per
+        SPARQL semantics; output is deduplicated (graph set semantics)."""
+        q = _parsed(query, "CONSTRUCT")
+        bindings = sparql_select(self.fragment(q), q)
+
+        def term_col(t: Term) -> Column:
+            return F.col(t[1:]) if _is_var(t) else F.lit(t)
+
+        outs = [
+            bindings.select(
+                term_col(tp.s).alias("subj"),
+                term_col(tp.p).alias("pred"),
+                term_col(tp.o).alias("obj"),
+            ).where(
+                F.col("subj").isNotNull()
+                & F.col("pred").isNotNull()
+                & F.col("obj").isNotNull()
             )
-        start = body.index("{", mc.end() - 1)
-        end = _match_brace(body, start)
-        where = _parse_group(body[start + 1 : end], prefixes)
-    else:
-        # SPARQL 1.1 shorthand: CONSTRUCT WHERE { tp... } — the WHERE
-        # patterns are the template (plain BGP only, per the spec)
-        ms = re.search(r"CONSTRUCT\s+WHERE\s*\{", body, re.IGNORECASE)
-        if not ms:
-            raise ValueError("not a CONSTRUCT query")
-        start = ms.end() - 1
-        end = _match_brace(body, start)
-        template = _parse_triples(body[start + 1 : end], prefixes)
-        where = Group(patterns=list(template))
-    for tp in template:
-        if isinstance(tp.p, Path):
-            raise ValueError(
-                "property paths are not allowed in a CONSTRUCT template"
-            )
-    bindings = _group_df(triples, where)
-
-    def term_col(t: Term) -> Column:
-        return F.col(t[1:]) if _is_var(t) else F.lit(t)
-
-    outs = []
-    for tp in template:
-        out = bindings.select(
-            term_col(tp.s).alias("subj"),
-            term_col(tp.p).alias("pred"),
-            term_col(tp.o).alias("obj"),
-        ).where(
-            F.col("subj").isNotNull()
-            & F.col("pred").isNotNull()
-            & F.col("obj").isNotNull()
+            for tp in q.template
+        ]
+        return functools.reduce(DataFrame.unionByName, outs).dropDuplicates(
+            ["subj", "pred", "obj"]
         )
-        outs.append(out)
-    return functools.reduce(DataFrame.unionByName, outs).dropDuplicates(
-        ["subj", "pred", "obj"]
-    )
+
+    def describe(self, query: str | SelectQuery) -> DataFrame:
+        """``DESCRIBE t... [WHERE {...}]``: every triple whose subject or
+        object is a described resource — an IRI named, or a term a named
+        variable binds to (the reference expands DESCRIBE the same way,
+        SparqlQueryRewriter.expandDescribe). Named IRIs only: the
+        fragment of the triples they can appear in is the description.
+        With variables, fully distributed — the bound-node set stays a
+        DataFrame and the description is two semi-joins (subject side,
+        object side) against the whole graph, never a collect of the
+        node list."""
+        q = _parsed(query, "DESCRIBE")
+        if q.from_graphs or q.from_named:
+            raise ValueError("FROM / FROM NAMED are not supported on DESCRIBE")
+        iris = [t for t in q.describe if not _is_var(t)]
+        if not q.variables:
+            about = [
+                tp
+                for iri in iris
+                for tp in (
+                    TriplePattern(iri, "?p", "?o"),
+                    TriplePattern("?s", "?p2", iri),
+                )
+            ]
+            frag = self.fragment(SelectQuery([], Group(patterns=about)))
+            return frag.where(F.col("subj").isin(iris) | F.col("obj").isin(iris))
+        bindings = sparql_select(self.fragment(q), q)
+        nodes = bindings.select(
+            F.explode(F.array(*[F.col(v) for v in q.variables])).alias("n")
+        )
+        if iris:
+            nodes = nodes.union(
+                bindings.sparkSession.createDataFrame(
+                    [(i,) for i in iris], "n string"
+                )
+            )
+        nodes = nodes.distinct()
+        whole = self.fragment(
+            SelectQuery([], Group(patterns=[TriplePattern("?s", "?p", "?o")]))
+        )
+        subj_side = whole.join(nodes, whole["subj"] == nodes["n"], "left_semi")
+        obj_side = whole.join(nodes, whole["obj"] == nodes["n"], "left_semi")
+        return subj_side.unionByName(obj_side).dropDuplicates()
 
 
-def sparql_describe(triples: DataFrame, resource: str) -> DataFrame:
-    """DESCRIBE <iri>: every triple where the resource is subject or
-    object (the reference expands DESCRIBE the same way,
-    SparqlQueryRewriter.expandDescribe)."""
-    iri = resource if resource.startswith("<") else f"<{resource}>"
-    return triples.where(
-        (F.col("subj") == F.lit(iri)) | (F.col("obj") == F.lit(iri))
-    )
+class TripleTable(Graph):
+    """A materialized (subj, pred, obj[, graph]) frame as a
+    :class:`Graph`: every query's fragment is the whole table."""
+
+    def __init__(self, triples: DataFrame):
+        self.triples = triples
+
+    def fragment(self, q: SelectQuery) -> DataFrame:
+        return self.triples
 
 
-def sparql_describe_where(triples: DataFrame, query: str) -> DataFrame:
-    """DESCRIBE ?v [?w ...] WHERE { ... }: evaluate the pattern, then
-    describe every term the projected variables bind to. Fully
-    distributed — the bound-node set stays a DataFrame and the
-    description is two semi-joins (subject side, object side), never a
-    collect of the node list."""
-    stripped = _strip_comments(query)
-    m = re.search(
-        r"\bDESCRIBE\s+((?:\?\w+\s*)+)WHERE\s*\{",
-        stripped,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError("not a DESCRIBE ?var WHERE query")
-    variables = re.findall(r"\?(\w+)", m.group(1))
-    # rewrite on the comment-stripped text (the same input the
-    # detection ran on — a '#' comment between the variable list and
-    # WHERE would otherwise make this substitution a silent no-op;
-    # comment removal is semantics-preserving)
-    select = re.sub(
-        r"\bDESCRIBE\s+((?:\?\w+\s*)+)WHERE\b",
-        "SELECT " + " ".join(f"?{v}" for v in variables) + " WHERE",
-        stripped,
-        count=1,
-        flags=re.IGNORECASE,
-    )
-    bindings = sparql_select(triples, select)
-    nodes = functools.reduce(
-        DataFrame.union,
-        [bindings.select(F.col(v).alias("n")) for v in variables],
-    ).distinct()
-    subj_side = triples.join(
-        nodes, triples["subj"] == nodes["n"], "left_semi"
-    )
-    obj_side = triples.join(nodes, triples["obj"] == nodes["n"], "left_semi")
-    return subj_side.unionByName(obj_side).dropDuplicates()
+def sparql_construct(triples: DataFrame, query: str | SelectQuery) -> DataFrame:
+    """CONSTRUCT over a materialized triple frame (:meth:`Graph.construct`)."""
+    return TripleTable(triples).construct(query)
+
+
+def sparql_describe(triples: DataFrame, query: str | SelectQuery) -> DataFrame:
+    """DESCRIBE over a materialized triple frame (:meth:`Graph.describe`)."""
+    return TripleTable(triples).describe(query)

@@ -1,13 +1,13 @@
-"""SPARQL Protocol 1.1 query endpoint over a materialized triple table.
+"""SPARQL Protocol 1.1 query endpoint over a materialized or virtual graph.
 
 The reference exposes its query translator as a JAX-RS REST service
 (morph-xr2rml-dist SparqlRestService.scala: GET /sparql?query=...,
 URL-encoded and application/sparql-query POST, a /sparql/test probe,
 SELECT/ASK/DESCRIBE/CONSTRUCT forms, content-negotiated result
 serialization). This is the same protocol surface over the Spark
-engine: queries evaluate as Catalyst plans via sparql_select /
-sparql_construct / sparql_describe and results serialize through
-sparql/results.py.
+engine: each query is parsed once, evaluates as Catalyst plans through
+the method of its form on the one Graph interface (sparql/bgp.py), and
+results serialize through sparql/results.py.
 
 Driver-side by design: an endpoint answers interactive queries, so
 result sets are bounded (``max_rows``); bulk exports go through the
@@ -17,29 +17,29 @@ distributed sinks instead.
 from __future__ import annotations
 
 import json
-import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
-from pyspark.sql import DataFrame
-
 from ..plans import caching
-from .bgp import (
-    parse_sparql,
-    query_form,
-    sparql_construct,
-    sparql_describe,
-    sparql_describe_where,
-    sparql_select,
-)
-from .results import ask, to_sparql_json, to_sparql_xml
+from .bgp import Graph, TripleTable, parse_sparql
+from .results import to_sparql_json, to_sparql_xml
 
 _XML_TYPES = ("application/sparql-results+xml", "application/xml", "text/xml")
 
 # requests share the process-global cache/checkpoint registries, so
 # their evaluate + release pairs must not interleave
 _request_lock = threading.Lock()
+
+
+def as_graph(source) -> Graph:
+    """The :class:`..bgp.Graph` an endpoint answers from: a Graph (a
+    :class:`..virtual.VirtualGraph`) as is, a triple DataFrame as a
+    :class:`..bgp.TripleTable`; a zero-argument provider is called
+    first."""
+    if callable(source):
+        source = source()
+    return source if isinstance(source, Graph) else TripleTable(source)
 
 
 def evaluate(
@@ -52,30 +52,29 @@ def evaluate(
 ) -> tuple[str, str]:
     """-> (content_type, body) for one SPARQL protocol request.
 
-    ``triples`` is a materialized triple DataFrame — or a
-    :class:`..sparql.virtual.VirtualGraph`, in which case each request
-    is answered in the reference's rewriting mode (per-request
-    translation against the mapped sources, SparqlRestService ->
-    MorphBaseRunner.runQuery:57-107) instead of from a materialized
-    table.
+    The query is parsed once and answered by the graph method of its
+    form — ``select`` / ``ask`` / ``construct`` / ``describe`` of the
+    one :class:`..bgp.Graph` interface. ``triples`` is a materialized
+    triple DataFrame, a zero-argument provider of one, or a Graph — a
+    :class:`..sparql.virtual.VirtualGraph` answers each request in the
+    reference's rewriting mode (per-request translation against the
+    mapped sources, SparqlRestService -> MorphBaseRunner.runQuery:57-107)
+    instead of from a materialized table. DESCRIBE takes one or more
+    IRIs (written in full, as prefixed names or BASE-relative) and
+    variables bound by a WHERE clause.
 
     ``default_graphs`` / ``named_graphs`` are the SPARQL protocol's
     RDF-dataset parameters (``default-graph-uri`` / ``named-graph-uri``,
-    protocol §2.1.4), honored for SELECT and ASK as if the query had
-    written the equivalent FROM / FROM NAMED clauses. Supplying them
-    together with in-query dataset clauses is an error (the protocol
-    allows either refusal or override; refusal is unambiguous), as is
-    supplying them on CONSTRUCT/DESCRIBE (unsupported here). The
-    reference's service accepts these parameters but silently ignores
-    them (SparqlRestService.scala:51-52,90-91); honoring them is an
-    intentional superset."""
-    virtual = hasattr(triples, "fragment")
-    form, _text, _s, _e = query_form(query)
-    want_xml = any(t in accept for t in _XML_TYPES)
-    has_dataset = bool(default_graphs or named_graphs)
-
-    def _with_dataset(body: str):
-        q = parse_sparql(body)
+    protocol §2.1.4), honored for SELECT, ASK and CONSTRUCT as if the
+    query had written the equivalent FROM / FROM NAMED clauses.
+    Supplying them together with in-query dataset clauses is an error
+    (the protocol allows either refusal or override; refusal is
+    unambiguous), as is supplying them on DESCRIBE (unsupported here).
+    The reference's service accepts these parameters but silently
+    ignores them (SparqlRestService.scala:51-52,90-91); honoring them is
+    an intentional superset."""
+    q = parse_sparql(query)
+    if default_graphs or named_graphs:
         if q.from_graphs or q.from_named:
             raise ValueError(
                 "dataset supplied both in the query (FROM/FROM NAMED) "
@@ -83,73 +82,34 @@ def evaluate(
             )
         q.from_graphs = [f"<{g.strip('<>')}>" for g in default_graphs]
         q.from_named = [f"<{g.strip('<>')}>" for g in named_graphs]
-        return q
-
-    if has_dataset and form in ("CONSTRUCT", "DESCRIBE"):
-        raise ValueError(
-            "protocol dataset parameters are not supported for "
-            "CONSTRUCT/DESCRIBE; use FROM / FROM NAMED in the query"
-        )
-    if form == "ASK":
-        # strip the ASK keyword into a SELECT * / LIMIT 1 existence
-        # probe — spliced at the anchored query-form position, so an
-        # IRI containing a word-bounded 'ask' in a PREFIX line is safe
-        body = _text[:_s] + "SELECT *" + _text[_e:]
-        if has_dataset:
-            q = _with_dataset(body)
-            q.limit = 1
-            probe = triples.select(q) if virtual else sparql_select(triples, q)
-            result = bool(probe.take(1))
-        else:
-            result = (
-                triples.ask(query)
-                if virtual
-                else ask(sparql_select(triples, body))
-            )
+    out = getattr(as_graph(triples), q.form.lower())(q)
+    want_xml = any(t in accept for t in _XML_TYPES)
+    if q.form == "SELECT":
+        if want_xml:
+            return ("application/sparql-results+xml", to_sparql_xml(out, max_rows))
+        return ("application/sparql-results+json", to_sparql_json(out, max_rows))
+    if q.form == "ASK":
         if want_xml:
             return (
                 "application/sparql-results+xml",
                 '<?xml version="1.0"?>\n<sparql xmlns="http://www.w3.org/2005/'
-                f'sparql-results#"><head/><boolean>{str(result).lower()}</boolean>'
+                f'sparql-results#"><head/><boolean>{str(out).lower()}</boolean>'
                 "</sparql>",
             )
         return (
             "application/sparql-results+json",
-            json.dumps({"head": {}, "boolean": result}),
+            json.dumps({"head": {}, "boolean": out}),
         )
-    if form in ("CONSTRUCT", "DESCRIBE"):
-        if form == "CONSTRUCT":
-            out = (
-                triples.construct(query)
-                if virtual
-                else sparql_construct(triples, query)
-            )
-        else:
-            m = re.search(r"DESCRIBE\s+(<[^>]*>)", query, re.IGNORECASE)
-            if m:
-                out = (
-                    triples.describe(m.group(1))
-                    if virtual
-                    else sparql_describe(triples, m.group(1))
-                )
-            elif virtual:
-                out = triples.describe_where(query)
-            else:
-                out = sparql_describe_where(triples, query)
-        rows = out.limit(max_rows).collect()
-        nt = "".join(f"{r['subj']} {r['pred']} {r['obj']} .\n" for r in rows)
-        return ("application/n-triples", nt)
-    q = _with_dataset(query) if has_dataset else query
-    df = triples.select(q) if virtual else sparql_select(triples, q)
-    if want_xml:
-        return ("application/sparql-results+xml", to_sparql_xml(df, max_rows))
-    return ("application/sparql-results+json", to_sparql_json(df, max_rows))
+    rows = out.limit(max_rows).collect()
+    nt = "".join(f"{r['subj']} {r['pred']} {r['obj']} .\n" for r in rows)
+    return ("application/n-triples", nt)
 
 
 class SparqlEndpoint:
     """Embedded HTTP server speaking the SPARQL 1.1 protocol (query
-    operation) over one triple DataFrame — or over a zero-argument
-    provider callable, resolved per request. The provider form is the
+    operation) over one graph: a triple DataFrame or a
+    :class:`..bgp.Graph` — or a zero-argument provider callable of
+    either, resolved per request. The provider form is the
     incremental-answering hook (streaming.incremental.serve_incremental):
     a parquet-backed DataFrame freezes its file listing at analysis
     time, so a fixed frame would never see microbatches committed after
@@ -158,7 +118,14 @@ class SparqlEndpoint:
     :class:`..sparql.virtual.VirtualGraph` (directly or from the
     provider) serves every request in the reference's rewriting mode —
     per-request translation against the mapped sources, never a full
-    materialization (SparqlRestService -> runQuery)."""
+    materialization (SparqlRestService -> runQuery).
+
+    Every request is answered as in :func:`evaluate`: all four query
+    forms, DESCRIBE of several IRIs (full, prefixed or BASE-relative)
+    and of WHERE-bound variables. At the end of each request the graph
+    is released (a VirtualGraph drops the compilers and cached
+    fragments the request built), so a long-lived endpoint holds at
+    most one request's footprint."""
 
     def __init__(self, triples, host: str = "127.0.0.1",
                  port: int = 0, max_rows: int = 10_000):
@@ -199,15 +166,18 @@ class SparqlEndpoint:
                     # cached/checkpointed triple frame) are left alone.
                     with _request_lock:
                         mark = caching.job_mark()
+                        # a provider resolves anew for every request
+                        graph = as_graph(endpoint._source)
                         try:
                             ctype, body = evaluate(
-                                endpoint.triples, query,
+                                graph, query,
                                 self.headers.get("Accept", ""),
                                 endpoint.max_rows,
                                 default_graphs=default_graphs,
                                 named_graphs=named_graphs,
-                            )  # .triples resolves a provider per request
+                            )
                         finally:
+                            graph.release()
                             caching.release_since(mark)
                 except Exception as e:  # noqa: BLE001 — protocol error reply
                     self._respond(400, "text/plain", f"query error: {e}")
@@ -250,10 +220,6 @@ class SparqlEndpoint:
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None
-
-    @property
-    def triples(self) -> DataFrame:
-        return self._source() if callable(self._source) else self._source
 
     @property
     def port(self) -> int:

@@ -67,14 +67,13 @@ from ..mapping.model import (
 )
 from ..sources.catalog import _MONGO_FIND_RE, SourceCatalog
 from .bgp import (
+    Graph,
     Group,
     Path,
     SelectQuery,
     TriplePattern,
     _is_var,
-    parse_sparql,
-    sparql_construct,
-    sparql_describe_where,
+    _parsed,
     sparql_select,
 )
 from .results import parse_term
@@ -1068,15 +1067,17 @@ def _prop_scan_filter(
 # ---------------------------------------------------------------------------
 
 
-class VirtualGraph:
+class VirtualGraph(Graph):
     """Answer SPARQL queries over the graph a mapping *would* produce,
     materializing only the fragments the query's patterns can touch.
 
     ``fragment(query)`` is the reduced triple frame (the distributed
     analogue of the reference's temporary Jena graph,
-    MorphMongoQueryProcessor.process:45-150); ``select`` / ``construct``
-    / ``ask`` / ``describe`` evaluate the full SPARQL surface over it
-    with the ordinary distributed evaluator."""
+    MorphMongoQueryProcessor.process:45-150); the :class:`..bgp.Graph`
+    methods evaluate the full SPARQL surface over it with the ordinary
+    distributed evaluator. Two methods answer from the mapping itself
+    first: ``select`` (Constant Projection) and ``describe`` of
+    variables (two-phase)."""
 
     def __init__(
         self,
@@ -1271,7 +1272,7 @@ class VirtualGraph:
         a query mentioning GRAPH runs over the dataset view
         (``quads()`` semantics — default graph is NULL, patterns
         outside GRAPH match only the default graph)."""
-        q = parse_sparql(query) if isinstance(query, str) else query
+        q = _parsed(query)
         dataset = bool(q.from_graphs or q.from_named)
         quads = dataset or self._has_graphs(q.where)
         prop = self._propagation_constraints(q, quads, dataset)
@@ -1450,11 +1451,9 @@ class VirtualGraph:
     # -- query surface ------------------------------------------------------
 
     def select(self, query: str | SelectQuery) -> DataFrame:
-        q = parse_sparql(query) if isinstance(query, str) else query
+        q = _parsed(query, "SELECT")
         cp = self._constant_projection(q)
-        if cp is not None:
-            return cp
-        return sparql_select(self.fragment(q), q)
+        return super().select(q) if cp is None else cp
 
     def _constant_projection(self, q: SelectQuery) -> DataFrame | None:
         """§4.1 Constant Projection / Projection Pushing
@@ -1554,52 +1553,6 @@ class VirtualGraph:
             df = df.limit(q.limit)
         return df
 
-    def construct(self, query: str) -> DataFrame:
-        from .bgp import (
-            _CONSTRUCT_RE,
-            _DATASET_RE,
-            _PREFIX_RE,
-            _expand,
-            _match_brace,
-            _parse_group,
-            _parse_prologue,
-            _parse_triples,
-        )
-
-        prefixes = _parse_prologue(query)
-        body = _PREFIX_RE.sub(
-            "", re.sub(r"\bBASE\s*<[^>]*>", " ", query, flags=re.IGNORECASE)
-        )
-        from_graphs: list[str] = []
-        from_named: list[str] = []
-        mc = _CONSTRUCT_RE.search(body)
-        if mc:
-            for md in _DATASET_RE.finditer(mc.group("dataset") or ""):
-                (from_named if md.group(1) else from_graphs).append(
-                    _expand(md.group(2), prefixes)
-                )
-            start = body.index("{", mc.end() - 1)
-            where = _parse_group(
-                body[start + 1 : _match_brace(body, start)], prefixes
-            )
-        else:
-            ms = re.search(r"CONSTRUCT\s+WHERE\s*\{", body, re.IGNORECASE)
-            if not ms:
-                raise ValueError("not a CONSTRUCT query")
-            start = ms.end() - 1
-            where = Group(
-                patterns=_parse_triples(
-                    body[start + 1 : _match_brace(body, start)], prefixes
-                )
-            )
-        frag = self.fragment(
-            SelectQuery(
-                variables=[], where=where,
-                from_graphs=from_graphs, from_named=from_named,
-            )
-        )
-        return sparql_construct(frag, query)
-
     @staticmethod
     def _has_graphs(group: Group) -> bool:
         if group.graphs:
@@ -1613,101 +1566,48 @@ class VirtualGraph:
         )
         return any(VirtualGraph._has_graphs(g) for g in subs)
 
-    def ask(self, query: str) -> bool:
-        from .bgp import query_form
-
-        form, text, s, e = query_form(query)
-        if form == "ASK":
-            # expandAsk analogue (SparqlQueryRewriter); the SELECT
-            # parser treats WHERE as optional and accepts dataset
-            # clauses, so the anchored keyword swap is the whole
-            # rewrite (query_form skips the prologue, so an IRI
-            # containing 'ask' there is never the splice point)
-            query = text[:s] + "SELECT *" + text[e:]
-        q = parse_sparql(query)
-        q.limit = 1
-        return bool(sparql_select(self.fragment(q), q).take(1))
-
-    def describe(self, resource: str) -> DataFrame:
-        """DESCRIBE <iri>, virtually: the fragment of every triple the
-        resource can appear in (subject or object position) is exactly
-        the description, so no other part of the graph is built."""
-        iri = resource if resource.startswith("<") else f"<{resource}>"
-        frag = self.fragment(
-            SelectQuery(
-                variables=[],
-                where=Group(
-                    patterns=[
-                        TriplePattern(iri, "?p", "?o"),
-                        TriplePattern("?s", "?p2", iri),
-                    ]
-                ),
-            )
-        )
-        return frag.where(
-            (F.col("subj") == F.lit(iri)) | (F.col("obj") == F.lit(iri))
-        )
-
-    def describe_where(self, query: str, max_nodes: int = 50_000) -> DataFrame:
-        """``DESCRIBE ?v [?w ...] WHERE {...}``, two-phase virtual
-        (expandDescribe analogue, MorphBaseQueryTranslator.scala:86-92,
-        which also answers DESCRIBE without materializing):
+    def describe(
+        self, query: str | SelectQuery, max_nodes: int = 50_000
+    ) -> DataFrame:
+        """DESCRIBE, virtually. Named IRIs only: :meth:`Graph.describe`
+        over the fragment of every triple the resources can appear in
+        (subject or object position), so no other part of the graph is
+        built. With variables, two-phase (expandDescribe analogue,
+        MorphBaseQueryTranslator.scala:86-92, which also answers
+        DESCRIBE without materializing):
 
         phase 1 — evaluate the WHERE virtually (its patterns' fragment
         only) and collect the matched resource terms, bounded by
         ``max_nodes``;
         phase 2 — compile ONLY the triples-map branches that can mention
-        those resources (subject-compatible maps keep all their
-        properties; otherwise just the object maps / ref-object maps
-        that can produce a matched node), restricted to the nodes.
+        those resources and the named IRIs (subject-compatible maps keep
+        all their properties; otherwise just the object maps /
+        ref-object maps that can produce a matched node), restricted to
+        the nodes.
 
         Above the bound the node set is no longer driver-safe, so the
-        evaluation falls back to the fully distributed
-        materialize-then-describe path (two semi-joins). The default
-        bound is 50k terms (a few MB on the driver): past _ISIN_MAX the
-        phase-2 restriction is a broadcast semi-join, so large node
-        sets stay cheap — measured at sf0.1 (~15k matched customers),
-        two-phase runs 2-2.6x faster than the fallback it previously
-        hit at the old 10k bound."""
-        from .bgp import _strip_comments
-
-        stripped = _strip_comments(query)
-        m = re.search(
-            r"\bDESCRIBE\s+((?:\?\w+\s*)+)WHERE\s*\{",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError("not a DESCRIBE ?var WHERE query")
-        variables = re.findall(r"\?(\w+)", m.group(1))
-        # substitute on the same comment-stripped text the detection ran
-        # on — a '#' comment between the variable list and WHERE would
-        # otherwise leave the DESCRIBE keyword in place and phase 1
-        # would try to parse it as a SELECT
-        select = re.sub(
-            r"\bDESCRIBE\s+((?:\?\w+\s*)+)WHERE\b",
-            "SELECT " + " ".join(f"?{v}" for v in variables) + " WHERE",
-            stripped,
-            count=1,
-            flags=re.IGNORECASE,
-        )
-        bindings = self.select(select)  # phase 1: virtual
+        evaluation falls back to :meth:`Graph.describe`'s fully
+        distributed describe (two semi-joins against the whole virtual
+        graph). The default bound is 50k terms (a few MB on the driver):
+        past _ISIN_MAX the phase-2 restriction is a broadcast semi-join,
+        so large node sets stay cheap — measured at sf0.1 (~15k matched
+        customers), two-phase runs 2-2.6x faster than the fallback it
+        previously hit at the old 10k bound."""
+        q = _parsed(query, "DESCRIBE")
+        if not q.variables or q.from_graphs or q.from_named:
+            return super().describe(q)  # which refuses a dataset
+        bindings = sparql_select(self.fragment(q), q)  # phase 1: virtual
         nodes_df = bindings.select(
-            F.explode(F.array(*[F.col(v) for v in variables])).alias("n")
+            F.explode(F.array(*[F.col(v) for v in q.variables])).alias("n")
         ).distinct()
         sample = nodes_df.take(max_nodes + 1)
         if len(sample) > max_nodes:
-            comp = MappingCompiler(
-                self.spark, self.doc, self.catalog, self.options
-            )
-            self._compilers.append(comp)
-            return sparql_describe_where(comp.triples(), query)
+            return super().describe(q)
         # literals cannot be described (they never appear as subjects,
         # and their occurrences as objects are not a resource description)
-        nodes = sorted(
-            {r.n for r in sample if r.n is not None and not r.n.startswith('"')}
-        )
-        return self._describe_nodes(nodes)
+        nodes = {r.n for r in sample if r.n is not None and not r.n.startswith('"')}
+        nodes.update(t for t in q.describe if not _is_var(t))
+        return self._describe_nodes(sorted(nodes))
 
     # above this many nodes a literal isin() stops being the right
     # restriction: the expression serializes into every task and the

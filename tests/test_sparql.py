@@ -217,7 +217,7 @@ def test_construct(spark, triples):
 def test_describe(spark, triples):
     from morph_xr2rml_spark.sparql import sparql_describe
 
-    out = sparql_describe(triples, f"{EX}p/2")
+    out = sparql_describe(triples, f"DESCRIBE <{EX}p/2>")
     got = {tuple(r) for r in out.collect()}
     assert (f"<{EX}p/1>", f"<{EX}knows>", f"<{EX}p/2>") in got
     assert (f"<{EX}p/2>", f"<{EX}name>", '"bob"') in got
@@ -826,9 +826,9 @@ def test_path_negated_property_set(triples):
 
 
 def test_describe_where(triples):
-    from morph_xr2rml_spark.sparql import sparql_describe_where
+    from morph_xr2rml_spark.sparql import sparql_describe
 
-    out = sparql_describe_where(
+    out = sparql_describe(
         triples,
         """PREFIX ex: <http://example.org/>
         DESCRIBE ?x WHERE { ?x ex:age ?a . FILTER(?a >= 18) }""",
@@ -1494,14 +1494,11 @@ def test_protocol_dataset_parameters(spark):
 
 def test_prefix_name_with_interior_dot(triples):
     """PN_PREFIX permits interior dots (SPARQL 1.1 §19.8): both the
-    prologue scanner (query_form) and prefix expansion must accept
-    ``PREFIX a.b:`` — previously query_form raised 'not a SPARQL query
-    form' because the prologue regex stopped at the dot."""
-    from morph_xr2rml_spark.sparql.bgp import query_form
-
+    prologue scanner and prefix expansion must accept ``PREFIX a.b:`` —
+    previously the form scan raised 'not a SPARQL query form' because
+    the prologue regex stopped at the dot."""
     q = f"PREFIX e.x: <{EX}>\nSELECT ?n WHERE {{ ?s e.x:name ?n }}"
-    form, _t, _s, _e = query_form(q)
-    assert form == "SELECT"
+    assert parse_sparql(q).form == "SELECT"
     assert rows(sparql_select(triples, q)) == {
         ('"alice"',), ('"bob"',), ('"carol"',)
     }
@@ -1512,7 +1509,7 @@ def test_describe_where_comment_between_vars_and_where(triples):
     the SELECT rewrite a no-op (detection ran on comment-stripped text,
     the substitution on the raw query) so phase 1 crashed parsing the
     unmodified DESCRIBE string."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     commented = (
         f"PREFIX ex: <{EX}>\n"
@@ -1520,8 +1517,8 @@ def test_describe_where_comment_between_vars_and_where(triples):
         "WHERE { ?x ex:knows ?y }"
     )
     plain = f"PREFIX ex: <{EX}>\nDESCRIBE ?x WHERE {{ ?x ex:knows ?y }}"
-    got = rows(sparql_describe_where(triples, commented))
-    assert got == rows(sparql_describe_where(triples, plain))
+    got = rows(sparql_describe(triples, commented))
+    assert got == rows(sparql_describe(triples, plain))
     assert (f"<{EX}p/1>", f"<{EX}name>", '"alice"') in got
 
 

@@ -1,0 +1,228 @@
+"""The one SPARQL front end: every query form is parsed once by
+``parse_sparql`` and answered through the same Graph interface
+(select / ask / construct / describe / release) by a materialized
+table and by a virtual graph alike."""
+
+import json
+import sys
+import time
+import urllib.parse
+import urllib.request
+
+import pytest
+
+from morph_xr2rml_spark.mapping.parser import parse_mapping
+from morph_xr2rml_spark.sources.catalog import SourceCatalog
+from morph_xr2rml_spark.sparql import TripleTable, VirtualGraph, bgp, sparql_select
+from morph_xr2rml_spark.sparql.bgp import parse_sparql
+from morph_xr2rml_spark.sparql.endpoint import SparqlEndpoint, evaluate
+
+EX = "http://example.org/"
+
+TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix ex:  <http://example.org/> .
+
+<#TMPerson>
+    xrr:logicalSource [ rr:tableName "person"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/{id}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:name;
+        rr:objectMap [ rr:column "name" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:knows;
+        rr:objectMap [ rr:template "http://example.org/{friend}" ];
+    ];
+    .
+"""
+
+PERSON = [("a", "Ann", "b"), ("b", "Bob", "c"), ("c", "Cy", None)]
+
+# the graph the mapping produces over PERSON, written out by hand: a
+# name triple per row, a knows triple per row with a friend
+A_NAME = f'<{EX}a> <{EX}name> "Ann" .'
+A_KNOWS = f"<{EX}a> <{EX}knows> <{EX}b> ."
+B_NAME = f'<{EX}b> <{EX}name> "Bob" .'
+B_KNOWS = f"<{EX}b> <{EX}knows> <{EX}c> ."
+C_NAME = f'<{EX}c> <{EX}name> "Cy" .'
+TRIPLES = [A_NAME, A_KNOWS, B_NAME, B_KNOWS, C_NAME]
+
+
+def _table(spark):
+    return spark.createDataFrame(
+        [tuple(t[:-2].split(" ", 2)) for t in TRIPLES],
+        "subj string, pred string, obj string",
+    )
+
+
+def _virtual(spark):
+    person = spark.createDataFrame(
+        PERSON, "id string, name string, friend string"
+    )
+    return VirtualGraph(
+        spark, parse_mapping(TTL), SourceCatalog(spark).register("person", person)
+    )
+
+
+@pytest.fixture(params=["table", "virtual"])
+def graph(request, spark):
+    g = TripleTable(_table(spark)) if request.param == "table" else _virtual(spark)
+    yield g
+    g.release()
+
+
+def _nt(body: str) -> set[str]:
+    return {line for line in body.splitlines() if line.strip()}
+
+
+def test_virtual_graph_is_the_hand_written_graph(spark):
+    vg = _virtual(spark)
+    try:
+        got = vg.select("SELECT ?s ?p ?o WHERE { ?s ?p ?o }").collect()
+        assert {f"{r.s} {r.p} {r.o} ." for r in got} == set(TRIPLES)
+    finally:
+        vg.release()
+
+
+# one text per way a query form can be written that a scan of the raw
+# text misreads: several terms, a prefixed name, a comment, BASE, and
+# comments around and inside a CONSTRUCT template
+PROBES = [
+    # several DESCRIBE terms: each is described, not just the first
+    (f"DESCRIBE <{EX}a> <{EX}b>", {A_NAME, A_KNOWS, B_NAME, B_KNOWS}),
+    # a prefixed name
+    (f"PREFIX ex: <{EX}>\nDESCRIBE ex:a", {A_NAME, A_KNOWS}),
+    # a commented-out DESCRIBE is not the query
+    (f"# was: DESCRIBE <{EX}c>\nDESCRIBE <{EX}a>", {A_NAME, A_KNOWS}),
+    # a BASE-relative IRI
+    (f"BASE <{EX}>\nDESCRIBE <a>", {A_NAME, A_KNOWS}),
+    # a '}' inside a comment after the template does not end it
+    (
+        f"CONSTRUCT {{ ?y <{EX}knownBy> ?x }} # template }}\n"
+        f"WHERE {{ ?x <{EX}knows> ?y }}",
+        {f"<{EX}b> <{EX}knownBy> <{EX}a> .", f"<{EX}c> <{EX}knownBy> <{EX}b> ."},
+    ),
+    # a comment inside the template
+    (
+        f"CONSTRUCT {{ ?y <{EX}knownBy> ?x # inverse edge\n}}\n"
+        f"WHERE {{ ?x <{EX}knows> ?y }}",
+        {f"<{EX}b> <{EX}knownBy> <{EX}a> .", f"<{EX}c> <{EX}knownBy> <{EX}b> ."},
+    ),
+]
+
+
+@pytest.mark.parametrize("query,want", PROBES)
+def test_probe(graph, query, want):
+    ctype, body = evaluate(graph, query)
+    assert ctype == "application/n-triples"
+    assert _nt(body) == want
+
+
+def test_describe_iri_and_variable(graph):
+    q = f"DESCRIBE <{EX}c> ?x WHERE {{ ?x <{EX}name> \"Ann\" }}"
+    assert _nt(evaluate(graph, q)[1]) == {A_NAME, A_KNOWS, B_KNOWS, C_NAME}
+
+
+def _count_parses(monkeypatch) -> list[str]:
+    """Wrap parse_sparql wherever the package holds it; the returned
+    list grows by one entry per call."""
+    calls: list[str] = []
+    original = bgp.parse_sparql
+
+    def counted(text):
+        calls.append(text)
+        return original(text)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("morph_xr2rml_spark") and mod is not None:
+            for attr, val in list(vars(mod).items()):
+                if val is original:
+                    monkeypatch.setattr(mod, attr, counted)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        f"SELECT ?n WHERE {{ ?s <{EX}name> ?n }}",
+        f"ASK {{ ?s <{EX}knows> <{EX}c> }}",
+        f"CONSTRUCT {{ ?y <{EX}knownBy> ?x }} WHERE {{ ?x <{EX}knows> ?y }}",
+        f"DESCRIBE <{EX}a>",
+        f"DESCRIBE ?x WHERE {{ ?x <{EX}knows> <{EX}c> }}",
+    ],
+)
+def test_each_request_parses_once(graph, monkeypatch, query):
+    calls = _count_parses(monkeypatch)
+    evaluate(graph, query)
+    assert calls == [query]
+
+
+def test_virtual_construct_stamps_now_once_per_query(spark):
+    earlier = sparql_select(
+        _table(spark), f"SELECT ?t WHERE {{ ?s <{EX}name> ?n BIND(NOW() AS ?t) }}"
+    )
+    earlier_now = {r.t for r in earlier.collect()}
+    assert len(earlier_now) == 1
+    time.sleep(0.01)
+    vg = _virtual(spark)
+    try:
+        out = vg.construct(
+            f"CONSTRUCT {{ ?s <{EX}at> ?t }} "
+            f"WHERE {{ ?s <{EX}name> ?n BIND(NOW() AS ?t) }}"
+        ).collect()
+    finally:
+        vg.release()
+    assert {r.subj for r in out} == {f"<{EX}a>", f"<{EX}b>", f"<{EX}c>"}
+    instants = {r.obj for r in out}
+    assert len(instants) == 1
+    assert instants != earlier_now
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT ?x (UCASE(?x) AS ?x) WHERE { ?x ?p ?o }",
+        "SELECT (UCASE(?o) AS ?x) WHERE { ?x ?p ?o }",
+        "SELECT (STR(?o) AS ?y) (UCASE(?o) AS ?y) WHERE { ?x ?p ?o }",
+        "SELECT (COUNT(?o) AS ?p) WHERE { ?x ?p ?o }",
+        "SELECT ?a WHERE { ?s ?p ?a } GROUP BY (FLOOR(?a) AS ?a)",
+        "SELECT (COUNT(?s) AS ?b) WHERE { ?s ?p ?a } GROUP BY (FLOOR(?a) AS ?b)",
+    ],
+)
+def test_alias_reusing_in_scope_variable_is_an_error(query):
+    with pytest.raises(ValueError, match="already in scope"):
+        parse_sparql(query)
+
+
+def test_fresh_aliases_still_parse():
+    q = parse_sparql(
+        "SELECT ?b (COUNT(?s) AS ?n) (?n * 2 AS ?n2) WHERE { ?s ?p ?a } "
+        "GROUP BY (FLOOR(?a) AS ?b)"
+    )
+    assert q.variables == ["b", "n", "n2"]
+
+
+def test_endpoint_releases_virtual_graph_per_request(spark):
+    vg = _virtual(spark)
+    ep = SparqlEndpoint(vg).start()
+    base = f"http://127.0.0.1:{ep.port}/sparql?query="
+
+    def get(query: str) -> str:
+        with urllib.request.urlopen(base + urllib.parse.quote(query), timeout=120) as r:
+            return r.read().decode()
+
+    try:
+        names = get(f"SELECT ?n WHERE {{ ?s <{EX}name> ?n }}")
+        assert {
+            b["n"]["value"] for b in json.loads(names)["results"]["bindings"]
+        } == {"Ann", "Bob", "Cy"}
+        assert vg._compilers == []
+        assert json.loads(get(f"ASK {{ <{EX}b> <{EX}knows> ?o }}"))["boolean"] is True
+        assert vg._compilers == []
+        assert _nt(get(f"DESCRIBE <{EX}c>")) == {B_KNOWS, C_NAME}
+        assert vg._compilers == []
+    finally:
+        ep.stop()
+        vg.release()

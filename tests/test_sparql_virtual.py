@@ -516,7 +516,7 @@ def test_endpoint_serves_virtual_graph(setup, spark):
         want = {
             f"{r_.subj} {r_.pred} {r_.obj} ."
             for r_ in sparql_describe(
-                triples, "http://example.org/dept/1"
+                triples, "DESCRIBE <http://example.org/dept/1>"
             ).collect()
         }
         assert set(nt.strip().splitlines()) == want and want
@@ -591,7 +591,7 @@ def test_virtual_describe_where_two_phase(setup, spark):
     ex:salary POMs never enter the description plan (round-3 verdict
     missing #2; reference expandDescribe,
     MorphBaseQueryTranslator.scala:86-92)."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc, catalog, triples = setup
     q = (
@@ -600,8 +600,8 @@ def test_virtual_describe_where_two_phase(setup, spark):
     )
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        out = vg.describe_where(q)
-        assert _rows(out) == _rows(sparql_describe_where(triples, q))
+        out = vg.describe(q)
+        assert _rows(out) == _rows(sparql_describe(triples, q))
         assert ("<http://example.org/dept/1>",
                 '"Engineering"') in {(r[0], r[2]) for r in _rows(out)}
         plan = out._jdf.queryExecution().optimizedPlan().toString()
@@ -616,15 +616,15 @@ def test_virtual_describe_where_two_phase(setup, spark):
 
 
 def test_virtual_describe_where_fallback_above_bound(setup, spark):
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc, catalog, triples = setup
     q = PREFIX + "DESCRIBE ?d WHERE { ?e ex:dept ?d }"
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.describe_where(q, max_nodes=1))  # forces fallback
-        assert got == _rows(sparql_describe_where(triples, q))
-        assert got == _rows(vg.describe_where(q))  # two-phase == fallback
+        got = _rows(vg.describe(q, max_nodes=1))  # forces fallback
+        assert got == _rows(sparql_describe(triples, q))
+        assert got == _rows(vg.describe(q))  # two-phase == fallback
     finally:
         vg.release()
 
@@ -634,7 +634,7 @@ def test_virtual_describe_where_no_match_is_empty(setup, spark):
     q = PREFIX + 'DESCRIBE ?e WHERE { ?e ex:name "nobody" }'
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        assert _rows(vg.describe_where(q)) == []
+        assert _rows(vg.describe(q)) == []
     finally:
         vg.release()
 
@@ -1085,7 +1085,7 @@ def test_describe_nodes_pushdown_scans_keys(spark, tmp_path):
     k-node description reads O(k) source rows."""
     import re as _re
 
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     spark.createDataFrame(
         [(1, "Engineering"), (2, "Marketing"), (3, "Legal")],
@@ -1109,7 +1109,7 @@ def test_describe_nodes_pushdown_scans_keys(spark, tmp_path):
     )
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        out = vg.describe_where(q)
+        out = vg.describe(q)
         fmt = spark._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
@@ -1120,7 +1120,7 @@ def test_describe_nodes_pushdown_scans_keys(spark, tmp_path):
         # exact equivalence with materialize-then-describe
         comp = MappingCompiler(spark, doc, catalog)
         try:
-            want = {tuple(r) for r in sparql_describe_where(comp.triples(), q).collect()}
+            want = {tuple(r) for r in sparql_describe(comp.triples(), q).collect()}
         finally:
             comp.release()
         assert {tuple(r) for r in out.collect()} == want
@@ -1153,7 +1153,7 @@ def test_describe_includes_collection_member_arcs(spark):
     joins the object branches whenever its members' term type can be an
     IRI (previously only blank-node describes kept collection POMs, so
     IRI-membered lists silently vanished from two-phase DESCRIBE)."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     dept = spark.createDataFrame(
         [(1, "Engineering")], "dno int, dname string"
@@ -1177,10 +1177,10 @@ def test_describe_includes_collection_member_arcs(spark):
     vg = VirtualGraph(spark, doc, catalog)
     comp = MappingCompiler(spark, doc, catalog)
     try:
-        got = {tuple(r) for r in vg.describe_where(q).collect()}
+        got = {tuple(r) for r in vg.describe(q).collect()}
         want = {
             tuple(r)
-            for r in sparql_describe_where(comp.triples(), q).collect()
+            for r in sparql_describe(comp.triples(), q).collect()
         }
         assert got == want
         # the membership arc itself: some chain bnode rdf:first alice
@@ -1225,7 +1225,7 @@ def _describe_differential(
     randomized sources, over a mapping with a RefObjectMap AND an
     IRI-membered RDF list (emp IRIs as rdf:first members), at both the
     two-phase path and the forced bounded fallback (max_nodes=1)."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     emp = spark.createDataFrame(
         emp_rows or [(None, None, None, None)],
@@ -1259,8 +1259,8 @@ def _describe_differential(
     comp = MappingCompiler(spark, doc, catalog)
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.describe_where(q, max_nodes=max_nodes))
-        want = _rows(sparql_describe_where(comp.triples(), q))
+        got = _rows(vg.describe(q, max_nodes=max_nodes))
+        want = _rows(sparql_describe(comp.triples(), q))
         assert got == want, f"q: {q}\nemp: {emp_rows}\ndept: {dept_rows}"
     finally:
         comp.release()
@@ -1379,14 +1379,14 @@ def test_describe_class_node_keeps_rdf_type_arcs(setup, spark):
     '?s rdf:type <node>' arcs (subj|obj semantics, same as the
     materialized fallback): object_branches previously stripped
     class_uris unconditionally, so the result depended on max_nodes."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc, catalog, triples = setup
     q = PREFIX + "DESCRIBE ?t WHERE { ?s a ?t }"
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.describe_where(q))
-        assert got == _rows(sparql_describe_where(triples, q))
+        got = _rows(vg.describe(q))
+        assert got == _rows(sparql_describe(triples, q))
         assert (
             "<http://example.org/emp/10>",
             "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",
@@ -1404,7 +1404,7 @@ def test_describe_class_node_keeps_rdf_type_arcs(setup, spark):
 def test_virtual_describe_where_comment_between_vars_and_where(setup, spark):
     """Same comment-robustness as the materialized path: the SELECT
     rewrite runs on the comment-stripped text the detection saw."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc, catalog, triples = setup
     commented = (
@@ -1412,8 +1412,8 @@ def test_virtual_describe_where_comment_between_vars_and_where(setup, spark):
     )
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.describe_where(commented))
-        assert got == _rows(sparql_describe_where(triples, commented))
+        got = _rows(vg.describe(commented))
+        assert got == _rows(sparql_describe(triples, commented))
         assert ("<http://example.org/dept/1>",
                 "<http://example.org/ontology#deptName>",
                 '"Engineering"') in got
@@ -1731,7 +1731,7 @@ def test_describe_nodes_semi_join_above_isin_bound(spark, tmp_path):
     with a broadcast LEFT SEMI join against the node set instead of a
     thousands-element literal isin serialized into every task, and the
     answer stays exactly the materialized DESCRIBE's."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     n = VirtualGraph._ISIN_MAX + 200
     spark.range(n).selectExpr(
@@ -1751,7 +1751,7 @@ def test_describe_nodes_semi_join_above_isin_bound(spark, tmp_path):
     q = PREFIX + "DESCRIBE ?d WHERE { ?d ex:deptName ?n }"
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        out = vg.describe_where(q)
+        out = vg.describe(q)
         fmt = spark._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
@@ -1765,7 +1765,7 @@ def test_describe_nodes_semi_join_above_isin_bound(spark, tmp_path):
     try:
         want = {
             tuple(r)
-            for r in sparql_describe_where(comp.triples(), q).collect()
+            for r in sparql_describe(comp.triples(), q).collect()
         }
     finally:
         comp.release()
@@ -1885,7 +1885,7 @@ def _doc_describe_differential(spark, rows, qidx, cut, bound):
     """Two-phase virtual DESCRIBE == materialize-then-describe over a
     find() document source, at the two-phase path AND the forced
     bounded fallback, with missing fields and numeric values in play."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc = parse_mapping(DOC_DESCRIBE_TTL, default_formulation="JSONPath")
     catalog = _doc_catalog(spark, rows)
@@ -1900,8 +1900,8 @@ def _doc_describe_differential(spark, rows, qidx, cut, bound):
     comp = MappingCompiler(spark, doc, catalog)
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.describe_where(q, max_nodes=bound))
-        want = _rows(sparql_describe_where(comp.triples(), q))
+        got = _rows(vg.describe(q, max_nodes=bound))
+        want = _rows(sparql_describe(comp.triples(), q))
         assert got == want, f"q: {q}\nrows: {rows}\nbound: {bound}"
     finally:
         comp.release()
@@ -2038,7 +2038,7 @@ def test_empty_template_group_value_not_pruned(spark):
     (both phases' paths) and in SELECT constant patterns."""
     import json as _json
 
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe_where
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc = parse_mapping(DOC_DESCRIBE_TTL, default_formulation="JSONPath")
     df = spark.createDataFrame(
@@ -2049,10 +2049,10 @@ def test_empty_template_group_value_not_pruned(spark):
     comp = MappingCompiler(spark, doc, catalog)
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        want = _rows(sparql_describe_where(comp.triples(), q))
+        want = _rows(sparql_describe(comp.triples(), q))
         assert want  # the materializer emits the empty-group term
-        assert _rows(vg.describe_where(q, max_nodes=1)) == want
-        assert _rows(vg.describe_where(q)) == want
+        assert _rows(vg.describe(q, max_nodes=1)) == want
+        assert _rows(vg.describe(q)) == want
         sel = PREFIX + (
             "SELECT ?s WHERE { ?s ex:tag <http://example.org/tag/> }"
         )
