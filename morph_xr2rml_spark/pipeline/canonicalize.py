@@ -3,22 +3,29 @@ then subj/obj rewrite of the triple table through the canonical map.
 
 Algorithm: iterative min-label propagation with pointer jumping (the
 GraphFrames-free fallback SURVEY §7 calls for — GraphFrames is not in
-this environment). Each iteration: every node takes the min label
-among itself and its neighbors (one join + one groupBy, both
-partial-aggregated), then labels compose once through a label-to-label
-self-join (path shortcutting a la Shiloach-Vishkin), so the distance a
-min label covers doubles per round — O(log diameter) rounds instead of
-O(diameter), without the constant-factor-heavy large-star/small-star
-edge rewriting. Each round is pinned with a parquet-checkpoint lineage
-cut (plans.caching.checkpoint_parquet) — persist alone leaves the
-logical plan doubling per round (each round references the previous
-labels twice), and Spark 4's localCheckpoint throws ``key not found:
-<attr>#<id>`` on AQE-finalized shuffle plans such as the
-union+distinct ``und`` edge set here. Convergence detection is folded
-into the round: each node's previous label rides through the
-aggregation as a side column (min ignores nulls), so the changed-check
-is a scan of the just-checkpointed round, not a join of two label
-tables.
+this environment). Each round: every node takes the min label among
+itself and its neighbors (one join of the edge table, which pairs each
+node with itself too, and one partial-aggregated groupBy), then labels
+compose once through a label-to-label self-join (path shortcutting a
+la Shiloach-Vishkin), so the distance a min label covers doubles per
+round — O(log diameter) rounds instead of O(diameter), without the
+constant-factor-heavy large-star/small-star edge rewriting.
+
+Round 1's min-aggregation reads the edge table directly (a node's
+first label is the min of itself and its neighbors), so no pass writes
+identity labels. Each round pins its aggregate with a
+parquet-checkpoint lineage cut (plans.caching.checkpoint_parquet), and
+the pointer jump is composed from that pinned table inside the next
+round's plan, so each aggregate is computed once. persist alone would
+leave the logical plan doubling per round (the jump references the
+previous round twice), and Spark 4's localCheckpoint throws ``key not
+found: <attr>#<id>`` on AQE-finalized shuffle plans such as the
+union+distinct ``und`` edge set here. Convergence rides the pinned
+write itself: each node's previous label (the one its self-pair
+carries) goes through the aggregation as a side column, and an
+Observation on the write counts the nodes whose label changed — no
+separate job checks convergence. A round that changes no label also
+makes its pointer jump a no-op, so its pinned aggregate is the answer.
 
 Skew note: a hub component funnels its whole frontier into one groupBy
 key per round. The groupBy is a min-aggregate — partial aggregation
@@ -28,19 +35,10 @@ hot components cost one row per partition, not one per edge.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..plans.caching import CheckpointScope, cache, checkpoint_parquet
-
-
-def _pin(df: DataFrame, tag: str, scope: CheckpointScope) -> DataFrame:
-    """Materialize a fixpoint round with a REAL lineage cut. Each round
-    references the previous round's labels twice (message join + union),
-    so a persist-only pin leaves the logical plan doubling per round —
-    exponential analysis time. See plans.caching.checkpoint_parquet for
-    why localCheckpoint is not an option under AQE."""
-    return checkpoint_parquet(df, tag, scope=scope)
 
 
 def connected_components(
@@ -57,69 +55,51 @@ def connected_components(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
+    # every node also pairs with itself, so one join brings a node its
+    # own label along with its neighbors' (and names its previous label)
+    und = und.unionByName(und.select("a", F.col("a").alias("b")).distinct())
     # the edge table is re-read every round: keep it in memory (its
-    # lineage is fixed, so persist is safe and cheaper than re-scanning)
+    # lineage is fixed, so persist is safe and cheaper than re-scanning);
+    # round 1's write fills the cache
     und = cache(und)
-    und.count()
-    # each round's labels supersede the previous round's — retire the
-    # older checkpoint files eagerly once the convergence count (the
-    # last reader of the PREVIOUS round) has run, so a long propagation
-    # holds ~2 rounds of files on disk, not max_iter
+    # each round's aggregate supersedes the previous one — retire the
+    # older checkpoint files once the newer round is written, so a long
+    # propagation holds ~2 rounds of files on disk, not max_iter
     scope = CheckpointScope()
-    labels = _pin(
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node")),
-        "cc_labels_",
-        scope,
+    agg = und.groupBy("a").agg(F.min("b").alias("component")).select(
+        F.col("a").alias("node"), "component", F.col("a").alias("__old")
     )
     for _ in range(max_iter):
-        # neighbor labels flow along edges; keep own label in the pool,
-        # riding the previous label along as __old (each node has
-        # exactly one labels row, and min() ignores the msgs nulls) so
-        # convergence needs no separate old-vs-new join
-        msgs = und.join(
-            labels.withColumnRenamed("node", "a"), "a"
-        ).select(F.col("b").alias("node"), "component")
-        agg = (
-            labels.withColumn("__old", F.col("component"))
-            .unionByName(
-                msgs.withColumn(
-                    "__old",
-                    F.lit(None).cast(labels.schema["component"].dataType),
-                )
-            )
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("__old").alias("__old"),
-            )
+        changed = Observation()
+        agg = checkpoint_parquet(
+            agg.observe(
+                changed, F.count_if(F.col("component") != F.col("__old")).alias("n")
+            ),
+            "cc_labels_",
+            scope,
         )
+        scope.retire(keep=1)
+        if changed.get["n"] == 0:
+            return agg.select("node", "component")
         # pointer jump: compose each label through its own row
         # (component-of-component), doubling the distance covered per
         # round; min labels only ever decrease, so coalesce suffices
         hop = agg.select(
             F.col("node").alias("component"), F.col("component").alias("__cc")
         )
-        new_labels = _pin(
-            agg.join(hop, "component", "left").select(
-                "node",
-                F.coalesce("__cc", "component").alias("component"),
-                "__old",
-            ),
-            "cc_labels_",
-            scope,
+        labels = agg.join(hop, "component", "left").select(
+            F.col("node").alias("a"),
+            F.coalesce("__cc", "component").alias("component"),
         )
-        changed = (
-            new_labels.where(F.col("component") != F.col("__old"))
-            .limit(1)
-            .count()
+        # labels flow along edges (and self-pairs) to the min-aggregate;
+        # the self-pair's label rides along as __old
+        own = F.when(F.col("a") == F.col("b"), F.col("component"))
+        agg = (
+            und.join(labels, "a")
+            .groupBy(F.col("b").alias("node"))
+            .agg(F.min("component").alias("component"), F.min(own).alias("__old"))
         )
-        labels = new_labels.select("node", "component")
-        scope.retire(keep=1)
-        if changed == 0:
-            break
-    return labels
+    return labels.withColumnRenamed("a", "node")
 
 
 def canonical_map(edges: DataFrame, prefer_prefix: str = "ent_") -> DataFrame:
@@ -154,19 +134,19 @@ def rewrite_triples(
     """Rewrite subj/obj IRIs of canonicalized entities.
 
     The mapping (entity ids -> canonical ids) is entity-dimension-sized,
-    orders of magnitude smaller than the triple table, so both rewrites
-    are broadcast joins — zero shuffle of the triple table itself.
+    orders of magnitude smaller than the triple table, so Spark's
+    size-based join selection broadcasts it (zero shuffle of the triple
+    table) while it is under ``spark.sql.autoBroadcastJoinThreshold``,
+    and shuffle-joins a map too big to broadcast.
     """
     prefix, suffix = iri_template.split("{}")
-    iri_map = F.broadcast(
-        mapping.where(F.col("entity_id") != F.col("canonical_id")).select(
-            F.concat(F.lit("<"), F.lit(prefix), "entity_id", F.lit(suffix), F.lit(">")).alias(
-                "__from"
-            ),
-            F.concat(
-                F.lit("<"), F.lit(prefix), "canonical_id", F.lit(suffix), F.lit(">")
-            ).alias("__to"),
-        )
+    iri_map = mapping.where(F.col("entity_id") != F.col("canonical_id")).select(
+        F.concat(F.lit("<"), F.lit(prefix), "entity_id", F.lit(suffix), F.lit(">")).alias(
+            "__from"
+        ),
+        F.concat(
+            F.lit("<"), F.lit(prefix), "canonical_id", F.lit(suffix), F.lit(">")
+        ).alias("__to"),
     )
     out = (
         triples.join(iri_map.withColumnRenamed("__from", "subj"), "subj", "left")

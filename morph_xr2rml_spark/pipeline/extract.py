@@ -52,16 +52,33 @@ def extract_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
     return pages.withColumn("extracted_text", extract_text_udf(F.col(html_col)))
 
 
-def extraction_mismatches(pages: DataFrame) -> DataFrame:
-    """Rows violating the byte-identical invariant (must be empty).
+def _mismatch() -> Column:
+    """True where extracted_text is not byte-identical to text.
 
     Compared via binary encoding so trailing-space/unicode differences
     can't hide behind string display semantics.
     """
-    df = extract_text(pages)
-    return df.where(
-        ~(
-            F.encode(F.col("extracted_text"), "UTF-8")
-            .eqNullSafe(F.encode(F.col("text"), "UTF-8"))
+    return ~(
+        F.encode(F.col("extracted_text"), "UTF-8")
+        .eqNullSafe(F.encode(F.col("text"), "UTF-8"))
+    )
+
+
+def extraction_mismatches(pages: DataFrame) -> DataFrame:
+    """Rows violating the byte-identical invariant (must be empty)."""
+    return extract_text(pages).where(_mismatch()).select("url", "text", "extracted_text")
+
+
+def enforce_byte_identity(extracted: DataFrame) -> DataFrame:
+    """``extracted`` unchanged, with the byte-identical invariant in its
+    plan: the job that reads the first violating row fails, naming its
+    page_id. A checkpoint written from this plan is complete only if
+    every page passed, so the check costs no job of its own."""
+    error = F.raise_error(
+        F.concat(
+            F.lit("page_id "),
+            F.col("page_id").cast("string"),
+            F.lit(" violates the byte-identical extraction invariant"),
         )
-    ).select("url", "text", "extracted_text")
+    )
+    return extracted.where(F.when(_mismatch(), error).otherwise(F.lit(True)))

@@ -8,13 +8,23 @@ Iceberg catalog — the writer format is one config away, Iceberg jars
 are not in this sandbox) and appends a metrics record to
 ``<out_dir>/_lineage/metrics.jsonl``:
 
-    stage, rows, n_partitions, per-partition row counts (skew
-    evidence), wall seconds, input fingerprint, resumed flag
+    written stage:  stage, resumed=False, rows, n_partitions (files
+                    written), partition_rows (rows per written file,
+                    skew evidence), max_partition_rows, wall_s, ts
+    resumed stage:  stage, resumed=True, rows, ts
 
-On resume, a stage whose output directory has a _SUCCESS marker is NOT
-recomputed — the checkpoint parquet is read back and the downstream
-plan restarts from there, exactly like re-submitting a failed
-spark-submit job mid-pipeline.
+A checkpoint costs exactly the one Spark job that writes it. The
+read-back uses the writer's schema (saved beside the data as
+``_schema.json``), so no job infers it, and every row count comes from
+the written files' parquet footers, read on the driver — the stage is
+never re-scanned to count it.
+
+On resume, a stage whose output directory is complete (its
+``_schema.json`` is written after the data commits) is NOT recomputed —
+the checkpoint parquet is read back and the downstream plan restarts
+from there, exactly like re-submitting a failed spark-submit job
+mid-pipeline. Resume does not check that the stage's inputs are
+unchanged since the checkpoint was written.
 """
 
 from __future__ import annotations
@@ -23,9 +33,13 @@ import json
 import os
 import time
 from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+_SCHEMA_FILE = "_schema.json"  # '_'-prefixed: parquet readers skip it
 
 
 class StageRunner:
@@ -42,20 +56,30 @@ class StageRunner:
         return os.path.join(self.out_dir, name)
 
     def _done(self, name: str) -> bool:
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
+        """A checkpoint is complete once its schema file exists: it is
+        written after Spark commits the data (and ``_SUCCESS``). A
+        directory without it, from an interrupted run or an older
+        runner (whose ``extracted`` could hold pages that fail the
+        extraction invariant), is recomputed."""
+        return os.path.exists(os.path.join(self._path(name), _SCHEMA_FILE))
 
     def _record(self, rec: dict) -> None:
         with open(os.path.join(self.lineage_dir, "metrics.jsonl"), "a") as fh:
             fh.write(json.dumps(rec) + "\n")
 
+    def _read(self, path: str) -> DataFrame:
+        """Read a checkpoint back with its writer's schema (no schema
+        inference job)."""
+        with open(os.path.join(path, _SCHEMA_FILE)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+        return self.spark.read.schema(schema).parquet(path)
+
     def partition_counts(self, df: DataFrame) -> list[int]:
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .orderBy("pid")
-            .collect()
-        )
-        return [r["count"] for r in rows]
+        """Rows per input file of a parquet scan, in file-name order,
+        from the files' footers: runs no Spark job. Like the rest of
+        the runner, it reads checkpoints on the local filesystem."""
+        paths = sorted(unquote(urlparse(f).path) for f in df.inputFiles())
+        return [pq.read_metadata(p).num_rows for p in paths]
 
     # ------------------------------------------------------------------
 
@@ -72,27 +96,28 @@ class StageRunner:
         path = self._path(name)
         t0 = time.time()
         if self.resume and self._done(name):
-            out = self.spark.read.parquet(path)
+            out = self._read(path)
             self._record(
                 {
                     "stage": name,
                     "resumed": True,
-                    "rows": out.count(),
+                    "rows": sum(self.partition_counts(out)),
                     "ts": time.time(),
                 }
             )
             return out
 
         df = fn()
-        writer = df.write.mode("overwrite")
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
-            writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        with open(os.path.join(path, _SCHEMA_FILE), "w") as fh:
+            fh.write(df.schema.json())
 
-        out = self.spark.read.parquet(path)
+        out = self._read(path)
         pcounts = self.partition_counts(out)
         self._record(
             {

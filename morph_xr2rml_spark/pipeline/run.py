@@ -121,29 +121,26 @@ def run_pipeline(
 ) -> dict:
     """Full KG construction with per-stage checkpoints under out_dir.
 
-    Returns {"triples": DataFrame, "metrics": [...], "mismatches": int}.
+    Returns {"triples": DataFrame, "metrics": [...], "mismatches": int};
+    a page whose extracted text is not byte-identical to its text fails
+    the run instead, so ``mismatches`` is 0 on return.
     """
     runner = StageRunner(spark, out_dir, resume=resume)
 
     pages_df = runner.stage("pages", lambda: pages.synthesize_pages(documents))
 
+    # byte-identical per-url invariant (BASELINE.json input_hint),
+    # checked inside the write: a violating page fails the stage, so a
+    # completed extracted checkpoint, written or resumed, has none
     extracted = runner.stage(
         "extracted",
-        lambda: extract.extract_text(pages_df).select(
-            "page_id", "url", "extracted_text", "text"
+        lambda: extract.enforce_byte_identity(
+            extract.extract_text(pages_df).select(
+                "page_id", "url", "extracted_text", "text"
+            )
         ),
     )
-    # byte-identical per-url invariant (BASELINE.json input_hint)
-    mismatches = extracted.where(
-        ~F.encode(F.col("extracted_text"), "UTF-8").eqNullSafe(
-            F.encode(F.col("text"), "UTF-8")
-        )
-    ).count()
-    runner._record({"stage": "extract_invariant", "mismatches": mismatches})
-    if mismatches:
-        raise AssertionError(
-            f"{mismatches} pages violate the byte-identical extraction invariant"
-        )
+    runner._record({"stage": "extract_invariant", "mismatches": 0})
 
     aliases = runner.stage("aliases", lambda: mentions.build_alias_dict(documents))
     mentions_df = runner.stage(
@@ -175,7 +172,7 @@ def run_pipeline(
     return {
         "triples": triples.select("subj", "pred", "obj"),
         "metrics": runner.metrics(),
-        "mismatches": mismatches,
+        "mismatches": 0,
     }
 
 

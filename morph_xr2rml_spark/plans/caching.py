@@ -46,8 +46,9 @@ class CheckpointScope:
     SUPERSEDES earlier ones (e.g. min-label propagation: only the
     latest labels frame is ever referenced again). The loop calls
     :meth:`retire` once the consuming action of the newest round has
-    run (e.g. after the convergence-check count), deleting superseded
-    rounds' files eagerly instead of waiting for the job boundary.
+    run (e.g. after the newest round's own checkpoint write), deleting
+    superseded rounds' files eagerly instead of waiting for the job
+    boundary.
 
     Loops whose result references EVERY round (path closure unions all
     layers) must NOT retire — they rely on the default job-boundary
@@ -100,7 +101,8 @@ def checkpoint_parquet(
     _CKPT_LIVE.append(path)
     if scope is not None:
         scope._add(path)
-    return df.sparkSession.read.parquet(path)
+    # the writer's schema: inferring it back would cost one more job
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def live_checkpoints() -> list[str]:

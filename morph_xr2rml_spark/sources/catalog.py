@@ -136,61 +136,6 @@ class SourceCatalog:
             return self.tables[name]
         return self.spark.table(name)
 
-    _MAX_SPLIT_BYTES = 128 << 20  # scan split granularity estimate
-    _SMALL_SOURCE_BYTES = 2 << 30  # only reshuffle sources below this
-
-    def _normalize_width(self, df: DataFrame) -> DataFrame:
-        """Widen under-parallelized scans to the session's parallelism.
-
-        A single parquet file splits at row-group granularity, so a
-        compact table can come back as a handful of partitions no
-        matter how many cores the cluster has; every downstream
-        per-row stage (term construction, template encoding, explode)
-        then runs nearly serial. One cheap shuffle of the raw source
-        fixes the whole pipeline's width. Term values and row ids are
-        content-derived, so results are partitioning-independent.
-
-        The decision is made from input-file count and byte size (no
-        ``df.rdd`` — that forces plan-to-RDD conversion at compile
-        time), and a big source is never reshuffled: its scan is
-        already wide, and an unconditional repartition would be a full
-        shuffle of the raw table.
-        """
-        target = self.spark.sparkContext.defaultParallelism
-        try:
-            # inputFiles() sees through derived plans to the leaf scan,
-            # so a frame the caller already repartitioned would look
-            # "narrow" here — never reshuffle lineage that contains an
-            # explicit repartition/rebalance
-            plan = df._jdf.queryExecution().analyzed().toString()
-            if "Repartition" in plan or "RebalancePartitions" in plan:
-                return df
-            files = df.inputFiles()
-        except Exception:  # noqa: BLE001 — non-file-backed plan
-            return df
-        if not files or len(files) * 2 >= target:
-            return df
-        total = self._input_bytes(files)
-        if total >= self._SMALL_SOURCE_BYTES:
-            return df
-        est_splits = max(len(files), -(-total // self._MAX_SPLIT_BYTES))
-        if est_splits * 2 < target:
-            return df.repartition(target)
-        return df
-
-    def _input_bytes(self, files: list[str]) -> int:
-        try:
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            total = 0
-            for f in files:
-                path = jvm.org.apache.hadoop.fs.Path(f)
-                fs = path.getFileSystem(conf)
-                total += fs.getFileStatus(path).getLen()
-            return total
-        except Exception:  # noqa: BLE001 — treat unknown size as big
-            return self._SMALL_SOURCE_BYTES
-
     def resolve(self, ls: LogicalSource) -> tuple[DataFrame, str | None]:
         """Return (DataFrame, doc_column) for a logical source.
 
@@ -220,8 +165,6 @@ class SourceCatalog:
                     tdf.createOrReplaceTempView(tname)
                 df = self.spark.sql(ls.value)
                 name = None
-
-        df = self._normalize_width(df)
 
         if ls.formulation == "Column":
             return df, None

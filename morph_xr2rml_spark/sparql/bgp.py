@@ -257,6 +257,10 @@ def _expand(tok: str, prefixes: dict[str, str]) -> str:
     m = re.match(r"^([\w.-]*):([\w.%-]*)$", tok)
     if m and m.group(1) in prefixes:
         return f"<{prefixes[m.group(1)]}{m.group(2)}>"
+    # typed literal with a prefixed datatype ("1"^^xsd:integer)
+    m = re.match(r'^("(?:[^"\\]|\\.)*"\^\^)([\w.-]*):([\w.%-]*)$', tok, re.S)
+    if m and m.group(2) in prefixes:
+        return f"{m.group(1)}<{prefixes[m.group(2)]}{m.group(3)}>"
     base = prefixes.get(_BASE_KEY)
     if (
         base
@@ -1203,7 +1207,7 @@ def _split_statements(chunk: str) -> list[str]:
 _F_TOKEN_RE = re.compile(
     r"""\s*(
       \?[\w]+
-    | "(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[\w-]+)?
+    | "(?:[^"\\]|\\.)*"(?:\^\^(?:<[^>]*>|[\w.-]*:[\w.%-]*)|@[\w-]+)?
     | <[^<>\s]*>
     | \|\||&&|!=|<=|>=|=|<|>|!
     | \d+\.\d+ | \d+
@@ -1260,7 +1264,17 @@ _DT_GROUP = {
     "dt_year": 1, "dt_month": 2, "dt_day": 3,
     "dt_hours": 4, "dt_minutes": 5, "dt_seconds": 6, "dt_tz": 7,
 }
-_CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
+# an xsd:dateTime N-Triples term; group 1 is its lexical form
+_DT_TERM_RE = r'^"([^"]*)"\^\^<http://www\.w3\.org/2001/XMLSchema#dateTime>$'
+_CMP_FNS = {
+    "=": Column.__eq__,
+    "!=": Column.__ne__,
+    "<": Column.__lt__,
+    "<=": Column.__le__,
+    ">": Column.__gt__,
+    ">=": Column.__ge__,
+}
+_CMP_OPS = tuple(_CMP_FNS)
 _AGG_FUNCS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT"}
 
 
@@ -2208,6 +2222,20 @@ def _numeric_value(col: Column) -> Column:
     ).try_cast("double")
 
 
+def _datetime_value(col: Column) -> Column:
+    """xsd:dateTime N-Triples term -> timestamp; NULL for any other
+    term (try_cast, so a malformed lexical form is NULL under ANSI)."""
+    return F.regexp_extract(col, _DT_TERM_RE, 1).try_cast("timestamp")
+
+
+def _is_datetime(term) -> bool:
+    """True for an operand known at parse time to be an xsd:dateTime:
+    a typed literal or NOW()."""
+    if isinstance(term, FilterNode):
+        return term.op == "now"
+    return isinstance(term, str) and re.match(_DT_TERM_RE, term) is not None
+
+
 def _filter_col(node: FilterNode, df: DataFrame) -> Column:
     op = node.op
     if op == "and":
@@ -2266,22 +2294,24 @@ def _filter_col(node: FilterNode, df: DataFrame) -> Column:
         raise ValueError(f"boolean expression expected in FILTER, got {op!r}")
     l, lk = _filter_operand(node.args[0], df)
     r, rk = _filter_operand(node.args[1], df)
+    cmp = _CMP_FNS[op]
     if lk == "str" or rk == "str":
-        lval = l if lk == "str" else _as_lexical(node.args[0], df)
-        rval = r if rk == "str" else _as_lexical(node.args[1], df)
-    elif lk == "num" or rk == "num" or op in {"<", "<=", ">", ">="}:
-        lval = l if lk == "num" else _numeric_value(l)
-        rval = r if rk == "num" else _numeric_value(r)
-    else:
-        lval, rval = l, r
-    return {
-        "=": lval == rval,
-        "!=": lval != rval,
-        "<": lval < rval,
-        "<=": lval <= rval,
-        ">": lval > rval,
-        ">=": lval >= rval,
-    }[op]
+        return cmp(
+            l if lk == "str" else _as_lexical(node.args[0], df),
+            r if rk == "str" else _as_lexical(node.args[1], df),
+        )
+    if lk == "num" or rk == "num":
+        return cmp(
+            l if lk == "num" else _numeric_value(l),
+            r if rk == "num" else _numeric_value(r),
+        )
+    if op in ("=", "!="):
+        return cmp(l, r)
+    if _is_datetime(node.args[0]) or _is_datetime(node.args[1]):
+        # ordering against an xsd:dateTime compares timestamps; a
+        # non-dateTime term there is a type error (NULL, dropped)
+        return cmp(_datetime_value(l), _datetime_value(r))
+    return cmp(_numeric_value(l), _numeric_value(r))
 
 
 def _bind_col(node, df: DataFrame) -> Column:
@@ -2290,6 +2320,20 @@ def _bind_col(node, df: DataFrame) -> Column:
     if isinstance(node, FilterNode) and node.op in _BOOL_OPS:
         return _filter_col(node, df)
     col, _kind = _filter_operand(node, df)
+    return col
+
+
+def _agg_input_col(node, func: str, df: DataFrame) -> Column:
+    """Input of an aggregate over an expression, as a pre-group value
+    column. SUM/AVG of a string value (SUM(UCASE(?x))) is a type error,
+    so the input is NULL and the aggregate unbound, where ANSI's
+    implicit string->double cast would fail the query; MIN/MAX order
+    strings too, and numeric inputs keep their type."""
+    if isinstance(node, FilterNode) and node.op in _BOOL_OPS:
+        return _filter_col(node, df)
+    col, kind = _filter_operand(node, df)
+    if kind == "str" and func in ("sum", "avg"):
+        return F.lit(None).cast("double")
     return col
 
 
@@ -2443,7 +2487,7 @@ def _select_df_info(
     hidden_n = 0
     # aggregate-over-expression inputs (SUM(?a * ?b)): materialized as
     # hidden value columns on the pre-group frame
-    pre_cols: list[tuple[str, object]] = []
+    pre_cols: list[tuple[str, object, str]] = []
 
     def _pull(node):
         nonlocal hidden_n
@@ -2455,7 +2499,7 @@ def _select_df_info(
                 if is_expr:
                     iname = f"__ai{hidden_n}"
                     hidden_n += 1
-                    pre_cols.append((iname, arg))
+                    pre_cols.append((iname, arg, func))
                     arg = iname
                 aggs.append(
                     _agg_col(
@@ -2475,8 +2519,8 @@ def _select_df_info(
         # input columns, on the pre-group frame
         for tree, iname in q.group_exprs:
             df = df.withColumn(iname, _bind_col(tree, df))
-        for iname, tree in pre_cols:
-            df = df.withColumn(iname, _bind_col(tree, df))
+        for iname, tree, func in pre_cols:
+            df = df.withColumn(iname, _agg_input_col(tree, func, df))
         if not aggs and q.group_by:
             # GROUP BY without aggregates: one row per group
             df = df.select(*q.group_by).dropDuplicates()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -214,6 +216,33 @@ def test_full_pipeline_and_resume(spark, documents, tmp_path_factory):
     resumed = [m for m in result2["metrics"] if m.get("resumed")]
     assert len(resumed) >= 6
     triples.unpersist()
+
+
+def test_extract_invariant_fails_the_extracted_write(
+    spark, documents, tmp_path, monkeypatch
+):
+    """One planted mismatching page fails the extracted write (no job of
+    its own counts mismatches): the error names the page and the stage
+    never gets its _SUCCESS marker."""
+    real = extract.extract_text
+    bad = {}
+
+    def planted(pages_df, *args):
+        out = real(pages_df, *args)
+        bad["id"] = pages_df.orderBy("page_id").first()["page_id"]
+        return out.withColumn(
+            "extracted_text",
+            F.when(F.col("page_id") == bad["id"], F.concat("extracted_text", F.lit(" ")))
+            .otherwise(F.col("extracted_text")),
+        )
+
+    monkeypatch.setattr(extract, "extract_text", planted)
+    with pytest.raises(Exception) as err:
+        run_pipeline(spark, documents, str(tmp_path), resume=False)
+    message = f"page_id {bad['id']} violates the byte-identical extraction invariant"
+    assert message in str(err.value)
+    assert os.path.exists(tmp_path / "pages" / "_SUCCESS")
+    assert not os.path.exists(tmp_path / "extracted" / "_SUCCESS")
 
 
 def test_connected_components_aqe_shuffle_input(spark, tmp_path):

@@ -17,6 +17,7 @@ import urllib.parse
 import pytest
 
 from morph_xr2rml_spark.sparql import parse_sparql, sparql_select
+from morph_xr2rml_spark.sparql.results import parse_term
 
 EX = "http://example.org/"
 
@@ -481,3 +482,81 @@ def test_group_concat_separator_unescape_expression_path(ab_triples):
 def test_group_by_lone_question_mark_raises():
     with pytest.raises(ValueError, match="GROUP BY"):
         parse_sparql("SELECT ?a WHERE { ?a ?b ?c } GROUP BY ? a")
+
+
+def test_sum_avg_over_string_expression_is_unbound(ab_triples):
+    # SUM/AVG of a string value is a type error: the aggregate is
+    # unbound, not an ANSI cast error that fails the query. MIN/MAX
+    # order strings, so they still answer
+    out = sparql_select(
+        ab_triples,
+        f"""SELECT ?g (SUM(UCASE(?g)) AS ?s) (AVG(UCASE(?g)) AS ?av)
+                   (MIN(UCASE(?g)) AS ?mn) (MAX(UCASE(?g)) AS ?mx)
+            WHERE {{ ?r <{EX}g> ?g }} GROUP BY ?g ORDER BY ?g""",
+    )
+    assert [tuple(r) for r in out.collect()] == [
+        ('"x"', None, None, "X", "X"),
+        ('"y"', None, None, "Y", "Y"),
+    ]
+
+
+def test_sum_of_strlen_stays_integer(ab_triples):
+    # SUM of integers is an integer: the string-input guard above must
+    # not turn a numeric expression's sum into a double
+    out = sparql_select(
+        ab_triples,
+        f"""SELECT (SUM(STRLEN(?g)) AS ?s) (AVG(STRLEN(?g)) AS ?av)
+            WHERE {{ ?r <{EX}g> ?g }}""",
+    )
+    row = out.collect()[0]
+    assert parse_term(row["s"]) == {
+        "type": "literal",
+        "value": "3",
+        "datatype": "http://www.w3.org/2001/XMLSchema#integer",
+    }
+    assert row["av"] == 1.0
+
+
+@pytest.fixture(scope="module")
+def year_triples(spark):
+    xdt = "http://www.w3.org/2001/XMLSchema#dateTime"
+    rows = [
+        (f"<{EX}jan>", f"<{EX}at>", f'"2026-01-15T08:00:00"^^<{xdt}>'),
+        (f"<{EX}may>", f"<{EX}at>", f'"2026-05-31T23:59:59"^^<{xdt}>'),
+        (f"<{EX}jun>", f"<{EX}at>", f'"2026-06-01T00:00:00"^^<{xdt}>'),
+        (f"<{EX}dec>", f"<{EX}at>", f'"2026-12-01T00:00:00"^^<{xdt}>'),
+        (f"<{EX}old>", f"<{EX}at>", f'"1999-12-31T00:00:00"^^<{xdt}>'),
+        (f"<{EX}num>", f"<{EX}at>", '"5"^^<http://www.w3.org/2001/XMLSchema#integer>'),
+    ]
+    return spark.createDataFrame(rows, "subj string, pred string, obj string")
+
+
+@pytest.mark.parametrize(
+    "op, expected",
+    [
+        ("<", {"jan", "may", "old"}),
+        ("<=", {"jan", "may", "jun", "old"}),
+        (">", {"dec"}),
+        (">=", {"jun", "dec"}),
+    ],
+)
+def test_datetime_ordering_compares_timestamps(year_triples, op, expected):
+    # same-year dateTimes order by their full value, not by the leading
+    # year digits; a dateTime against a number is a type error (dropped)
+    out = sparql_select(
+        year_triples,
+        f"""PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+            SELECT ?s WHERE {{ ?s <{EX}at> ?t
+              FILTER(?t {op} "2026-06-01T00:00:00"^^xsd:dateTime) }}""",
+    )
+    assert {r["s"][len(EX) + 1:-1] for r in out.collect()} == expected
+
+
+def test_datetime_ordering_against_now(year_triples):
+    out = sparql_select(
+        year_triples,
+        f"SELECT ?s WHERE {{ ?s <{EX}at> ?t FILTER(?t < NOW()) }}",
+    )
+    got = {r["s"][len(EX) + 1:-1] for r in out.collect()}
+    assert "old" in got and "num" not in got
+
