@@ -330,12 +330,14 @@ class MappingCompiler:
             out = out.unionByName(k) if out is not None else k
         return out
 
-    def quads_for(self, tm_name: str) -> DataFrame:
+    def quads_for(self, tm_name: str, cells: bool = True) -> DataFrame:
         """(subj, pred, obj, graph) for one triples map; graph is NULL
         for the default graph (no dedup — use triples()/quads() for the
-        set-semantic views)."""
+        set-semantic views). ``cells=False`` leaves out the collection
+        cells (rdf:first/rest, container type and members) whose chain
+        lands in one graph; the heads stay."""
         plain, chains, _keyed, _preds, _unk = self._tm_branches(tm_name)
-        branches = plain + chains
+        branches = plain + chains if cells else plain
         if not branches:
             return None
         return functools.reduce(DataFrame.unionByName, branches)

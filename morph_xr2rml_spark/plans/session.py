@@ -69,7 +69,15 @@ def build_session(
 ) -> SparkSession:
     """Session with the defaults the KG pipeline assumes at scale:
     AQE (runtime coalescing + skew-join splitting), Arrow transfers for
-    pandas UDFs, and sane local parallelism."""
+    pandas UDFs, and sane local parallelism.
+
+    PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging
+    .enabled``) is switched off: with it on, every Column function call
+    captures the Python stack and sends it to the JVM, which roughly
+    doubles the Py4J round trips of compiling a mapping. It is a static
+    config, read once per process, so it is set here at build time. The
+    cost: an analysis error no longer names the Python line of the
+    call that built the failing expression."""
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -79,6 +87,7 @@ def build_session(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # long-lived driver hygiene: the live UI/status stores retain
         # per-task metrics for every stage ever run, which grows the
         # heap without bound over a many-job session and drags later

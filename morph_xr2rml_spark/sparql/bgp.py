@@ -843,21 +843,56 @@ def _split_blocks(src: str) -> list[tuple[str, str]]:
                 blocks.append(("union", branches))  # type: ignore[arg-type]
             i = k
         else:
-            plain.append(src[i])
-            i += 1
+            j = max(_token_end(src, i), i + 1)
+            plain.append(src[i:j])
+            i = j
     flush()
     return blocks
 
 
+_IRIREF_AT = re.compile(r'<[^<>"\s]*>')
+
+
+def _token_end(src: str, i: int) -> int:
+    """The index just past the string literal or IRIREF opening at
+    ``src[i]``, or ``i`` when neither opens there. A literal is single-
+    or double-quoted, short or triple-quoted, backslash escapes
+    included. A '<' opens an IRIREF under the rule of
+    :func:`_strip_comments`, so an apostrophe inside an IRI opens no
+    string."""
+    q = src[i] if i < len(src) else ""
+    if q == "<":
+        m = _IRIREF_AT.match(src, i)
+        return m.end() if m else i
+    if q not in ("'", '"'):
+        return i
+    delim = q * 3 if src.startswith(q * 3, i) else q
+    j = i + len(delim)
+    while j < len(src):
+        if src[j] == "\\":
+            j += 2
+        elif src.startswith(delim, j):
+            return j + len(delim)
+        else:
+            j += 1
+    raise ValueError("unterminated string literal in SPARQL")
+
+
 def _match_brace(src: str, open_idx: int) -> int:
     depth = 0
-    for i in range(open_idx, len(src)):
+    i = open_idx
+    while i < len(src):
+        end = _token_end(src, i)
+        if end > i:
+            i = end
+            continue
         if src[i] == "{":
             depth += 1
         elif src[i] == "}":
             depth -= 1
             if depth == 0:
                 return i
+        i += 1
     raise ValueError("unbalanced braces in SPARQL")
 
 

@@ -10,7 +10,7 @@ query-rewriting mode (its second entry point):
 - ``MorphBaseTriplePatternBinder.bindm``:50-213 / ``bindmTP``:223-249
   bind each triple pattern to the triples maps that could produce
   matching triples (template/constant compatibility)  →  here
-  :func:`bind_patterns` / :func:`_tm_binding`;
+  :func:`bind_patterns` / :func:`_bind`;
 - ``genCond`` / ``genCondParent`` (MorphBaseQueryTranslator.scala:227-355)
   turn the pattern's constant terms into conditions on the source query
   →  here constant subjects/objects invert the term-map template
@@ -18,9 +18,11 @@ query-rewriting mode (its second entry point):
   a Catalyst filter applied to the source scan *before* term
   construction, so the reduction happens at the scan;
 - ``excludeTriplesAboutCollecOrContainer``
-  (MorphMongoQueryTranslator.scala:270-378)  →  collection/container
-  branches only bind patterns whose predicate is the POM's own or in
-  the RDF vocabulary namespace;
+  (MorphMongoQueryTranslator.scala:270-378)  →  a collection/container
+  branch binds through its head (the map's subject, the POM's
+  predicate, a blank node) or its cells (blank-node subjects, RDF
+  vocabulary predicates, member / blank-node / ``rdf:nil`` objects),
+  and compiles its cells only when a pattern can match one;
 - ``MorphMongoQueryProcessor.process``:45-150 materializes only the
   bound fragments into a temporary Jena graph and re-evaluates the
   original SPARQL on it with ARQ  →  here the bound branches union into
@@ -42,13 +44,16 @@ domain).
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import replace
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..compiler.collections import _CONTAINER_CLASS
 from ..compiler.compile import CompileOptions, MappingCompiler
 from ..functions import terms
 from ..functions.paths import MixedSyntaxPath
@@ -79,6 +84,10 @@ from .bgp import (
 from .results import parse_term
 
 _RDF_TYPE = f"<{terms.RDF_TYPE}>"
+_RDF_FIRST = f"<{terms.RDF_FIRST}>"
+_RDF_REST = f"<{terms.RDF_REST}>"
+_RDF_NIL = f"<{terms.RDF_NIL}>"
+_MEMBERSHIP = re.compile(rf"^<{re.escape(terms.RDF_NS)}_[1-9][0-9]*>$")
 
 # characters on which every encoding chain (encode_uri + encode_url,
 # functions/encoding.py) is the identity — pushdown and template-match
@@ -168,32 +177,30 @@ def _template_invariant(template: str) -> bool:
     return bool(_ENCODING_INVARIANT.match(masked))
 
 
-def _iri_can_match(term_map, iri_term: str, options: CompileOptions) -> bool:
-    """Can this term map ever produce the constant ``<iri>`` term?
-    False only on *proof* of impossibility (bindmTP's compatibility
-    checks, MorphBaseTriplePatternBinder.scala:223-249)."""
-    tt = term_map.infer_term_type()
-    if tt == terms.TERM_LITERAL:
+def _can_emit(term_map, t: str, options: CompileOptions) -> bool:
+    """Can this term map ever produce the constant term ``t`` (an
+    ``<iri>``, a ``_:bnode`` or a literal)? For a collection term map
+    the question is asked of its members. False only on *proof* of
+    impossibility (bindmTP's compatibility checks,
+    MorphBaseTriplePatternBinder.scala:223-249)."""
+    tt, datatype, language = term_map.member_term_info()
+    if t.startswith("_:"):
+        return tt == terms.TERM_BLANKNODE
+    if t.startswith("<"):
+        if tt != terms.TERM_IRI:
+            return False
+        if term_map.kind == CONSTANT:
+            return _constant_term(term_map, options) == t
+        if term_map.kind == TEMPLATE and _template_invariant(term_map.template):
+            if not get_template_groups(term_map.template):
+                # a group-less template renders its fixed text verbatim
+                # (invariant => the encoding chain is the identity on it)
+                return term_map.template == t[1:-1]
+            return bool(get_template_matching(term_map.template, t[1:-1]))
+        return True
+    if tt != terms.TERM_LITERAL:
         return False
-    if tt == terms.TERM_BLANKNODE:
-        return False
-    if term_map.kind == CONSTANT:
-        return _constant_term(term_map, options) == iri_term
-    if term_map.kind == TEMPLATE and _template_invariant(term_map.template):
-        if not get_template_groups(term_map.template):
-            # a group-less template renders its fixed text verbatim
-            # (invariant => the encoding chain is the identity on it)
-            return term_map.template == iri_term[1:-1]
-        return bool(get_template_matching(term_map.template, iri_term[1:-1]))
-    return True
-
-
-def _literal_can_match(term_map, lit: dict, options: CompileOptions) -> bool:
-    """Can this term map produce the parsed literal binding ``lit``
-    ({'value':…, 'datatype'?, 'xml:lang'?})?"""
-    member_tt, datatype, language = term_map.member_term_info()
-    if member_tt != terms.TERM_LITERAL:
-        return False
+    lit = parse_term(t)
     if term_map.kind == CONSTANT:
         want = terms.make_literal(lit["value"], lit.get("datatype"), lit.get("xml:lang"))
         return _constant_term(term_map, options) == want
@@ -208,15 +215,44 @@ def _literal_can_match(term_map, lit: dict, options: CompileOptions) -> bool:
     return True
 
 
-def _subject_compatible(tm: TriplesMap, s, options: CompileOptions) -> bool:
-    if _is_var(s):
-        return True
-    sm = tm.subject_map
-    if s.startswith("<"):
-        return _iri_can_match(sm, s, options)
-    if s.startswith("_:"):
-        return sm.infer_term_type() == terms.TERM_BLANKNODE
-    return False  # literal subjects cannot exist
+def _emits_any(term_map, ts: tuple[str, ...] | None, options: CompileOptions) -> bool:
+    """Can ``term_map`` emit one of the terms ``ts`` (None = any term)?"""
+    return ts is None or any(_can_emit(term_map, t, options) for t in ts)
+
+
+def _cells_can_match(
+    coll_tt: str,
+    members,
+    subj: tuple[str, ...] | None,
+    preds: frozenset[str] | None,
+    obj: tuple[str, ...] | None,
+    options: CompileOptions,
+) -> bool:
+    """Can a cell of a collection match? Cells have blank-node subjects.
+    A list cell is ``(b, rdf:first, member)`` or ``(b, rdf:rest, b' |
+    rdf:nil)``; a container cell ``(b, rdf:type, rdf:Bag|Seq|Alt)`` or
+    ``(b, rdf:_n, member)``. Members come from ``members``: the nested
+    term map of an object map, or the parent's subject map of a
+    RefObjectMap."""
+    if subj is not None and not any(t.startswith("_:") for t in subj):
+        return False
+    member = lambda t: _can_emit(members, t, options)  # noqa: E731
+    if coll_tt == terms.TERM_RDFLIST:
+        arcs = (
+            (lambda p: p == _RDF_FIRST, member),
+            (lambda p: p == _RDF_REST, lambda t: t == _RDF_NIL or t.startswith("_:")),
+        )
+    else:
+        cls = _CONTAINER_CLASS[coll_tt]
+        arcs = (
+            (lambda p: p == _RDF_TYPE, lambda t: t == cls),
+            (lambda p: bool(_MEMBERSHIP.match(p)), member),
+        )
+    return any(
+        (preds is None or any(pred_ok(p) for p in preds))
+        and (obj is None or any(obj_ok(t) for t in obj))
+        for pred_ok, obj_ok in arcs
+    )
 
 
 # sentinel: no graph pruning (triples-mode fragment over one merged graph)
@@ -261,159 +297,137 @@ def _graph_ok(info: tuple[bool, frozenset[str] | None], gctx) -> bool:
     return named is None or gctx in named
 
 
-def _pom_emits_collection(pom: PredicateObjectMap) -> bool:
-    if any(om.is_collection for om in pom.object_maps):
-        return True
-    return any(rom.collection_term_type() for rom in pom.ref_object_maps)
+class _Bound(NamedTuple):
+    """One triples map pruned to what can match: the class IRIs kept,
+    the (original index, pruned POM) pairs kept — the index survives
+    pruning so several bindings of one map can merge into one
+    compilation — and whether any collection CELL can match (when not,
+    the map compiles with its collection heads only)."""
+
+    classes: tuple[str, ...]
+    poms: tuple[tuple[int, PredicateObjectMap], ...]
+    cells: bool
 
 
-def _pom_pred_compatible(
-    pom: PredicateObjectMap,
+def _bind(
+    doc: MappingDocument,
+    tm: TriplesMap,
+    subj: tuple[str, ...] | None,
     preds: frozenset[str] | None,
+    obj: tuple[str, ...] | None,
     options: CompileOptions,
-) -> bool:
-    if preds is None:
-        return True
-    if _pom_emits_collection(pom) and any(
-        p.startswith(f"<{terms.RDF_NS}") for p in preds
-    ):
-        # rdf:first/rest/_N/nil cells come from this POM's expansion
-        # (excludeTriplesAboutCollecOrContainer keeps these OUT of the
-        # reference's rewriting; we keep them IN the fragment instead)
-        return True
-    for pm in pom.predicate_maps:
-        const = _constant_term(pm, options)
-        if const is None:  # template/column predicate — unknown at bind time
-            return True
-        if const in preds:
-            return True
-    return False
+    gctx=_ANY_GRAPH,
+) -> _Bound | None:
+    """The branches of ``tm`` that can emit a triple with a subject in
+    ``subj``, a predicate in ``preds`` and an object in ``obj`` (None =
+    unconstrained), or None when none can. This is the one can-emit
+    check of the binder, for patterns and DESCRIBE nodes alike:
 
+    - a class triple ``(s, rdf:type, C)`` emits its class IRI as object;
+    - an object map emits its own terms, a RefObjectMap its parent's
+      subject terms;
+    - a collection emits a head ``(s, p, bnode)`` and cells
+      (:func:`_cells_can_match`).
 
-def _prune_pom(
-    pom: PredicateObjectMap, tp: TriplePattern, options: CompileOptions
-) -> PredicateObjectMap | None:
-    """Drop the POM (or its provably incompatible object maps) for one
-    pattern; None = the POM cannot contribute."""
-    preds = _pred_candidates(tp.p)
-    if not _pom_pred_compatible(pom, preds, options):
-        return None
-    o = tp.o
-    # object-based exclusion only for a plain predicate position (a path
-    # pattern's intermediate hops are unconstrained) and non-collection
-    # POMs (their connecting object is a generated blank node)
-    if isinstance(tp.p, Path) or _is_var(o) or _pom_emits_collection(pom):
-        return pom
-    keep_oms = []
-    for om in pom.object_maps:
-        if o.startswith("<"):
-            ok = _iri_can_match(om, o, options)
-        elif o.startswith("_:"):
-            ok = om.infer_term_type() == terms.TERM_BLANKNODE
-        else:
-            lit = parse_term(o)
-            ok = _literal_can_match(om, lit, options)
-        if ok:
-            keep_oms.append(om)
-    # a RefObjectMap's object is the parent's subject term — an IRI or
-    # blank node, never a literal
-    keep_roms = (
-        list(pom.ref_object_maps)
-        if (o.startswith("<") or o.startswith("_:"))
-        else []
-    )
-    if not keep_oms and not keep_roms:
-        return None
-    return replace(
-        pom, object_maps=tuple(keep_oms), ref_object_maps=tuple(keep_roms)
-    )
-
-
-def _bind_detail(
-    tm: TriplesMap, tp: TriplePattern, options: CompileOptions, gctx=_ANY_GRAPH
-) -> tuple[tuple[str, ...], list[tuple[int, PredicateObjectMap]]] | None:
-    """(kept class IRIs, [(original POM index, pruned POM)]) for one
-    (pattern, triples map) pair, or None when the map provably cannot
-    produce a matching triple. The index survives pruning so bindings of
-    several patterns to the same map can merge into one compilation.
     ``gctx`` (quad mode) additionally excludes branches whose graph maps
-    provably cannot emit into the pattern's graph context."""
-    # A property-path pattern's constant subject constrains only ONE end
-    # of the path: intermediate/terminal hop triples have other subjects,
-    # and an inverse step (^p) puts the pattern subject in the data
-    # OBJECT position. The evaluator (bgp._pattern_df) applies endpoint
-    # constants AFTER computing path pairs over the whole frame, so the
-    # fragment must keep every map that can emit a path-predicate triple
-    # regardless of subject — mirror _prune_pom/_residual, which already
-    # exempt path patterns from object/constant restriction.
-    if not isinstance(tp.p, Path) and not _subject_compatible(
-        tm, tp.s, options
-    ):
-        return None
-    preds = _pred_candidates(tp.p)
+    provably cannot emit into that graph context."""
+    sm = tm.subject_map
+    subj_ok = _emits_any(sm, subj, options)
+    bnode_obj = obj is None or any(t.startswith("_:") for t in obj)
 
-    keep_classes = tm.subject_map.class_uris
-    if not _graph_ok(_graph_info(tm.subject_map, None, options), gctx):
-        keep_classes = ()
-    elif preds is not None and _RDF_TYPE not in preds:
-        keep_classes = ()
-    elif (
-        not isinstance(tp.p, Path)
-        and not _is_var(tp.o)
-        and tp.o.startswith("<")
-        and preds == frozenset((_RDF_TYPE,))
+    classes: tuple[str, ...] = ()
+    if (
+        subj_ok
+        and (preds is None or _RDF_TYPE in preds)
+        and _graph_ok(_graph_info(sm, None, options), gctx)
     ):
-        want = tp.o
-        keep_classes = tuple(
-            c for c in keep_classes
-            if terms.make_iri(c, options.encode_unsafe_chars_in_uri) == want
+        classes = tuple(
+            c for c in sm.class_uris
+            if obj is None or terms.make_iri(c, False) in obj
         )
 
     kept: list[tuple[int, PredicateObjectMap]] = []
+    cells = False
     for i, pom in enumerate(tm.predicate_object_maps):
-        if not _graph_ok(_graph_info(tm.subject_map, pom, options), gctx):
+        if not _graph_ok(_graph_info(sm, pom, options), gctx):
             continue
-        pruned = _prune_pom(pom, tp, options)
-        if pruned is not None:
-            kept.append((i, pruned))
+        head_ok = subj_ok and (
+            preds is None
+            or any(_can_emit(pm, p, options) for pm in pom.predicate_maps for p in preds)
+        )
 
-    if not kept and not keep_classes:
+        def keeps(coll_tt, members) -> bool:
+            nonlocal cells
+            if not coll_tt:
+                return head_ok and _emits_any(members, obj, options)
+            cell = _cells_can_match(coll_tt, members, subj, preds, obj, options)
+            cells = cells or cell
+            return cell or (head_ok and bnode_obj)
+
+        oms = tuple(
+            om for om in pom.object_maps if keeps(om.collection_term_type(), om)
+        )
+        roms = tuple(
+            rom for rom in pom.ref_object_maps
+            if keeps(
+                rom.collection_term_type(),
+                doc.triples_maps[rom.parent_triples_map].subject_map,
+            )
+        )
+        if oms or roms:
+            kept.append(
+                (i, replace(pom, object_maps=oms, ref_object_maps=roms))
+            )
+    if not kept and not classes:
         return None
-    return tuple(keep_classes), kept
+    return _Bound(classes, tuple(kept), cells)
 
 
-def _detail_to_tm(
+def _bind_pattern(
+    doc: MappingDocument,
     tm: TriplesMap,
-    detail: tuple[tuple[str, ...], list[tuple[int, PredicateObjectMap]]],
-) -> TriplesMap:
-    keep_classes, kept = detail
+    tp: TriplePattern,
+    options: CompileOptions,
+    gctx=_ANY_GRAPH,
+) -> _Bound | None:
+    """:func:`_bind` for one triple pattern. A property-path pattern's
+    constant subject or object constrains only ONE end of the path:
+    intermediate hops have other subjects and objects, and an inverse
+    step (^p) swaps the ends. The evaluator (bgp._pattern_df) applies
+    endpoint constants AFTER computing path pairs over the whole frame,
+    so a path pattern binds on its predicates only (and its residual
+    is empty, see ``VirtualGraph._residual``)."""
+    preds = _pred_candidates(tp.p)
+    if isinstance(tp.p, Path):
+        return _bind(doc, tm, None, preds, None, options, gctx)
+    subj = None if _is_var(tp.s) else (tp.s,)
+    obj = None if _is_var(tp.o) else (tp.o,)
+    return _bind(doc, tm, subj, preds, obj, options, gctx)
+
+
+def _bound_tm(tm: TriplesMap, bound: _Bound) -> TriplesMap:
+    """The triples map reduced to the bound branches."""
     sm = tm.subject_map
-    if keep_classes != tm.subject_map.class_uris:
-        sm = replace(sm, class_uris=keep_classes)
+    if bound.classes != sm.class_uris:
+        sm = replace(sm, class_uris=bound.classes)
     return replace(
         tm,
         subject_map=sm,
-        predicate_object_maps=tuple(pom for _i, pom in kept),
+        predicate_object_maps=tuple(pom for _i, pom in bound.poms),
     )
 
 
-def _merge_details(
-    tm: TriplesMap,
-    details: list[tuple[tuple[str, ...], list[tuple[int, PredicateObjectMap]]]],
-) -> TriplesMap:
-    """Union of several patterns' prunings of the same triples map —
-    the widest fragment any of them needs, compiled (and scanned) once.
-    This is the rewriting-mode twin of the reference's self-join
-    elimination (MorphBaseQueryOptimizer: several triple patterns over
-    one logical source share its query)."""
-    class_set: set[str] = set()
-    for keep_classes, _k in details:
-        class_set.update(keep_classes)
+def _merge_bounds(tm: TriplesMap, bounds: list[_Bound]) -> _Bound:
+    """Union of several bindings of the same triples map — the widest
+    fragment any of them needs, compiled (and scanned) once. This is
+    the rewriting-mode twin of the reference's self-join elimination
+    (MorphBaseQueryOptimizer: several triple patterns over one logical
+    source share its query)."""
+    class_set = {c for b in bounds for c in b.classes}
     classes = tuple(c for c in tm.subject_map.class_uris if c in class_set)
-
     merged: dict[int, PredicateObjectMap] = {}
-    for _c, kept in details:
-        for i, pom in kept:
+    for b in bounds:
+        for i, pom in b.poms:
             prev = merged.get(i)
             if prev is None:
                 merged[i] = pom
@@ -430,23 +444,11 @@ def _merge_details(
             merged[i] = replace(
                 prev, object_maps=tuple(oms), ref_object_maps=tuple(roms)
             )
-    sm = tm.subject_map
-    if classes != tm.subject_map.class_uris:
-        sm = replace(sm, class_uris=classes)
-    return replace(
-        tm,
-        subject_map=sm,
-        predicate_object_maps=tuple(merged[i] for i in sorted(merged)),
+    return _Bound(
+        classes,
+        tuple((i, merged[i]) for i in sorted(merged)),
+        any(b.cells for b in bounds),
     )
-
-
-def _tm_binding(
-    tm: TriplesMap, tp: TriplePattern, options: CompileOptions
-) -> TriplesMap | None:
-    """The pattern-pruned view of one triples map, or None when the map
-    provably cannot produce a triple matching the pattern."""
-    detail = _bind_detail(tm, tp, options)
-    return None if detail is None else _detail_to_tm(tm, detail)
 
 
 def bind_patterns(
@@ -459,12 +461,11 @@ def bind_patterns(
     options = options or CompileOptions()
     out: dict[int, list[tuple[TriplePattern, TriplesMap]]] = {}
     for i, tp in enumerate(collect_patterns(query.where)):
-        bound = []
-        for tm in doc.triples_maps.values():
-            pruned = _tm_binding(tm, tp, options)
-            if pruned is not None:
-                bound.append((tp, pruned))
-        out[i] = bound
+        out[i] = [
+            (tp, _bound_tm(tm, b))
+            for tm in doc.triples_maps.values()
+            if (b := _bind_pattern(doc, tm, tp, options)) is not None
+        ]
     return out
 
 
@@ -740,24 +741,25 @@ def _constant_terms_at(
     if pos == "s":
         if sm.kind != CONSTANT or sm.infer_term_type() != terms.TERM_IRI:
             return None
+        if any(
+            m.collection_term_type()
+            for pom in tm.predicate_object_maps
+            for m in pom.object_maps + pom.ref_object_maps
+        ):
+            return None  # collection cells have blank-node subjects
         out.add(_constant_term(sm, options))
         return out
     if pos == "p":
         if sm.class_uris:
             out.add(f"<{terms.RDF_TYPE}>")
         for pom in tm.predicate_object_maps:
-            has_list = False
-            for om in pom.object_maps:
-                ctt = om.collection_term_type()
+            for m in pom.object_maps + pom.ref_object_maps:
+                ctt = m.collection_term_type()
                 if ctt is None:
                     continue
-                if ctt == terms.TERM_RDFLIST:
-                    has_list = True
-                else:
+                if ctt != terms.TERM_RDFLIST:
                     return None  # containers: rdf:_1, rdf:_2, ... per row
-            if has_list:
-                out.add(f"<{terms.RDF_FIRST}>")
-                out.add(f"<{terms.RDF_REST}>")
+                out.update((_RDF_FIRST, _RDF_REST))
             for pm in pom.predicate_maps:
                 if pm.kind != CONSTANT:
                     return None
@@ -1076,8 +1078,10 @@ class VirtualGraph(Graph):
     MorphMongoQueryProcessor.process:45-150); the :class:`..bgp.Graph`
     methods evaluate the full SPARQL surface over it with the ordinary
     distributed evaluator. Two methods answer from the mapping itself
-    first: ``select`` (Constant Projection) and ``describe`` of
-    variables (two-phase)."""
+    first: ``select`` (Constant Projection) and ``describe``, which
+    binds its nodes with the same can-emit check as the patterns
+    (:func:`_bind`) and compiles only the branches that can mention
+    them."""
 
     def __init__(
         self,
@@ -1146,18 +1150,23 @@ class VirtualGraph(Graph):
 
     def _compile_tm(
         self,
-        name: str,
-        pruned: TriplesMap,
+        tm: TriplesMap,
+        bound: _Bound,
         catalog: SourceCatalog,
         quads: bool = False,
     ) -> DataFrame | None:
+        """The triples (or quads) of ``tm``'s bound branches over
+        ``catalog``; collection cells only when a cell can match."""
         doc2 = MappingDocument(
-            triples_maps={**self.doc.triples_maps, name: pruned},
+            triples_maps={**self.doc.triples_maps, tm.name: _bound_tm(tm, bound)},
             prefixes=self.doc.prefixes,
         )
         comp = MappingCompiler(self.spark, doc2, catalog, self.options)
         self._compilers.append(comp)
-        return comp.quads_for(name) if quads else comp.triples_for(name)
+        frame = comp.quads_for(tm.name, cells=bound.cells)
+        if frame is None or quads:
+            return frame
+        return frame.select("subj", "pred", "obj")
 
     @staticmethod
     def _residual(
@@ -1225,13 +1234,11 @@ class VirtualGraph(Graph):
                 continue  # no constant to invert
             dicts: list[dict] = []
             for tm in self.doc.triples_maps.values():
-                detail = _bind_detail(tm, tp, self.options, gctx)
-                if detail is None:
+                bound = _bind_pattern(self.doc, tm, tp, self.options, gctx)
+                if bound is None:
                     continue
                 dicts.append(
-                    _binding_var_keys(
-                        _detail_to_tm(tm, detail), tp, self.options
-                    )
+                    _binding_var_keys(_bound_tm(tm, bound), tp, self.options)
                 )
             if not dicts:
                 continue  # pattern matches nothing; fragment is empty
@@ -1277,9 +1284,9 @@ class VirtualGraph(Graph):
         quads = dataset or self._has_graphs(q.where)
         prop = self._propagation_constraints(q, quads, dataset)
         frames: list[DataFrame] = []
-        # tm name -> [(pattern, graph ctx, pruning detail, scan cond)]
+        # tm name -> [(pattern, graph ctx, binding, scan cond)]
         collected: dict[
-            str, list[tuple[TriplePattern, object, tuple, Column | None]]
+            str, list[tuple[TriplePattern, object, _Bound, Column | None]]
         ] = {}
         conds_by_tm: dict[str, list[Column | None]] = {}
         tables: dict[str, str] = {}
@@ -1300,8 +1307,8 @@ class VirtualGraph(Graph):
                     continue  # no graph of the dataset can match
             is_path = isinstance(tp.p, Path)
             for tm in self.doc.triples_maps.values():
-                detail = _bind_detail(tm, tp, self.options, gctx)
-                if detail is None:
+                bound = _bind_pattern(self.doc, tm, tp, self.options, gctx)
+                if bound is None:
                     continue
                 cond = None
                 table = None
@@ -1309,7 +1316,7 @@ class VirtualGraph(Graph):
                 if not ls.iterator and not is_path:
                     if ls.kind == "table":
                         table = ls.value
-                        pruned = _detail_to_tm(tm, detail)
+                        pruned = _bound_tm(tm, bound)
                         src = self.catalog._table(table)
                         cond = _subject_pushdown(pruned, tp.s, src, self.options)
                         ocond = _object_pushdown(pruned, tp, src)
@@ -1324,7 +1331,7 @@ class VirtualGraph(Graph):
                         )
                         if doc_col is not None:
                             table = mfind.group("collection")
-                            pruned = _detail_to_tm(tm, detail)
+                            pruned = _bound_tm(tm, bound)
                             cond = _doc_subject_pushdown(
                                 pruned, tp.s, doc_col, self.options
                             )
@@ -1354,7 +1361,7 @@ class VirtualGraph(Graph):
                     # subject constraint) — keep such maps unfiltered
                     if cond is not None and self._rom_parent_reads(pruned, table):
                         cond = None
-                collected.setdefault(tm.name, []).append((tp, gctx, detail, cond))
+                collected.setdefault(tm.name, []).append((tp, gctx, bound, cond))
                 conds_by_tm.setdefault(tm.name, []).append(cond)
                 if table is not None:
                     tables[tm.name] = table
@@ -1392,16 +1399,12 @@ class VirtualGraph(Graph):
                 key = (repr(e[2]), str(e[3]._jc))
                 fgroups.setdefault(key, []).append(e)
             for group in fgroups.values():
-                _tp0, _g0, detail, cond = group[0]
-                if len(group) == 1:
-                    pruned_tm = _detail_to_tm(tm, detail)
-                else:
-                    pruned_tm = _merge_details(
-                        tm, [d for _t, _g, d, _c in group]
-                    )
+                _tp0, _g0, bound, cond = group[0]
+                if len(group) > 1:
+                    bound = _merge_bounds(tm, [b for _t, _g, b, _c in group])
                 frame = self._compile_tm(
-                    tm_name,
-                    pruned_tm,
+                    tm,
+                    bound,
                     self._filtered_catalog(tables[tm_name], cond),
                     quads=quads,
                 )
@@ -1415,15 +1418,13 @@ class VirtualGraph(Graph):
             if not shared:
                 continue
             if len(shared) == 1:
-                tp, gctx, detail, _cond = shared[0]
-                frame = self._compile_tm(
-                    tm_name, _detail_to_tm(tm, detail), self.catalog, quads=quads
-                )
+                tp, gctx, bound, _cond = shared[0]
+                frame = self._compile_tm(tm, bound, self.catalog, quads=quads)
                 if frame is not None:
                     frames.append(self._residual(frame, tp, gctx))
                 continue
-            merged = _merge_details(tm, [d for _tp, _g, d, _c in shared])
-            base = self._compile_tm(tm_name, merged, self.catalog, quads=quads)
+            merged = _merge_bounds(tm, [b for _tp, _g, b, _c in shared])
+            base = self._compile_tm(tm, merged, self.catalog, quads=quads)
             if base is None:
                 continue
             # register through the session cache registry (not a bare
@@ -1525,10 +1526,10 @@ class VirtualGraph(Graph):
             return None  # repeated variable joins positions
         consts: set[str] = set()
         for tm in self.doc.triples_maps.values():
-            detail = _bind_detail(tm, tp, self.options, _ANY_GRAPH)
-            if detail is None:
+            bound = _bind_pattern(self.doc, tm, tp, self.options)
+            if bound is None:
                 continue
-            pruned = _detail_to_tm(tm, detail)
+            pruned = _bound_tm(tm, bound)
             if const_pred and any(
                 pm.kind != CONSTANT
                 for pom in pruned.predicate_object_maps
@@ -1569,21 +1570,18 @@ class VirtualGraph(Graph):
     def describe(
         self, query: str | SelectQuery, max_nodes: int = 50_000
     ) -> DataFrame:
-        """DESCRIBE, virtually. Named IRIs only: :meth:`Graph.describe`
-        over the fragment of every triple the resources can appear in
-        (subject or object position), so no other part of the graph is
-        built. With variables, two-phase (expandDescribe analogue,
-        MorphBaseQueryTranslator.scala:86-92, which also answers
-        DESCRIBE without materializing):
+        """DESCRIBE, virtually: every triple whose subject or object is a
+        described resource, built from ONLY the triples-map branches
+        that can emit one of them (:meth:`_describe_nodes`). Named IRIs
+        go straight there. With variables, two-phase (expandDescribe
+        analogue, MorphBaseQueryTranslator.scala:86-92, which also
+        answers DESCRIBE without materializing):
 
         phase 1 — evaluate the WHERE virtually (its patterns' fragment
         only) and collect the matched resource terms, bounded by
         ``max_nodes``;
-        phase 2 — compile ONLY the triples-map branches that can mention
-        those resources and the named IRIs (subject-compatible maps keep
-        all their properties; otherwise just the object maps /
-        ref-object maps that can produce a matched node), restricted to
-        the nodes.
+        phase 2 — :meth:`_describe_nodes` over those terms and the named
+        IRIs.
 
         Above the bound the node set is no longer driver-safe, so the
         evaluation falls back to :meth:`Graph.describe`'s fully
@@ -1594,8 +1592,11 @@ class VirtualGraph(Graph):
         customers), two-phase runs 2-2.6x faster than the fallback it
         previously hit at the old 10k bound."""
         q = _parsed(query, "DESCRIBE")
-        if not q.variables or q.from_graphs or q.from_named:
+        if q.from_graphs or q.from_named:
             return super().describe(q)  # which refuses a dataset
+        named = {t for t in q.describe if not _is_var(t)}
+        if not q.variables:
+            return self._describe_nodes(sorted(named))
         bindings = sparql_select(self.fragment(q), q)  # phase 1: virtual
         nodes_df = bindings.select(
             F.explode(F.array(*[F.col(v) for v in q.variables])).alias("n")
@@ -1606,8 +1607,7 @@ class VirtualGraph(Graph):
         # literals cannot be described (they never appear as subjects,
         # and their occurrences as objects are not a resource description)
         nodes = {r.n for r in sample if r.n is not None and not r.n.startswith('"')}
-        nodes.update(t for t in q.describe if not _is_var(t))
-        return self._describe_nodes(sorted(nodes))
+        return self._describe_nodes(sorted(nodes | named))
 
     # above this many nodes a literal isin() stops being the right
     # restriction: the expression serializes into every task and the
@@ -1618,6 +1618,9 @@ class VirtualGraph(Graph):
     def _describe_nodes(self, nodes: list[str]) -> DataFrame:
         """The fragment of every triple that can mention one of
         ``nodes`` as subject or object, restricted exactly to them.
+        Each triples map is bound twice by the binder's can-emit check
+        (:func:`_bind`): with the nodes as subjects and with the nodes
+        as objects; a map neither binding keeps is never compiled.
 
         Node-set restriction has two regimes: up to ``_ISIN_MAX`` nodes
         the exact subj/obj filter is a literal isin() and the inverted
@@ -1630,7 +1633,6 @@ class VirtualGraph(Graph):
             return self.spark.createDataFrame(
                 [], "subj string, pred string, obj string"
             )
-        iris = [n for n in nodes if n.startswith("<")]
         has_bnode = any(n.startswith("_:") for n in nodes)
         use_keys = len(nodes) <= self._ISIN_MAX
         nodes_df = (
@@ -1659,21 +1661,6 @@ class VirtualGraph(Graph):
                 out = out.unionByName(p)
             return out
 
-        def om_can_produce(om) -> bool:
-            if om.is_collection:
-                # the chain/connecting nodes are generated blank nodes;
-                # the rdf:first members follow the nested term map
-                if has_bnode:
-                    return True
-                member_tt, _d, _l = om.member_term_info()
-                return bool(iris) and member_tt not in (
-                    terms.TERM_LITERAL, terms.TERM_BLANKNODE
-                )
-            tt = om.infer_term_type()
-            if has_bnode and tt == terms.TERM_BLANKNODE:
-                return True
-            return any(_iri_can_match(om, n, self.options) for n in iris)
-
         def source_of(tm: TriplesMap) -> str | None:
             ls = tm.logical_source
             if ls.iterator:
@@ -1699,113 +1686,57 @@ class VirtualGraph(Graph):
                 return None
             return _doc_nodes_pushdown(tm, nodes, doc_col, self.options)
 
-        node_set = frozenset(nodes)
-
-        def object_branches(tm: TriplesMap) -> TriplesMap | None:
-            """The TM reduced to branches whose OBJECT can be a node.
-            rr:class puts the class IRI in OBJECT position
-            (``?s rdf:type <cls>``), so classes that ARE matched nodes
-            are kept — describing a node used as a class (DESCRIBE ?t
-            WHERE { ?s rdf:type ?t }) must include its rdf:type arcs,
-            same subj|obj semantics as the materialized fallback."""
-            keep_classes = tuple(
-                c
-                for c in tm.subject_map.class_uris
-                if terms.make_iri(c, False) in node_set
-            )
-            keep: list[PredicateObjectMap] = []
-            for pom in tm.predicate_object_maps:
-                if _pom_emits_collection(pom):
-                    # chain/connecting nodes are generated blank nodes;
-                    # rdf:first members can also be matched IRIs
-                    if any(om_can_produce(om) for om in pom.object_maps):
-                        keep.append(pom)
-                    continue
-                oms = tuple(
-                    om for om in pom.object_maps if om_can_produce(om)
-                )
-                roms = tuple(
-                    rom
-                    for rom in pom.ref_object_maps
-                    if any(
-                        _subject_compatible(
-                            self.doc.triples_maps[rom.parent_triples_map],
-                            n,
-                            self.options,
-                        )
-                        for n in nodes
-                    )
-                )
-                if oms or roms:
-                    keep.append(
-                        replace(pom, object_maps=oms, ref_object_maps=roms)
-                    )
-            if not keep and not keep_classes:
-                return None
-            return replace(
-                tm,
-                subject_map=replace(tm.subject_map, class_uris=keep_classes),
-                predicate_object_maps=tuple(keep),
-            )
-
-        def parent_filtered_catalog(pruned: TriplesMap) -> SourceCatalog:
+        def parent_filtered_catalog(tm: TriplesMap, bound: _Bound) -> SourceCatalog:
             """Catalog with each kept RefObjectMap's PARENT source
             filtered to the node keys (the parent subject IS the
             described object, so only key-matched parent rows can join
             into a kept triple) — never the map's own source, whose
-            child rows are unconstrained."""
-            own = source_of(pruned)
+            child rows are unconstrained, and never the parent of a
+            collection, whose every member labels the collection's
+            blank nodes."""
+            own = source_of(tm)
             # parent table -> pushdown conds (None poisons the table)
             conds: dict[str, list[Column | None]] = {}
-            for pom in pruned.predicate_object_maps:
+            for _i, pom in bound.poms:
                 for rom in pom.ref_object_maps:
                     ptm = self.doc.triples_maps[rom.parent_triples_map]
                     ptable = source_of(ptm)
                     if ptable is None or ptable == own:
                         continue
                     conds.setdefault(ptable, []).append(
-                        node_cond(ptm, ptable)
+                        None if rom.collection_term_type() else node_cond(ptm, ptable)
                     )
             cat = self.catalog
             for ptable, cs in conds.items():
                 if any(c is None for c in cs):
                     continue
-                cond = cs[0]
-                for c in cs[1:]:
-                    cond = cond | c
-                cat = (
-                    self._filtered_catalog(ptable, cond)
-                    if cat is self.catalog
-                    else _also_filter(cat, ptable, cond)
-                )
-            return cat
-
-        def _also_filter(
-            cat: SourceCatalog, table: str, cond: Column
-        ) -> SourceCatalog:
-            cat.tables[table] = cat._table(table).filter(cond)
+                cond = functools.reduce(Column.__or__, cs)
+                if cat is self.catalog:
+                    cat = self._filtered_catalog(ptable, cond)
+                else:
+                    cat.tables[ptable] = cat._table(ptable).filter(cond)
             return cat
 
         frames: list[DataFrame] = []
+
+        def add(tm, bound, catalog, cols=("subj", "obj")) -> None:
+            frame = self._compile_tm(tm, bound, catalog)
+            if frame is not None:
+                frames.append(node_restrict(frame, cols))
+
         for tm in self.doc.triples_maps.values():
-            subj_ok = any(
-                _subject_compatible(tm, n, self.options) for n in nodes
-            )
-            if not subj_ok:
-                pruned = object_branches(tm)
-                if pruned is None:
-                    continue
-                frame = self._compile_tm(
-                    tm.name, pruned, parent_filtered_catalog(pruned)
-                )
-                if frame is not None:
-                    frames.append(node_restrict(frame))
+            as_subj = _bind(self.doc, tm, nodes, None, None, self.options)
+            as_obj = _bind(self.doc, tm, None, None, nodes, self.options)
+            if as_subj is None:
+                if as_obj is not None:
+                    add(tm, as_obj, parent_filtered_catalog(tm, as_obj))
                 continue
-            # subject-compatible: push the inverted node keys into the
-            # map's own scan when provably exact — a k-node DESCRIBE
-            # then scans O(k) source rows, not the table. Blank nodes
-            # can't be inverted (content-derived), and a self-join ROM
-            # parent reading the same table must not be starved.
+            # the nodes can be this map's subjects: push the inverted
+            # node keys into the map's own scan when provably exact — a
+            # k-node DESCRIBE then scans O(k) source rows, not the
+            # table. Blank nodes can't be inverted (content-derived),
+            # and a self-join ROM parent reading the same table must
+            # not be starved.
             table = source_of(tm)
             cond = (
                 node_cond(tm, table)
@@ -1815,34 +1746,22 @@ class VirtualGraph(Graph):
             if cond is not None and self._rom_parent_reads(tm, table):
                 cond = None
             if cond is None:
-                frame = self._compile_tm(tm.name, tm, self.catalog)
-                if frame is not None:
-                    frames.append(node_restrict(frame))
+                if as_obj is not None:
+                    as_subj = _merge_bounds(tm, [as_subj, as_obj])
+                add(tm, as_subj, self.catalog)
                 continue
-            frame = self._compile_tm(
-                tm.name, tm, self._filtered_catalog(table, cond)
-            )
-            if frame is not None:
-                frames.append(node_restrict(frame))
+            add(tm, as_subj, self._filtered_catalog(table, cond))
             # rows whose OBJECT is a node but whose subject is not were
             # dropped by the subject-key scan filter: compile the
-            # object-producing branches separately (own scan unfiltered,
+            # object-emitting branches separately (own scan unfiltered,
             # parents key-filtered)
-            pruned = object_branches(tm)
-            if pruned is not None:
-                frame = self._compile_tm(
-                    tm.name, pruned, parent_filtered_catalog(pruned)
-                )
-                if frame is not None:
-                    frames.append(node_restrict(frame, ("obj",)))
+            if as_obj is not None:
+                add(tm, as_obj, parent_filtered_catalog(tm, as_obj), ("obj",))
         if not frames:
             return self.spark.createDataFrame(
                 [], "subj string, pred string, obj string"
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out.dropDuplicates()
+        return functools.reduce(DataFrame.unionByName, frames).dropDuplicates()
 
     def release(self) -> None:
         for comp in self._compilers:

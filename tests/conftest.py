@@ -1,4 +1,5 @@
 import os
+import pathlib
 import sys
 import tempfile
 
@@ -33,3 +34,20 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def read_reference():
+    """``read_reference(path)`` is the text of a file from the reference
+    distribution's checkout (its example mappings, queries and recorded
+    results). When the file is absent the calling test is skipped, and
+    the skip reason names the file, so a box without the checkout runs
+    the rest of the suite green and shows what went unverified."""
+
+    def read(path) -> str:
+        path = pathlib.Path(path)
+        if not path.is_file():
+            pytest.skip(f"reference file missing: {path}")
+        return path.read_text()
+
+    return read

@@ -56,7 +56,8 @@ def _expected_rows() -> set[tuple[str, str]]:
 
 
 @pytest.fixture(scope="module")
-def awards_triples(spark):
+def awards_triples(spark, read_reference):
+    mapping_text = read_reference(AWARDS / "awards-mapping.ttl")
     expected = _expected_rows()
     docs = [
         (
@@ -67,10 +68,7 @@ def awards_triples(spark):
     ]
     df = spark.createDataFrame(docs, "doc string")
     catalog = SourceCatalog(spark).register("awards", df, doc_column="doc")
-    mapping = parse_mapping(
-        (AWARDS / "awards-mapping.ttl").read_text(),
-        default_formulation="JSONPath",
-    )
+    mapping = parse_mapping(mapping_text, default_formulation="JSONPath")
     return MappingCompiler(spark, mapping, catalog).triples(), expected
 
 

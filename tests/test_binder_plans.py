@@ -1,0 +1,168 @@
+"""Plans and compilations of rewriting-mode queries over the relational
+RefObjectMap + RDF-list mapping (nation, customer, orders, lineitem).
+
+The binder binds a pattern or a DESCRIBE node only to the triples-map
+branches that can emit it: a class triple emits its class IRI, a
+RefObjectMap its parent's subjects, a list its head (a blank node) and
+its cells (blank-node subjects). These tests pin what that leaves in
+the plan, on parquet sources so the pushed scan filters show.
+"""
+
+from __future__ import annotations
+
+import re
+
+import pytest
+
+from morph_xr2rml_spark import driver_contract as dc
+from morph_xr2rml_spark.compiler import MappingCompiler
+from morph_xr2rml_spark.mapping import parse_mapping
+from morph_xr2rml_spark.sources import SourceCatalog
+from morph_xr2rml_spark.sparql import VirtualGraph, sparql_select
+from morph_xr2rml_spark.sparql.bgp import sparql_describe
+
+ORDER = "<http://example.org/order/2>"
+
+_NODE_RE = re.compile(r"^\((\d+)\) (\S+(?: \S+)?)", re.M)
+
+
+@pytest.fixture(scope="module")
+def relational(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("relational")
+    tables = {
+        "nation": spark.createDataFrame(
+            [(0, "ALGERIA", 0), (1, "ARGENTINA", 1)],
+            "n_nationkey int, n_name string, n_regionkey int",
+        ),
+        "customer": spark.createDataFrame(
+            [(1, "Customer#1"), (2, "Customer#2")],
+            "c_custkey int, c_name string",
+        ),
+        "orders": spark.createDataFrame(
+            [(1, 1, "O"), (2, 2, "F"), (3, 1, "P")],
+            "o_orderkey int, o_custkey int, o_orderstatus string",
+        ),
+        "lineitem": spark.createDataFrame(
+            [(1, 1, "N"), (2, 1, "R"), (2, 2, "A"), (3, 1, "N")],
+            "l_orderkey int, l_linenumber int, l_returnflag string",
+        ),
+    }
+    keys = {"nation": ["n_nationkey"], "customer": ["c_custkey"],
+            "orders": ["o_orderkey"], "lineitem": None}
+    catalog = SourceCatalog(spark)
+    for name, df in tables.items():
+        df.write.parquet(str(root / name))
+        catalog.register(name, spark.read.parquet(str(root / name)),
+                         unique_key=keys[name])
+    doc = parse_mapping(dc.NATION_TTL + dc.ORDERS_TTL + dc.LINEITEM_LIST_TTL)
+    comp = MappingCompiler(spark, doc, catalog)
+    yield doc, catalog, comp.triples()
+    comp.release()
+
+
+def _plan_scans(df) -> tuple[list[str], str]:
+    """(the details block of every source scan, each once, and the
+    whole formatted plan); planning runs no job."""
+    jvm = df.sparkSession.sparkContext._jvm
+    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    details = plan.split("\n\n", 1)[1]
+    blocks = re.split(r"\n(?=\(\d+\) )", details)
+    return [b for b in blocks if (m := _NODE_RE.match(b.strip()))
+            and m.group(2).startswith("Scan ")], plan
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_describe_iri_plan_reads_only_key_filtered_subject_sources(spark, relational):
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        q = f"DESCRIBE {ORDER}"
+        out = vg.describe(q)
+        scans, plan = _plan_scans(out)
+        locations = [re.search(r"Location: \S+ \[([^\]]*)\]", b).group(1)
+                     for b in scans]
+        orders = [b for b, loc in zip(scans, locations) if loc.endswith("/orders")]
+        assert orders, plan
+        for b in orders:
+            pushed = re.search(r"PushedFilters: \[(.*)\]", b).group(1)
+            assert re.search(r"(In|EqualTo)\(o_orderkey", pushed), b
+        assert not any(loc.endswith("/nation") for loc in locations), plan
+        # the orders x lineitem list aggregate: heads only, built once
+        assert plan.count("partial_collect_set(") == 1, plan
+        assert _rows(out) == _rows(sparql_describe(triples, q))
+    finally:
+        vg.release()
+
+
+def test_constant_object_nobody_emits_compiles_nothing(spark, relational):
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        q = f"SELECT ?s ?p WHERE {{ ?s ?p {ORDER} }}"
+        got = _rows(vg.select(q))
+        assert vg._compilers == []
+        assert got == _rows(sparql_select(triples, q)) == []
+    finally:
+        vg.release()
+
+
+def test_constant_projection_lists_refobjectmap_list_predicates(spark, relational):
+    """A RefObjectMap RDF list emits rdf:first/rdf:rest: the schema
+    answer read from the mapping alone names them."""
+    from morph_xr2rml_spark.compiler import CompileOptions
+
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog, CompileOptions(constant_projection=True))
+    try:
+        q = "SELECT DISTINCT ?p WHERE { ?s ?p ?o }"
+        got = _rows(vg.select(q))
+        assert vg._compilers == []
+        assert got == _rows(sparql_select(triples, q))
+        assert ("<http://www.w3.org/1999/02/22-rdf-syntax-ns#first>",) in got
+    finally:
+        vg.release()
+
+
+def test_constant_projection_of_list_cell_subjects(spark, relational):
+    """List cells have blank-node subjects, so a constant subject map
+    does not answer ``?s rdf:first ?m``: the query is evaluated."""
+    from morph_xr2rml_spark.compiler import CompileOptions
+
+    _doc, catalog, _t = relational
+    doc = parse_mapping("""\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix ex:  <http://example.org/ontology#> .
+
+<#TMLine>
+    xrr:logicalSource [ rr:tableName "lineitem"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/line/{l_orderkey}/{l_linenumber}" ];
+    .
+
+<#TMAllLines>
+    xrr:logicalSource [ rr:tableName "orders"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:constant <http://example.org/all> ];
+    rr:predicateObjectMap [
+        rr:predicate ex:lines;
+        rr:objectMap [
+            rr:parentTriplesMap <#TMLine>;
+            rr:joinCondition [ rr:child "o_orderkey"; rr:parent "l_orderkey" ];
+            rr:termType xrr:RdfList;
+        ];
+    ];
+    .
+""")
+    q = ("SELECT DISTINCT ?s WHERE "
+         "{ ?s <http://www.w3.org/1999/02/22-rdf-syntax-ns#first> ?m }")
+    vg = VirtualGraph(spark, doc, catalog, CompileOptions(constant_projection=True))
+    comp = MappingCompiler(spark, doc, catalog)
+    try:
+        got = _rows(vg.select(q))
+        assert got == _rows(sparql_select(comp.triples(), q))
+        assert got and all(s.startswith("_:") for (s,) in got)
+    finally:
+        comp.release()
+        vg.release()

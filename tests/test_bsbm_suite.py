@@ -72,16 +72,15 @@ def _reconstructed_products(rows: list[tuple[str, str, str]]) -> list[str]:
 
 
 @pytest.fixture(scope="module")
-def bsbm_result(spark):
+def bsbm_result(spark, read_reference):
+    mapping_text = read_reference(BSBM / "bsbm-mapping.ttl")
     rows = _expected_rows()
     docs = _reconstructed_products(rows)
     df = spark.createDataFrame([(d,) for d in docs], "doc string")
     catalog = SourceCatalog(spark).register("products", df, doc_column="doc")
-    mapping = parse_mapping(
-        (BSBM / "bsbm-mapping.ttl").read_text(), default_formulation="JSONPath"
-    )
+    mapping = parse_mapping(mapping_text, default_formulation="JSONPath")
     triples = MappingCompiler(spark, mapping, catalog).triples()
-    query = (BSBM / "query.sparql").read_text()
+    query = read_reference(BSBM / "query.sparql")
     return rows, mapping, triples, sparql_select(triples, query)
 
 

@@ -14,9 +14,9 @@ from morph_xr2rml_spark.compiler import CompileOptions, MappingCompiler
 from morph_xr2rml_spark.mapping import parse_mapping
 from morph_xr2rml_spark.sources import SourceCatalog
 
-MAPPING = pathlib.Path(
+MAPPING_PATH = pathlib.Path(
     "/root/reference/morph-xr2rml-dist/example_mongo/mapping.ttl"
-).read_text()
+)
 
 EX = "http://example.com/"
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
@@ -70,7 +70,7 @@ MOVIE_DOCS = [
 
 
 @pytest.fixture(scope="module")
-def triples(spark):
+def triples(spark, read_reference):
     students = spark.createDataFrame(
         [(json.dumps(d),) for d in STUDENT_DOCS], "doc string"
     )
@@ -82,7 +82,7 @@ def triples(spark):
     )
     # reference_formulation comes from the db config in the reference
     # (database.reference_formulation=JSONPath for MongoDB)
-    doc = parse_mapping(MAPPING, default_formulation="JSONPath")
+    doc = parse_mapping(read_reference(MAPPING_PATH), default_formulation="JSONPath")
     compiler = MappingCompiler(spark, doc, catalog, CompileOptions())
     df = compiler.triples()
     return {(r.subj, r.pred, r.obj) for r in df.collect()}

@@ -18,9 +18,9 @@ from morph_xr2rml_spark.compiler import CompileOptions, MappingCompiler
 from morph_xr2rml_spark.mapping import parse_mapping
 from morph_xr2rml_spark.sources import SourceCatalog
 
-MAPPING = pathlib.Path(
+MAPPING_PATH = pathlib.Path(
     "/root/reference/morph-xr2rml-dist/example_mysql/mapping.ttl"
-).read_text()
+)
 
 EX = "http://example.com/"
 S = "http://example.org/student/"
@@ -46,7 +46,7 @@ B3_NAME = (
 
 
 @pytest.fixture(scope="module")
-def triples_df(spark):
+def triples_df(spark, read_reference):
     student = spark.createDataFrame(
         [
             ("B1", '[{"hobby": "Swimming","place": "sea"},{"hobby": "Soccer","place": "street"}]',
@@ -71,7 +71,7 @@ def triples_df(spark):
         "id int, name string, code string, shirt_colors string",
     )
     catalog = SourceCatalog(spark).register("student", student).register("sport", sport)
-    doc = parse_mapping(MAPPING)
+    doc = parse_mapping(read_reference(MAPPING_PATH))
     compiler = MappingCompiler(spark, doc, catalog, CompileOptions())
     df = compiler.triples()
     df.cache()

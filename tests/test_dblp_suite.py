@@ -72,7 +72,8 @@ def _expected_rows() -> set[tuple]:
 
 
 @pytest.fixture(scope="module")
-def dblp_result(spark):
+def dblp_result(spark, read_reference):
+    mapping_text = read_reference(DBLP / "dblp-mapping-authors.ttl")
     expected = _expected_rows()
     authors: dict[str, dict] = {}
     for a, name, ah, j, t, i in expected:
@@ -98,10 +99,7 @@ def dblp_result(spark):
         [(json.dumps(d),) for d in authors.values()], "doc string"
     )
     catalog = SourceCatalog(spark).register("authors", df, doc_column="doc")
-    mapping = parse_mapping(
-        (DBLP / "dblp-mapping-authors.ttl").read_text(),
-        default_formulation="JSONPath",
-    )
+    mapping = parse_mapping(mapping_text, default_formulation="JSONPath")
     triples = MappingCompiler(spark, mapping, catalog).triples()
     got = {
         (

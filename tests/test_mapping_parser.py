@@ -18,8 +18,8 @@ EX_MYSQL = pathlib.Path("/root/reference/morph-xr2rml-dist/example_mysql/mapping
 EX_MONGO = pathlib.Path("/root/reference/morph-xr2rml-dist/example_mongo/mapping.ttl")
 
 
-def test_parse_example_mysql():
-    doc = parse_mapping(EX_MYSQL.read_text(), base="")
+def test_parse_example_mysql(read_reference):
+    doc = parse_mapping(read_reference(EX_MYSQL), base="")
     assert set(doc.triples_maps) == {"#TMStudent", "#TMSport"}
 
     student = doc.get("#TMStudent")
@@ -86,8 +86,8 @@ def test_parse_example_mysql():
     assert colors.member_term_info()[0] == terms.TERM_LITERAL
 
 
-def test_parse_example_mongo():
-    doc = parse_mapping(EX_MONGO.read_text(), base="")
+def test_parse_example_mongo(read_reference):
+    doc = parse_mapping(read_reference(EX_MONGO), base="")
     assert set(doc.triples_maps) == {"#Students", "#Movies", "#Directors"}
 
     students = doc.get("#Students")
@@ -150,18 +150,16 @@ def test_shortcut_and_constant_forms():
     assert p2.object_maps[0].infer_term_type() == terms.TERM_LITERAL
 
 
-def test_parse_taxref_real_world_mappings():
+def test_parse_taxref_real_world_mappings(read_reference):
     """The reference's hardest real mappings (example_taxref, 90 triples
     maps each): named shared SubjectMap resources referenced by IRI,
     triple-quoted find() queries with $where JS, dense prefix blocks
     without trailing spaces — all must parse, with shared subject maps
     resolved onto every referencing TriplesMap."""
-    import pathlib
-
     for v in ("v8", "v9"):
-        text = pathlib.Path(
+        text = read_reference(
             f"/root/reference/morph-xr2rml-dist/example_taxref/xr2rml_taxref_{v}.ttl"
-        ).read_text()
+        )
         doc = parse_mapping(text, default_formulation="JSONPath")
         assert len(doc.triples_maps) == 90
         tm = doc.triples_maps["#TM_Taxon"]

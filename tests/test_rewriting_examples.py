@@ -53,8 +53,8 @@ _MOVIE_DOCS = [
 
 
 @pytest.fixture(scope="module")
-def mongo_rw(spark):
-    mapping = (_DIST / "example_mongo_rewriting" / "mapping.ttl").read_text()
+def mongo_rw(spark, read_reference):
+    mapping = read_reference(_DIST / "example_mongo_rewriting" / "mapping.ttl")
     movies = spark.createDataFrame(
         [(json.dumps(d),) for d in _MOVIE_DOCS], "doc string"
     )
@@ -155,8 +155,8 @@ _B3_NAME = (
 
 
 @pytest.fixture(scope="module")
-def mysql_rw(spark):
-    mapping = (_DIST / "example_mysql_rewriting" / "mapping.ttl").read_text()
+def mysql_rw(spark, read_reference):
+    mapping = read_reference(_DIST / "example_mysql_rewriting" / "mapping.ttl")
     # the shipped file's rr:parentTriplesMap <#Sport> dangles (the map is
     # named <#TMSport>); normalize the reference's typo so both modes
     # compile the joins the example intends

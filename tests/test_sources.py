@@ -195,14 +195,13 @@ def test_find_where_js_predicate(spark, people):
     assert {json.loads(r[doc_col])["name"] for r in out.collect()} == {"x"}
 
 
-def test_taxref_real_mapping_compiles_end_to_end(spark):
+def test_taxref_real_mapping_compiles_end_to_end(spark, read_reference):
     """The reference's flagship real-world example (example_taxref,
     90 triples maps over a Mongo taxonomy with $where JS find
     predicates) compiles and emits through this engine on synthetic
     documents: reference names (codeTaxon == codeReference) become
     skos:Concepts, synonyms route to the alt-label TMs instead."""
     import json as _json
-    import pathlib
 
     from morph_xr2rml_spark.compiler import CompileOptions, MappingCompiler
     from morph_xr2rml_spark.mapping import parse_mapping
@@ -220,9 +219,9 @@ def test_taxref_real_mapping_compiles_end_to_end(spark):
         [(_json.dumps(d),) for d in docs], "doc string"
     )
     catalog = SourceCatalog(spark).register("taxrefv9", df, doc_column="doc")
-    text = pathlib.Path(
+    text = read_reference(
         "/root/reference/morph-xr2rml-dist/example_taxref/xr2rml_taxref_v9.ttl"
-    ).read_text()
+    )
     mapping = parse_mapping(text, default_formulation="JSONPath")
     trip = MappingCompiler(spark, mapping, catalog, CompileOptions()).triples()
     got = {tuple(r) for r in trip.collect()}

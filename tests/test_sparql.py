@@ -45,6 +45,42 @@ def test_parse_basics():
     assert q.order_by == [("a", False)] and q.limit == 5 and q.offset == 1
 
 
+@pytest.mark.parametrize(
+    "literal", ['"a}b"', '"a{b"', '"a\\"}b"', "'a}b'", "'a{b'"]
+)
+def test_braces_inside_string_literals(literal):
+    """A brace inside a string literal, double- or single-quoted and
+    with escaped quotes, is text: it neither closes nor opens a group."""
+    q = parse_sparql(
+        f"SELECT ?x WHERE {{ ?x <http://e/p> {literal} . ?x <http://e/q> ?y }}"
+    )
+    assert [(tp.s, tp.p, tp.o) for tp in q.where.patterns] == [
+        ("?x", "<http://e/p>", literal),
+        ("?x", "<http://e/q>", "?y"),
+    ]
+
+
+def test_apostrophe_inside_iri_opens_no_string():
+    q = parse_sparql(
+        "SELECT ?x WHERE { ?x <http://e/O'Neil> ?y . ?y <http://e/p> 'a}b' }"
+    )
+    assert [(tp.s, tp.p, tp.o) for tp in q.where.patterns] == [
+        ("?x", "<http://e/O'Neil>", "?y"),
+        ("?y", "<http://e/p>", "'a}b'"),
+    ]
+
+
+def test_brace_inside_literal_matches_data(spark):
+    t = spark.createDataFrame(
+        [("<http://e/s>", "<http://e/p>", '"a}b"'),
+         ("<http://e/t>", "<http://e/p>", '"a{b"')],
+        "subj string, pred string, obj string",
+    )
+    for lit, subj in (('"a}b"', "<http://e/s>"), ('"a{b"', "<http://e/t>")):
+        got = rows(sparql_select(t, f"SELECT ?x WHERE {{ ?x <http://e/p> {lit} }}"))
+        assert got == {(subj,)}
+
+
 def test_bgp_join(triples):
     out = sparql_select(
         triples,

@@ -545,17 +545,16 @@ def test_same_tm_patterns_share_one_compilation(setup, spark):
         vg.release()
 
 
-def test_virtual_over_document_source(spark):
+def test_virtual_over_document_source(spark, read_reference):
     """Rewriting mode on a document-shaped (MongoDB-style) source: the
     reference's example_mongo mapping with JSONPath references and an
     rml:iterator — binding prunes by predicate, no pushdown is claimed
     (references aren't invertible), answers match materialized."""
     import json as _json
-    import pathlib
 
-    mapping = pathlib.Path(
+    mapping = read_reference(
         "/root/reference/morph-xr2rml-dist/example_mongo/mapping.ttl"
-    ).read_text()
+    )
     from tests.test_compiler_mongo_suite import MOVIE_DOCS, STUDENT_DOCS
 
     students = spark.createDataFrame(
@@ -1195,38 +1194,126 @@ def test_describe_includes_collection_member_arcs(spark):
         vg.release()
 
 
-@settings(max_examples=6, deadline=None)
-@given(
-    emp_rows=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=6),
-            st.sampled_from(_NAMES),
-            st.integers(min_value=0, max_value=150),
-            st.integers(min_value=1, max_value=4),
-        ),
-        min_size=0,
-        max_size=8,
-        unique_by=lambda r: r[0],
-    ),
-    dept_rows=st.lists(
-        st.tuples(st.integers(min_value=1, max_value=4), st.sampled_from(_NAMES)),
-        min_size=0,
-        max_size=4,
-        unique_by=lambda r: r[0],
-    ),
-    salary_cut=st.integers(min_value=0, max_value=150),
-    which=st.integers(min_value=0, max_value=1),
-    max_nodes=st.sampled_from([1, 10_000]),
-)
-def _describe_differential(
-    spark, emp_rows, dept_rows, salary_cut, which, max_nodes
-):
-    """Two-phase virtual DESCRIBE == materialize-then-describe on
-    randomized sources, over a mapping with a RefObjectMap AND an
-    IRI-membered RDF list (emp IRIs as rdf:first members), at both the
-    two-phase path and the forced bounded fallback (max_nodes=1)."""
-    from morph_xr2rml_spark.sparql.bgp import sparql_describe
+def _list_label(subj: str, pred: str, members: list[str]) -> str:
+    """The content-derived blank-node base of an RDF list (the
+    compiler's labelling: md5 of subj NUL pred NUL the JSON member
+    array, first 15 hex digits in decimal)."""
+    import hashlib
+    import json as _json
 
+    text = "\x00".join((subj, pred, _json.dumps(members, separators=(",", ":"))))
+    return "_:c%d" % int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def test_describe_includes_refobjectmap_list_member_arcs(spark):
+    """A described node that is an rdf:first member of a RefObjectMap
+    RDF list (xrr:RdfList on rr:parentTriplesMap) keeps its membership
+    arc: a RefObjectMap list has no object maps, so the members are
+    its parent's subjects. Expected triples written out by hand."""
+    from morph_xr2rml_spark import driver_contract as dc
+
+    orders = spark.createDataFrame([(1,), (2,)], "o_orderkey int")
+    lineitem = spark.createDataFrame(
+        [(1, 1, "N"), (1, 2, "R"), (2, 1, "A")],
+        "l_orderkey int, l_linenumber int, l_returnflag string",
+    )
+    catalog = (
+        SourceCatalog(spark)
+        .register("orders", orders, unique_key=["o_orderkey"])
+        .register("lineitem", lineitem)
+    )
+    doc = parse_mapping(dc.LINEITEM_LIST_TTL)
+    line11 = "<http://example.org/line/1/1>"
+    head = _list_label(
+        "<http://example.org/order/1>",
+        "<http://example.org/ontology#lines>",
+        [line11, "<http://example.org/line/1/2>"],
+    )
+    want = {
+        (line11, "<http://example.org/ontology#flag>", '"N"'),
+        (head + "_0", "<http://www.w3.org/1999/02/22-rdf-syntax-ns#first>", line11),
+    }
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        for q in (
+            PREFIX + "DESCRIBE ?l WHERE { ?l ex:flag ?f . "
+            f"FILTER(?l = {line11}) }}",
+            f"DESCRIBE {line11}",
+        ):
+            assert {tuple(r) for r in vg.describe(q).collect()} == want, q
+    finally:
+        vg.release()
+
+
+# TEAM_TTL plus a RefObjectMap-based RDF list (each department lists
+# its employees: the parent's subjects are the members) and an rdf:Bag
+# container of each team's members
+STAFF_TTL = TEAM_TTL + """\
+
+<#TMTeamBag>
+    xrr:logicalSource [ rr:tableName "team"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/team/{tid}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:bag;
+        rr:objectMap [
+            xrr:reference "Column(members)/JSONPath($.*)";
+            rr:termType xrr:RdfBag;
+            xrr:nestedTermMap [ rr:termType rr:IRI ];
+        ];
+    ];
+    .
+
+<#TMStaff>
+    xrr:logicalSource [ rr:tableName "dept"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/dept/{dno}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:staff;
+        rr:objectMap [
+            rr:parentTriplesMap <#TMEmp>;
+            rr:joinCondition [ rr:child "dno"; rr:parent "dno" ];
+            rr:termType xrr:RdfList;
+        ];
+    ];
+    .
+"""
+
+_RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+# IRIs from every template, list members (emp), class IRIs, rdf:nil and
+# the container class
+_NAMED_IRIS = [
+    "<http://example.org/emp/1>",
+    "<http://example.org/emp/3>",
+    "<http://example.org/dept/1>",
+    "<http://example.org/dept/4>",
+    "<http://example.org/team/7>",
+    "<http://example.org/ontology#Employee>",
+    "<http://example.org/ontology#Department>",
+    f"<{_RDF}nil>",
+    f"<{_RDF}Bag>",
+]
+
+_EMP_ROWS = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=6),
+        st.sampled_from(_NAMES),
+        st.integers(min_value=0, max_value=150),
+        st.integers(min_value=1, max_value=4),
+    ),
+    min_size=0,
+    max_size=8,
+    unique_by=lambda r: r[0],
+)
+_DEPT_ROWS = st.lists(
+    st.tuples(st.integers(min_value=1, max_value=4), st.sampled_from(_NAMES)),
+    min_size=0,
+    max_size=4,
+    unique_by=lambda r: r[0],
+)
+
+
+def _staff_graphs(spark, emp_rows, dept_rows):
+    """(materialized triples, virtual graph, compiler) of STAFF_TTL over
+    the given emp/dept rows and a fixed two-team source."""
     emp = spark.createDataFrame(
         emp_rows or [(None, None, None, None)],
         "eid int, ename string, salary int, dno int",
@@ -1243,24 +1330,50 @@ def _describe_differential(
          (8, '["http://example.org/emp/3"]')],
         "tid int, members string",
     )
-    doc = parse_mapping(TEAM_TTL)
+    doc = parse_mapping(STAFF_TTL)
     catalog = (
         SourceCatalog(spark)
         .register("dept", dept)
         .register("emp", emp)
         .register("team", team)
     )
+    comp = MappingCompiler(spark, doc, catalog)
+    return comp.triples(), VirtualGraph(spark, doc, catalog), comp
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    emp_rows=_EMP_ROWS,
+    dept_rows=_DEPT_ROWS,
+    salary_cut=st.integers(min_value=0, max_value=150),
+    which=st.integers(min_value=0, max_value=2),
+    max_nodes=st.sampled_from([1, 10_000]),
+    named=st.lists(
+        st.sampled_from(_NAMED_IRIS), min_size=1, max_size=3, unique=True
+    ),
+)
+def _describe_differential(
+    spark, emp_rows, dept_rows, salary_cut, which, max_nodes, named
+):
+    """Virtual DESCRIBE == materialize-then-describe on randomized
+    sources, over a mapping with a RefObjectMap, an IRI-membered RDF
+    list (emp IRIs as rdf:first members) and a RefObjectMap-based RDF
+    list: two-phase at both the node path and the forced bounded
+    fallback (max_nodes=1), and named IRIs (which=2)."""
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
+
     q = PREFIX + (
         f"DESCRIBE ?e WHERE {{ ?e ex:salary ?s . FILTER(?s > {salary_cut}) }}"
         if which == 0
         else f"DESCRIBE ?d WHERE {{ ?e ex:dept ?d . ?e ex:salary ?s . "
         f"FILTER(?s > {salary_cut}) }}"
+        if which == 1
+        else "DESCRIBE " + " ".join(named)
     )
-    comp = MappingCompiler(spark, doc, catalog)
-    vg = VirtualGraph(spark, doc, catalog)
+    triples, vg, comp = _staff_graphs(spark, emp_rows, dept_rows)
     try:
         got = _rows(vg.describe(q, max_nodes=max_nodes))
-        want = _rows(sparql_describe(comp.triples(), q))
+        want = _rows(sparql_describe(triples, q))
         assert got == want, f"q: {q}\nemp: {emp_rows}\ndept: {dept_rows}"
     finally:
         comp.release()
@@ -1269,6 +1382,42 @@ def _describe_differential(
 
 def test_differential_virtual_describe(spark):
     _describe_differential(spark)
+
+
+_CONST_OBJECT_QUERIES = [
+    *(f"SELECT ?s ?p WHERE {{ ?s ?p {iri} }}" for iri in _NAMED_IRIS),
+    PREFIX + 'SELECT ?s ?p WHERE { ?s ?p "alice" }',
+    PREFIX + 'SELECT ?s ?p WHERE { ?s ?p "Engineering" }',
+    f"SELECT ?s ?m WHERE {{ ?s <{_RDF}first> ?m }}",
+    f"SELECT ?s ?r WHERE {{ ?s <{_RDF}rest> ?r }}",
+    f"SELECT ?s ?m WHERE {{ ?s a <{_RDF}Bag> ; <{_RDF}_1> ?m }}",
+    f"SELECT ?s ?t WHERE {{ ?s a ?t }}",
+]
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    emp_rows=_EMP_ROWS,
+    dept_rows=_DEPT_ROWS,
+    q=st.sampled_from(_CONST_OBJECT_QUERIES),
+)
+def _const_object_differential(spark, emp_rows, dept_rows, q):
+    """Virtual SELECT == materialize-then-select for patterns the
+    binder prunes on the object alone (an IRI or literal object under a
+    variable predicate) and for list-cell predicates."""
+    triples, vg, comp = _staff_graphs(spark, emp_rows, dept_rows)
+    try:
+        got = _rows(vg.select(q))
+        assert got == _rows(sparql_select(triples, q)), (
+            f"q: {q}\nemp: {emp_rows}\ndept: {dept_rows}"
+        )
+    finally:
+        comp.release()
+        vg.release()
+
+
+def test_differential_virtual_const_object_select(spark):
+    _const_object_differential(spark)
 
 
 def test_constant_projection_answers_from_mapping(setup, spark):

@@ -80,12 +80,12 @@ def _docs():
 
 
 @pytest.fixture(scope="module")
-def taxref(spark):
+def taxref(spark, read_reference):
     df = spark.createDataFrame(
         [(json.dumps(d),) for d in _docs()], "doc string"
     )
     catalog = SourceCatalog(spark).register("taxrefv9", df, doc_column="doc")
-    doc = parse_mapping(MAPPING_PATH.read_text(), default_formulation="JSONPath")
+    doc = parse_mapping(read_reference(MAPPING_PATH), default_formulation="JSONPath")
     assert len(doc.triples_maps) == 150
     comp = MappingCompiler(spark, doc, catalog, CompileOptions())
     triples = comp.triples().persist()
