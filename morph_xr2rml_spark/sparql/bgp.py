@@ -1,10 +1,10 @@
 """SPARQL over a triple table as DataFrame composition.
 
-:func:`parse_sparql` is the one reader of query text: it parses every
-query form (SELECT, ASK, CONSTRUCT, DESCRIBE) into a
-:class:`SelectQuery`, which the :class:`Graph` interface answers over
-the query's fragment — the whole table for a :class:`TripleTable`, the
-bound mapping branches for a :class:`..virtual.VirtualGraph`.
+:func:`.parse.parse_sparql` reads every query form (SELECT, ASK,
+CONSTRUCT, DESCRIBE) into a :class:`.parse.SelectQuery`, which the
+:class:`Graph` interface answers over the query's fragment — the whole
+table for a :class:`TripleTable`, the bound mapping branches for a
+:class:`..virtual.VirtualGraph`.
 
 The reference evaluates SPARQL by rewriting it into MongoDB/SQL queries
 through a bespoke abstract-query algebra (binder + AbstractQuery tree +
@@ -24,1270 +24,33 @@ collapses into plan composition over the (subj, pred, obj) table:
 
 Catalyst then does join reordering, predicate pushdown, and broadcast
 selection — replacing the reference's hand-written optimizer rewrites
-(SURVEY §4.1).
-
-Supported SPARQL subset (a superset of every query shape the
-reference's abstract algebra models): PREFIX, SELECT [DISTINCT]
-?v... | *, basic graph patterns with ';'/',' lists and [ ... ]
-blank-node property lists, property paths (p1/p2 sequence,
-p1|p2 alternation, ^p inverse, !p / !(p1|p2) negated property sets,
-p+ / p* / p? closure — the closures
-evaluated as a distributed semi-naive transitive-closure fixpoint;
-paths evaluate per named graph inside GRAPH ?g),
-GRAPH <g>/{?g} groups over a quad table, OPTIONAL { ... }, UNION of
-group graph patterns, MINUS { ... }, FILTER with =, !=, <, <=, >, >=,
-BOUND, !, &&, ||, REGEX, IN / NOT IN, xsd:integer/double/... casts,
-STR, arithmetic (+ - * /), STRLEN/UCASE/LCASE/CONCAT/SUBSTR,
-STRSTARTS/STRENDS/CONTAINS, LANG/LANGMATCHES/DATATYPE,
-isIRI/isURI/isLiteral/isBlank, COALESCE, IF,
-FILTER [NOT] EXISTS { ... } (semi/anti join), BIND(expr AS ?v),
-VALUES ?v { ... } / VALUES (?a ?b) { (..) } (broadcast inline data;
-UNDEF joins as NULL), subqueries ({ SELECT ... } evaluated bottom-up,
-projected variables joining outward), GROUP BY + HAVING, aggregates
-COUNT/SUM/AVG/MIN/MAX/SAMPLE/GROUP_CONCAT (with DISTINCT;
-GROUP_CONCAT sorted for determinism), ORDER BY [ASC|DESC], LIMIT,
-OFFSET.
-
-Value semantics: positions hold N-Triples lexical forms (`<iri>`,
-`"lit"`, `"lit"^^<dt>`, `"3"^^xsd:integer`); FILTER comparisons are on
-the lexical form for equality and on the parsed numeric value for
-numeric literals in </<=/>/>= (SPARQL's simple-literal subset).
+(SURVEY §4.1). The supported SPARQL subset and the value semantics are
+described in :mod:`.parse`.
 """
 
 from __future__ import annotations
 
 import functools
 import re
-import threading
-from dataclasses import dataclass, field
-from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------------------
-# query model
-# ---------------------------------------------------------------------------
-
-Term = str  # '?var' | '<iri>' | '"lit"' | '"lit"^^<dt>' | '"lit"@lang'
-
-
-@dataclass
-class TriplePattern:
-    s: Term
-    p: "Term | Path"  # a predicate term, or a property-path expression
-    o: Term
-
-
-@dataclass
-class Filter:
-    expr: "FilterNode"
-
-
-@dataclass
-class Path:
-    """A SPARQL 1.1 property-path expression at the predicate position.
-
-    op: 'seq' | 'alt' | 'inv' | 'plus' | 'star' | 'opt' | 'nps'
-    (negated property set, args = excluded predicate IRIs), over Path
-    or plain predicate-IRI strings (the leaf case never constructs a
-    Path).
-    """
-
-    op: str
-    args: list  # list[Path | str]
-
-
-@dataclass
-class Group:
-    """A group graph pattern: required patterns, optional sub-groups,
-    filters, union branches, GRAPH sub-groups, BIND assignments,
-    VALUES inline data, FILTER [NOT] EXISTS sub-groups, MINUS
-    sub-groups."""
-
-    patterns: list[TriplePattern] = field(default_factory=list)
-    optionals: list["Group"] = field(default_factory=list)
-    filters: list[Filter] = field(default_factory=list)
-    unions: list[list["Group"]] = field(default_factory=list)
-    graphs: list[tuple[Term, "Group"]] = field(default_factory=list)
-    binds: list[tuple[object, str]] = field(default_factory=list)  # (expr, var)
-    values: list[tuple[list[str], list[list[str | None]]]] = field(
-        default_factory=list
-    )  # (vars, rows); None = UNDEF
-    exists: list[tuple[bool, "Group"]] = field(
-        default_factory=list
-    )  # (positive, sub-group)
-    minuses: list["Group"] = field(default_factory=list)
-    subselects: list["SelectQuery"] = field(default_factory=list)
-
-
-@dataclass
-class Aggregate:
-    func: str  # 'count'|'sum'|'avg'|'min'|'max'|'sample'|'group_concat'
-    var: str | None  # None = COUNT(*)
-    alias: str
-    distinct: bool = False
-    sep: str = " "  # GROUP_CONCAT separator
-    # True when `var` is a pre-computed VALUE column (an aggregate over
-    # an expression, SUM(?a * ?b): the input is materialized as a
-    # hidden column before grouping) rather than a lexical term column
-    # that needs numeric parsing
-    raw: bool = False
-
-
-@dataclass
-class SelectQuery:
-    variables: list[str]  # without '?'; empty = *
-    where: Group
-    distinct: bool = False
-    # (key, asc): key is a variable name (str) or a FilterNode expression
-    order_by: list[tuple[object, bool]] = field(default_factory=list)
-    limit: int | None = None
-    offset: int | None = None
-    aggregates: list[Aggregate] = field(default_factory=list)
-    group_by: list[str] = field(default_factory=list)
-    having: "FilterNode | None" = None
-    # dataset clauses: FROM <g> graphs merge into the queried default
-    # graph; FROM NAMED <g> graphs are the queried named graphs
-    from_graphs: list[str] = field(default_factory=list)
-    from_named: list[str] = field(default_factory=list)
-    # SELECT (expr AS ?alias) projection expressions (SPARQL 1.1 §18.4
-    # Extend): (value-expression tree, alias) pairs, evaluated after
-    # grouping (aggregate calls inside are pulled into hidden agg
-    # columns like HAVING's) and in projection order, so a later
-    # expression may reference an earlier alias. The alias also appears
-    # in `variables` at its projection position.
-    projections: list[tuple[object, str]] = field(default_factory=list)
-    # GROUP BY expression conditions ((expr AS ?alias), (expr), or a
-    # bare function call): (tree, name) pairs materialized as columns
-    # on the pre-group frame; the name also appears in `group_by`
-    # (unaliased conditions get a hidden __g{i} name, droppped from the
-    # projection)
-    group_exprs: list[tuple[object, str]] = field(default_factory=list)
-    # the query form: SELECT | ASK | CONSTRUCT | DESCRIBE. ASK, CONSTRUCT
-    # and DESCRIBE keep their WHERE pattern and modifiers here like a
-    # SELECT * (a DESCRIBE projects its variables in `variables`)
-    form: str = "SELECT"
-    # CONSTRUCT: the template triple patterns instantiated per solution
-    template: list[TriplePattern] = field(default_factory=list)
-    # DESCRIBE: the resources named, IRIs (expanded and BASE-resolved)
-    # or ?variables, in query order
-    describe: list[Term] = field(default_factory=list)
-
-
-# filter expression tree
-@dataclass
-class FilterNode:
-    op: str  # cmp ops, 'and', 'or', 'not', 'bound', 'regex'
-    args: list  # FilterNode | term strings
-
-
-# ---------------------------------------------------------------------------
-# parser (regex/recursive-descent over the subset)
-# ---------------------------------------------------------------------------
-
-_PREFIX_RE = re.compile(r"PREFIX\s+([\w.-]*):\s*<([^>]*)>", re.IGNORECASE)
-_FORM_RE = re.compile(r"(SELECT|ASK|CONSTRUCT|DESCRIBE)\b", re.IGNORECASE)
-# DatasetClause* (FROM [NAMED] IRIref), then the WHERE group's opening
-# '{'. WHERE is optional in the SPARQL grammar (SELECT * { ... } and
-# ASK { ... } are valid); the lookbehind keeps a ?where variable from
-# being eaten as the keyword.
-_WHERE_PAT = (
-    r"\s*(?P<dataset>(?:FROM\s+(?:NAMED\s+)?"
-    r"(?:<[^<>\s]*>|\w+(?:\.\w+)*:[\w.%-]*)\s*)*)"
-    r"(?:(?<![?\w])WHERE\s*)?\{"
-)
-_WHERE_RE = re.compile(_WHERE_PAT, re.IGNORECASE)
-# the projection runs up to where the dataset clauses / WHERE block start
-_SELECT_RE = re.compile(
-    r"\s*SELECT\s+(DISTINCT\s+|REDUCED\s+)?(.*?)(?=" + _WHERE_PAT + ")",
-    re.IGNORECASE | re.DOTALL,
-)
-# a DESCRIBE term: ?var, <iri> or a prefixed name
-_DESCRIBE_TERM_RE = re.compile(r"\s*(\?\w+|<[^<>\s]*>|[\w.-]*:[\w.%-]*)")
-# Solution modifiers after the WHERE block. SPARQL's LimitOffsetClauses
-# allows LIMIT/OFFSET in either order; the scanner accepts any clause
-# order and raises on unconsumed text (a silently-dropped OFFSET would
-# return extra rows).
-_CLAUSE_RE = re.compile(r"\b(GROUP\s+BY|ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
-
-# one DatasetClause of _WHERE_PAT's dataset capture
-_DATASET_RE = re.compile(
-    r"\bFROM\s+(NAMED\s+)?(<[^<>\s]*>|\w+(?:\.\w+)*:[\w.%-]*)",
-    re.IGNORECASE
+from ..functions import terms
+from .parse import (
+    _BOOL_OPS,
+    Aggregate,
+    FilterNode,
+    Group,
+    Path,
+    SelectQuery,
+    Term,
+    TriplePattern,
+    _is_var,
+    parse_sparql,
 )
 
-_AGG_RE = re.compile(
-    r"^\(\s*(?P<func>COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)\s*\(\s*"
-    r"(?P<distinct>DISTINCT\s+)?(?P<arg>\*|\?\w+)\s*"
-    r"(?:;\s*SEPARATOR\s*=\s*\"(?P<sep>(?:[^\"\\]|\\.)*)\"\s*)?"
-    r"\)\s+AS\s+\?(?P<alias>\w+)\s*\)$",
-    re.IGNORECASE,
-)
-
-_TOKEN_RE = re.compile(
-    r"""\?[\w]+           # variable
-      | <[^>]*>           # iri
-      | "(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[\w-]+)?   # literal
-      | \w+(?:\.\w+)*:[\w.%-]*   # prefixed name (PN_PREFIX: interior dots)
-      | a\b               # rdf:type shorthand
-      | [{}().;,]
-      | [\[\]]            # blank-node property lists
-      | [/|^+*?!]         # property-path operators (incl. !negation)
-      | \S+
-    """,
-    re.VERBOSE,
-)
-
-_RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-
-# reserved (non-PN_PREFIX) key under which the prologue's BASE IRI
-# rides in the prefixes dict, so every _expand call site resolves
-# relative IRIREFs without a signature change
-_BASE_KEY = "\x00base"
-
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-
-
-def _expand(tok: str, prefixes: dict[str, str]) -> str:
-    if tok == "a":
-        return _RDF_TYPE
-    m = re.match(r"^([\w.-]*):([\w.%-]*)$", tok)
-    if m and m.group(1) in prefixes:
-        return f"<{prefixes[m.group(1)]}{m.group(2)}>"
-    # typed literal with a prefixed datatype ("1"^^xsd:integer)
-    m = re.match(r'^("(?:[^"\\]|\\.)*"\^\^)([\w.-]*):([\w.%-]*)$', tok, re.S)
-    if m and m.group(2) in prefixes:
-        return f"{m.group(1)}<{prefixes[m.group(2)]}{m.group(3)}>"
-    base = prefixes.get(_BASE_KEY)
-    if (
-        base
-        and tok.startswith("<")
-        and tok.endswith(">")
-        and not _SCHEME_RE.match(tok[1:-1])
-    ):
-        # prologue BASE: relative IRIREFs resolve per RFC 3986 (the
-        # Jena-backed reference resolves them; leaving them verbatim
-        # silently matched nothing)
-        from urllib.parse import urljoin
-
-        return f"<{urljoin(base, tok[1:-1])}>"
-    return tok
-
-
-def _parse_prologue(prologue: str) -> dict[str, str]:
-    """PREFIX map + the BASE IRI (under _BASE_KEY) from the
-    comment-free prologue text; relative PREFIX IRIs themselves resolve
-    against BASE."""
-    from urllib.parse import urljoin
-
-    prefixes = dict(_PREFIX_RE.findall(prologue))
-    mb = re.search(r"\bBASE\s*<([^>]*)>", prologue, re.IGNORECASE)
-    if mb:
-        base = mb.group(1)
-        prefixes = {
-            k: v if _SCHEME_RE.match(v) else urljoin(base, v)
-            for k, v in prefixes.items()
-        }
-        prefixes[_BASE_KEY] = base
-    return prefixes
-
-
-# prefix-name part: PN_PREFIX permits interior dots (SPARQL 1.1
-# §19.8, e.g. ``PREFIX a.b:``), so the class is [\w.-]*, not [\w-]*
-_PROLOGUE_RE = re.compile(
-    r"\s*(?:(?:PREFIX\s+[\w.-]*:|BASE)\s*<[^>]*>\s*)*", re.IGNORECASE
-)
-
-
-def _strip_comments(text: str) -> str:
-    """Remove '#'-to-end-of-line comments, ignoring '#' inside <IRI>
-    refs and quoted strings (SPARQL 1.1 grammar: comments are outside
-    tokens). A '<' counts as an IRI opener only when a matching '>'
-    follows before any character an IRIREF cannot contain (whitespace,
-    quote, another '<') — so the comparison in FILTER(?x < 5) does not
-    swallow a later '#' comment."""
-    out: list[str] = []
-    in_str = False
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if in_str:
-            out.append(ch)
-            if ch == "\\" and i + 1 < n:
-                out.append(text[i + 1])
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif ch == '"':
-            in_str = True
-            out.append(ch)
-        elif ch == "<":
-            j = i + 1
-            while j < n and text[j] not in '>"<' and not text[j].isspace():
-                j += 1
-            if j < n and text[j] == ">":  # a complete IRIREF: copy verbatim
-                out.append(text[i : j + 1])
-                i = j + 1
-                continue
-            out.append(ch)  # a bare '<' comparison operator
-        elif ch == "#":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-# NOW() must return ONE timestamp for the whole query (SPARQL 1.1
-# §17.4.5.1); the parser stamps it once per top-level parse and every
-# NOW() node carries that constant. Thread-local, so concurrent parses
-# (the protocol endpoint serves per-request threads) cannot re-stamp
-# each other mid-parse; nested _parse_select calls (subqueries) run on
-# the stamping thread and share the outer stamp.
-_QUERY_NOW = threading.local()
-
-
-def _now_term() -> str:
-    return (
-        '"'
-        + datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%f")
-        + f'Z"^^<{_XSD_NS}dateTime>'
-    )
-
-
-def parse_sparql(text: str) -> SelectQuery:
-    """Parse a SPARQL query of any form — the one reader of query text.
-
-    Comments are stripped, the prologue's PREFIX/BASE declarations are
-    read (BASE resolves every relative IRI, DESCRIBE terms included)
-    and NOW() is stamped once for the whole query. Every form returns a
-    SelectQuery whose ``form`` names it: ASK keeps its pattern as a
-    SELECT *, CONSTRUCT adds its ``template``, and DESCRIBE lists its
-    terms in ``describe`` and projects its variables."""
-    _QUERY_NOW.value = _now_term()
-    text = _strip_comments(text)
-    end = _PROLOGUE_RE.match(text).end()
-    prefixes = _parse_prologue(text[:end])
-    body = text[end:]
-    m = _FORM_RE.match(body)
-    if not m:
-        raise ValueError(
-            "not a SPARQL query form (SELECT/ASK/CONSTRUCT/DESCRIBE)"
-        )
-    form = m.group(1).upper()
-    if form == "SELECT":
-        return _parse_select(body, prefixes)
-    if form == "ASK":
-        q = _parse_where(body, m.end(), prefixes)
-    elif form == "CONSTRUCT":
-        q = _parse_construct(body, m.end(), prefixes)
-    else:
-        q = _parse_describe(body, m.end(), prefixes)
-    q.form = form
-    return q
-
-
-def _parse_where(src: str, pos: int, prefixes: dict[str, str]) -> SelectQuery:
-    """``DatasetClause* WhereClause SolutionModifier`` at ``src[pos:]``
-    -> a SELECT * query over the pattern."""
-    m = _WHERE_RE.match(src, pos)
-    if not m:
-        raise ValueError(
-            f"expected a WHERE block at: {src[pos:pos + 60].strip()!r}"
-        )
-    q = SelectQuery([], Group())
-    for md in _DATASET_RE.finditer(m.group("dataset")):
-        (q.from_named if md.group(1) else q.from_graphs).append(
-            _expand(md.group(2), prefixes)
-        )
-    start = m.end() - 1
-    i = _match_brace(src, start)
-    q.where = _parse_group(src[start + 1 : i], prefixes)
-    tail = src[i + 1 :]
-
-    # HAVING(expr) sits between GROUP BY and ORDER BY; cut it out
-    # before the clause scan (its parens would confuse the clause split)
-    mh = re.search(r"HAVING\s*\(", tail, re.IGNORECASE)
-    if mh:
-        j = _match_paren(tail, mh.end() - 1)
-        q.having = _parse_having(tail[mh.end() : j], prefixes)
-        tail = tail[: mh.start()] + tail[j + 1 :]
-
-    q.group_by, q.group_exprs, q.order_by, q.limit, q.offset = _parse_tail(
-        tail, prefixes, _in_scope(q.where)
-    )
-    return q
-
-
-def _parse_select(body: str, prefixes: dict[str, str]) -> SelectQuery:
-    msel = _SELECT_RE.match(body)
-    if not msel:
-        raise ValueError(f"cannot parse SELECT query: {body[:60].strip()!r}")
-    q = _parse_where(body, msel.end(), prefixes)
-    # REDUCED permits (without requiring) duplicate elimination
-    # (SPARQL 1.1 §18.2.5.3.3); evaluating it as DISTINCT is conformant
-    # and keeps results deterministic across plans
-    q.distinct = bool(msel.group(1))
-    proj = msel.group(2).strip()
-    if proj == "*":
-        return q
-    # a projection alias must name a new variable (SPARQL 1.1 §18.2.4.1)
-    scope = _in_scope(q.where) | {n for _t, n in q.group_exprs}
-    for item in _projection_items(proj):
-        if item.startswith("?"):
-            q.variables.append(item[1:])
-            continue
-        ma = _AGG_RE.match(item)
-        if ma:
-            arg = ma.group("arg")
-            sep = ma.group("sep")
-            alias = _new_alias(ma.group("alias"), scope)
-            q.aggregates.append(
-                Aggregate(
-                    ma.group("func").lower(),
-                    None if arg == "*" else arg[1:],
-                    alias,
-                    distinct=bool(ma.group("distinct")),
-                    sep=" " if sep is None else re.sub(r"\\(.)", r"\1", sep),
-                )
-            )
-        else:
-            # general (expr AS ?alias) projection (SPARQL 1.1 §18.4);
-            # aggregate calls inside are legal and pulled post-group
-            node, alias = _parse_projection_expr(item, prefixes, scope)
-            q.projections.append((node, alias))
-        # keep the alias at its projection position so the result
-        # column order follows the SELECT clause
-        q.variables.append(alias)
-    return q
-
-
-def _parse_construct(
-    body: str, pos: int, prefixes: dict[str, str]
-) -> SelectQuery:
-    """``CONSTRUCT { template } DatasetClause* WhereClause ...``, or the
-    SPARQL 1.1 shorthand ``CONSTRUCT WHERE { triples }`` whose pattern
-    is its own template (a plain BGP, per the spec)."""
-    m = re.compile(r"\s*\{").match(body, pos)
-    if m:
-        end = _match_brace(body, m.end() - 1)
-        template = _parse_triples(body[m.end() : end], prefixes)
-        q = _parse_where(body, end + 1, prefixes)
-    else:
-        q = _parse_where(body, pos, prefixes)
-        template = list(q.where.patterns)
-        if q.where != Group(patterns=template):
-            raise ValueError(
-                "CONSTRUCT WHERE takes a basic graph pattern only"
-            )
-    if any(isinstance(tp.p, Path) for tp in template):
-        raise ValueError(
-            "property paths are not allowed in a CONSTRUCT template"
-        )
-    q.template = template
-    return q
-
-
-def _parse_describe(
-    body: str, pos: int, prefixes: dict[str, str]
-) -> SelectQuery:
-    """``DESCRIBE term+ DatasetClause* WhereClause? ...``: the terms are
-    IRIs, prefixed names or variables; variables need the WHERE."""
-    terms: list[str] = []
-    while m := _DESCRIBE_TERM_RE.match(body, pos):
-        terms.append(_expand(m.group(1), prefixes))
-        pos = m.end()
-    if not terms:
-        raise ValueError(
-            "DESCRIBE needs IRIs or variables (DESCRIBE * is not supported)"
-        )
-    has_where = bool(body[pos:].strip())
-    q = _parse_where(body, pos, prefixes) if has_where else SelectQuery([], Group())
-    q.describe = terms
-    q.variables = [t[1:] for t in terms if _is_var(t)]
-    if q.variables and not has_where:
-        raise ValueError("DESCRIBE ?var needs a WHERE clause")
-    return q
-
-
-def _in_scope(g: Group) -> set[str]:
-    """Names of the variables in scope in a group graph pattern (SPARQL
-    1.1 §18.2.1): those its triple patterns, OPTIONAL / UNION / GRAPH
-    parts, BIND, VALUES and subquery projections can bind — FILTER,
-    MINUS and EXISTS bind none."""
-    out = {
-        t[1:]
-        for tp in g.patterns
-        for t in (tp.s, tp.p, tp.o)
-        if isinstance(t, str) and _is_var(t)
-    }
-    out |= {t[1:] for t, _g in g.graphs if _is_var(t)}
-    out |= {v for _e, v in g.binds}
-    out |= {v for vs, _rows in g.values for v in vs}
-    for sub in (
-        g.optionals
-        + [b for br in g.unions for b in br]
-        + [sub for _t, sub in g.graphs]
-    ):
-        out |= _in_scope(sub)
-    for s in g.subselects:
-        out |= set(s.variables) or _in_scope(s.where)
-    return out
-
-
-def _new_alias(alias: str, scope: set[str]) -> str:
-    """``alias`` once checked to name no in-scope variable (SPARQL 1.1
-    §18.2.4.1) — rebinding one would silently overwrite its column.
-    The alias joins ``scope``."""
-    if alias in scope:
-        raise ValueError(
-            f"?{alias} is already in scope; (expr AS ?{alias}) must "
-            "bind a new variable"
-        )
-    scope.add(alias)
-    return alias
-
-
-def _projection_items(proj: str) -> list[str]:
-    """Split a SELECT projection into its items: ``?var`` tokens and
-    parenthesized ``(expr AS ?alias)`` groups (parens may nest). Raises
-    on anything else — a silently-dropped projection item would change
-    the result schema."""
-    items: list[str] = []
-    i = 0
-    while i < len(proj):
-        ch = proj[i]
-        if ch.isspace():
-            i += 1
-        elif ch == "(":
-            j = _match_paren(proj, i)
-            items.append(proj[i : j + 1])
-            i = j + 1
-        else:
-            m = re.match(r"\?\w+", proj[i:])
-            if not m:
-                raise ValueError(
-                    f"cannot parse SELECT projection at: {proj[i:]!r}"
-                )
-            items.append(m.group(0))
-            i += m.end()
-    return items
-
-
-def _parse_projection_expr(
-    item: str, prefixes: dict[str, str], scope: set[str]
-) -> tuple[object, str]:
-    """``(expr AS ?alias)`` -> (value tree, alias). The expr reuses the
-    HAVING grammar: the FILTER value grammar plus aggregate calls at
-    the primary level (``(COUNT(?x) * 2 AS ?y)``). Raises when the
-    alias names a variable in ``scope``."""
-    inner = item[1:-1].strip()
-    m = _BIND_RE.match(inner)
-    if not m:
-        raise ValueError(
-            f"cannot parse SELECT expression {item!r} "
-            "(expected (expr AS ?alias))"
-        )
-    p = _HavingParser(m.group("expr"), prefixes)
-    node = p.or_expr()
-    if p._peek() is not None:
-        raise ValueError(f"unsupported SELECT expression tail: {item!r}")
-    return node, _new_alias(m.group("var"), scope)
-
-
-def _parse_tail(
-    tail: str, prefixes: dict[str, str], scope: set[str]
-) -> tuple[
-    list[str],
-    list[tuple[object, str]],
-    list[tuple[object, bool]],
-    int | None,
-    int | None,
-]:
-    """GROUP BY / ORDER BY / LIMIT / OFFSET in any order; raises on any
-    unconsumed text so no modifier is silently dropped."""
-    matches = list(_CLAUSE_RE.finditer(tail))
-    head = tail[: matches[0].start()] if matches else tail
-    if head.strip():
-        raise ValueError(
-            f"unparsed text after WHERE block: {head.strip()!r}"
-        )
-    group_by: list[str] = []
-    group_exprs: list[tuple[object, str]] = []
-    order_by: list[tuple[object, bool]] = []
-    limit = offset = None
-    for idx, m in enumerate(matches):
-        end = matches[idx + 1].start() if idx + 1 < len(matches) else len(tail)
-        seg = tail[m.end() : end].strip()
-        kw = re.sub(r"\s+", " ", m.group(1).upper())
-        if kw == "GROUP BY":
-            group_by, group_exprs = _parse_group_by(seg, prefixes, scope)
-        elif kw == "ORDER BY":
-            order_by = _parse_order(seg, prefixes)
-        elif kw == "LIMIT":
-            if limit is not None:
-                raise ValueError("duplicate LIMIT clause")
-            limit = int(seg)  # raises on junk after the number
-        else:
-            if offset is not None:
-                raise ValueError("duplicate OFFSET clause")
-            offset = int(seg)
-    return group_by, group_exprs, order_by, limit, offset
-
-
-def _parse_group_by(
-    seg: str, prefixes: dict[str, str], scope: set[str]
-) -> tuple[list[str], list[tuple[object, str]]]:
-    """GroupCondition list (SPARQL 1.1 grammar [20]): ?var |
-    (expr AS ?alias) | (expr) | a bare function call. Expression
-    conditions become (tree, name) pairs — aliased names are
-    projectable (and must not name a variable in ``scope``); unaliased
-    ones get hidden __g{i} names."""
-    names: list[str] = []
-    exprs: list[tuple[object, str]] = []
-    s = seg.strip()
-    gi = 0
-
-    def _value(src: str):
-        p = _FilterParser(src, prefixes)
-        node = p.or_expr()
-        if p._peek() is not None:
-            raise ValueError(f"unsupported GROUP BY expression: {src!r}")
-        return node
-
-    while s:
-        if s.startswith("?"):
-            m = re.match(r"\?(\w+)", s)
-            if not m:
-                raise ValueError(f"cannot parse GROUP BY condition: {s!r}")
-            names.append(m.group(1))
-            s = s[m.end() :].strip()
-            continue
-        if s.startswith("("):
-            j = _match_paren(s, 0)
-            inner = s[1:j].strip()
-            s = s[j + 1 :].strip()
-            mb = _BIND_RE.match(inner)
-            if mb:
-                name = _new_alias(mb.group("var"), scope)
-                exprs.append((_value(mb.group("expr")), name))
-            else:
-                name = f"__g{gi}"
-                gi += 1
-                exprs.append((_value(inner), name))
-            names.append(name)
-            continue
-        m = re.match(r"[\w.%-]+(?::[\w.%-]+)?\s*\(", s)
-        if not m:
-            raise ValueError(f"cannot parse GROUP BY condition: {s!r}")
-        j = _match_paren(s, m.end() - 1)
-        name = f"__g{gi}"
-        gi += 1
-        exprs.append((_value(s[: j + 1]), name))
-        names.append(name)
-        s = s[j + 1 :].strip()
-    if not names:
-        raise ValueError("empty GROUP BY clause")
-    return names, exprs
-
-
-def _parse_order(
-    seg: str, prefixes: dict[str, str]
-) -> list[tuple[object, bool]]:
-    """ORDER BY conditions: ?var | ASC(expr) | DESC(expr) | (expr) |
-    a bare function expression. A plain variable stays a string key;
-    anything else parses through the FILTER value grammar into a
-    FilterNode (ORDER BY on aggregate aliases and expressions)."""
-    out: list[tuple[object, bool]] = []
-    s = seg.strip()
-    while s:
-        asc = True
-        m = re.match(r"(ASC|DESC)\s*\(", s, re.IGNORECASE)
-        if m:
-            j = _match_paren(s, m.end() - 1)
-            expr_src = s[m.end() : j]
-            asc = m.group(1).upper() == "ASC"
-            s = s[j + 1 :].strip()
-        elif s.startswith("("):
-            j = _match_paren(s, 0)
-            expr_src = s[1:j]
-            s = s[j + 1 :].strip()
-        elif s.startswith("?"):
-            mv = re.match(r"\?\w+", s)
-            expr_src = mv.group(0)
-            s = s[mv.end() :].strip()
-        else:
-            mf = re.match(r"[A-Za-z_][\w:]*\s*\(", s)
-            if not mf:
-                raise ValueError(f"cannot parse ORDER BY condition at {s!r}")
-            j = _match_paren(s, mf.end() - 1)
-            expr_src = s[: j + 1]
-            s = s[j + 1 :].strip()
-        expr_src = expr_src.strip()
-        mvar = re.match(r"^\?(\w+)$", expr_src)
-        if mvar:
-            out.append((mvar.group(1), asc))
-        else:
-            p = _FilterParser(expr_src, prefixes)
-            node = p.or_expr()
-            if p._peek() is not None:
-                raise ValueError(
-                    f"unsupported ORDER BY expression: {expr_src!r}"
-                )
-            out.append((node, asc))
-    if not out:
-        raise ValueError("empty ORDER BY clause")
-    return out
-
-
-def _split_blocks(src: str) -> list[tuple[str, str]]:
-    """Split a group body into ('triples'|'optional'|'filter'|'union', src)
-    blocks at brace level 0."""
-    blocks: list[tuple[str, str]] = []
-    i, n = 0, len(src)
-    plain: list[str] = []
-
-    def flush():
-        chunk = "".join(plain).strip()
-        if chunk:
-            blocks.append(("triples", chunk))
-        plain.clear()
-
-    while i < n:
-        mopt = re.match(r"\s*OPTIONAL\s*\{", src[i:], re.IGNORECASE)
-        mfex = re.match(
-            r"\s*FILTER\s+(NOT\s+)?EXISTS\s*\{", src[i:], re.IGNORECASE
-        )
-        mfil = re.match(r"\s*FILTER\s*\(", src[i:], re.IGNORECASE)
-        mbind = re.match(r"\s*BIND\s*\(", src[i:], re.IGNORECASE)
-        mvals = re.match(
-            r"\s*VALUES\s+(\?\w+|\((?:\s*\?\w+)+\s*\))\s*\{",
-            src[i:],
-            re.IGNORECASE,
-        )
-        mgra = re.match(
-            r"\s*GRAPH\s+(\?\w+|<[^<>\s]*>|\w+:[\w.%-]*)\s*\{",
-            src[i:],
-            re.IGNORECASE,
-        )
-        mmin = re.match(r"\s*MINUS\s*\{", src[i:], re.IGNORECASE)
-        mgrp = re.match(r"\s*\{", src[i:])
-        if mmin:
-            flush()
-            j = _match_brace(src, i + mmin.end() - 1)
-            blocks.append(("minus", src[i + mmin.end() : j]))
-            i = j + 1
-        elif mopt:
-            flush()
-            j = _match_brace(src, i + mopt.end() - 1)
-            blocks.append(("optional", src[i + mopt.end() : j]))
-            i = j + 1
-        elif mfex:
-            flush()
-            j = _match_brace(src, i + mfex.end() - 1)
-            blocks.append(
-                ("exists", (mfex.group(1) is None, src[i + mfex.end() : j]))
-            )
-            i = j + 1
-        elif mbind:
-            flush()
-            j = _match_paren(src, i + mbind.end() - 1)
-            blocks.append(("bind", src[i + mbind.end() : j]))
-            i = j + 1
-        elif mvals:
-            flush()
-            j = _match_brace(src, i + mvals.end() - 1)
-            blocks.append(
-                ("values", (mvals.group(1), src[i + mvals.end() : j]))
-            )
-            i = j + 1
-        elif mgra:
-            flush()
-            j = _match_brace(src, i + mgra.end() - 1)
-            blocks.append(("graph", (mgra.group(1), src[i + mgra.end() : j])))
-            i = j + 1
-        elif mfil:
-            flush()
-            j = _match_paren(src, i + mfil.end() - 1)
-            blocks.append(("filter", src[i + mfil.end() : j]))
-            i = j + 1
-        elif mgrp:
-            # group — possibly a UNION chain { } UNION { } ...
-            flush()
-            branches = []
-            k = i
-            while True:
-                mb = re.match(r"\s*\{", src[k:])
-                if not mb:
-                    break
-                j = _match_brace(src, k + mb.end() - 1)
-                branches.append(src[k + mb.end() : j])
-                k = j + 1
-                mu = re.match(r"\s*UNION", src[k:], re.IGNORECASE)
-                if mu:
-                    k += mu.end()
-                else:
-                    break
-            if len(branches) == 1 and re.match(
-                r"\s*SELECT\b", branches[0], re.IGNORECASE
-            ):
-                # { SELECT ... } — a SPARQL 1.1 subquery
-                blocks.append(("subselect", branches[0]))
-            else:
-                blocks.append(("union", branches))  # type: ignore[arg-type]
-            i = k
-        else:
-            j = max(_token_end(src, i), i + 1)
-            plain.append(src[i:j])
-            i = j
-    flush()
-    return blocks
-
-
-_IRIREF_AT = re.compile(r'<[^<>"\s]*>')
-
-
-def _token_end(src: str, i: int) -> int:
-    """The index just past the string literal or IRIREF opening at
-    ``src[i]``, or ``i`` when neither opens there. A literal is single-
-    or double-quoted, short or triple-quoted, backslash escapes
-    included. A '<' opens an IRIREF under the rule of
-    :func:`_strip_comments`, so an apostrophe inside an IRI opens no
-    string."""
-    q = src[i] if i < len(src) else ""
-    if q == "<":
-        m = _IRIREF_AT.match(src, i)
-        return m.end() if m else i
-    if q not in ("'", '"'):
-        return i
-    delim = q * 3 if src.startswith(q * 3, i) else q
-    j = i + len(delim)
-    while j < len(src):
-        if src[j] == "\\":
-            j += 2
-        elif src.startswith(delim, j):
-            return j + len(delim)
-        else:
-            j += 1
-    raise ValueError("unterminated string literal in SPARQL")
-
-
-def _match_brace(src: str, open_idx: int) -> int:
-    depth = 0
-    i = open_idx
-    while i < len(src):
-        end = _token_end(src, i)
-        if end > i:
-            i = end
-            continue
-        if src[i] == "{":
-            depth += 1
-        elif src[i] == "}":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced braces in SPARQL")
-
-
-def _match_paren(src: str, open_idx: int) -> int:
-    depth = 0
-    in_str = False
-    for i in range(open_idx, len(src)):
-        c = src[i]
-        if c == '"' and (i == 0 or src[i - 1] != "\\"):
-            in_str = not in_str
-        if in_str:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parens in SPARQL FILTER")
-
-
-def _parse_group(src: str, prefixes: dict[str, str]) -> Group:
-    g = Group()
-    for kind, chunk in _split_blocks(src):
-        if kind == "triples":
-            g.patterns.extend(_parse_triples(chunk, prefixes))
-        elif kind == "optional":
-            g.optionals.append(_parse_group(chunk, prefixes))
-        elif kind == "filter":
-            g.filters.append(Filter(_parse_filter(chunk, prefixes)))
-        elif kind == "union":
-            g.unions.append(
-                [_parse_union_branch(b, prefixes) for b in chunk]
-            )
-        elif kind == "graph":
-            gterm, body = chunk
-            g.graphs.append((_expand(gterm, prefixes), _parse_group(body, prefixes)))
-        elif kind == "bind":
-            g.binds.append(_parse_bind(chunk, prefixes))
-        elif kind == "values":
-            var_spec, body = chunk
-            g.values.append(_parse_values(var_spec, body, prefixes))
-        elif kind == "exists":
-            positive, body = chunk
-            g.exists.append((positive, _parse_group(body, prefixes)))
-        elif kind == "minus":
-            g.minuses.append(_parse_group(chunk, prefixes))
-        elif kind == "subselect":
-            g.subselects.append(_parse_select(chunk, prefixes))
-    return g
-
-
-def _parse_union_branch(src: str, prefixes: dict[str, str]) -> Group:
-    """A UNION branch may itself be a subquery ({ SELECT ... } UNION
-    { ... }); anything else is an ordinary group graph pattern."""
-    if re.match(r"\s*SELECT\b", src, re.IGNORECASE):
-        return Group(subselects=[_parse_select(src, prefixes)])
-    return _parse_group(src, prefixes)
-
-
-_BIND_RE = re.compile(r"^(?P<expr>.*\S)\s+AS\s+\?(?P<var>\w+)\s*$", re.DOTALL)
-
-
-def _parse_bind(src: str, prefixes: dict[str, str]) -> tuple[object, str]:
-    """BIND(expr AS ?v): the expr reuses the FILTER value grammar."""
-    m = _BIND_RE.match(src.strip())
-    if not m:
-        raise ValueError(f"cannot parse BIND: {src!r}")
-    p = _FilterParser(m.group("expr"), prefixes)
-    node = p.or_expr()
-    if p._peek() is not None:
-        raise ValueError(f"unsupported BIND expression tail: {src!r}")
-    return node, m.group("var")
-
-
-_XSD_INT_DT = "http://www.w3.org/2001/XMLSchema#integer"
-_XSD_DEC_DT = "http://www.w3.org/2001/XMLSchema#decimal"
-
-# VALUES-specific tokenizer: parens are always standalone tokens (the
-# generic _TOKEN_RE's \S+ fallback would glue 'UNDEF)' together)
-_VALUES_TOKEN_RE = re.compile(
-    r"""<[^>]*>
-      | "(?:[^"\\]|\\.)*"(?:\^\^<[^>]*>|@[\w-]+)?
-      | [()]
-      | [^\s()]+
-    """,
-    re.VERBOSE,
-)
-
-
-def _parse_values(
-    var_spec: str, body: str, prefixes: dict[str, str]
-) -> tuple[list[str], list[list[str | None]]]:
-    """VALUES ?v { t... } | VALUES (?a ?b) { (x y) ... } — terms are
-    N-Triples-encoded like every engine term; bare numbers become typed
-    literals; UNDEF becomes NULL."""
-    variables = re.findall(r"\?(\w+)", var_spec)
-
-    def term(tok: str) -> str | None:
-        if tok.upper() == "UNDEF":
-            return None
-        if re.match(r"^[-+]?\d+$", tok):
-            return f'"{tok}"^^<{_XSD_INT_DT}>'
-        # SPARQL 1.1 grammar: DOUBLE carries an exponent, DECIMAL is
-        # [0-9]* '.' [0-9]+ (leading dot allowed)
-        if re.match(r"^[-+]?(?:\d+\.?\d*|\.\d+)[eE][-+]?\d+$", tok):
-            return f'"{tok}"^^<{_XSD_NS}double>'
-        if re.match(r"^[-+]?\d*\.\d+$", tok):
-            return f'"{tok}"^^<{_XSD_DEC_DT}>'
-        return _expand(tok, prefixes)
-
-    toks = [t for t in _VALUES_TOKEN_RE.findall(body) if t.strip()]
-    rows: list[list[str | None]] = []
-    if len(variables) == 1:
-        rows = [[term(t)] for t in toks if t not in "()"]
-        return variables, rows
-    cur: list[str | None] | None = None
-    for t in toks:
-        if t == "(":
-            if cur is not None:
-                raise ValueError(f"nested '(' in VALUES rows: {body!r}")
-            cur = []
-        elif t == ")":
-            if cur is None or len(cur) != len(variables):
-                raise ValueError(
-                    f"VALUES row arity mismatch (want {len(variables)}): {body!r}"
-                )
-            rows.append(cur)
-            cur = None
-        else:
-            if cur is None:
-                raise ValueError(f"VALUES term outside a row tuple: {t!r}")
-            cur.append(term(t))
-    if cur is not None:
-        raise ValueError(f"unterminated VALUES row: {body!r}")
-    return variables, rows
-
-
-def _parse_triples(chunk: str, prefixes: dict[str, str]) -> list[TriplePattern]:
-    """Triple patterns with ';' predicate-object lists, ',' object
-    lists, and [ ... ] blank-node property lists (Turtle-style
-    abbreviations, SPARQL 1.1 §4.2.1-4.2.2). Blank-node lists become
-    fresh internal variables (?__bnN — hidden from SELECT *)."""
-    out: list[TriplePattern] = []
-    counter = [0]
-
-    def parse_node(toks: list[str], i: int) -> tuple[str, int]:
-        """Subject/object position: a term, or a [ ... ] property list
-        (emitting its inner patterns with a fresh variable subject)."""
-        if toks[i] == "[":
-            var = f"?__bn{counter[0]}"
-            counter[0] += 1
-            i += 1
-            if i < len(toks) and toks[i] != "]":
-                i = parse_pred_obj_list(toks, i, var, stop="]")
-            if i >= len(toks) or toks[i] != "]":
-                raise ValueError("unbalanced [ ] in triple pattern")
-            return var, i + 1
-        return _expand(toks[i], prefixes), i + 1
-
-    def parse_pred_obj_list(
-        toks: list[str], i: int, s: str, stop: str | None = None
-    ) -> int:
-        more_preds = True
-        while more_preds:
-            if i >= len(toks) or toks[i] == stop:
-                raise ValueError(f"cannot parse triple pattern: {toks!r}")
-            p, i = _parse_path(toks, i, prefixes)
-            if isinstance(p, Path):
-                _check_path_vars(p)
-            more_objs = True
-            while more_objs:
-                if i >= len(toks) or toks[i] == stop:
-                    raise ValueError(f"cannot parse triple pattern: {toks!r}")
-                o, i = parse_node(toks, i)
-                out.append(TriplePattern(s, p, o))
-                more_objs = i < len(toks) and toks[i] == ","
-                if more_objs:
-                    i += 1
-            more_preds = i < len(toks) and toks[i] == ";"
-            if more_preds:
-                i += 1
-                # tolerate a trailing ';' before '.' / ']' / end
-                if i >= len(toks) or toks[i] == stop:
-                    more_preds = False
-        return i
-
-    for stmt in _split_statements(chunk):
-        toks = [t for t in _TOKEN_RE.findall(stmt) if t not in {".", ""}]
-        i = 0
-        while i < len(toks):
-            s, i = parse_node(toks, i)
-            if i >= len(toks) and s.startswith("?__bn"):
-                break  # '[ p o ] .' — a bare property list is a triple
-            i = parse_pred_obj_list(toks, i, s)
-    return out
-
-
-# Property-path grammar (SPARQL 1.1 §9, over the statement tokens):
-#   path := seq ('|' seq)*
-#   seq  := step ('/' step)*
-#   step := '^' step | '!' nps | primary ('+'|'*'|'?')*
-#   nps  := iri | '(' iri ('|' iri)* ')'    (forward members only)
-#   primary := iri | prefixed | 'a' | '(' path ')'
-# A trivial path (a single forward predicate) stays a plain string, so
-# non-path triples compile exactly as before.
-
-
-def _parse_path(
-    toks: list[str], i: int, prefixes: dict[str, str]
-) -> tuple["Term | Path", int]:
-    node, i = _path_seq(toks, i, prefixes)
-    branches = [node]
-    while i < len(toks) and toks[i] == "|":
-        nxt, i = _path_seq(toks, i + 1, prefixes)
-        branches.append(nxt)
-    return (branches[0] if len(branches) == 1 else Path("alt", branches)), i
-
-
-def _path_seq(
-    toks: list[str], i: int, prefixes: dict[str, str]
-) -> tuple["Term | Path", int]:
-    step, i = _path_step(toks, i, prefixes)
-    steps = [step]
-    while i < len(toks) and toks[i] == "/":
-        nxt, i = _path_step(toks, i + 1, prefixes)
-        steps.append(nxt)
-    return (steps[0] if len(steps) == 1 else Path("seq", steps)), i
-
-
-def _check_path_vars(node: "Term | Path") -> None:
-    """SPARQL 1.1 forbids variables inside property-path expressions
-    (a bare ?p predicate is fine — it never constructs a Path); raise
-    rather than compile to a pred == '?p' filter that silently matches
-    nothing."""
-    if isinstance(node, Path):
-        for a in node.args:
-            _check_path_vars(a)
-    elif isinstance(node, str) and node.startswith("?"):
-        raise ValueError(
-            "variables are not allowed inside property-path expressions"
-        )
-
-
-_PATH_MODS = {"+": "plus", "*": "star", "?": "opt"}
-
-
-def _path_step(
-    toks: list[str], i: int, prefixes: dict[str, str]
-) -> tuple["Term | Path", int]:
-    if i >= len(toks):
-        raise ValueError("unexpected end of property path")
-    if toks[i] == "^":
-        inner, i = _path_step(toks, i + 1, prefixes)
-        node: Term | Path = Path("inv", [inner])
-    elif toks[i] == "!":
-        # negated property set: !iri or !(iri|iri|...) — forward
-        # members only (inverse members ^iri inside ! unsupported)
-        i += 1
-        members: list[str] = []
-        if i < len(toks) and toks[i] == "(":
-            i += 1
-            while i < len(toks) and toks[i] != ")":
-                if toks[i] == "|":
-                    i += 1
-                    continue
-                if toks[i] == "^":
-                    raise ValueError(
-                        "inverse members in a negated property set "
-                        "are not supported"
-                    )
-                members.append(_expand(toks[i], prefixes))
-                i += 1
-            if i >= len(toks):
-                raise ValueError("unbalanced parens in property path")
-            i += 1
-        else:
-            if i >= len(toks):
-                raise ValueError("unexpected end of property path")
-            members.append(_expand(toks[i], prefixes))
-            i += 1
-        node = Path("nps", members)
-    elif toks[i] == "(":
-        node, i = _parse_path(toks, i + 1, prefixes)
-        if i >= len(toks) or toks[i] != ")":
-            raise ValueError("unbalanced parens in property path")
-        i += 1
-    else:
-        node = _expand(toks[i], prefixes)
-        i += 1
-    while i < len(toks) and toks[i] in _PATH_MODS:
-        node = Path(_PATH_MODS[toks[i]], [node])
-        i += 1
-    return node, i
-
-
-def _split_statements(chunk: str) -> list[str]:
-    """Split on '.' statement separators only — not dots inside string
-    literals, inside <IRI> tokens (http://... contains dots), or
-    directly between two word characters (a dotted prefixed name like
-    ``e.x:name`` per PN_PREFIX, or a decimal literal ``5.5``; a real
-    separator in that position would glue two names, which the SPARQL
-    grammar resolves the same way)."""
-    stmts, cur, in_str, in_iri = [], [], False, False
-    for i, c in enumerate(chunk):
-        if c == '"' and not in_iri:
-            in_str = not in_str
-        elif not in_str:
-            if c == "<":
-                in_iri = True
-            elif c == ">":
-                in_iri = False
-        in_name = (
-            c == "."
-            and i > 0
-            and i + 1 < len(chunk)
-            and (chunk[i - 1].isalnum() or chunk[i - 1] == "_")
-            and (chunk[i + 1].isalnum() or chunk[i + 1] == "_")
-        )
-        if c == "." and not in_str and not in_iri and not in_name:
-            stmts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    stmts.append("".join(cur))
-    return [s for s in stmts if s.strip()]
-
-
-# FILTER expression grammar (covers the reference's transFilter /
-# transFunction set, MorphRDBQueryTranslator.scala:385-437, 988-1187:
-# comparisons, logical ops, BOUND, REGEX, E_OneOf (IN / NOT IN), xsd
-# casts, arithmetic, STR):
-#
-#   or     := and ('||' and)*
-#   and    := unary ('&&' unary)*
-#   unary  := '!' unary | rel
-#   rel    := BOUND(?v) | REGEX(?v, "re")
-#           | add (cmp add | [NOT] IN '(' add (',' add)* ')')?
-#   add    := mul (('+'|'-') mul)*
-#   mul    := prim (('*'|'/') prim)*
-#   prim   := '(' or ')' | '-' prim | '+' prim | func '(' add ')'
-#           | ?var | literal | number | <iri> | prefixed
-#
-# IN desugars to an OR of '=' nodes (NOT IN to an AND of '!='), so its
-# semantics are exactly chained equality.
-
-_F_TOKEN_RE = re.compile(
-    r"""\s*(
-      \?[\w]+
-    | "(?:[^"\\]|\\.)*"(?:\^\^(?:<[^>]*>|[\w.-]*:[\w.%-]*)|@[\w-]+)?
-    | <[^<>\s]*>
-    | \|\||&&|!=|<=|>=|=|<|>|!
-    | \d+\.\d+ | \d+
-    | [+\-*/(),;]
-    | \w+:[\w.%-]+
-    | \w+
-    )""",
-    re.VERBOSE,
-)
-
-_XSD_NS = "http://www.w3.org/2001/XMLSchema#"
-_INT_CASTS = {
-    "integer", "int", "long", "short", "byte", "nonNegativeInteger",
-    "positiveInteger", "negativeInteger", "unsignedInt", "unsignedLong",
-}
-_FLOAT_CASTS = {"decimal", "double", "float"}
-# SPARQL 1.1 built-in functions (beyond the reference's transFunction
-# set): term tests, string tests, string/term accessors.
-_FN_BOOL = {
-    "ISIRI": "isiri", "ISURI": "isiri", "ISLITERAL": "isliteral",
-    "ISBLANK": "isblank", "STRSTARTS": "strstarts", "STRENDS": "strends",
-    "CONTAINS": "contains", "LANGMATCHES": "langmatches",
-    "ISNUMERIC": "isnumeric", "SAMETERM": "sameterm",
-}
-_FN_VALUE = {
-    "STRLEN": "strlen", "UCASE": "ucase", "LCASE": "lcase",
-    "CONCAT": "concat", "COALESCE": "coalesce", "IF": "if",
-    "SUBSTR": "substr", "LANG": "lang", "DATATYPE": "datatype",
-    "STRBEFORE": "strbefore", "STRAFTER": "strafter", "REPLACE": "replace",
-    "ENCODE_FOR_URI": "encode_for_uri",
-    "ABS": "abs", "CEIL": "ceil", "FLOOR": "floor", "ROUND": "round",
-    "MD5": "md5", "SHA1": "sha1", "SHA256": "sha256", "SHA384": "sha384",
-    "SHA512": "sha512",
-    "IRI": "iri", "URI": "iri", "STRDT": "strdt", "STRLANG": "strlang",
-    "YEAR": "dt_year", "MONTH": "dt_month", "DAY": "dt_day",
-    "HOURS": "dt_hours", "MINUTES": "dt_minutes", "SECONDS": "dt_seconds",
-    "TZ": "dt_tz",
-}
-_FN_NULLARY = {
-    "NOW": "now", "UUID": "uuid", "STRUUID": "struuid", "RAND": "rand",
-}
-_BOOL_OPS = {
-    "and", "or", "not", "bound", "regex",
-    "=", "!=", "<", "<=", ">", ">=",
-} | set(_FN_BOOL.values())
 # xsd:dateTime / xsd:date lexical shape (YEAR..SECONDS/TZ accessors
 # read the groups directly — see the _DT_GROUP case in _filter_operand)
 _DT_LEX_RE = (
@@ -1309,242 +72,18 @@ _CMP_FNS = {
     ">": Column.__gt__,
     ">=": Column.__ge__,
 }
-_CMP_OPS = tuple(_CMP_FNS)
-_AGG_FUNCS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT"}
 
 
-class _FilterParser:
-    def __init__(self, src: str, prefixes: dict[str, str]):
-        self.prefixes = prefixes
-        self.toks: list[str] = []
-        pos = 0
-        while pos < len(src):
-            m = _F_TOKEN_RE.match(src, pos)
-            if not m:
-                if src[pos:].strip():
-                    raise ValueError(f"cannot tokenize FILTER at: {src[pos:]!r}")
-                break
-            self.toks.append(m.group(1))
-            pos = m.end()
-        self.i = 0
-
-    def _peek(self, ahead: int = 0) -> str | None:
-        j = self.i + ahead
-        return self.toks[j] if j < len(self.toks) else None
-
-    def _pop(self) -> str:
-        t = self._peek()
-        if t is None:
-            raise ValueError("unexpected end of FILTER expression")
-        self.i += 1
-        return t
-
-    def _expect(self, want: str) -> None:
-        got = self._pop()
-        if got != want:
-            raise ValueError(f"expected {want!r} in FILTER, got {got!r}")
-
-    def parse(self) -> FilterNode:
-        node = self.or_expr()
-        if self._peek() is not None:
-            raise ValueError(
-                f"unsupported FILTER tail: {' '.join(self.toks[self.i:])!r}"
-            )
-        if not (isinstance(node, FilterNode) and node.op in _BOOL_OPS):
-            raise ValueError("FILTER expression is not boolean")
-        return node
-
-    def or_expr(self):
-        parts = [self.and_expr()]
-        while self._peek() == "||":
-            self._pop()
-            parts.append(self.and_expr())
-        return parts[0] if len(parts) == 1 else FilterNode("or", parts)
-
-    def and_expr(self):
-        parts = [self.unary()]
-        while self._peek() == "&&":
-            self._pop()
-            parts.append(self.unary())
-        return parts[0] if len(parts) == 1 else FilterNode("and", parts)
-
-    def unary(self):
-        if self._peek() == "!":
-            self._pop()
-            return FilterNode("not", [self.unary()])
-        return self.relational()
-
-    def relational(self):
-        t = self._peek()
-        if t is not None and t.upper() == "BOUND" and self._peek(1) == "(":
-            self._pop()
-            self._expect("(")
-            v = self._pop()
-            self._expect(")")
-            return FilterNode("bound", [v.lstrip("?")])
-        if t is not None and t.upper() == "REGEX" and self._peek(1) == "(":
-            self._pop()
-            self._expect("(")
-            v = self._pop()
-            self._expect(",")
-            pat = self._pop()
-            self._expect(")")
-            return FilterNode("regex", [v.lstrip("?"), _unquote(pat)])
-        left = self.additive()
-        nxt = self._peek()
-        if nxt in _CMP_OPS:
-            return FilterNode(self._pop(), [left, self.additive()])
-        if nxt is not None and nxt.upper() in ("IN", "NOT"):
-            negated = nxt.upper() == "NOT"
-            self._pop()
-            if negated:
-                kw = self._pop()
-                if kw.upper() != "IN":
-                    raise ValueError(f"expected IN after NOT, got {kw!r}")
-            self._expect("(")
-            items = [self.additive()]
-            while self._peek() == ",":
-                self._pop()
-                items.append(self.additive())
-            self._expect(")")
-            if negated:
-                return FilterNode("and", [FilterNode("!=", [left, x]) for x in items])
-            return FilterNode("or", [FilterNode("=", [left, x]) for x in items])
-        return left  # value node (inside parens of a larger expression)
-
-    def additive(self):
-        node = self.mult()
-        while self._peek() in ("+", "-"):
-            op = self._pop()
-            node = FilterNode("add" if op == "+" else "sub", [node, self.mult()])
-        return node
-
-    def mult(self):
-        node = self.primary()
-        while self._peek() in ("*", "/"):
-            op = self._pop()
-            node = FilterNode("mul" if op == "*" else "div", [node, self.primary()])
-        return node
-
-    def primary(self):
-        t = self._peek()
-        if t is None:
-            raise ValueError("unexpected end of FILTER expression")
-        if t == "(":
-            self._pop()
-            node = self.or_expr()
-            self._expect(")")
-            return node
-        if t == "-":
-            self._pop()
-            return FilterNode("neg", [self.primary()])
-        if t == "+":
-            self._pop()
-            return self.primary()
-        u = t.upper()
-        if u in _FN_NULLARY and self._peek(1) == "(" and self._peek(2) == ")":
-            self._pop(), self._pop(), self._pop()
-            # NOW() carries the per-parse timestamp so every call in
-            # the query evaluates to the same instant (§17.4.5.1); the
-            # fallback covers direct group parses (CONSTRUCT templates)
-            # that never pass through parse_sparql
-            if u == "NOW":
-                args = [getattr(_QUERY_NOW, "value", None) or _now_term()]
-            else:
-                args = []
-            return FilterNode(_FN_NULLARY[u], args)
-        if self._peek(1) == "(" and (
-            re.match(r"^\w+:[\w.%-]+$", t)
-            or u == "STR"
-            or u in _FN_BOOL
-            or u in _FN_VALUE
-        ):
-            self._pop()
-            self._expect("(")
-            args = [self.or_expr()]
-            while self._peek() == ",":
-                self._pop()
-                args.append(self.or_expr())
-            self._expect(")")
-            if u == "STR":
-                return FilterNode("str", args[:1])
-            if u in _FN_BOOL:
-                return FilterNode(_FN_BOOL[u], args)
-            if u in _FN_VALUE:
-                return FilterNode(_FN_VALUE[u], args)
-            pfx, local = t.split(":", 1)
-            if pfx == "xsd" or self.prefixes.get(pfx) == _XSD_NS:
-                if local in _INT_CASTS:
-                    return FilterNode("cast_int", args[:1])
-                if local in _FLOAT_CASTS:
-                    return FilterNode("cast_num", args[:1])
-                if local == "string":
-                    return FilterNode("str", args[:1])
-            raise ValueError(f"unsupported FILTER function {t}()")
-        return _expand(self._pop(), self.prefixes)
-
-
-class _HavingParser(_FilterParser):
-    """The FILTER grammar plus aggregate calls at the primary level
-    (HAVING(COUNT(?x) > 5) and friends)."""
-
-    def primary(self):
-        t = self._peek()
-        if t is not None and t.upper() in _AGG_FUNCS and self._peek(1) == "(":
-            func = self._pop().lower()
-            self._expect("(")
-            distinct = False
-            nt = self._peek()
-            if nt is not None and nt.upper() == "DISTINCT":
-                self._pop()
-                distinct = True
-            if self._peek() == "*":
-                self._pop()
-                self._expect(")")
-                return FilterNode("agg", [func, None, distinct, False, " "])
-            node = self.or_expr()
-            sep = " "
-            if self._peek() == ";":  # GROUP_CONCAT(...; SEPARATOR="x")
-                self._pop()
-                kw = self._pop()
-                if kw.upper() != "SEPARATOR":
-                    raise ValueError(
-                        f"expected SEPARATOR after ';', got {kw!r}"
-                    )
-                self._expect("=")
-                # same escape handling as the _AGG_RE projection path
-                sep = re.sub(r"\\(.)", r"\1", _unquote(self._pop()))
-            self._expect(")")
-            if isinstance(node, str) and node.startswith("?"):
-                return FilterNode(
-                    "agg", [func, node[1:], distinct, False, sep]
-                )
-            # aggregate over an expression (SUM(?a * ?b), §18.4.1): the
-            # input is materialized as a hidden value column pre-group
-            return FilterNode("agg", [func, node, distinct, True, sep])
-        return super().primary()
-
-
-def _parse_having(src: str, prefixes: dict[str, str]) -> FilterNode:
-    return _HavingParser(src, prefixes).parse()
-
-
-def _unquote(tok: str) -> str:
-    m = re.match(r'^"((?:[^"\\]|\\.)*)"', tok)
-    return m.group(1) if m else tok
-
-
-def _parse_filter(src: str, prefixes: dict[str, str]) -> FilterNode:
-    return _FilterParser(src, prefixes).parse()
+def _unquote(term: str) -> str:
+    """The text between the quotes of a literal term, N-Triples
+    escapes kept (the form the lexical-form functions read from data
+    terms); any other term as it is."""
+    return term[1 : term.rindex('"')] if term.startswith('"') else term
 
 
 # ---------------------------------------------------------------------------
 # evaluator: Group -> DataFrame of variable bindings
 # ---------------------------------------------------------------------------
-
-
-def _is_var(t: Term) -> bool:
-    return t.startswith("?")
 
 
 def _pattern_df(
@@ -2051,27 +590,11 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
         if op == "replace":
             # REPLACE replaces every match (XPath fn:replace); Spark's
             # regexp_replace is global, a DuckDB oracle needs the 'g'
-            # flag. The optional 4th flags argument must be a literal;
-            # i/s/m/x map to Java inline flags, anything else raises
-            # (silently dropping a flag would corrupt results).
-            pat = _as_lexical(term.args[1], df)
-            if len(term.args) > 3:
-                fl = term.args[3]
-                if not (isinstance(fl, str) and fl.startswith('"')):
-                    raise ValueError(
-                        "REPLACE flags must be a literal string"
-                    )
-                flags = _unquote(fl)
-                if set(flags) - set("ismx"):
-                    raise ValueError(
-                        f"unsupported REPLACE flags {flags!r}"
-                    )
-                if flags:
-                    pat = F.concat(F.lit(f"(?{flags})"), pat)
+            # flag.
             return (
                 F.regexp_replace(
                     _as_lexical(term.args[0], df),
-                    pat,
+                    _pattern_col(term.args[1], term.args[3:], df),
                     _as_lexical(term.args[2], df),
                 ),
                 "str",
@@ -2112,7 +635,7 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
         if op == "iri":
             # IRI()/URI(): string -> IRI term. Absolute IRIs only: the
             # prologue BASE is resolved at parse time against constant
-            # terms (see virtual._resolve_base), not re-applied to
+            # terms (parse._Parser.iri), not re-applied to
             # computed strings, matching engines without a runtime base
             return (
                 F.concat(
@@ -2181,7 +704,7 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
                     raw.rlike(r'^".*"@[A-Za-z0-9-]+$'),
                     F.lit("<http://www.w3.org/1999/02/22-rdf-syntax-ns#langString>"),
                 )
-                .when(raw.startswith('"'), F.lit(f"<{_XSD_NS}string>"))
+                .when(raw.startswith('"'), F.lit(f"<{terms.XSD_STRING}>"))
                 .otherwise(F.lit(None).cast("string")),
                 "plain",
             )
@@ -2192,10 +715,24 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
         m = _NUM_LIT_RE.match(term)
         if m:
             return F.lit(float(m.group(1))), "num"
-        if re.match(r"^[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?$", term):
-            return F.lit(float(term)), "num"
         return F.lit(term), "plain"
     raise ValueError(f"bad filter operand {term!r}")
+
+
+def _pattern_col(pattern, flags: list, df: DataFrame) -> Column:
+    """A REGEX / REPLACE pattern with its optional flags argument,
+    which must be a literal: i/s/m/x become Java inline flags, anything
+    else raises (silently dropping a flag would corrupt results)."""
+    pat = _as_lexical(pattern, df)
+    if not flags:
+        return pat
+    fl = flags[0]
+    if not (isinstance(fl, str) and fl.startswith('"')):
+        raise ValueError("regex flags must be a literal string")
+    chars = _unquote(fl)
+    if set(chars) - set("ismx"):
+        raise ValueError(f"unsupported regex flags {chars!r}")
+    return F.concat(F.lit(f"(?{chars})"), pat) if chars else pat
 
 
 def _raw_term(term, df: DataFrame) -> Column:
@@ -2263,14 +800,6 @@ def _datetime_value(col: Column) -> Column:
     return F.regexp_extract(col, _DT_TERM_RE, 1).try_cast("timestamp")
 
 
-def _is_datetime(term) -> bool:
-    """True for an operand known at parse time to be an xsd:dateTime:
-    a typed literal or NOW()."""
-    if isinstance(term, FilterNode):
-        return term.op == "now"
-    return isinstance(term, str) and re.match(_DT_TERM_RE, term) is not None
-
-
 def _filter_col(node: FilterNode, df: DataFrame) -> Column:
     op = node.op
     if op == "and":
@@ -2286,7 +815,11 @@ def _filter_col(node: FilterNode, df: DataFrame) -> Column:
     if op == "bound":
         return F.col(node.args[0]).isNotNull()
     if op == "regex":
-        return F.col(node.args[0]).rlike(node.args[1])
+        # SPARQL §17.4.3.14: the pattern matches the lexical form
+        return F.regexp_like(
+            _as_lexical(node.args[0], df),
+            _pattern_col(node.args[1], node.args[2:], df),
+        )
     if op == "isiri":
         return _raw_term(node.args[0], df).startswith("<")
     if op == "isliteral":
@@ -2325,7 +858,7 @@ def _filter_col(node: FilterNode, df: DataFrame) -> Column:
         return F.when(rng == "*", tag != "").otherwise(
             (tag == rng) | tag.startswith(F.concat(rng, F.lit("-")))
         )
-    if op not in _CMP_OPS:
+    if op not in _CMP_FNS:
         raise ValueError(f"boolean expression expected in FILTER, got {op!r}")
     l, lk = _filter_operand(node.args[0], df)
     r, rk = _filter_operand(node.args[1], df)
@@ -2342,11 +875,15 @@ def _filter_col(node: FilterNode, df: DataFrame) -> Column:
         )
     if op in ("=", "!="):
         return cmp(l, r)
-    if _is_datetime(node.args[0]) or _is_datetime(node.args[1]):
-        # ordering against an xsd:dateTime compares timestamps; a
-        # non-dateTime term there is a type error (NULL, dropped)
-        return cmp(_datetime_value(l), _datetime_value(r))
-    return cmp(_numeric_value(l), _numeric_value(r))
+    # the row decides the kind: two xsd:dateTime terms order by
+    # instant, one against a term of another kind is a type error
+    # (NULL, dropped), and the rest order by numeric value
+    ldt, rdt = _datetime_value(l), _datetime_value(r)
+    return (
+        F.when(ldt.isNotNull() & rdt.isNotNull(), cmp(ldt, rdt))
+        .when(ldt.isNotNull() | rdt.isNotNull(), F.lit(None).cast("boolean"))
+        .otherwise(cmp(_numeric_value(l), _numeric_value(r)))
+    )
 
 
 def _bind_col(node, df: DataFrame) -> Column:

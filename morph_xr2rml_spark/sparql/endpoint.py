@@ -22,7 +22,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
 from ..plans import caching
-from .bgp import Graph, TripleTable, parse_sparql
+from .bgp import Graph, TripleTable
+from .parse import parse_sparql
 from .results import to_sparql_json, to_sparql_xml
 
 _XML_TYPES = ("application/sparql-results+xml", "application/xml", "text/xml")

@@ -71,16 +71,8 @@ from ..mapping.model import (
     TriplesMap,
 )
 from ..sources.catalog import _MONGO_FIND_RE, SourceCatalog
-from .bgp import (
-    Graph,
-    Group,
-    Path,
-    SelectQuery,
-    TriplePattern,
-    _is_var,
-    _parsed,
-    sparql_select,
-)
+from .bgp import Graph, _parsed, sparql_select
+from .parse import Group, Path, SelectQuery, TriplePattern, _is_var
 from .results import parse_term
 
 _RDF_TYPE = f"<{terms.RDF_TYPE}>"

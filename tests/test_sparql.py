@@ -54,8 +54,9 @@ def test_braces_inside_string_literals(literal):
     q = parse_sparql(
         f"SELECT ?x WHERE {{ ?x <http://e/p> {literal} . ?x <http://e/q> ?y }}"
     )
+    # the term is the canonical N-Triples literal, double-quoted
     assert [(tp.s, tp.p, tp.o) for tp in q.where.patterns] == [
-        ("?x", "<http://e/p>", literal),
+        ("?x", "<http://e/p>", '"' + literal[1:-1] + '"'),
         ("?x", "<http://e/q>", "?y"),
     ]
 
@@ -66,7 +67,7 @@ def test_apostrophe_inside_iri_opens_no_string():
     )
     assert [(tp.s, tp.p, tp.o) for tp in q.where.patterns] == [
         ("?x", "<http://e/O'Neil>", "?y"),
-        ("?y", "<http://e/p>", "'a}b'"),
+        ("?y", "<http://e/p>", '"a}b"'),
     ]
 
 
@@ -127,7 +128,7 @@ def test_filter_numeric_and_regex(triples):
     re_match = sparql_select(
         triples,
         """PREFIX ex: <http://example.org/>
-        SELECT ?n WHERE { ?x ex:name ?n FILTER (REGEX(?n, "^\\"[ab]")) }""",
+        SELECT ?n WHERE { ?x ex:name ?n FILTER (REGEX(?n, "^[ab]")) }""",
     )
     assert rows(re_match) == {('"alice"',), ('"bob"',)}
 
@@ -861,6 +862,69 @@ def test_path_negated_property_set(triples):
     assert got == {('"carol"',)}  # p/3's only edge is its name
 
 
+@pytest.mark.parametrize(
+    "path,subject,want",
+    [
+        # edges into p/2 whose predicate is not name, walked backwards:
+        # only p/1 knows p/2
+        ("!(^ex:name)", "p/2", {(f"<{EX}p/1>",)}),
+        # forward edges of p/2 other than name (age, knows, type), and
+        # no backward edge into p/2 other than knows
+        (
+            "!(^ex:knows|ex:name)",
+            "p/2",
+            {
+                ('"17"^^<http://www.w3.org/2001/XMLSchema#integer>',),
+                (f"<{EX}p/3>",),
+                (f"<{EX}Person>",),
+            },
+        ),
+        # p/3 is the object of p/2 knows p/3 only
+        ("!^ex:name", "p/3", {(f"<{EX}p/2>",)}),
+        ("!^ex:knows", "p/3", set()),
+    ],
+)
+def test_path_negated_property_set_inverse_members(triples, path, subject, want):
+    got = rows(
+        sparql_select(
+            triples,
+            f"""PREFIX ex: <http://example.org/>
+            SELECT ?o WHERE {{ <{EX}{subject}> {path} ?o }}""",
+        )
+    )
+    assert got == want
+
+
+def test_datetime_variables_order_by_value(spark):
+    """?a < ?b over two xsd:dateTime bindings compares instants, also
+    within one year."""
+    dt = "http://www.w3.org/2001/XMLSchema#dateTime"
+    jan = f'"2020-01-01T00:00:00Z"^^<{dt}>'
+    jun = f'"2020-06-01T00:00:00Z"^^<{dt}>'
+    df = spark.createDataFrame(
+        [
+            (f"<{EX}e/1>", f"<{EX}start>", jan),
+            (f"<{EX}e/1>", f"<{EX}end>", jun),
+            (f"<{EX}e/2>", f"<{EX}start>", jun),
+            (f"<{EX}e/2>", f"<{EX}end>", jan),
+        ],
+        "subj string, pred string, obj string",
+    )
+
+    def events(op):
+        return rows(
+            sparql_select(
+                df,
+                f"""SELECT ?e WHERE {{ ?e <{EX}start> ?a . ?e <{EX}end> ?b
+                    FILTER(?a {op} ?b) }}""",
+            )
+        )
+
+    assert events("<") == {(f"<{EX}e/1>",)}
+    assert events(">") == {(f"<{EX}e/2>",)}
+    assert events("<=") == {(f"<{EX}e/1>",)}
+
+
 def test_describe_where(triples):
     from morph_xr2rml_spark.sparql import sparql_describe
 
@@ -879,8 +943,8 @@ def test_describe_where(triples):
 
 def test_parser_whitespace_and_comment_invariance():
     """Property: inserting comments / varying inter-token whitespace
-    does not change the parse (guards the regex/recursive-descent
-    parser against formatting sensitivity)."""
+    does not change the parse (guards the tokenizer and parser
+    against formatting sensitivity)."""
     from hypothesis import given, settings, strategies as st
 
     base = (
@@ -913,6 +977,46 @@ def test_parser_whitespace_and_comment_invariance():
         assert parse_sparql(q) == want
 
     check()
+
+    # the same under any quote spelling of a literal holding '#', braces,
+    # '.', ',' and ')', a comment at every token boundary, and any
+    # keyword case
+    text = "a#b{c}d.e,f)g"
+    spellings = [f'"{text}"', f"'{text}'", f'"""{text}"""', f"'''{text}'''"]
+    keywords = {"PREFIX", "SELECT", "DISTINCT", "WHERE", "OPTIONAL", "FILTER",
+                "BOUND", "VALUES", "ORDER", "BY", "DESC", "LIMIT"}
+    tokens = (
+        "PREFIX ex: <http://example.org/> SELECT DISTINCT ?a ?b WHERE { "
+        "?a ex:knows ?b , ?c ; ex:name LIT . "
+        "OPTIONAL { ?b ex:age ?g } "
+        "FILTER ( BOUND ( ?g ) && ?g > 3 && ?n != LIT ) "
+        "VALUES ?n { LIT } "
+        "} ORDER BY DESC ( ?a ) LIMIT 7"
+    ).split()
+    want = parse_sparql(" ".join(spellings[0] if t == "LIT" else t for t in tokens))
+
+    @settings(max_examples=60, deadline=None)
+    @given(
+        quote=st.sampled_from(spellings),
+        pads=st.lists(
+            st.sampled_from([" ", "\n", "\t", "# a comment\n", " #c}).,'\"\n"]),
+            min_size=len(tokens),
+            max_size=len(tokens),
+        ),
+        cases=st.lists(
+            st.sampled_from([str.upper, str.lower, str.title]),
+            min_size=len(tokens),
+            max_size=len(tokens),
+        ),
+    )
+    def check_literals(quote, pads, cases):
+        q = "".join(
+            (quote if t == "LIT" else case(t) if t in keywords else t) + pad
+            for t, pad, case in zip(tokens, pads, cases)
+        )
+        assert parse_sparql(q) == want
+
+    check_literals()
 
 
 def test_construct_where_shorthand(triples):

@@ -23,6 +23,7 @@ TTL = """\
 @prefix xrr: <http://i3s.unice.fr/xr2rml#> .
 @prefix rr:  <http://www.w3.org/ns/r2rml#> .
 @prefix ex:  <http://example.org/> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
 
 <#TMPerson>
     xrr:logicalSource [ rr:tableName "person"; xrr:referenceFormulation xrr:Column ];
@@ -36,9 +37,43 @@ TTL = """\
         rr:objectMap [ rr:template "http://example.org/{friend}" ];
     ];
     .
+
+<#TMThing>
+    xrr:logicalSource [ rr:tableName "thing"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/t/{id}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:label;
+        rr:objectMap [ rr:column "label" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:n;
+        rr:objectMap [ rr:column "n" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:flag;
+        rr:objectMap [ rr:column "flag" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:dec;
+        rr:objectMap [ rr:column "dec"; rr:datatype xsd:decimal ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:dbl;
+        rr:objectMap [ rr:column "dbl"; rr:datatype xsd:double ];
+    ];
+    .
 """
 
 PERSON = [("a", "Ann", "b"), ("b", "Bob", "c"), ("c", "Cy", None)]
+# literals that a scan of the raw query text misreads (quotes, '#', a
+# newline), an integer and a boolean column, and lexical forms that the
+# mapping types as xsd:decimal and xsd:double
+THING = [
+    ("1", "ab", 5, True, "5.5", "1e3"),
+    ("2", "it's", -3, False, None, None),
+    ("3", "a#b", None, None, None, None),
+    ("4", "a\nb", None, None, None, None),
+]
 
 # the graph the mapping produces over PERSON, written out by hand: a
 # name triple per row, a knows triple per row with a friend
@@ -47,7 +82,24 @@ A_KNOWS = f"<{EX}a> <{EX}knows> <{EX}b> ."
 B_NAME = f'<{EX}b> <{EX}name> "Bob" .'
 B_KNOWS = f"<{EX}b> <{EX}knows> <{EX}c> ."
 C_NAME = f'<{EX}c> <{EX}name> "Cy" .'
-TRIPLES = [A_NAME, A_KNOWS, B_NAME, B_KNOWS, C_NAME]
+# and over THING: one triple per non-NULL cell
+XSD = "http://www.w3.org/2001/XMLSchema#"
+T1, T2, T3, T4 = (f"<{EX}t/{i}>" for i in "1234")
+INT5 = f'"5"^^<{XSD}integer>'
+INT_NEG3 = f'"-3"^^<{XSD}integer>'
+THING_TRIPLES = [
+    f'{T1} <{EX}label> "ab" .',
+    f"{T1} <{EX}n> {INT5} .",
+    f'{T1} <{EX}flag> "true"^^<{XSD}boolean> .',
+    f'{T1} <{EX}dec> "5.5"^^<{XSD}decimal> .',
+    f'{T1} <{EX}dbl> "1e3"^^<{XSD}double> .',
+    f"{T2} <{EX}label> \"it's\" .",
+    f"{T2} <{EX}n> {INT_NEG3} .",
+    f'{T2} <{EX}flag> "false"^^<{XSD}boolean> .',
+    f'{T3} <{EX}label> "a#b" .',
+    f'{T4} <{EX}label> "a\\nb" .',
+]
+TRIPLES = [A_NAME, A_KNOWS, B_NAME, B_KNOWS, C_NAME] + THING_TRIPLES
 
 
 def _table(spark):
@@ -61,9 +113,13 @@ def _virtual(spark):
     person = spark.createDataFrame(
         PERSON, "id string, name string, friend string"
     )
-    return VirtualGraph(
-        spark, parse_mapping(TTL), SourceCatalog(spark).register("person", person)
+    thing = spark.createDataFrame(
+        THING, "id string, label string, n int, flag boolean, dec string, dbl string"
     )
+    catalog = (
+        SourceCatalog(spark).register("person", person).register("thing", thing)
+    )
+    return VirtualGraph(spark, parse_mapping(TTL), catalog)
 
 
 @pytest.fixture(params=["table", "virtual"])
@@ -118,6 +174,48 @@ def test_probe(graph, query, want):
     ctype, body = evaluate(graph, query)
     assert ctype == "application/n-triples"
     assert _nt(body) == want
+
+
+def _label_filter(expr: str) -> str:
+    return f"SELECT ?s WHERE {{ ?s <{EX}label> ?o FILTER({expr}) }}"
+
+
+# one query per spelling of a constant that must equal its data term,
+# with the answers written out by hand
+LITERAL_PROBES = [
+    (f"SELECT ?s WHERE {{ ?s <{EX}label> 'ab' }}", {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}label> 'it\\'s' }}", {(T2,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}label> 'a#b' }}", {(T3,)}),
+    (f'SELECT ?s WHERE {{ ?s <{EX}label> """a\nb""" }}', {(T4,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}label> '''a\nb''' }}", {(T4,)}),
+    (_label_filter("?o = 'ab'"), {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}label> ?o VALUES ?o {{ 'ab' }} }}", {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}n> 5 }}", {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}n> -3 }}", {(T2,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}dec> 5.5 }}", {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}dbl> 1e3 }}", {(T1,)}),
+    (f"SELECT ?s WHERE {{ ?s <{EX}flag> true }}", {(T1,)}),
+    # REGEX matches the lexical form, with or without STR(), under flags
+    (_label_filter('REGEX(?o, "^a")'), {(T1,), (T3,), (T4,)}),
+    (_label_filter('REGEX(?o, "b$")'), {(T1,), (T3,), (T4,)}),
+    (_label_filter('REGEX(STR(?o), "^A", "i")'), {(T1,), (T3,), (T4,)}),
+]
+
+
+@pytest.mark.parametrize("query,want", LITERAL_PROBES)
+def test_literal_probe(graph, query, want):
+    assert {tuple(r) for r in graph.select(query).collect()} == want
+
+
+def test_blank_node_label_is_a_hidden_variable(graph):
+    """A ``_:b`` label in a pattern is a variable that SELECT * does not
+    project; the same label twice in one BGP joins."""
+    out = graph.select(f"SELECT * WHERE {{ _:b <{EX}label> ?l . _:b <{EX}n> ?n }}")
+    assert out.columns == ["l", "n"]
+    assert {tuple(r) for r in out.collect()} == {
+        ('"ab"', INT5),
+        ("\"it's\"", INT_NEG3),
+    }
 
 
 def test_describe_iri_and_variable(graph):
