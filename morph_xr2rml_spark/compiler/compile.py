@@ -34,6 +34,7 @@ MorphRDBDataTranslator.scala:85, MorphMongoDataTranslator.scala:82):
 from __future__ import annotations
 
 import functools
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -569,24 +570,18 @@ class MappingCompiler:
                 plains, colls = self._ref_object_branches(tm, base, pom, rom)
                 for pred_term, rb in plains:
                     if collect_keyed and len(const_graphs) == 1:
-                        needs = (
-                            self._rom_keyed_needs(tm, raw_base, doc_col, rom, subj)
+                        keyed_rom = (
+                            self._rom_keyed(
+                                tm, raw_base, doc_col, rom, subj,
+                                pred_term, const_graphs[0],
+                            )
                             if subj_keyable
                             else None
                         )
-                        if needs is not None:
+                        if keyed_rom is not None:
                             # narrow-join pushdown: defer so the child
                             # side reads the shared narrow base
-                            keyed_requests.append(
-                                (
-                                    lambda b, r=rom, p=pred_term, g=const_graphs[0]: (
-                                        self._rom_keyed_branch(
-                                            tm, b, doc_col, subj, r, p, g
-                                        )
-                                    ),
-                                    needs,
-                                )
-                            )
+                            keyed_requests.append(keyed_rom)
                         else:
                             # constant predicate still routes the
                             # constructed join output to its own
@@ -647,9 +642,7 @@ class MappingCompiler:
                 shared = cache(raw_base.select(*needed))
                 self._persisted.append(shared)
             for builder, _cols in keyed_requests:
-                kb = builder(shared)
-                if kb is not None:
-                    keyed.append(kb)
+                keyed.append(builder(shared))
 
         return branches, chain_branches, keyed, pool_preds, has_unknown_pred
 
@@ -820,66 +813,28 @@ class MappingCompiler:
             return False
         return not any(m in plan for m in self._HEAVY_PLAN_MARKERS)
 
-    def _rom_keyed_needs(
+    def _rom_keyed(
         self,
         tm: TriplesMap,
         raw_base: DataFrame,
         doc_col: str | None,
         rom: RefObjectMap,
         subj: _TermExpr,
-    ) -> tuple[str, ...] | None:
-        """Child-side columns the narrow-join pushdown needs, or None
-        when the ROM does not qualify (see _rom_keyed_branch)."""
-        parent_tm = self.doc.triples_maps[rom.parent_triples_map]
-        ls, pls = tm.logical_source, parent_tm.logical_source
-        conds = rom.join_conditions
-        if not conds:
-            return None
-        if ls == pls and all(jc.child_ref == jc.parent_ref for jc in conds):
-            if not self._selfjoin_eliminable(ls, pls, conds):
-                return None  # real cross-row join: generic _rom_pairs path
-            nn_cols = self._elim_notnull_cols(conds, ls, doc_col)
-            if nn_cols is None:
-                return None
-            psubj = self._compile_term_map(parent_tm.subject_map, raw_base, doc_col)
-            if psubj.is_array or psubj.refs is None:
-                return None
-            return tuple(
-                set(subj.refs or ()) | set(psubj.refs) | set(nn_cols)
-            )
-        if not all(
-            self._is_simple_ref(jc.child_ref, ls)
-            and self._is_simple_ref(jc.parent_ref, pls)
-            for jc in conds
-        ):
-            return None
-        pdf, pdoc = self._parent_side(parent_tm)
-        psubj = self._compile_term_map(parent_tm.subject_map, pdf, pdoc)
-        if psubj.is_array or psubj.refs is None:
-            return None
-        ccols = [
-            MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
-            for jc in conds
-        ]
-        return tuple(set(subj.refs or ()) | set(ccols))
-
-    def _rom_keyed_branch(
-        self,
-        tm: TriplesMap,
-        raw_base: DataFrame,
-        doc_col: str | None,
-        subj: _TermExpr,
-        rom: RefObjectMap,
         pred_value: str,
         graph: str | None,
-    ) -> _PredBranch | None:
-        """Dedup pushdown through a RefObjectMap equi-join (J1): project
-        each side to (subject refs, join keys), construct the parent
-        subject on the (small, broadcastable) parent side, equi-join,
-        then dedup ONE narrow (child refs, parent subject) projection —
-        instead of constructing both subjects for every join row and
-        deduplicating the full term strings. Falls back (None) for
-        value-intersection joins and non-native subject maps."""
+    ) -> tuple[Callable[[DataFrame], _PredBranch], tuple[str, ...]] | None:
+        """Dedup pushdown through a RefObjectMap equi-join (J1):
+        ``(build(base), child-side columns it reads)``, or None when the
+        ROM does not qualify (value-intersection joins, non-native
+        subject maps). The build projects each side to (subject refs,
+        join keys), constructs the parent subject on the (small,
+        broadcastable) parent side, equi-joins, then dedups ONE narrow
+        (child refs, parent subject) projection — instead of
+        constructing both subjects for every join row and deduplicating
+        the full term strings. ``base`` is ``raw_base`` or a narrow
+        projection of it holding the returned columns, so the parent
+        subject compiled here against ``raw_base`` reads the same
+        columns there."""
         parent_tm = self.doc.triples_maps[rom.parent_triples_map]
         ls, pls = tm.logical_source, parent_tm.logical_source
         conds = rom.join_conditions
@@ -895,15 +850,19 @@ class MappingCompiler:
             nn_cols = self._elim_notnull_cols(conds, ls, doc_col)
             if nn_cols is None:
                 return None
-            pruned = raw_base
-            for jc in conds:
-                pruned = pruned.where(self._ref_notnull(jc.child_ref, ls, doc_col))
-            psubj = self._compile_term_map(parent_tm.subject_map, pruned, doc_col)
+            psubj = self._compile_term_map(parent_tm.subject_map, raw_base, doc_col)
             if psubj.is_array or psubj.refs is None:
                 return None
-            return self._keyed_branch(
-                pruned, subj, psubj, pred_value, graph, self._unique_key(tm)
-            )
+
+            def build_eliminated(base: DataFrame) -> _PredBranch:
+                for jc in conds:
+                    base = base.where(self._ref_notnull(jc.child_ref, ls, doc_col))
+                return self._keyed_branch(
+                    base, subj, psubj, pred_value, graph, self._unique_key(tm)
+                )
+
+            needs = set(subj.refs or ()) | set(psubj.refs) | set(nn_cols)
+            return build_eliminated, tuple(needs)
         if not all(
             self._is_simple_ref(jc.child_ref, ls)
             and self._is_simple_ref(jc.parent_ref, pls)
@@ -922,69 +881,73 @@ class MappingCompiler:
             MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
             for jc in conds
         ]
-        # differently-typed key columns join on their string forms
-        # (childValues.map(_.toString) intersection,
-        # MorphRDBDataTranslator.scala:170-180) — a raw == would make
-        # ANSI mode throw casting a non-numeric child value to the
-        # parent's numeric type
-        mixed = [
-            raw_base.schema[cc].dataType != pdf.schema[pc].dataType
-            for cc, pc in zip(ccols, pcols)
-        ]
-        parent_j = pdf
-        if psubj.defined is not None:
-            parent_j = parent_j.where(psubj.defined)
-        parent_n = parent_j.select(
-            *[
-                (F.col(pc).cast("string") if mixed[i] else F.col(pc)).alias(
-                    f"__pk{i}"
-                )
-                for i, pc in enumerate(pcols)
-            ],
-            psubj.col.alias("__psubj"),
-        )
-        if psubj.defined is None:
-            parent_n = parent_n.where(F.col("__psubj").isNotNull())
-        parent_n = parent_n.dropDuplicates(
-            [f"__pk{i}" for i in range(len(pcols))] + ["__psubj"]
-        )
-        crefs = list(dict.fromkeys(list(subj.refs or ()) + ccols))
-        child_n = raw_base
-        if subj.defined is not None:
-            child_n = child_n.where(subj.defined)
-        child_n = child_n.select(*[F.col(c) for c in crefs])
-        on = None
-        for i, cc in enumerate(ccols):
-            ck = child_n[cc].cast("string") if mixed[i] else child_n[cc]
-            c = ck == parent_n[f"__pk{i}"]
-            on = c if on is None else (on & c)
-        pairs = child_n.join(parent_n, on, "inner").select(
-            *[child_n[c] for c in (subj.refs or ())], parent_n["__psubj"]
-        )
-        ukey = self._unique_key(tm)
-        if (
-            subj.injective
-            and ukey is not None
-            and set(ukey) <= set(subj.refs or ())
-        ):
-            # child rows unique on the key, the deduped parent side
-            # contributes distinct __psubj values per key match, and
-            # the injective child subject covers the key: join output
-            # pairs are distinct by construction — no dedup shuffle
-            pass
-        elif subj.injective:
-            # equal (child refs, parent subj) <=> equal (subj, obj):
-            # dedup the narrow join projection
-            pairs = pairs.dropDuplicates(list(subj.refs or ()) + ["__psubj"])
-        built = pairs.select(
-            subj.col.alias("subj"), F.col("__psubj").alias("obj")
-        )
-        if subj.defined is None:
-            built = built.where(F.col("subj").isNotNull())
-        if not subj.injective:
-            # one term-level dedup instead of narrow + term double shuffle
-            built = built.dropDuplicates(["subj", "obj"])
-        return _PredBranch(pred_value, graph, built, distinct=True)
+
+        def build_join(base: DataFrame) -> _PredBranch:
+            # differently-typed key columns join on their string forms
+            # (childValues.map(_.toString) intersection,
+            # MorphRDBDataTranslator.scala:170-180) — a raw == would make
+            # ANSI mode throw casting a non-numeric child value to the
+            # parent's numeric type
+            mixed = [
+                base.schema[cc].dataType != pdf.schema[pc].dataType
+                for cc, pc in zip(ccols, pcols)
+            ]
+            parent_j = pdf
+            if psubj.defined is not None:
+                parent_j = parent_j.where(psubj.defined)
+            parent_n = parent_j.select(
+                *[
+                    (F.col(pc).cast("string") if mixed[i] else F.col(pc)).alias(
+                        f"__pk{i}"
+                    )
+                    for i, pc in enumerate(pcols)
+                ],
+                psubj.col.alias("__psubj"),
+            )
+            if psubj.defined is None:
+                parent_n = parent_n.where(F.col("__psubj").isNotNull())
+            parent_n = parent_n.dropDuplicates(
+                [f"__pk{i}" for i in range(len(pcols))] + ["__psubj"]
+            )
+            crefs = list(dict.fromkeys(list(subj.refs or ()) + ccols))
+            child_n = base
+            if subj.defined is not None:
+                child_n = child_n.where(subj.defined)
+            child_n = child_n.select(*[F.col(c) for c in crefs])
+            on = None
+            for i, cc in enumerate(ccols):
+                ck = child_n[cc].cast("string") if mixed[i] else child_n[cc]
+                c = ck == parent_n[f"__pk{i}"]
+                on = c if on is None else (on & c)
+            pairs = child_n.join(parent_n, on, "inner").select(
+                *[child_n[c] for c in (subj.refs or ())], parent_n["__psubj"]
+            )
+            ukey = self._unique_key(tm)
+            if (
+                subj.injective
+                and ukey is not None
+                and set(ukey) <= set(subj.refs or ())
+            ):
+                # child rows unique on the key, the deduped parent side
+                # contributes distinct __psubj values per key match, and
+                # the injective child subject covers the key: join output
+                # pairs are distinct by construction — no dedup shuffle
+                pass
+            elif subj.injective:
+                # equal (child refs, parent subj) <=> equal (subj, obj):
+                # dedup the narrow join projection
+                pairs = pairs.dropDuplicates(list(subj.refs or ()) + ["__psubj"])
+            built = pairs.select(
+                subj.col.alias("subj"), F.col("__psubj").alias("obj")
+            )
+            if subj.defined is None:
+                built = built.where(F.col("subj").isNotNull())
+            if not subj.injective:
+                # one term-level dedup instead of narrow + term double shuffle
+                built = built.dropDuplicates(["subj", "obj"])
+            return _PredBranch(pred_value, graph, built, distinct=True)
+
+        return build_join, tuple(set(subj.refs or ()) | set(ccols))
 
     # ------------------------------------------------------------------
     # source resolution

@@ -29,7 +29,9 @@ import functools
 import json
 import operator
 import re
+from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,6 +93,18 @@ def _parse_find_json(q: str) -> dict:
         raise ValueError(f"cannot parse MongoDB find() query: {q!r}") from e
 
 
+class RawSource(NamedTuple):
+    """What a logical source scans before :meth:`SourceCatalog.resolve`
+    applies find() predicates or synthesizes a document column: the
+    registered table, its frame, and for a document-shaped source the
+    raw document column (None for a row-shaped source). A filter on
+    the frame's columns reaches the scan."""
+
+    table: str
+    frame: DataFrame
+    doc_column: str | None
+
+
 class SourceCatalog:
     """Resolves logical sources against registered DataFrames.
 
@@ -136,20 +150,67 @@ class SourceCatalog:
             return self.tables[name]
         return self.spark.table(name)
 
+    def _doc_column(self, name: str | None, df: DataFrame) -> str | None:
+        """The column holding the whole document: the registered one,
+        else the single column of a one-string-column source."""
+        doc_col = self.doc_columns.get(name) if name else None
+        if doc_col is None and len(df.columns) == 1:
+            if df.schema.fields[0].dataType.simpleString() == "string":
+                doc_col = df.columns[0]
+        return doc_col
+
+    @staticmethod
+    def table_of(ls: LogicalSource) -> str | None:
+        """The registered table a logical source reads: its table name
+        or its find() collection; None for a SQL query, whose tables are
+        not known statically."""
+        if ls.kind == "table":
+            return ls.value
+        m = _MONGO_FIND_RE.match(ls.value)
+        return m.group("collection") if m else None
+
+    def raw_source(self, ls: LogicalSource) -> RawSource | None:
+        """The frame a table or find() source scans, shaped as
+        :meth:`resolve` shapes it (Column formulation: row-shaped); None
+        for a SQL query, an unknown table, or a document source whose
+        document column ``resolve`` would synthesize (there is no raw
+        column to filter yet)."""
+        name = self.table_of(ls)
+        if name is None:
+            return None
+        try:
+            df = self._table(name)
+        except AnalysisException:
+            return None
+        if ls.formulation == "Column":
+            return RawSource(name, df, None)
+        doc_col = self._doc_column(name, df)
+        return RawSource(name, df, doc_col) if doc_col in df.columns else None
+
+    def filtered(self, name: str, cond: Column) -> "SourceCatalog":
+        """A copy of the catalog whose table ``name`` reads only the
+        rows matching ``cond``; every other entry is shared."""
+        cat = SourceCatalog(self.spark, self.tables, self.doc_columns)
+        cat.unique_keys = dict(self.unique_keys)
+        cat.tables[name] = self._table(name).filter(cond)
+        return cat
+
     def resolve(self, ls: LogicalSource) -> tuple[DataFrame, str | None]:
         """Return (DataFrame, doc_column) for a logical source.
 
         doc_column is None for row-shaped (Column-formulation) sources.
         """
-        if ls.kind == "table":
-            df = self._table(ls.value)
-            name = ls.value
+        name = self.table_of(ls)
+        if name is None:
+            # SQL query — registered tables must be visible as temp views
+            for tname, tdf in self.tables.items():
+                tdf.createOrReplaceTempView(tname)
+            df = self.spark.sql(ls.value)
         else:
-            m = _MONGO_FIND_RE.match(ls.value)
-            if m:
-                name = m.group("collection")
-                df = self._table(name)
-                query, projection = _split_find_args(m.group("args"))
+            df = self._table(name)
+            if ls.kind != "table":
+                args = _MONGO_FIND_RE.match(ls.value).group("args")
+                query, projection = _split_find_args(args)
                 if projection is not None and projection not in ("", "{}"):
                     # validate the projection document parses; it is then
                     # deliberately not applied: the document column flows
@@ -159,27 +220,15 @@ class SourceCatalog:
                     # drops what the compiled term maps don't read
                     _parse_find_json(projection)
                 df = self._apply_find_predicate(df, name, query)
-            else:
-                # SQL query — registered tables must be visible as temp views
-                for tname, tdf in self.tables.items():
-                    tdf.createOrReplaceTempView(tname)
-                df = self.spark.sql(ls.value)
-                name = None
 
         if ls.formulation == "Column":
             return df, None
 
         # Document-shaped source: find/derive the doc column
-        doc_col = self.doc_columns.get(name) if name else None
+        doc_col = self._doc_column(name, df)
         if doc_col is None:
-            string_cols = [
-                f.name for f in df.schema.fields if f.dataType.simpleString() == "string"
-            ]
-            if len(df.columns) == 1 and string_cols:
-                doc_col = df.columns[0]
-            else:
-                df = df.withColumn("__doc__", F.to_json(F.struct(*df.columns)))
-                doc_col = "__doc__"
+            df = df.withColumn("__doc__", F.to_json(F.struct(*df.columns)))
+            doc_col = "__doc__"
         return df, doc_col
 
     def _apply_find_predicate(self, df: DataFrame, name: str, query: str) -> DataFrame:

@@ -1178,11 +1178,22 @@ class Graph:
         """Instantiate the template triple patterns from the WHERE
         solutions -> a (subj, pred, obj) frame (S9's CONSTRUCT->RDF
         path). Rows with an unbound template variable are dropped per
-        SPARQL semantics; output is deduplicated (graph set semantics)."""
+        SPARQL semantics; output is deduplicated (graph set semantics).
+
+        A template blank node (a ``_:b`` label, or a ``[ ... ]`` list's
+        ``?__bn`` variable) is fresh per solution and shared by that
+        solution's triples (SPARQL 1.1 §16.2): its label hashes the
+        solution's bound columns with the template label. Duplicate
+        solutions instantiate the same triples, which the set semantics
+        merges."""
         q = _parsed(query, "CONSTRUCT")
         bindings = sparql_select(self.fragment(q), q)
+        solution = [F.col(c) for c in bindings.columns]
 
         def term_col(t: Term) -> Column:
+            if t.startswith(("_:", "?__bn")):
+                row = F.struct(F.lit(t).alias("__label"), *solution)
+                return F.concat(F.lit("_:c"), F.md5(F.to_json(row)))
             return F.col(t[1:]) if _is_var(t) else F.lit(t)
 
         outs = [

@@ -13,10 +13,14 @@ query-rewriting mode (its second entry point):
   :func:`bind_patterns` / :func:`_bind`;
 - ``genCond`` / ``genCondParent`` (MorphBaseQueryTranslator.scala:227-355)
   turn the pattern's constant terms into conditions on the source query
-  →  here constant subjects/objects invert the term-map template
-  (``getTemplateMatching``, TemplateUtility.scala:36-69 analogue) into
-  a Catalyst filter applied to the source scan *before* term
-  construction, so the reduction happens at the scan;
+  →  here one path serves constant subjects and objects, DESCRIBE node
+  keys and propagated variable constraints: invert the term against
+  the term map (``getTemplateMatching``, TemplateUtility.scala:36-69
+  analogue), find the source key the term map reads, and render
+  'key IN values' for the source kind (a typed filter on a table
+  column, a ``get_json_object`` test on a find() document) into the
+  source scan *before* term construction, so the reduction happens at
+  the scan;
 - ``excludeTriplesAboutCollecOrContainer``
   (MorphMongoQueryTranslator.scala:270-378)  →  a collection/container
   branch binds through its head (the map's subject, the POM's
@@ -45,6 +49,7 @@ domain).
 from __future__ import annotations
 
 import functools
+import math
 import re
 from dataclasses import replace
 from typing import NamedTuple
@@ -56,10 +61,9 @@ from pyspark.sql import types as T
 from ..compiler.collections import _CONTAINER_CLASS
 from ..compiler.compile import CompileOptions, MappingCompiler
 from ..functions import terms
-from ..functions.paths import MixedSyntaxPath
+from ..functions.paths import MixedSyntaxPath, simple_json_field
 from ..functions.templates import get_template_groups, get_template_matching
 from ..compiler.udfs import rewrite_mongo_id
-from ..functions.paths import _jp_tokenize
 from ..plans import caching
 from ..mapping.model import (
     COLUMN,
@@ -70,7 +74,7 @@ from ..mapping.model import (
     PredicateObjectMap,
     TriplesMap,
 )
-from ..sources.catalog import _MONGO_FIND_RE, SourceCatalog
+from ..sources.catalog import RawSource, SourceCatalog
 from .bgp import Graph, _parsed, sparql_select
 from .parse import Group, Path, SelectQuery, TriplePattern, _is_var
 from .results import parse_term
@@ -464,18 +468,64 @@ def bind_patterns(
 # ---------------------------------------------------------------------------
 # constant pushdown — genCond analogue, as a Catalyst source filter
 # ---------------------------------------------------------------------------
+# A constant becomes a condition on the source key its term map reads
+# (the reference's AbstractConditionEquals(ref, val), genCond
+# MorphBaseQueryTranslator.scala:227-305) in three steps, each written
+# once: invert the term against the term map (_invert), find the key
+# the term map reads in the raw source (_key_filter), and render 'key
+# IN values' for the source kind: a typed IN-list on a row source's
+# column, a get_json_object test on a document source's raw column
+# (the reference renders SQL or a Mongo query at the same point).
+# Subject and object constants, DESCRIBE node keys and propagated
+# variable constraints all take this path.
+
+# _invert's answer for a term the term map provably never renders
+_NOT_THIS = object()
 
 
-def _single_column_template(term_map) -> str | None:
-    """The lone simple source column of a one-group Column-formulation
-    template, else None."""
-    if term_map.kind != TEMPLATE or term_map.ref_formulation != "Column":
+def _iri_group(term_map) -> str | None:
+    """The one group of a single-group, encoding-invariant IRI template
+    map, else None: the only templates whose inversion is exact."""
+    if (
+        term_map.kind != TEMPLATE
+        or term_map.infer_term_type() != terms.TERM_IRI
+        or not _template_invariant(term_map.template)
+    ):
         return None
     groups = get_template_groups(term_map.template)
-    if len(groups) != 1:
+    return groups[0] if len(groups) == 1 else None
+
+
+def _reference(term_map) -> str | None:
+    """The source reference whose value a term map's terms give back:
+    a plain column or reference, or the group of an exactly invertible
+    template."""
+    if term_map.kind == COLUMN:
+        return term_map.column
+    if term_map.kind == REFERENCE:
+        return term_map.reference
+    return _iri_group(term_map)
+
+
+def _invert(term_map, term: str):
+    """The source value from which ``term_map`` renders the constant
+    ``term``; ``_NOT_THIS`` when it provably never renders it; None
+    when there is no exact inversion. A literal inverts on a plain
+    column or reference to its lexical value (the binder has checked
+    its datatype and language). An IRI inverts on an exactly invertible
+    template when the recovered value is one percent-encoding leaves
+    alone."""
+    if term_map.kind in (COLUMN, REFERENCE):
+        return parse_term(term)["value"] if term.startswith('"') else None
+    if _iri_group(term_map) is None:
         return None
-    msp = MixedSyntaxPath.parse(groups[0], "Column")
-    return msp.referenced_column if msp.is_simple_column else None
+    if not term.startswith("<"):
+        return _NOT_THIS
+    match = get_template_matching(term_map.template, term[1:-1])
+    if len(match) != 1:
+        return _NOT_THIS
+    value = next(iter(match.values()))
+    return value if _UNRESERVED.match(value) else None
 
 
 def _typed_key(value: str, dtype) -> object | None:
@@ -509,9 +559,9 @@ def _typed_key(value: str, dtype) -> object | None:
 
 
 def _key_in_filter(col_name: str, dtype, values: list[str]) -> Column:
-    """Scan filter for 'the column's lexical form is one of values':
-    typed IN-list when the type allows (parquet-pushable), lexical
-    string comparison otherwise."""
+    """Row-source rendering of 'the column's lexical form is one of
+    values': typed IN-list when the type allows (parquet-pushable),
+    lexical string comparison otherwise."""
     if isinstance(
         dtype,
         (T.BooleanType, T.NumericType, T.StringType),
@@ -523,95 +573,17 @@ def _key_in_filter(col_name: str, dtype, values: list[str]) -> Column:
     return lex.isin(values) if values else F.lit(False)
 
 
-def _subject_pushdown(
-    tm: TriplesMap, s: str, src: DataFrame, options: CompileOptions
-) -> Column | None:
-    """Catalyst filter implied by ``subj == s`` for every triple this
-    map emits, or None. Only claimed when the template inversion is
-    provably a superset: one group, encoding-invariant fixed parts, and
-    a recovered value on which percent-encoding is the identity; the
-    caller's exact residual makes the fragment tight."""
-    if not s.startswith("<"):
-        return None
-    sm = tm.subject_map
-    col = _single_column_template(sm)
-    if col is None or col not in src.columns:
-        return None
-    if not _template_invariant(sm.template):
-        return None
-    match = get_template_matching(sm.template, s[1:-1])
-    if len(match) != 1:
-        return None
-    value = next(iter(match.values()))
-    if not _UNRESERVED.match(value):
-        return None
-    dtype = src.schema[col].dataType
-    return _key_in_filter(col, dtype, [value])
-
-
-def _object_pushdown(
-    pruned: TriplesMap, tp: TriplePattern, src: DataFrame
-) -> Column | None:
-    """Catalyst filter implied by ``obj == tp.o`` — only when the pruned
-    map emits triples from exactly one plain object map, so the filter
-    cannot suppress a row another branch still needs. Literal objects
-    key a plain column; IRI objects invert a single-group
-    encoding-invariant template (the taxref
-    ``?t skosxl:altLabel <label/60587>`` shape, whose constant reduces
-    the pattern's own scan even when no join-side optimization applies)."""
-    if isinstance(tp.p, Path) or _is_var(tp.o):
-        return None
-    if pruned.subject_map.class_uris or len(pruned.predicate_object_maps) != 1:
-        return None
-    pom = pruned.predicate_object_maps[0]
-    if pom.ref_object_maps or len(pom.object_maps) != 1:
-        return None
-    om = pom.object_maps[0]
-    if om.is_collection:
-        return None
-    if tp.o.startswith('"'):
-        if om.kind != COLUMN or om.column not in src.columns:
-            return None
-        lit = parse_term(tp.o)
-        raw = lit["value"]
-        dtype = src.schema[om.column].dataType
-        return _key_in_filter(om.column, dtype, [raw])
-    if (
-        tp.o.startswith("<")
-        and om.kind == TEMPLATE
-        and om.infer_term_type() == terms.TERM_IRI
-        and _template_invariant(om.template)
-    ):
-        col = _single_column_template(om)
-        if col is None or col not in src.columns:
-            return None
-        match = get_template_matching(om.template, tp.o[1:-1])
-        if len(match) != 1:
-            return None
-        value = next(iter(match.values()))
-        if not _UNRESERVED.match(value):
-            return None
-        return _key_in_filter(col, src.schema[col].dataType, [value])
-    return None
-
-
-def _simple_json_field(expr: str) -> str | None:
-    """``$.a.b`` -> ``a.b`` when get_json_object evaluates the
-    reference identically (see functions.paths.simple_json_field);
-    ``$._id`` rewrites to ``$._id.$oid`` whose ``$oid`` segment is
-    rejected there."""
-    from ..functions.paths import simple_json_field
-
-    return simple_json_field(rewrite_mongo_id(expr))
-
-
-def _doc_value_filter(doc: Column, field: str, value: str) -> Column:
-    """Keep exactly the documents whose ``field`` COULD render as the
-    lexical ``value`` during term construction — the document-source
-    analogue of the reference's JsonPathToMongoTranslator pushing a
-    SPARQL constant into the Mongo find() query (rules R0-R9,
-    JsonPathToMongoTranslator.scala:242-463), expressed as a Catalyst
-    predicate on the raw document column so it reaches the scan.
+def _doc_key_filter(doc: Column, field: str, values: list[str]) -> Column:
+    """Document-source rendering: keep exactly the documents whose
+    ``field`` COULD render as one of the lexical ``values`` during term
+    construction — the analogue of the reference's
+    JsonPathToMongoTranslator pushing a SPARQL constant into the Mongo
+    find() query (rules R0-R9, JsonPathToMongoTranslator.scala:242-463),
+    expressed as a Catalyst predicate on the raw document column so it
+    reaches the scan. One ``get_json_object`` expression ``gj`` serves
+    every value, so the test does not grow with the value count:
+    ``gj IS NOT NULL AND (gj starts with [ or { OR lower(gj) IN (…) OR
+    try_cast(gj AS double) IN (…))``.
 
     Never a false exclusion (the binder is a reducer; the per-pattern
     residual makes the fragment exact):
@@ -627,95 +599,89 @@ def _doc_value_filter(doc: Column, field: str, value: str) -> Column:
       * arrays/objects (prefix ``[``/``{``) -> evaluation semantics
         diverge from get_json_object, so such rows are always kept.
     """
+    if not values:
+        return F.lit(False)
     gj = F.get_json_object(doc, "$." + field)
     cond = (
         gj.startswith("[")
         | gj.startswith("{")
-        | (F.lower(gj) == F.lit(value.lower()))
+        | F.lower(gj).isin([v.lower() for v in values])
     )
-    try:
-        num = float(value)
-    except ValueError:
-        pass
-    else:
-        if num == num and num not in (float("inf"), float("-inf")):
-            cond = cond | (gj.try_cast("double") == F.lit(num))
+    nums: list[float] = []
+    for v in values:
+        try:
+            num = float(v)
+        except ValueError:
+            continue
+        if math.isfinite(num):
+            nums.append(num)
+    if nums:
+        cond = cond | gj.try_cast("double").isin(nums)
     return gj.isNotNull() & cond
 
 
-def _doc_subject_pushdown(
-    pruned: TriplesMap, s: str, doc: Column, options: CompileOptions
-) -> Column | None:
-    """Document-source twin of :func:`_subject_pushdown`: the Catalyst
-    filter implied by ``subj == s`` on the raw document column, or None
-    when the template inversion is not provably exact."""
-    if not s.startswith("<"):
+def _key_filter(src: RawSource, term_map, values: list[str]) -> Column | None:
+    """The scan filter 'the source key ``term_map`` reads is one of
+    ``values``', rendered for the source kind; None when the term map
+    reads no plain key of ``src``. A row source's key is a column (an
+    ``rr:column``, or a template group naming one column); a document
+    source's key is a simple JSONPath field (an ``xrr:reference`` or a
+    template group, see functions.paths.simple_json_field)."""
+    ref = _reference(term_map)
+    if ref is None:
         return None
-    sm = pruned.subject_map
-    if sm.kind != TEMPLATE or sm.ref_formulation != "JSONPath":
+    if src.doc_column is None:
+        if term_map.kind == TEMPLATE:
+            msp = MixedSyntaxPath.parse(ref, "Column")
+            ref = msp.referenced_column if msp.is_simple_column else None
+        elif term_map.kind != COLUMN:
+            return None
+        if ref not in src.frame.columns:
+            return None
+        return _key_in_filter(ref, src.frame.schema[ref].dataType, values)
+    if term_map.kind == COLUMN or term_map.ref_formulation != "JSONPath":
         return None
-    if not _template_invariant(sm.template):
-        return None
-    groups = get_template_groups(sm.template)
-    if len(groups) != 1:
-        return None
-    field = _simple_json_field(groups[0])
+    # $._id reads $._id.$oid, whose $oid segment simple_json_field rejects
+    field = simple_json_field(rewrite_mongo_id(ref))
     if field is None:
         return None
-    match = get_template_matching(sm.template, s[1:-1])
-    if len(match) != 1:
-        return None
-    value = next(iter(match.values()))
-    if not _UNRESERVED.match(value):
-        return None
-    return _doc_value_filter(doc, field, value)
+    return _doc_key_filter(F.col(src.doc_column), field, values)
 
 
-def _doc_object_pushdown(
-    pruned: TriplesMap, tp: TriplePattern, doc: Column
-) -> Column | None:
-    """Document-source twin of :func:`_object_pushdown`: a literal
-    object over a single plain JSONPath reference object map, or an IRI
-    object inverting a single-group JSONPath template object map."""
-    if isinstance(tp.p, Path) or _is_var(tp.o):
-        return None
+def _nodes_filter(src: RawSource, term_map, nodes) -> Column | None:
+    """The scan filter implied by 'the term ``term_map`` renders is one
+    of ``nodes``'. A node the map provably never renders adds no key
+    (no key at all keeps no row); a node without an exact inversion
+    disables the filter. A single constant is the one-node case."""
+    values: list[str] = []
+    for n in nodes:
+        v = _invert(term_map, n)
+        if v is None:
+            return None
+        if v is not _NOT_THIS:
+            values.append(v)
+    return _key_filter(src, term_map, values)
+
+
+def _plain_object_map(pruned: TriplesMap):
+    """The one object map every triple of the pruned map comes from (no
+    class, one POM, one object map, no RefObjectMap, no collection),
+    else None: a filter on its key could then suppress a row another
+    branch still needs, and a constant object determines no unique
+    reference."""
     if pruned.subject_map.class_uris or len(pruned.predicate_object_maps) != 1:
         return None
     pom = pruned.predicate_object_maps[0]
     if pom.ref_object_maps or len(pom.object_maps) != 1:
         return None
     om = pom.object_maps[0]
-    if om.is_collection:
-        return None
-    if tp.o.startswith('"'):
-        if om.kind != REFERENCE or om.ref_formulation != "JSONPath":
-            return None
-        field = _simple_json_field(om.reference)
-        if field is None:
-            return None
-        lit = parse_term(tp.o)
-        return _doc_value_filter(doc, field, lit["value"])
-    if (
-        tp.o.startswith("<")
-        and om.kind == TEMPLATE
-        and om.ref_formulation == "JSONPath"
-        and om.infer_term_type() == terms.TERM_IRI
-        and _template_invariant(om.template)
-    ):
-        groups = get_template_groups(om.template)
-        if len(groups) != 1:
-            return None
-        field = _simple_json_field(groups[0])
-        if field is None:
-            return None
-        match = get_template_matching(om.template, tp.o[1:-1])
-        if len(match) != 1:
-            return None
-        value = next(iter(match.values()))
-        if not _UNRESERVED.match(value):
-            return None
-        return _doc_value_filter(doc, field, value)
-    return None
+    return None if om.is_collection else om
+
+
+def _and(conds) -> Column | None:
+    """Left-nested AND of the conditions that are not None."""
+    conds = [c for c in conds if c is not None]
+    return functools.reduce(Column.__and__, conds) if conds else None
 
 
 def _constant_terms_at(
@@ -769,80 +735,6 @@ def _constant_terms_at(
     return out
 
 
-def _nodes_subject_pushdown(
-    tm: TriplesMap, nodes: list[str], src: DataFrame, options: CompileOptions
-) -> Column | None:
-    """Disjunctive twin of :func:`_subject_pushdown`: the source filter
-    implied by ``subj IN nodes``, or None when inversion is not provably
-    exact for every IRI node. Sound only for rows feeding SUBJECT
-    production — callers compile object-producing branches separately
-    and keep the exact subj/obj post-filter. At scale this is what
-    makes a k-node DESCRIBE scan O(k) source rows (key-level IN filter
-    at the parquet scan) instead of the full table."""
-    sm = tm.subject_map
-    if sm.infer_term_type() != terms.TERM_IRI:
-        return None
-    col = _single_column_template(sm)
-    if col is None or col not in src.columns:
-        return None
-    if not _template_invariant(sm.template):
-        return None
-    values: list[str] = []
-    for n in nodes:
-        if not n.startswith("<"):
-            continue  # an IRI-template subject never matches a bnode
-        match = get_template_matching(sm.template, n[1:-1])
-        if len(match) != 1:
-            continue  # provably never this map's subject
-        value = next(iter(match.values()))
-        if not _UNRESERVED.match(value):
-            return None  # inversion not provably exact: no filter
-        values.append(value)
-    dtype = src.schema[col].dataType
-    return _key_in_filter(col, dtype, values)
-
-
-def _doc_nodes_pushdown(
-    tm: TriplesMap, nodes: list[str], doc: Column, options: CompileOptions
-) -> Column | None:
-    """Document-source twin of :func:`_nodes_subject_pushdown`: OR of
-    per-node raw-document filters."""
-    sm = tm.subject_map
-    if sm.infer_term_type() != terms.TERM_IRI:
-        return None
-    if sm.kind != TEMPLATE or sm.ref_formulation != "JSONPath":
-        return None
-    if not _template_invariant(sm.template):
-        return None
-    groups = get_template_groups(sm.template)
-    if len(groups) != 1:
-        return None
-    field = _simple_json_field(groups[0])
-    if field is None:
-        return None
-    values: list[str] = []
-    for n in nodes:
-        if not n.startswith("<"):
-            continue
-        match = get_template_matching(sm.template, n[1:-1])
-        if len(match) != 1:
-            continue
-        value = next(iter(match.values()))
-        if not _UNRESERVED.match(value):
-            return None
-        values.append(value)
-    if not values:
-        return F.lit(False)
-    if len(values) > 64:
-        # each disjunct re-evaluates get_json_object per row; past a few
-        # dozen the OR-chain costs more than the full scan it avoids
-        return None
-    cond = _doc_value_filter(doc, field, values[0])
-    for value in values[1:]:
-        cond = cond | _doc_value_filter(doc, field, value)
-    return cond
-
-
 # ---------------------------------------------------------------------------
 # cross-pattern condition propagation
 # ---------------------------------------------------------------------------
@@ -858,9 +750,9 @@ def _doc_nodes_pushdown(
 # term-map template) into key-value constraints on the pattern's OWN
 # VARIABLES; a variable constrained the same way by EVERY binding of
 # that pattern carries the constraint query-wide, and any other
-# pattern's binding whose term map for that variable uses the *same
-# template string and term type* gets the implied typed IN-filter
-# pushed into its source scan. Soundness: equal single-group templates
+# pattern's binding whose term map for that variable is an IRI template
+# of the *same shape* gets the implied key filter pushed into its source
+# scan. Soundness: equal single-group templates
 # with encoding-invariant fixed parts render equal terms iff the
 # percent-encoded group values are equal, and encoding is injective, so
 # term equality forces key equality; the typed IN-list is a documented
@@ -886,174 +778,63 @@ def _template_shape(template: str) -> tuple[str, str] | None:
 
 
 def _binding_var_keys(
-    pruned: TriplesMap, tp: TriplePattern, options: CompileOptions
-) -> dict[str, tuple[tuple[str, str], str, tuple[str, ...]]]:
-    """var -> (template shape, term type, key values) constraints
-    implied by this binding's constant terms on the pattern's variable
-    terms. A constraint is emitted only when the constant's inverted
-    reference is the SAME source reference the variable's term map reads
-    (the reference's projected-reference condition match), the
-    variable's term map is a single-group encoding-invariant template,
-    and the inverted value is encoding-unreserved."""
-    out: dict[str, tuple[str, str, tuple[str, ...]]] = {}
-    if isinstance(tp.p, Path):
-        return out
-    sm = pruned.subject_map
-    s_ref = None
-    if sm.kind == TEMPLATE and _template_invariant(sm.template):
-        groups = get_template_groups(sm.template)
-        if len(groups) == 1:
-            s_ref = groups[0]
-    # the single object map this pattern can match through, when the
-    # pruning proves there is exactly one way (no classes, one POM, one
-    # OM, no RefObjectMap, no collection) — otherwise a constant object
-    # does not determine a unique reference
-    single_om = None
-    if not sm.class_uris and len(pruned.predicate_object_maps) == 1:
-        pom = pruned.predicate_object_maps[0]
-        if not pom.ref_object_maps and len(pom.object_maps) == 1:
-            om = pom.object_maps[0]
-            if not om.is_collection:
-                single_om = om
-    o_ref = o_tmpl = None
-    if single_om is not None:
-        if single_om.kind == TEMPLATE and _template_invariant(
-            single_om.template
-        ):
-            og = get_template_groups(single_om.template)
-            if len(og) == 1:
-                o_ref, o_tmpl = og[0], single_om.template
-        elif single_om.kind == COLUMN:
-            o_ref = single_om.column
-        elif single_om.kind == REFERENCE:
-            o_ref = single_om.reference
-
+    pruned: TriplesMap, tp: TriplePattern
+) -> dict[str, tuple[tuple[str, str], tuple[str, ...]]]:
+    """var -> (template shape, key values) constraints implied by this
+    binding's constant terms on the pattern's variable terms. A
+    constraint is emitted only when the constant inverts on the SAME
+    source reference the variable's term map reads (the reference's
+    projected-reference condition match) and the variable's term map is
+    an exactly invertible IRI template."""
+    slots = ((tp.s, pruned.subject_map), (tp.o, _plain_object_map(pruned)))
     # constant-derived (reference, lexical value) pairs — genCond
-    pairs: list[tuple[str, str]] = []
-    if not _is_var(tp.s) and tp.s.startswith("<") and s_ref is not None:
-        match = get_template_matching(sm.template, tp.s[1:-1])
-        if len(match) == 1:
-            value = next(iter(match.values()))
-            if _UNRESERVED.match(value):
-                pairs.append((s_ref, value))
-    if not _is_var(tp.o) and o_ref is not None:
-        if tp.o.startswith("<") and o_tmpl is not None:
-            match = get_template_matching(o_tmpl, tp.o[1:-1])
-            if len(match) == 1:
-                value = next(iter(match.values()))
-                if _UNRESERVED.match(value):
-                    pairs.append((o_ref, value))
-        elif tp.o.startswith('"') and o_tmpl is None:
-            pairs.append((o_ref, parse_term(tp.o)["value"]))
-    if not pairs:
-        return out
-
-    if (
-        _is_var(tp.s)
-        and s_ref is not None
-        and sm.infer_term_type() == terms.TERM_IRI
-    ):
-        vals = tuple(sorted({v for r, v in pairs if r == s_ref}))
-        shape = _template_shape(sm.template)
-        if vals and shape is not None:
-            out[tp.s] = (shape, terms.TERM_IRI, vals)
-    if (
-        _is_var(tp.o)
-        and o_tmpl is not None
-        and single_om.infer_term_type() == terms.TERM_IRI
-    ):
-        vals = tuple(sorted({v for r, v in pairs if r == o_ref}))
-        shape = _template_shape(o_tmpl)
-        if vals and shape is not None:
-            out[tp.o] = (shape, terms.TERM_IRI, vals)
+    pairs: set[tuple[str, str]] = set()
+    for term, tmap in slots:
+        if tmap is not None and not _is_var(term):
+            ref, value = _reference(tmap), _invert(tmap, term)
+            if ref is not None and isinstance(value, str):
+                pairs.add((ref, value))
+    out: dict[str, tuple[tuple[str, str], tuple[str, ...]]] = {}
+    for term, tmap in slots:
+        if tmap is None or not _is_var(term) or (ref := _iri_group(tmap)) is None:
+            continue
+        vals = tuple(sorted(v for r, v in pairs if r == ref))
+        if vals:
+            out[term] = (_template_shape(tmap.template), vals)
     return out
 
 
 def _prop_scan_filter(
+    src: RawSource,
     pruned: TriplesMap,
     tp: TriplePattern,
-    prop: dict[str, list[tuple[tuple[str, str], str, tuple[str, ...]]]],
-    src: DataFrame | None = None,
-    doc: Column | None = None,
+    prop: dict[str, list[tuple[tuple[str, str] | None, tuple[str, ...]]]],
 ) -> Column | None:
     """AND of the scan filters the propagated variable constraints imply
     on THIS binding, or None. A constraint applies to a position only
-    when the position's term map is a single-group invariant template of
-    the SAME SHAPE and term type as the constraint's — templates of a
-    different shape can render the same term, so they are skipped,
-    never filtered."""
-
-    def tmpl_filter(term_map, constraint) -> Column | None:
-        shape, ttype, vals = constraint
-        if term_map.kind != TEMPLATE:
-            return None
-        if not _template_invariant(term_map.template):
-            return None
-        if term_map.infer_term_type() != ttype:
-            return None
-        if shape is None:
-            # a TERM-level constraint (VALUES inline data): invert each
-            # node against THIS target's template — non-matching nodes
-            # provably never come from this branch (dropped from the
-            # key set; an empty set filters the branch to nothing),
-            # non-exact inversions disable the filter entirely
-            if _template_shape(term_map.template) is None:
-                return None
-            keys: list[str] = []
-            for n in vals:
-                match = get_template_matching(term_map.template, n[1:-1])
-                if len(match) != 1:
-                    continue
-                value = next(iter(match.values()))
-                if not _UNRESERVED.match(value):
-                    return None
-                keys.append(value)
-            vals = tuple(keys)
-        elif _template_shape(term_map.template) != shape:
-            return None
-        if src is not None:
-            col = _single_column_template(term_map)
-            if col is None or col not in src.columns:
-                return None
-            return _key_in_filter(col, src.schema[col].dataType, list(vals))
-        if term_map.ref_formulation != "JSONPath":
-            return None
-        groups = get_template_groups(term_map.template)
-        field = _simple_json_field(groups[0]) if len(groups) == 1 else None
-        if field is None or len(vals) > 64:
-            return None
-        if not vals:
-            return F.lit(False)
-        cond = _doc_value_filter(doc, field, vals[0])
-        for v in vals[1:]:
-            cond = cond | _doc_value_filter(doc, field, v)
-        return cond
-
-    conds: list[Column] = []
-    if _is_var(tp.s) and tp.s in prop:
-        # every POM of the branch shares the subject, so a subject-side
-        # filter cannot starve a sibling object map
-        for constraint in prop[tp.s]:
-            f = tmpl_filter(pruned.subject_map, constraint)
-            if f is not None:
-                conds.append(f)
-    if _is_var(tp.o) and tp.o in prop and not isinstance(tp.p, Path):
-        sm = pruned.subject_map
-        if not sm.class_uris and len(pruned.predicate_object_maps) == 1:
-            pom = pruned.predicate_object_maps[0]
-            if not pom.ref_object_maps and len(pom.object_maps) == 1:
-                om = pom.object_maps[0]
-                if not om.is_collection:
-                    for constraint in prop[tp.o]:
-                        f = tmpl_filter(om, constraint)
-                        if f is not None:
-                            conds.append(f)
-    if not conds:
-        return None
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
+    when the position's term map is an exactly invertible IRI template
+    of the SAME SHAPE as the constraint's — templates of a different
+    shape can render the same term, so they are skipped, never
+    filtered. A term-level constraint (VALUES inline data, shape None)
+    inverts its nodes against this map's own template. Every POM of the
+    branch shares the subject, so a subject-side filter cannot starve a
+    sibling object map; the object side needs the one plain object
+    map."""
+    conds: list[Column | None] = []
+    for term, tmap in (
+        (tp.s, pruned.subject_map), (tp.o, _plain_object_map(pruned))
+    ):
+        if tmap is None or term not in prop:
+            continue
+        for shape, vals in prop[term]:
+            if shape is None:
+                conds.append(_nodes_filter(src, tmap, vals))
+            elif (
+                _iri_group(tmap) is not None
+                and _template_shape(tmap.template) == shape
+            ):
+                conds.append(_key_filter(src, tmap, list(vals)))
+    return _and(conds)
 
 
 # ---------------------------------------------------------------------------
@@ -1091,32 +872,12 @@ class VirtualGraph(Graph):
 
     # -- fragment construction --------------------------------------------
 
-    def _filtered_catalog(self, table: str, cond: Column) -> SourceCatalog:
-        cat = SourceCatalog(
-            self.spark, dict(self.catalog.tables), dict(self.catalog.doc_columns)
-        )
-        cat.unique_keys = dict(self.catalog.unique_keys)
-        cat.tables[table] = self.catalog._table(table).filter(cond)
-        return cat
-
-    def _doc_column(self, collection: str) -> Column | None:
-        """The raw document column of a registered find() collection
-        (explicitly registered, or the single string column), as it
-        exists BEFORE resolve() — pushdown filters prepend to the scan.
-        None for row-shaped multi-column sources (their ``__doc__`` is
-        synthesized later, so there is nothing to filter on yet)."""
-        try:
-            src = self.catalog._table(collection)
-        except Exception:  # noqa: BLE001 — unregistered collection
-            return None
-        name = self.catalog.doc_columns.get(collection)
-        if name is None and len(src.columns) == 1:
-            field = src.schema.fields[0]
-            if field.dataType.simpleString() == "string":
-                name = field.name
-        if name is None or name not in src.columns:
-            return None
-        return F.col(name)
+    def _scan(self, tm: TriplesMap) -> RawSource | None:
+        """The raw source ``tm`` scans, when a key filter can reach it:
+        never below an iterator, which re-roots the map's references
+        inside each document."""
+        ls = tm.logical_source
+        return None if ls.iterator else self.catalog.raw_source(ls)
 
     def _rom_parent_reads(self, pruned: TriplesMap, table: str) -> bool:
         """True when any retained RefObjectMap's parent triples map may
@@ -1125,20 +886,15 @@ class VirtualGraph(Graph):
         (a self-join ROM's parent rows rarely satisfy the child's
         subject constraint). SQL-query parents are treated as 'may
         read' (their table set is not statically known here)."""
-        for pom in pruned.predicate_object_maps:
-            for rom in pom.ref_object_maps:
-                ptm = self.doc.triples_maps.get(rom.parent_triples_map)
-                if ptm is None:
-                    return True
-                pls = ptm.logical_source
-                if pls.kind == "table":
-                    if pls.value == table:
-                        return True
-                    continue
-                m = _MONGO_FIND_RE.match(pls.value)
-                if m is None or m.group("collection") == table:
-                    return True
-        return False
+        parents = (
+            self.doc.triples_maps.get(rom.parent_triples_map)
+            for pom in pruned.predicate_object_maps
+            for rom in pom.ref_object_maps
+        )
+        return any(
+            ptm is None or self.catalog.table_of(ptm.logical_source) in (None, table)
+            for ptm in parents
+        )
 
     def _compile_tm(
         self,
@@ -1187,12 +943,12 @@ class VirtualGraph(Graph):
 
     def _propagation_constraints(
         self, q: SelectQuery, quads: bool, dataset: bool
-    ) -> dict[str, list[tuple[str, str, tuple[str, ...]]]]:
-        """var -> [(template, term type, key values), ...] constraints
-        that hold in EVERY solution of the query: derived from the
-        REQUIRED top-level patterns (conjunctive, so each constrains all
+    ) -> dict[str, list[tuple[tuple[str, str] | None, tuple[str, ...]]]]:
+        """var -> [(template shape, key values), ...] constraints that
+        hold in EVERY solution of the query: derived from the REQUIRED
+        top-level patterns (conjunctive, so each constrains all
         solutions), and only when every binding of the pattern agrees on
-        the variable's template/type (the values union over bindings).
+        the variable's template shape (the values union over bindings).
         Purely driver-side over the mapping tree.
 
         Top-level VALUES inline data adds TERM-level constraints (shape
@@ -1200,7 +956,7 @@ class VirtualGraph(Graph):
         IRI terms, so each target binding inverts the terms against its
         own template — the rewriting analogue of pushing a VALUES join
         into the source scans."""
-        prop: dict[str, list[tuple[object, str, tuple[str, ...]]]] = {}
+        prop: dict[str, list[tuple[tuple[str, str] | None, tuple[str, ...]]]] = {}
         for vars_, rows in q.where.values:
             if not rows or len(rows) > 256:
                 continue  # empty: query is empty anyway; huge: not a scan filter
@@ -1209,7 +965,7 @@ class VirtualGraph(Graph):
                 if any(t is None or not t.startswith("<") for t in col):
                     continue  # UNDEF or non-IRI rows: unconstrained
                 prop.setdefault("?" + name, []).append(
-                    (None, terms.TERM_IRI, tuple(sorted(set(col))))
+                    (None, tuple(sorted(set(col))))
                 )
         if not quads:
             gctx = _ANY_GRAPH
@@ -1230,7 +986,7 @@ class VirtualGraph(Graph):
                 if bound is None:
                     continue
                 dicts.append(
-                    _binding_var_keys(_bound_tm(tm, bound), tp, self.options)
+                    _binding_var_keys(_bound_tm(tm, bound), tp)
                 )
             if not dicts:
                 continue  # pattern matches nothing; fragment is empty
@@ -1238,14 +994,11 @@ class VirtualGraph(Graph):
             for d in dicts[1:]:
                 common &= set(d)
             for v in common:
-                tmpls = {d[v][0] for d in dicts}
-                ttypes = {d[v][1] for d in dicts}
-                if len(tmpls) != 1 or len(ttypes) != 1:
+                shapes = {d[v][0] for d in dicts}
+                if len(shapes) != 1:
                     continue  # bindings disagree: values not comparable
-                vals = sorted(set().union(*(d[v][2] for d in dicts)))
-                prop.setdefault(v, []).append(
-                    (tmpls.pop(), ttypes.pop(), tuple(vals))
-                )
+                vals = sorted(set().union(*(d[v][1] for d in dicts)))
+                prop.setdefault(v, []).append((shapes.pop(), tuple(vals)))
         return prop
 
     def fragment(self, query: str | SelectQuery) -> DataFrame:
@@ -1280,8 +1033,6 @@ class VirtualGraph(Graph):
         collected: dict[
             str, list[tuple[TriplePattern, object, _Bound, Column | None]]
         ] = {}
-        conds_by_tm: dict[str, list[Column | None]] = {}
-        tables: dict[str, str] = {}
         for gctx, tp in collect_patterns_g(q.where):
             if not quads:
                 gctx = _ANY_GRAPH
@@ -1302,64 +1053,36 @@ class VirtualGraph(Graph):
                 bound = _bind_pattern(self.doc, tm, tp, self.options, gctx)
                 if bound is None:
                     continue
+                src = None if is_path else self._scan(tm)
                 cond = None
-                table = None
-                ls = tm.logical_source
-                if not ls.iterator and not is_path:
-                    if ls.kind == "table":
-                        table = ls.value
-                        pruned = _bound_tm(tm, bound)
-                        src = self.catalog._table(table)
-                        cond = _subject_pushdown(pruned, tp.s, src, self.options)
-                        ocond = _object_pushdown(pruned, tp, src)
-                        if ocond is not None:
-                            cond = ocond if cond is None else (cond & ocond)
-                    else:
-                        mfind = _MONGO_FIND_RE.match(ls.value)
-                        doc_col = (
-                            self._doc_column(mfind.group("collection"))
-                            if mfind
-                            else None
-                        )
-                        if doc_col is not None:
-                            table = mfind.group("collection")
-                            pruned = _bound_tm(tm, bound)
-                            cond = _doc_subject_pushdown(
-                                pruned, tp.s, doc_col, self.options
-                            )
-                            ocond = _doc_object_pushdown(pruned, tp, doc_col)
-                            if ocond is not None:
-                                cond = ocond if cond is None else (cond & ocond)
-                    # cross-pattern condition propagation: constraints a
-                    # REQUIRED pattern places on a shared variable filter
-                    # this binding's scan too (propagateConditionFrom-
-                    # JoinedQuery analogue; sound for any pattern
-                    # position — OPTIONAL/UNION/MINUS/EXISTS solutions
-                    # only matter when compatible with the required
-                    # patterns, whose shared-var values are constrained)
-                    if table is not None and prop:
-                        if ls.kind == "table":
-                            pcond = _prop_scan_filter(pruned, tp, prop, src=src)
-                        else:
-                            pcond = _prop_scan_filter(
-                                pruned, tp, prop, doc=doc_col
-                            )
-                        if pcond is not None:
-                            cond = pcond if cond is None else (cond & pcond)
+                if src is not None:
+                    pruned = _bound_tm(tm, bound)
+                    om = _plain_object_map(pruned)
+                    cond = _and((
+                        None if _is_var(tp.s)
+                        else _nodes_filter(src, pruned.subject_map, [tp.s]),
+                        None if om is None or _is_var(tp.o)
+                        else _nodes_filter(src, om, [tp.o]),
+                        # cross-pattern condition propagation: constraints
+                        # a REQUIRED pattern places on a shared variable
+                        # filter this binding's scan too (propagate-
+                        # ConditionFromJoinedQuery analogue; sound for any
+                        # pattern position — OPTIONAL/UNION/MINUS/EXISTS
+                        # solutions only matter when compatible with the
+                        # required patterns, whose shared-var values are
+                        # constrained)
+                        _prop_scan_filter(src, pruned, tp, prop),
+                    ))
                     # the filter replaces the CATALOG entry, so a
                     # RefObjectMap whose parent reads the same table
                     # would see its parent side starved (a self-join
                     # ROM's parent rows rarely satisfy the child's
                     # subject constraint) — keep such maps unfiltered
-                    if cond is not None and self._rom_parent_reads(pruned, table):
+                    if cond is not None and self._rom_parent_reads(pruned, src.table):
                         cond = None
                 collected.setdefault(tm.name, []).append((tp, gctx, bound, cond))
-                conds_by_tm.setdefault(tm.name, []).append(cond)
-                if table is not None:
-                    tables[tm.name] = table
         for tm_name, entries in collected.items():
             tm = self.doc.triples_maps[tm_name]
-            conds = conds_by_tm[tm_name]
             # Which entries compile individually with their scan filter,
             # and which fold into one shared compile? Source-kind-aware
             # (measured A/B at sf0.01, warm):
@@ -1376,7 +1099,7 @@ class VirtualGraph(Graph):
             if tm.logical_source.kind == "table":
                 filtered = [e for e in entries if e[3] is not None]
                 shared = [e for e in entries if e[3] is None]
-            elif all(c is not None for c in conds):
+            elif all(e[3] is not None for e in entries):
                 filtered, shared = entries, []
             else:
                 filtered, shared = [], entries
@@ -1394,11 +1117,9 @@ class VirtualGraph(Graph):
                 _tp0, _g0, bound, cond = group[0]
                 if len(group) > 1:
                     bound = _merge_bounds(tm, [b for _t, _g, b, _c in group])
+                table = self.catalog.table_of(tm.logical_source)
                 frame = self._compile_tm(
-                    tm,
-                    bound,
-                    self._filtered_catalog(tables[tm_name], cond),
-                    quads=quads,
+                    tm, bound, self.catalog.filtered(table, cond), quads=quads
                 )
                 if frame is None:
                     continue
@@ -1653,30 +1374,11 @@ class VirtualGraph(Graph):
                 out = out.unionByName(p)
             return out
 
-        def source_of(tm: TriplesMap) -> str | None:
-            ls = tm.logical_source
-            if ls.iterator:
-                return None
-            if ls.kind == "table":
-                return ls.value
-            m = _MONGO_FIND_RE.match(ls.value)
-            return m.group("collection") if m else None
-
-        def node_cond(tm: TriplesMap, table: str) -> Column | None:
+        def node_cond(tm: TriplesMap) -> Column | None:
             """Source filter implied by 'this map's SUBJECT is in
-            nodes', when provably exact."""
-            if not use_keys:
-                return None  # semi-join regime: no per-key scan filter
-            if tm.logical_source.kind == "table":
-                try:
-                    src = self.catalog._table(table)
-                except Exception:  # noqa: BLE001 — unregistered
-                    return None
-                return _nodes_subject_pushdown(tm, nodes, src, self.options)
-            doc_col = self._doc_column(table)
-            if doc_col is None:
-                return None
-            return _doc_nodes_pushdown(tm, nodes, doc_col, self.options)
+            nodes', when provably exact; none in the semi-join regime."""
+            src = self._scan(tm) if use_keys else None
+            return None if src is None else _nodes_filter(src, tm.subject_map, nodes)
 
         def parent_filtered_catalog(tm: TriplesMap, bound: _Bound) -> SourceCatalog:
             """Catalog with each kept RefObjectMap's PARENT source
@@ -1686,27 +1388,22 @@ class VirtualGraph(Graph):
             child rows are unconstrained, and never the parent of a
             collection, whose every member labels the collection's
             blank nodes."""
-            own = source_of(tm)
+            own = self.catalog.table_of(tm.logical_source)
             # parent table -> pushdown conds (None poisons the table)
             conds: dict[str, list[Column | None]] = {}
             for _i, pom in bound.poms:
                 for rom in pom.ref_object_maps:
                     ptm = self.doc.triples_maps[rom.parent_triples_map]
-                    ptable = source_of(ptm)
+                    ptable = self.catalog.table_of(ptm.logical_source)
                     if ptable is None or ptable == own:
                         continue
                     conds.setdefault(ptable, []).append(
-                        None if rom.collection_term_type() else node_cond(ptm, ptable)
+                        None if rom.collection_term_type() else node_cond(ptm)
                     )
             cat = self.catalog
             for ptable, cs in conds.items():
-                if any(c is None for c in cs):
-                    continue
-                cond = functools.reduce(Column.__or__, cs)
-                if cat is self.catalog:
-                    cat = self._filtered_catalog(ptable, cond)
-                else:
-                    cat.tables[ptable] = cat._table(ptable).filter(cond)
+                if all(c is not None for c in cs):
+                    cat = cat.filtered(ptable, functools.reduce(Column.__or__, cs))
             return cat
 
         frames: list[DataFrame] = []
@@ -1729,12 +1426,8 @@ class VirtualGraph(Graph):
             # table. Blank nodes can't be inverted (content-derived),
             # and a self-join ROM parent reading the same table must
             # not be starved.
-            table = source_of(tm)
-            cond = (
-                node_cond(tm, table)
-                if table is not None and not has_bnode
-                else None
-            )
+            table = self.catalog.table_of(tm.logical_source)
+            cond = None if has_bnode else node_cond(tm)
             if cond is not None and self._rom_parent_reads(tm, table):
                 cond = None
             if cond is None:
@@ -1742,7 +1435,7 @@ class VirtualGraph(Graph):
                     as_subj = _merge_bounds(tm, [as_subj, as_obj])
                 add(tm, as_subj, self.catalog)
                 continue
-            add(tm, as_subj, self._filtered_catalog(table, cond))
+            add(tm, as_subj, self.catalog.filtered(table, cond))
             # rows whose OBJECT is a node but whose subject is not were
             # dropped by the subject-key scan filter: compile the
             # object-emitting branches separately (own scan unfiltered,

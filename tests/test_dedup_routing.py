@@ -1,5 +1,5 @@
 """Predicate-disjoint dedup routing (compiler/compile.py _assemble /
-_keyed_branch / _rom_keyed_branch).
+_keyed_branch / _rom_keyed).
 
 The set-semantic views triples()/quads() may deduplicate a
 constant-predicate branch independently (with the dedup pushed below

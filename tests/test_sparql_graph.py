@@ -218,6 +218,35 @@ def test_blank_node_label_is_a_hidden_variable(graph):
     }
 
 
+@pytest.mark.parametrize(
+    "template",
+    [
+        f"?s <{EX}q> [ <{EX}r> ?n ]",
+        f"?s <{EX}q> _:m . _:m <{EX}r> ?n",
+    ],
+)
+def test_construct_template_blank_node_per_solution(graph, template):
+    """A blank node of a CONSTRUCT template is fresh per solution and
+    shared by that solution's triples (SPARQL 1.1 §16.2): three
+    solutions, three blank nodes, each linking its person to that
+    person's name."""
+    out = graph.construct(
+        f"CONSTRUCT {{ {template} }} WHERE {{ ?s <{EX}name> ?n }}"
+    ).collect()
+    q_arcs = {r.subj: r.obj for r in out if r.pred == f"<{EX}q>"}
+    r_arcs = {r.subj: r.obj for r in out if r.pred == f"<{EX}r>"}
+    assert len(out) == 6
+    assert set(q_arcs) == {f"<{EX}a>", f"<{EX}b>", f"<{EX}c>"}
+    assert len(set(q_arcs.values())) == 3
+    assert all(b.startswith("_:") for b in q_arcs.values())
+    assert set(r_arcs) == set(q_arcs.values())
+    assert {s: r_arcs[b] for s, b in q_arcs.items()} == {
+        f"<{EX}a>": '"Ann"',
+        f"<{EX}b>": '"Bob"',
+        f"<{EX}c>": '"Cy"',
+    }
+
+
 def test_describe_iri_and_variable(graph):
     q = f"DESCRIBE <{EX}c> ?x WHERE {{ ?x <{EX}name> \"Ann\" }}"
     assert _nt(evaluate(graph, q)[1]) == {A_NAME, A_KNOWS, B_KNOWS, C_NAME}

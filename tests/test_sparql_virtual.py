@@ -8,6 +8,8 @@ pushdown (MorphBaseQueryTranslator.scala:227-355) -> evaluate the
 original SPARQL over the matched fragments only
 (MorphMongoQueryProcessor.scala:45-150)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,34 +243,160 @@ def test_fragment_is_reduced(setup, spark):
         vg.release()
 
 
-def test_constant_subject_pushdown_reaches_source(setup, spark):
-    doc, catalog, _t = setup
-    vg = VirtualGraph(spark, doc, catalog)
-    try:
-        frag = vg.fragment(
-            PREFIX + "SELECT ?n WHERE { <http://example.org/emp/12> ex:name ?n }"
+# TTL's maps over find() collections: the same rows as JSON documents
+DOC_TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix ex:  <http://example.org/ontology#> .
+
+<#TMDept>
+    xrr:logicalSource [ xrr:query "db.dept.find({})";
+                        xrr:referenceFormulation xrr:JSONPath ];
+    rr:subjectMap [
+        rr:template "http://example.org/dept/{$.dno}";
+        rr:class ex:Department;
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:deptName;
+        rr:objectMap [ xrr:reference "$.dname" ];
+    ];
+    .
+
+<#TMEmp>
+    xrr:logicalSource [ xrr:query "db.emp.find({})";
+                        xrr:referenceFormulation xrr:JSONPath ];
+    rr:subjectMap [
+        rr:template "http://example.org/emp/{$.eid}";
+        rr:class ex:Employee;
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:name;
+        rr:objectMap [ xrr:reference "$.ename" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:salary;
+        rr:objectMap [ xrr:reference "$.salary" ];
+    ];
+    rr:predicateObjectMap [
+        rr:predicate ex:dept;
+        rr:objectMap [
+            rr:parentTriplesMap <#TMDept>;
+            rr:joinCondition [ rr:child "$.dno"; rr:parent "$.dno" ];
+        ];
+    ];
+    .
+"""
+
+
+@pytest.fixture(scope="module", params=["table", "doc"])
+def kinds(request, spark, tmp_path_factory):
+    """The ``setup`` rows written once as parquet tables under TTL and
+    once as parquet JSON collections (one ``doc`` column) under DOC_TTL:
+    (source kind, mapping, catalog, materialized triples)."""
+    kind = request.param
+    base = tmp_path_factory.mktemp(f"kinds_{kind}")
+    frames = {
+        "dept": spark.createDataFrame(
+            [(1, "Engineering"), (2, "Marketing"), (3, "Legal")],
+            "dno int, dname string",
+        ),
+        "emp": spark.createDataFrame(
+            [
+                (10, "alice", 120, 1),
+                (11, "bob", 95, 1),
+                (12, "carol", 80, 2),
+                (13, "dave", 80, 3),
+            ],
+            "eid int, ename string, salary int, dno int",
+        ),
+    }
+    catalog = SourceCatalog(spark)
+    for name, df in frames.items():
+        if kind == "doc":
+            df = df.select(F.to_json(F.struct("*")).alias("doc"))
+        df.write.parquet(str(base / name))
+        catalog.register(
+            name,
+            spark.read.parquet(str(base / name)),
+            doc_column="doc" if kind == "doc" else None,
         )
-        plan = frag._jdf.queryExecution().optimizedPlan().toString()
-        # the template inversion must land on the raw source column —
-        # i.e. the filter compares eid BEFORE term construction
-        assert "eid" in plan and "12" in plan
-        rows = frag.collect()
-        assert [r.obj for r in rows] == ['"carol"']
-    finally:
-        vg.release()
+    doc = parse_mapping(TTL if kind == "table" else DOC_TTL)
+    return kind, doc, catalog, MappingCompiler(spark, doc, catalog).triples()
 
 
-def test_constant_object_pushdown(setup, spark):
-    doc, catalog, triples = setup
-    q = PREFIX + 'SELECT ?e WHERE { ?e ex:name "bob" }'
+def _key_pushed(spark, df, kind: str, key: str) -> tuple[bool, str]:
+    """(whether a filter on the source key ``key`` runs at the scan, the
+    formatted plan). A row source shows it as a parquet PushedFilter on
+    the column. A document source shows it as the get_json_object test
+    on the raw document in a Filter below the Python UDF that builds
+    the terms."""
+    fmt = spark._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    if kind == "table":
+        return any(
+            re.search(rf"(In|EqualTo)\({key},", ln)
+            for ln in fmt.splitlines() if "PushedFilters" in ln
+        ), fmt
+    conds = dict(
+        re.findall(r"^\((\d+)\) Filter.*\n.*\nCondition : (.*)$", fmt, re.M)
+    )
+    tree = fmt.split("\n\n\n")[0].splitlines()
+
+    def depth(line: str) -> int:
+        return re.search(r"[A-Za-z]", line).start()
+
+    for i, line in enumerate(tree):
+        if "EvalPython" not in line:
+            continue
+        for below in tree[i + 1:]:
+            if depth(below) <= depth(line):
+                break
+            m = re.search(r"Filter \((\d+)\)", below)
+            cond = conds.get(m.group(1), "") if m else ""
+            if "StartsWith(get_json_object(doc#" in cond and f"$.{key})" in cond:
+                return True, fmt
+    return False, fmt
+
+
+def test_constant_subject_pushdown_reaches_source(kinds, spark):
+    """A constant subject inverts the subject template into a filter on
+    the source key (eid) at the scan, before term construction — a
+    typed parquet filter for a table, the get_json_object test on the
+    raw document for a find() collection (the reference pushes the
+    constant into the SQL or Mongo query, JsonPathToMongoTranslator.
+    scala:242-463)."""
+    kind, doc, catalog, triples = kinds
+    q = PREFIX + "SELECT ?n WHERE { <http://example.org/emp/12> ex:name ?n }"
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        frag = vg.fragment(q)
-        plan = frag._jdf.queryExecution().optimizedPlan().toString()
-        assert "ename" in plan and "bob" in plan
-        assert _rows(vg.select(q)) == _rows(sparql_select(triples, q))
+        pushed, fmt = _key_pushed(spark, vg.fragment(q), kind, "eid")
+        assert pushed, fmt
+        got = _rows(vg.select(q))
     finally:
         vg.release()
+    assert got == _rows(sparql_select(triples, q)) == [('"carol"',)]
+
+
+@pytest.mark.parametrize(
+    "q,key",
+    [
+        (PREFIX + 'SELECT ?e WHERE { ?e ex:name "bob" }', "ename"),
+        (PREFIX + "SELECT ?e WHERE { ?e ex:salary 80 }", "salary"),
+    ],
+    ids=["string", "integer"],
+)
+def test_constant_object_pushdown(kinds, spark, q, key):
+    kind, doc, catalog, triples = kinds
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        pushed, fmt = _key_pushed(spark, vg.fragment(q), kind, key)
+        assert pushed, fmt
+        got = _rows(vg.select(q))
+    finally:
+        vg.release()
+    assert got == _rows(sparql_select(triples, q))
+    assert got
 
 
 def test_no_false_exclusion_on_ambiguous_template(spark):
@@ -704,7 +832,7 @@ DOCPUSH_TTL = """\
     .
 """
 
-# exactness probes for _doc_value_filter: JSON null (no term), missing
+# exactness probes for _doc_key_filter: JSON null (no term), missing
 # field (no subject), float formatting (40.0 vs "40"), nested objects,
 # values the IRI encoding leaves alone
 _PPL_DOCS = [
@@ -726,42 +854,6 @@ def docpush(spark):
     return doc, catalog, triples
 
 
-def test_doc_source_subject_pushdown_reaches_scan(docpush, spark):
-    """Constant subject over a find() source: the inverted template
-    filter lands on the raw document column (get_json_object at the
-    scan), the Catalyst-native analogue of the reference pushing the
-    constant into the Mongo query (JsonPathToMongoTranslator.scala:
-    242-463). Round-3 verdict missing #1."""
-    doc, catalog, triples = docpush
-    q = PREFIX + "SELECT ?n WHERE { <http://example.org/person/2> ex:name ?n }"
-    vg = VirtualGraph(spark, doc, catalog)
-    try:
-        frag = vg.fragment(q)
-        plan = frag._jdf.queryExecution().optimizedPlan().toString()
-        assert "get_json_object" in plan and "Filter" in plan
-        got = _rows(vg.select(q))
-        assert got == _rows(sparql_select(triples, q))
-        assert got == [('"bob"',)]
-    finally:
-        vg.release()
-
-
-def test_doc_source_object_pushdown(docpush, spark):
-    doc, catalog, triples = docpush
-    q = (
-        PREFIX
-        + 'SELECT ?p WHERE { ?p ex:age "30"^^<http://www.w3.org/2001/XMLSchema#integer> }'
-    )
-    vg = VirtualGraph(spark, doc, catalog)
-    try:
-        frag = vg.fragment(q)
-        plan = frag._jdf.queryExecution().optimizedPlan().toString()
-        assert "get_json_object" in plan and "Filter" in plan
-        assert _rows(vg.select(q)) == _rows(sparql_select(triples, q))
-    finally:
-        vg.release()
-
-
 @pytest.mark.parametrize(
     "q",
     [
@@ -777,6 +869,9 @@ def test_doc_source_object_pushdown(docpush, spark):
         PREFIX + "SELECT ?a WHERE { <http://example.org/person/6> ex:age ?a }",
         # every person (no constants at all)
         PREFIX + "SELECT ?p ?n WHERE { ?p ex:name ?n }",
+        # an integer object against 30, 40.0 and true ages
+        PREFIX
+        + 'SELECT ?p WHERE { ?p ex:age "30"^^<http://www.w3.org/2001/XMLSchema#integer> }',
     ],
 )
 def test_doc_pushdown_no_false_exclusion(docpush, spark, q):
@@ -1922,34 +2017,23 @@ def test_describe_nodes_semi_join_above_isin_bound(spark, tmp_path):
     assert len(got) >= 2 * n  # type + name arcs for every dept
 
 
-def test_describe_nodes_small_set_keeps_key_pushdown(spark, tmp_path):
-    """At or below _ISIN_MAX the typed node-key scan pushdown stays (a
-    k-node DESCRIBE reads O(k) source rows)."""
-    import re as _re
+def test_describe_nodes_small_set_keeps_key_pushdown(kinds, spark):
+    """At or below _ISIN_MAX the node-key scan pushdown stays (a k-node
+    DESCRIBE reads O(k) source rows), for table and document sources."""
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
-    spark.createDataFrame(
-        [(1, "Engineering"), (2, "Marketing"), (3, "Legal")],
-        "dno int, dname string",
-    ).write.parquet(str(tmp_path / "dept"))
-    spark.createDataFrame(
-        [(10, "alice", 120, 1)], "eid int, ename string, salary int, dno int"
-    ).write.parquet(str(tmp_path / "emp"))
-    doc = parse_mapping(TTL)
-    catalog = (
-        SourceCatalog(spark)
-        .register("dept", spark.read.parquet(str(tmp_path / "dept")),
-                  unique_key=["dno"])
-        .register("emp", spark.read.parquet(str(tmp_path / "emp")),
-                  unique_key=["eid"])
-    )
+    kind, doc, catalog, triples = kinds
     vg = VirtualGraph(spark, doc, catalog)
     try:
         out = vg._describe_nodes(["<http://example.org/dept/2>"])
-        fmt, pushed = _pushed_filters(spark, out)
-        assert any(_re.search(r"(In|EqualTo)\(dno", ln) for ln in pushed), fmt
-        rows = {tuple(r) for r in out.collect()}
+        pushed, fmt = _key_pushed(spark, out, kind, "dno")
+        assert pushed, fmt
+        rows = _rows(out)
     finally:
         vg.release()
+    assert rows == _rows(
+        sparql_describe(triples, "DESCRIBE <http://example.org/dept/2>")
+    )
     assert ("<http://example.org/dept/2>",
             "<http://example.org/ontology#deptName>",
             '"Marketing"') in rows
@@ -2304,3 +2388,70 @@ def test_values_unmatchable_term_filters_branch_to_nothing(spark, tmp_path):
     finally:
         comp.release()
     assert got == want == []
+
+
+def _items(spark, n: int) -> SourceCatalog:
+    """DOC_DESCRIBE_TTL's items collection: ``n`` documents, each with a
+    name and a tag."""
+    import json as _json
+
+    docs = [
+        (_json.dumps({"id": i, "name": f"n{i}", "tag": _TAGS[i % 2]}),)
+        for i in range(n)
+    ]
+    return SourceCatalog(spark).register(
+        "items", spark.createDataFrame(docs, "doc string"), doc_column="doc"
+    )
+
+
+@pytest.mark.parametrize("k", [65, VirtualGraph._ISIN_MAX])
+def test_doc_describe_node_keys_have_no_cap(spark, k):
+    """A DESCRIBE of more than 64 IRIs over a find() collection still
+    filters the raw documents on the node keys, below the Python UDF
+    that builds the terms (the filter does not grow per key), and
+    answers as materialize-then-describe does."""
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
+
+    doc = parse_mapping(DOC_DESCRIBE_TTL, default_formulation="JSONPath")
+    catalog = _items(spark, k + 20)
+    q = "DESCRIBE " + " ".join(f"<http://example.org/doc/{i}>" for i in range(k))
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        out = vg.describe(q)
+        pushed, fmt = _key_pushed(spark, out, "doc", "id")
+        assert pushed, fmt[:4000]
+        got = _rows(out)
+    finally:
+        vg.release()
+    comp = MappingCompiler(spark, doc, catalog)
+    try:
+        want = _rows(sparql_describe(comp.triples(), q))
+    finally:
+        comp.release()
+    assert got == want
+    assert len(got) == 2 * k  # a name and a tag per described document
+
+
+def test_values_over_64_iris_reach_doc_scan(spark):
+    """A top-level VALUES list of more than 64 IRIs propagates its node
+    keys into a find() collection's scan, below the term-building UDF,
+    and the answer matches materialize-then-query."""
+    k = 100
+    doc = parse_mapping(DOC_DESCRIBE_TTL, default_formulation="JSONPath")
+    catalog = _items(spark, k + 20)
+    iris = " ".join(f"<http://example.org/doc/{i}>" for i in range(k))
+    q = PREFIX + f"SELECT ?s ?n WHERE {{ VALUES ?s {{ {iris} }} ?s ex:name ?n }}"
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        pushed, fmt = _key_pushed(spark, vg.fragment(q), "doc", "id")
+        assert pushed, fmt[:4000]
+        got = _rows(vg.select(q))
+    finally:
+        vg.release()
+    comp = MappingCompiler(spark, doc, catalog)
+    try:
+        want = _rows(sparql_select(comp.triples(), q))
+    finally:
+        comp.release()
+    assert got == want
+    assert len(got) == k
