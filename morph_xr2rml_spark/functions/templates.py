@@ -123,7 +123,10 @@ def template_parts(template: str) -> list[object]:
 
 def get_template_matching(template: str, iri: str) -> dict[str, str]:
     """Inverse template match (getTemplateMatching :36-69): recover group
-    values from an IRI by turning each group into a lazy regex group.
+    values from an IRI by turning each group into a lazy regex group
+    between the template's literal parts, matched against the whole IRI
+    (the literal parts are regex-escaped, so a ``?`` or ``.`` in the
+    template is text, not a pattern).
 
     Divergence from the reference: groups match ``(.*?)`` not ``(.+?)``
     — the forward renderer emits a term when a reference evaluates to
@@ -131,18 +134,15 @@ def get_template_matching(template: str, iri: str) -> dict[str, str]:
     must accept empty group values or the rewriting binder would prune
     branches the materializer provably emits (found by the doc-source
     DESCRIBE differential: ``tag/{$.tag}`` with ``tag: ""``)."""
-    tpl = template if template.startswith("<") else "<" + template
-    if not tpl.endswith(">"):
-        tpl = tpl + ">"
-    uri = iri if iri.startswith("<") else "<" + iri
-    if not uri.endswith(">"):
-        uri = uri + ">"
-
-    groups = get_template_groups(template)
-    pattern = tpl
-    for g in groups:
-        pattern = pattern.replace("{" + g + "}", "(.*?)", 1)
-    m = re.search(pattern, uri)
+    tpl = template[1:] if template.startswith("<") else template
+    tpl = tpl[:-1] if tpl.endswith(">") else tpl
+    uri = iri[1:] if iri.startswith("<") else iri
+    uri = uri[:-1] if uri.endswith(">") else uri
+    groups = get_template_groups(tpl)
+    pattern = "".join(
+        "(.*?)" if isinstance(p, int) else re.escape(p) for p in template_parts(tpl)
+    )
+    m = re.fullmatch(pattern, uri, re.DOTALL)
     if not m:
         return {}
     return {g: m.group(i + 1) for i, g in enumerate(groups)}

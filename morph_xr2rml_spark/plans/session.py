@@ -88,6 +88,14 @@ def build_session(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # compiled whole-stage/expression classes kept for reuse by
+        # later queries. Spark's default of 100 holds less than one
+        # round of a rewriting-mode endpoint's requests: a numeric key
+        # constant is inlined into generated code, so every key lookup
+        # adds classes and evicts those a repeated query shape could
+        # reuse (at 100, each DESCRIBE recompiled ~40). Static: read
+        # once, at start-up.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         # long-lived driver hygiene: the live UI/status stores retain
         # per-task metrics for every stage ever run, which grows the
         # heap without bound over a many-job session and drags later

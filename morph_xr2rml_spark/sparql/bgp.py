@@ -50,6 +50,7 @@ from .parse import (
     _is_var,
     parse_sparql,
 )
+from .results import _unescape
 
 # xsd:dateTime / xsd:date lexical shape (YEAR..SECONDS/TZ accessors
 # read the groups directly — see the _DT_GROUP case in _filter_operand)
@@ -462,11 +463,7 @@ def _group_df_info(
     for opt in g.optionals:
         odf, omn = _group_df_info(triples, opt, graph)
         df, mn = _join_compat(df, mn, odf, omn, "left")
-    for node, var in g.binds:
-        df = df.withColumn(var, _bind_col(node, df))
-        mn.add(var)  # BIND expressions may evaluate to error/NULL
-    for f in g.filters:
-        df = df.where(_filter_col(f.expr, df))
+    df, mn = _bind_and_filter(df, mn, g)
     for positive, sub in g.exists:
         sdf = _group_df(triples, sub, graph)
         shared = [c for c in df.columns if c in sdf.columns]
@@ -491,6 +488,18 @@ def _group_df_info(
                 sdf.select(*shared).dropDuplicates(), on=shared, how="left_anti"
             )
         # disjoint domains: MINUS removes nothing (SPARQL 1.1 §8.3)
+    return df, mn
+
+
+def _bind_and_filter(
+    df: DataFrame, mn: set[str], g: Group
+) -> tuple[DataFrame, set[str]]:
+    """A group's BINDs, then its FILTERs, over its joined bindings."""
+    for node, var in g.binds:
+        df = df.withColumn(var, _bind_col(node, df))
+        mn = mn | {var}  # BIND expressions may evaluate to error/NULL
+    for f in g.filters:
+        df = df.where(_filter_col(f.expr, df))
     return df, mn
 
 
@@ -648,7 +657,7 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
             return (
                 F.concat(
                     F.lit('"'),
-                    _as_lexical(term.args[0], df),
+                    terms.escape_ntriples_col(_as_lexical(term.args[0], df)),
                     F.lit('"^^'),
                     _raw_term(term.args[1], df),
                 ),
@@ -658,7 +667,7 @@ def _filter_operand(term, df: DataFrame) -> tuple[Column, str]:
             return (
                 F.concat(
                     F.lit('"'),
-                    _as_lexical(term.args[0], df),
+                    terms.escape_ntriples_col(_as_lexical(term.args[0], df)),
                     F.lit('"@'),
                     _as_lexical(term.args[1], df),
                 ),
@@ -754,10 +763,11 @@ def _as_number(term, df: DataFrame) -> Column:
 
 def _as_lexical(term, df: DataFrame) -> Column:
     """SPARQL STR(): lexical form of a term (quoted literal -> its
-    lexical value, <iri> -> the iri string, else as-is)."""
+    lexical value with the N-Triples escapes decoded, <iri> -> the iri
+    string, else as-is)."""
     if isinstance(term, str) and not term.startswith("?"):
         if term.startswith('"'):
-            return F.lit(_unquote(term))
+            return F.lit(_unescape(_unquote(term)))
         if term.startswith("<") and term.endswith(">"):
             return F.lit(term[1:-1])
     col, kind = _filter_operand(term, df)
@@ -768,11 +778,26 @@ def _as_lexical(term, df: DataFrame) -> Column:
     return (
         F.when(
             col.startswith('"'),
-            F.regexp_extract(col, r'^"((?:[^"\\]|\\.)*)"', 1),
+            _unescape_col(F.regexp_extract(col, r'^"((?:[^"\\]|\\.)*)"', 1)),
         )
         .when(col.startswith("<"), F.regexp_replace(col, r"^<|>$", ""))
         .otherwise(col)
     )
+
+
+def _unescape_col(body: Column) -> Column:
+    """The text an N-Triples-escaped literal body stands for (the
+    column form of :func:`.results._unescape`). Splitting on the escaped
+    backslash pairs, scanned left to right as the escapes are, leaves
+    pieces in which every backslash opens one of the other escapes."""
+
+    def decode(piece: Column) -> Column:
+        for esc, ch in (("\\n", "\n"), ("\\r", "\r"), ("\\t", "\t"), ('\\"', '"')):
+            piece = F.replace(piece, F.lit(esc), F.lit(ch))
+        return piece
+
+    decoded = F.transform(F.split(body, r"\\\\"), decode)
+    return F.when(body.contains("\\"), F.array_join(decoded, "\\")).otherwise(body)
 
 
 def _numeric_value(col: Column) -> Column:
@@ -1052,6 +1077,22 @@ def _select_df_info(
 ) -> tuple[DataFrame, set[str]]:
     triples = _apply_dataset(triples, q)
     df, mn = _group_df_info(triples, q.where, graph)
+    return _solution_modifiers(df, mn, q)
+
+
+def select_over_bindings(bindings: DataFrame, q: SelectQuery) -> DataFrame:
+    """The solutions of ``q`` from the bindings of its basic graph
+    pattern (one column per variable, all bound): the WHERE's BINDs and
+    FILTERs, then the solution modifiers, as over a triple table."""
+    df, mn = _bind_and_filter(bindings, set(), q.where)
+    return _solution_modifiers(df, mn, q)[0]
+
+
+def _solution_modifiers(
+    df: DataFrame, mn: set[str], q: SelectQuery
+) -> tuple[DataFrame, set[str]]:
+    """Everything after the WHERE: grouping and aggregates, HAVING,
+    projection, DISTINCT, ORDER BY, OFFSET and LIMIT."""
     # HAVING and (expr AS ?alias) projections may contain aggregate
     # calls: pull them out into hidden agg columns, evaluate the rest
     # of the expression post-agg, then drop the hidden columns
@@ -1163,16 +1204,19 @@ class Graph:
     def fragment(self, q: SelectQuery) -> DataFrame:
         raise NotImplementedError
 
+    def solutions(self, q: SelectQuery) -> DataFrame:
+        """The solution frame of a parsed SELECT, ASK or CONSTRUCT
+        query: one column per projected variable."""
+        return sparql_select(self.fragment(q), q)
+
     def release(self) -> None:
         pass
 
     def select(self, query: str | SelectQuery) -> DataFrame:
-        q = _parsed(query, "SELECT")
-        return sparql_select(self.fragment(q), q)
+        return self.solutions(_parsed(query, "SELECT"))
 
     def ask(self, query: str | SelectQuery) -> bool:
-        q = _parsed(query, "ASK")
-        return bool(sparql_select(self.fragment(q), q).take(1))
+        return bool(self.solutions(_parsed(query, "ASK")).take(1))
 
     def construct(self, query: str | SelectQuery) -> DataFrame:
         """Instantiate the template triple patterns from the WHERE
@@ -1187,7 +1231,7 @@ class Graph:
         solutions instantiate the same triples, which the set semantics
         merges."""
         q = _parsed(query, "CONSTRUCT")
-        bindings = sparql_select(self.fragment(q), q)
+        bindings = self.solutions(q)
         solution = [F.col(c) for c in bindings.columns]
 
         def term_col(t: Term) -> Column:

@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from ..compiler.collections import _CONTAINER_CLASS
 from ..compiler.compile import CompileOptions, MappingCompiler
 from ..functions import terms
+from ..functions.encoding import _ENCODE_RESERVED_PAIRS, _ENCODE_URL_PAIRS
 from ..functions.paths import MixedSyntaxPath, simple_json_field
 from ..functions.templates import get_template_groups, get_template_matching
 from ..compiler.udfs import rewrite_mongo_id
@@ -75,7 +76,7 @@ from ..mapping.model import (
     TriplesMap,
 )
 from ..sources.catalog import RawSource, SourceCatalog
-from .bgp import Graph, _parsed, sparql_select
+from .bgp import Graph, _parsed, select_over_bindings, sparql_select
 from .parse import Group, Path, SelectQuery, TriplePattern, _is_var
 from .results import parse_term
 
@@ -86,10 +87,15 @@ _RDF_NIL = f"<{terms.RDF_NIL}>"
 _MEMBERSHIP = re.compile(rf"^<{re.escape(terms.RDF_NS)}_[1-9][0-9]*>$")
 
 # characters on which every encoding chain (encode_uri + encode_url,
-# functions/encoding.py) is the identity — pushdown and template-match
-# exclusion are only trusted when the text involved stays inside this set
-_ENCODING_INVARIANT = re.compile(r"^[A-Za-z0-9_.~\-:/#?&=@%]*$")
-_UNRESERVED = re.compile(r"^[A-Za-z0-9_.~\-]*$")
+# functions/encoding.py) is the identity: printable ASCII minus what
+# encode_url rewrites — pushdown and template-match exclusion are only
+# trusted when the text involved stays inside this set
+_ENCODING_INVARIANT = frozenset(map(chr, range(0x21, 0x7F))) - {
+    src for src, _dst in _ENCODE_URL_PAIRS
+}
+# ... and of those, the characters encode_reserved_chars also leaves
+# alone: a group value made of them renders verbatim
+_UNRESERVED = _ENCODING_INVARIANT - {src for src, _dst in _ENCODE_RESERVED_PAIRS}
 
 
 # ---------------------------------------------------------------------------
@@ -170,7 +176,7 @@ def _template_invariant(template: str) -> bool:
     encoding chain, so textual template matching against an output IRI
     is trustworthy as an exclusion test."""
     masked = re.sub(r"\{[^}]*\}", "", template)
-    return bool(_ENCODING_INVARIANT.match(masked))
+    return set(masked) <= _ENCODING_INVARIANT
 
 
 def _can_emit(term_map, t: str, options: CompileOptions) -> bool:
@@ -525,7 +531,7 @@ def _invert(term_map, term: str):
     if len(match) != 1:
         return _NOT_THIS
     value = next(iter(match.values()))
-    return value if _UNRESERVED.match(value) else None
+    return value if set(value) <= _UNRESERVED else None
 
 
 def _typed_key(value: str, dtype) -> object | None:
@@ -869,6 +875,9 @@ class VirtualGraph(Graph):
         self.options = options or CompileOptions()
         self._compilers: list[MappingCompiler] = []
         self._persisted: list[DataFrame] = []
+        # term expressions of the translated path (translate.py), per
+        # term map, column prefix and column types
+        self._terms: dict = {}
 
     # -- fragment construction --------------------------------------------
 
@@ -1168,6 +1177,17 @@ class VirtualGraph(Graph):
         q = _parsed(query, "SELECT")
         cp = self._constant_projection(q)
         return super().select(q) if cp is None else cp
+
+    def solutions(self, q: SelectQuery) -> DataFrame:
+        """A basic graph pattern over table sources is answered as joins
+        of source scans (:mod:`.translate`); any other query over its
+        fragment."""
+        from .translate import translate
+
+        bindings = translate(self, q)
+        if bindings is None:
+            return super().solutions(q)
+        return select_over_bindings(bindings, q)
 
     def _constant_projection(self, q: SelectQuery) -> DataFrame | None:
         """§4.1 Constant Projection / Projection Pushing

@@ -166,3 +166,80 @@ def test_constant_projection_of_list_cell_subjects(spark, relational):
     finally:
         comp.release()
         vg.release()
+
+
+# -- basic graph patterns as joins of source scans (sparql/translate.py) --
+
+ONT = "PREFIX ex: <http://example.org/ontology#>\n"
+POINT = "SELECT ?p ?o WHERE { <http://example.org/customer/1> ?p ?o }"
+ASK = ONT + "ASK { <http://example.org/nation/1> ex:name ?n }"
+ROM_2HOP = (ONT + "SELECT ?o ?st WHERE { ?o ex:customer ?c . "
+            '?c ex:name "Customer#1" . ?o ex:status ?st }')
+CONST_OBJECT = (ONT + "SELECT ?o ?st WHERE { "
+                "?o ex:customer <http://example.org/customer/1> . ?o ex:status ?st }")
+
+
+def _fragment_calls(vg) -> list:
+    """Record each call of ``vg.fragment``."""
+    calls: list = []
+    original = vg.fragment
+    vg.fragment = lambda q: calls.append(q) or original(q)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "query,most_jobs",
+    [(POINT, 1), (ASK, 1), (ROM_2HOP, 3), (CONST_OBJECT, 3)],
+)
+def test_translated_queries_run_few_jobs(spark, relational, query, most_jobs):
+    from test_job_counts import jobs_run
+
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    calls = _fragment_calls(vg)
+    try:
+        if query.startswith(ONT + "ASK"):
+            with jobs_run(spark) as jobs:
+                got = vg.ask(query)
+            assert got is True
+        else:
+            with jobs_run(spark) as jobs:
+                got = _rows(vg.select(query))
+            assert got == _rows(sparql_select(triples, query))
+            assert got
+        assert 1 <= len(jobs) <= most_jobs
+        assert calls == []
+    finally:
+        vg.release()
+
+
+def test_rom_2hop_plan_scans_each_table_once(spark, relational):
+    """The two ``orders`` patterns are one scan, and the RefObjectMap's
+    parent side and ``?c ex:name`` are one ``customer`` scan, filtered
+    on the name."""
+    doc, catalog, _triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        scans, plan = _plan_scans(vg.select(ROM_2HOP))
+        locations = sorted(
+            re.search(r"Location: \S+ \[([^\]]*)\]", b).group(1).rsplit("/", 1)[1]
+            for b in scans
+        )
+        assert locations == ["customer", "orders"], plan
+        (customer,) = [b for b in scans if "/customer]" in b]
+        assert "EqualTo(c_name,Customer#1)" in customer, plan
+        assert "InMemoryRelation" not in plan
+    finally:
+        vg.release()
+
+
+def test_optional_takes_the_fragment_path(spark, relational):
+    doc, catalog, triples = relational
+    q = ONT + "SELECT ?o ?st WHERE { ?o ex:customer ?c OPTIONAL { ?o ex:status ?st } }"
+    vg = VirtualGraph(spark, doc, catalog)
+    calls = _fragment_calls(vg)
+    try:
+        assert _rows(vg.select(q)) == _rows(sparql_select(triples, q))
+        assert len(calls) == 1
+    finally:
+        vg.release()

@@ -73,6 +73,7 @@ THING = [
     ("2", "it's", -3, False, None, None),
     ("3", "a#b", None, None, None, None),
     ("4", "a\nb", None, None, None, None),
+    ("5", "x7", None, None, None, None),
 ]
 
 # the graph the mapping produces over PERSON, written out by hand: a
@@ -84,7 +85,7 @@ B_KNOWS = f"<{EX}b> <{EX}knows> <{EX}c> ."
 C_NAME = f'<{EX}c> <{EX}name> "Cy" .'
 # and over THING: one triple per non-NULL cell
 XSD = "http://www.w3.org/2001/XMLSchema#"
-T1, T2, T3, T4 = (f"<{EX}t/{i}>" for i in "1234")
+T1, T2, T3, T4, T5 = (f"<{EX}t/{i}>" for i in "12345")
 INT5 = f'"5"^^<{XSD}integer>'
 INT_NEG3 = f'"-3"^^<{XSD}integer>'
 THING_TRIPLES = [
@@ -98,6 +99,7 @@ THING_TRIPLES = [
     f'{T2} <{EX}flag> "false"^^<{XSD}boolean> .',
     f'{T3} <{EX}label> "a#b" .',
     f'{T4} <{EX}label> "a\\nb" .',
+    f'{T5} <{EX}label> "x7" .',
 ]
 TRIPLES = [A_NAME, A_KNOWS, B_NAME, B_KNOWS, C_NAME] + THING_TRIPLES
 
@@ -199,12 +201,51 @@ LITERAL_PROBES = [
     (_label_filter('REGEX(?o, "^a")'), {(T1,), (T3,), (T4,)}),
     (_label_filter('REGEX(?o, "b$")'), {(T1,), (T3,), (T4,)}),
     (_label_filter('REGEX(STR(?o), "^A", "i")'), {(T1,), (T3,), (T4,)}),
+    # and reads it with its escapes decoded: "a\nb" holds a newline,
+    # and the pattern "\\d" is the regex \d
+    (_label_filter("STRLEN(?o) = 3"), {(T3,), (T4,)}),
+    (_label_filter('REGEX(?o, "\\\\d")'), {(T5,)}),
+    (_label_filter('STR(?o) = "a\\nb"'), {(T4,)}),
 ]
 
 
 @pytest.mark.parametrize("query,want", LITERAL_PROBES)
 def test_literal_probe(graph, query, want):
     assert {tuple(r) for r in graph.select(query).collect()} == want
+
+
+ENCODED_TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+
+<#TMEncoded>
+    xrr:logicalSource [ rr:tableName "encoded"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://ex.org/a?id={id}" ];
+    rr:predicateObjectMap [
+        rr:predicate <http://ex.org/name>;
+        rr:objectMap [ rr:column "name" ];
+    ];
+    .
+"""
+
+
+def test_template_with_an_encoded_literal_part_answers_in_both_modes(spark):
+    """The IRI encoding turns the template's '=' into %3D: the constant
+    subject is that IRI, which rewriting mode must not prune."""
+    from morph_xr2rml_spark.compiler import MappingCompiler
+
+    table = spark.createDataFrame([(5, "x")], "id int, name string")
+    catalog = SourceCatalog(spark).register("encoded", table, unique_key=["id"])
+    doc = parse_mapping(ENCODED_TTL)
+    q = "SELECT ?o WHERE { <http://ex.org/a?id%3D5> <http://ex.org/name> ?o }"
+    comp = MappingCompiler(spark, doc, catalog)
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        assert [tuple(r) for r in TripleTable(comp.triples()).select(q).collect()] == [('"x"',)]
+        assert [tuple(r) for r in vg.select(q).collect()] == [('"x"',)]
+    finally:
+        vg.release()
+        comp.release()
 
 
 def test_blank_node_label_is_a_hidden_variable(graph):

@@ -663,12 +663,12 @@ def test_same_tm_patterns_share_one_compilation(setup, spark):
     )
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        got = _rows(vg.select(q))
+        got = _rows(sparql_select(vg.fragment(q), q))
         # three patterns, all binding TMEmp, no pattern-specific source
         # filter -> ONE merged compilation (and one persisted fragment)
         assert len(vg._compilers) == 1
         assert len(vg._persisted) == 1
-        assert got == _rows(sparql_select(triples, q))
+        assert got == _rows(sparql_select(triples, q)) == _rows(vg.select(q))
     finally:
         vg.release()
 
@@ -1515,6 +1515,12 @@ def test_differential_virtual_const_object_select(spark):
     _const_object_differential(spark)
 
 
+def _mapping_only(vg, q: str) -> bool:
+    """Does the Constant Projection rewrite answer ``q`` from the
+    mapping alone?"""
+    return vg._constant_projection(parse_sparql(q)) is not None
+
+
 def test_constant_projection_answers_from_mapping(setup, spark):
     """§4.1 Constant Projection / Projection Pushing
     (allVarsProjectedAsConstantTermMaps,
@@ -1533,6 +1539,7 @@ def test_constant_projection_answers_from_mapping(setup, spark):
         q = "SELECT DISTINCT ?p WHERE { ?s ?p ?o }"
         got = _rows(vg.select(q))
         assert vg._compilers == []  # never compiled a source
+        assert _mapping_only(vg, q)
         assert got == _rows(sparql_select(triples, q))
         assert ("<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",) in got
         assert ("<http://example.org/ontology#dept>",) in got
@@ -1541,6 +1548,7 @@ def test_constant_projection_answers_from_mapping(setup, spark):
         qt = "SELECT DISTINCT ?t WHERE { ?s a ?t }"
         got_t = _rows(vg.select(qt))
         assert vg._compilers == []
+        assert _mapping_only(vg, qt)
         assert got_t == _rows(sparql_select(triples, qt))
 
         # LIMIT applies to the VALUES frame
@@ -1550,7 +1558,7 @@ def test_constant_projection_answers_from_mapping(setup, spark):
         # a data-dependent position falls through to the normal path
         qn = PREFIX + "SELECT DISTINCT ?n WHERE { ?s ex:name ?n }"
         got_n = _rows(vg.select(qn))
-        assert vg._compilers != []  # really evaluated
+        assert not _mapping_only(vg, qn)  # really evaluated
         assert got_n == _rows(sparql_select(triples, qn))
     finally:
         vg.release()
@@ -1560,8 +1568,9 @@ def test_constant_projection_off_by_default(setup, spark):
     doc, catalog, _t = setup
     vg = VirtualGraph(spark, doc, catalog)
     try:
-        vg.select("SELECT DISTINCT ?p WHERE { ?s ?p ?o }").collect()
-        assert vg._compilers != []  # default: ordinary evaluation
+        q = "SELECT DISTINCT ?p WHERE { ?s ?p ?o }"
+        vg.select(q).collect()
+        assert not _mapping_only(vg, q)  # default: ordinary evaluation
     finally:
         vg.release()
 
@@ -1684,7 +1693,7 @@ def test_constant_projection_restricted_to_single_free_pattern(setup, spark):
             'SELECT DISTINCT ?p WHERE { ?s ?p ?o . ?s ex:name "nobody" }'
         )
         got = _rows(vg.select(q))
-        assert vg._compilers != []  # really evaluated, not mapping-only
+        assert not _mapping_only(vg, q)  # really evaluated
         assert got == _rows(sparql_select(triples, q)) == []
     finally:
         vg.release()
@@ -1694,7 +1703,7 @@ def test_constant_projection_restricted_to_single_free_pattern(setup, spark):
     try:
         q = PREFIX + 'SELECT DISTINCT ?p WHERE { ?s ?p "nobody" }'
         got = _rows(vg.select(q))
-        assert vg._compilers != []
+        assert not _mapping_only(vg, q)
         assert got == _rows(sparql_select(triples, q)) == []
     finally:
         vg.release()
@@ -1704,7 +1713,7 @@ def test_constant_projection_restricted_to_single_free_pattern(setup, spark):
     try:
         q = "SELECT DISTINCT ?p WHERE { ?s ?p ?s }"
         got = _rows(vg.select(q))
-        assert vg._compilers != []
+        assert not _mapping_only(vg, q)
         assert got == _rows(sparql_select(triples, q)) == []
     finally:
         vg.release()
@@ -1721,10 +1730,8 @@ def test_fragment_persist_released_at_request_boundary(setup, spark):
     doc, catalog, _t = setup
     vg = VirtualGraph(spark, doc, catalog)
     mark = caching.job_mark()
-    df = vg.select(
-        PREFIX + "SELECT ?n ?s WHERE { ?e ex:name ?n . ?e ex:salary ?s }"
-    )
-    df.collect()
+    q = PREFIX + "SELECT ?n ?s WHERE { ?e ex:name ?n . ?e ex:salary ?s }"
+    sparql_select(vg.fragment(q), q).collect()
     assert vg._persisted, "expected the shared fragment to be persisted"
     assert all(f.storageLevel.useMemory for f in vg._persisted)
     caching.release_since(mark)
