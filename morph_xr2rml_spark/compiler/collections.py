@@ -102,18 +102,28 @@ def expand_collections_split(
     raise ValueError(f"not a collection term type: {collection_term_type}")
 
 
+def collection_heads(grouped: DataFrame, collection_term_type: str) -> DataFrame:
+    """The ``head`` part of :func:`expand_collections_split` alone."""
+    return _heads(_with_base(grouped), collection_term_type == terms.TERM_RDFLIST)
+
+
 def _with_base(grouped: DataFrame) -> DataFrame:
     base = grouped if "b" in grouped.columns else with_bnode_base(grouped)
     return base.where(F.size("members") > 0)
+
+
+def _heads(base: DataFrame, is_list: bool) -> DataFrame:
+    """(subj, pred, first blank node): a list's first cell, or the
+    container itself."""
+    first = F.concat(F.col("b"), F.lit("_0")) if is_list else F.col("b")
+    return base.select(F.col("subj"), F.col("pred"), first.alias("obj"))
 
 
 def _expand_list(grouped: DataFrame) -> tuple[DataFrame, DataFrame]:
     base = _with_base(grouped).select(
         "subj", "pred", "members", "b", F.size("members").alias("n")
     )
-    head = base.select(
-        F.col("subj"), F.col("pred"), F.concat(F.col("b"), F.lit("_0")).alias("obj")
-    )
+    head = _heads(base, True)
     cells = base.select(
         "b", "n", F.posexplode("members").alias("pos", "member")
     )
@@ -136,9 +146,7 @@ def _expand_container(
     grouped: DataFrame, container_class: str
 ) -> tuple[DataFrame, DataFrame]:
     base = _with_base(grouped).select("subj", "pred", "members", "b")
-    head = base.select(
-        F.col("subj"), F.col("pred"), F.col("b").alias("obj")
-    )
+    head = _heads(base, False)
     typ = base.select(
         F.col("b").alias("subj"),
         F.lit(_TYPE).alias("pred"),

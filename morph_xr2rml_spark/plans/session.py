@@ -20,6 +20,15 @@ from pyspark.sql import SparkSession
 
 _ATTACHED_SESSIONS: set[int] = set()
 
+# partitions the first job of a take reads (Spark's default is 1). An
+# endpoint result is bounded by ``df.limit(n).collect()``, and a
+# rewriting-mode answer is a union of a few key-filtered scans or an
+# AQE-coalesced shuffle: with 1, its first job reads one partition and
+# a second job reads the rest (a point lookup over two scans ran 2 jobs
+# where 1 does). A truncated large result ships at most this many
+# times ``n`` rows to the driver.
+TAKE_PARTITIONS = 16
+
 
 def package_zip() -> str:
     """Create (once) a zip of the morph_xr2rml_spark package."""
@@ -96,6 +105,7 @@ def build_session(
         # reuse (at 100, each DESCRIBE recompiled ~40). Static: read
         # once, at start-up.
         "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.sql.limit.initialNumPartitions": str(TAKE_PARTITIONS),
         # long-lived driver hygiene: the live UI/status stores retain
         # per-task metrics for every stage ever run, which grows the
         # heap without bound over a many-job session and drags later

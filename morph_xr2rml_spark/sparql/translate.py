@@ -14,7 +14,10 @@ that path for the shapes it covers:
   parent's scan, joined on its join conditions), with the pattern's
   constants pushed in as scan filters (:func:`.virtual._nodes_filter`)
   plus an exact test on the rendered term, and each term map's
-  definedness (a row whose term is NULL emits no triple);
+  definedness (a row whose term is NULL emits no triple); a
+  RefObjectMap with a list or container term type is the head of its
+  collection, the joined parents' subjects grouped per child subject
+  and join key, labelled by the compiler's own code;
 - a pattern's atoms are unioned, and deduplicated unless the source
   keys prove them distinct (the materialized graph is a set); an atom
   whose rendering of a shared variable is disjoint from every
@@ -29,6 +32,9 @@ that path for the shapes it covers:
 
 :func:`translate` returns None for any other query, which the caller
 then evaluates over the fragment (:meth:`.virtual.VirtualGraph.fragment`).
+DESCRIBE binds each map to its nodes as subjects and as objects, and
+takes the atoms of the maps it covers (:meth:`_Translator.describe`,
+the reference's expandDescribe, MorphBaseQueryTranslator.scala:86-92).
 """
 
 from __future__ import annotations
@@ -41,16 +47,20 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.collections import collection_heads
 from ..compiler.compile import MappingCompiler, _TermExpr
 from ..functions import terms
 from ..functions.paths import MixedSyntaxPath
 from ..functions.templates import get_template_groups, template_parts
-from ..mapping.model import COLUMN, CONSTANT, REFERENCE, TEMPLATE, TermMap, TriplesMap
+from ..mapping.model import (
+    COLUMN, CONSTANT, REFERENCE, TEMPLATE, RefObjectMap, TermMap, TriplesMap,
+)
 from ..sources.catalog import RawSource
 from .parse import FilterNode, Path, SelectQuery, TriplePattern, _is_var
 from .virtual import (
     _NOT_THIS,
     _RDF_TYPE,
+    _Bound,
     _and,
     _bind_pattern,
     _can_emit,
@@ -76,6 +86,13 @@ class _Built:
 
     item: int
     name: str
+
+
+class _Col(NamedTuple):
+    """A raw column of scan ``alias``."""
+
+    alias: int
+    column: str
 
 
 class _Branch(NamedTuple):
@@ -106,6 +123,10 @@ class _Frame:
 
     df: DataFrame
     filters: list[Column] = field(default_factory=list)
+
+
+# the pattern every triple matches: DESCRIBE binds whole maps
+_ANY_TRIPLE = TriplePattern("?s", "?p", "?o")
 
 
 def _column(ref: str) -> str | None:
@@ -251,28 +272,32 @@ class _Query:
             return _constant_term(tm, self.tx.options)
         return _Render(tm, alias)
 
-    def match(self, rep, term: str) -> bool:
-        """Restrict ``rep`` to the constant ``term``; False when that
+    def match(self, rep, consts: tuple[str, ...]) -> bool:
+        """Restrict ``rep`` to the constants ``consts``; False when that
         provably keeps nothing."""
         if isinstance(rep, str):
-            return rep == term
+            return rep in consts
         if isinstance(rep, _Built):
-            self.items[rep.item].filters.append(F.col(rep.name) == F.lit(term))
+            self.items[rep.item].filters.append(_one_of(F.col(rep.name), consts))
             return True
         tm, scan = rep.term_map, self.items[rep.alias]
-        if not _can_emit(tm, term, self.tx.options) or _invert(tm, term) is _NOT_THIS:
+        consts = tuple(
+            t for t in consts
+            if _can_emit(tm, t, self.tx.options) and _invert(tm, t) is not _NOT_THIS
+        )
+        if not consts:
             return False
-        pushed = _nodes_filter(RawSource(scan.table, scan.raw, None), tm, [term])
+        pushed = _nodes_filter(RawSource(scan.table, scan.raw, None), tm, consts)
         if pushed is not None:
             scan.filters.append(pushed)
             scan.keyed = True
-        scan.filters.append(self.tx.term(tm, scan.raw).col == F.lit(term))
+        scan.filters.append(_one_of(self.tx.term(tm, scan.raw).col, consts))
         return True
 
     def same_term(self, a, b) -> None:
         if isinstance(a, str) or isinstance(b, str):
             const, other = (a, b) if isinstance(a, str) else (b, a)
-            self.empty = self.empty or not self.match(other, const)
+            self.empty = self.empty or not self.match(other, (const,))
         else:
             self.term_eqs.append((a, b))
 
@@ -305,12 +330,15 @@ class _Query:
         return column if self.single else f"a{item}_{column}"
 
     def _term(self, rep) -> Column:
-        """The built term of ``rep`` in the joined frame."""
+        """The built term of ``rep`` (a raw column for a _Col) in the
+        joined frame."""
         if isinstance(rep, str):
             return F.lit(rep)
         i = self._item(rep)
         if isinstance(rep, _Built):
             return F.col(self._name(i, rep.name))
+        if isinstance(rep, _Col):
+            return F.col(self._name(i, rep.column))
         return self.tx.term(rep.term_map, self.items[i].raw, self._name(i, "")).col
 
     def _cross(self) -> list[tuple[frozenset[int], object]]:
@@ -349,6 +377,8 @@ class _Query:
         def use(rep) -> None:
             if isinstance(rep, _Built):
                 used[rep.item].add(rep.name)
+            elif isinstance(rep, _Col):
+                used[self.find(rep.alias)].add(rep.column)
             elif isinstance(rep, _Render):
                 used[self.find(rep.alias)].update(_columns(rep.term_map))
 
@@ -398,6 +428,10 @@ class _Query:
             else:
                 out = out.crossJoin(frames[nxt])
         return out.select(*[self._term(r).alias(v) for v, r in outputs.items()])
+
+
+def _one_of(col: Column, consts: tuple[str, ...]) -> Column:
+    return col == F.lit(consts[0]) if len(consts) == 1 else col.isin(list(consts))
 
 
 def _col_eq(a: Column, b: Column, how: str, same: bool) -> Column | None:
@@ -485,7 +519,7 @@ class _Translator:
                     for jc in rom.join_conditions
                 ]
                 if (
-                    rom.collection_term_type() or not cols
+                    not cols
                     or not self._scans_ok(ptm, [ptm.subject_map])
                     or not self._has(tm, [c for c, _p in cols])
                     or not self._has(ptm, [p for _c, p in cols])
@@ -502,7 +536,7 @@ class _Translator:
 
     def _rendering(self, b: _Branch, pos: str):
         """What renders position 's'/'p'/'o' of branch ``b``: a constant
-        term or a term map."""
+        term, a term map, or None (a collection head's blank node)."""
         if pos == "p":
             return b.pred
         if pos == "s":
@@ -511,12 +545,16 @@ class _Translator:
             return b.obj
         elif isinstance(b.obj, TermMap):
             m = b.obj
+        elif b.obj.collection_term_type():
+            return None
         else:
             m = self.doc.triples_maps[b.obj.parent_triples_map].subject_map
         return _constant_term(m, self.options) if m.kind == CONSTANT else m
 
     def _disjoint(self, a, b) -> bool:
         """Provably no term is rendered by both ``a`` and ``b``."""
+        if a is None or b is None:
+            return False
         if isinstance(a, str) and isinstance(b, str):
             return a != b
         if isinstance(a, str) or isinstance(b, str):
@@ -570,7 +608,8 @@ class _Translator:
         """Do distinct rows of the branch's scan emit distinct triples?
         The subject (or the object on the same row) renders injectively
         from columns covering a unique key, and a RefObjectMap's parent
-        is unique on its join columns."""
+        is unique on its join columns (a collection head is one row per
+        subject without that)."""
         raw, keys = self.raw(b.tm), self.keys(b.tm)
         exprs = [self.term(b.tm.subject_map, raw)]
         if isinstance(b.obj, TermMap):
@@ -582,42 +621,120 @@ class _Translator:
             and any(set(k) <= set(exprs[0].refs) | set(exprs[1].refs) for k in keys)
         ):
             return False
-        if isinstance(b.obj, (str, TermMap)):
+        if isinstance(b.obj, (str, TermMap)) or b.obj.collection_term_type():
             return True
         pcols = {_column(jc.parent_ref) for jc in b.obj.join_conditions}
         ptm = self.doc.triples_maps[b.obj.parent_triples_map]
         return any(set(k) <= pcols for k in self.keys(ptm))
 
-    def atom(self, q: _Query, tp: TriplePattern, b: _Branch) -> dict[str, object] | None:
-        """Add branch ``b`` matched against ``tp`` to ``q``; the
-        representation of each variable of the pattern, or None when
-        the branch provably matches nothing."""
-        a = q.scan(b.tm)
-        subj = q.rep(b.tm.subject_map, a)
-        if isinstance(b.obj, str):
-            obj = b.obj
-        elif isinstance(b.obj, TermMap):
-            obj = q.rep(b.obj, a)
-        else:
-            ptm = self.doc.triples_maps[b.obj.parent_triples_map]
-            p = q.scan(ptm)
-            child, parent = q.items[a].raw.schema, q.items[p].raw.schema
-            for jc in b.obj.join_conditions:
-                cc, pc = _column(jc.child_ref), _column(jc.parent_ref)
-                same = child[cc].dataType == parent[pc].dataType
-                q.eqs.append((a, cc, p, pc, "eq" if same else "str"))
-            obj = q.rep(ptm.subject_map, p)
-        for rep in (subj, obj):
+    def _parent(self, q: _Query, a: int, rom: RefObjectMap):
+        """Join the parent scan of ``rom`` to scan ``a`` on its join
+        conditions; the representation of the parent's subject."""
+        ptm = self.doc.triples_maps[rom.parent_triples_map]
+        p = q.scan(ptm)
+        child, parent = q.items[a].raw.schema, q.items[p].raw.schema
+        for jc in rom.join_conditions:
+            cc, pc = _column(jc.child_ref), _column(jc.parent_ref)
+            same = child[cc].dataType == parent[pc].dataType
+            q.eqs.append((a, cc, p, pc, "eq" if same else "str"))
+        return q.rep(ptm.subject_map, p)
+
+    def _defined(self, q: _Query, *reps) -> None:
+        """A row whose term is NULL emits no triple."""
+        for rep in reps:
             if isinstance(rep, _Render):
                 scan = q.items[rep.alias]
                 scan.filters.append(self.term(rep.term_map, scan.raw).defined)
-        reps: dict[str, object] = {}
-        for t, rep in ((tp.s, subj), (tp.p, b.pred), (tp.o, obj)):
-            if _is_var(t):
-                reps[t[1:]] = rep
-            elif not q.match(rep, t):
+
+    def _heads(self, b: _Branch, nodes: tuple[str, ...] | None) -> DataFrame | None:
+        """(subj, pred, obj) rows: the heads of the RDF collections that branch
+        ``b`` (a RefObjectMap with a collection term type) emits, for
+        subjects among ``nodes`` (None: any). The child scan joins the
+        parent scan, each child subject and join key groups its parents'
+        subjects into one sorted member set, and the set is labelled as
+        the compiler labels it (:mod:`..compiler.collections`); None
+        when no subject can match."""
+        q = _Query(self)
+        a = q.scan(b.tm)
+        subj = q.rep(b.tm.subject_map, a)
+        member = self._parent(q, a, b.obj)
+        self._defined(q, subj, member)
+        if nodes is not None and not q.match(subj, nodes):
+            return None
+        keys = {
+            f"k{i}": _Col(a, _column(jc.child_ref))
+            for i, jc in enumerate(b.obj.join_conditions)
+        }
+        grouped = (
+            q.frame({"subj": subj, "member": member, **keys})
+            .groupBy("subj", *keys)
+            .agg(F.sort_array(F.collect_set("member")).alias("members"))
+            .select("subj", F.lit(b.pred).alias("pred"), "members")
+        )
+        return collection_heads(grouped, b.obj.collection_term_type())
+
+    def atom(
+        self, q: _Query, b: _Branch, match: dict[str, tuple[str, ...]]
+    ) -> tuple | None:
+        """Add branch ``b`` to ``q``, its position 's', 'p' or 'o'
+        restricted to the terms ``match`` holds for it; the
+        (subject, predicate, object) representations, or None when the
+        branch provably matches nothing."""
+        if isinstance(b.obj, RefObjectMap) and b.obj.collection_term_type():
+            heads = self._heads(b, match.get("s"))
+            if heads is None:
+                return None
+            built = q.built(heads)
+            subj, obj = built["subj"], built["obj"]
+            match = {pos: ts for pos, ts in match.items() if pos != "s"}
+        else:
+            a = q.scan(b.tm)
+            subj = q.rep(b.tm.subject_map, a)
+            if isinstance(b.obj, str):
+                obj = b.obj
+            elif isinstance(b.obj, TermMap):
+                obj = q.rep(b.obj, a)
+            else:
+                obj = self._parent(q, a, b.obj)
+            self._defined(q, subj, obj)
+        reps = (subj, b.pred, obj)
+        for pos, rep in zip("spo", reps):
+            if pos in match and not q.match(rep, match[pos]):
                 return None
         return reps
+
+    def pattern(self, q: _Query, tp: TriplePattern, b: _Branch) -> dict[str, object] | None:
+        """:meth:`atom` matched against ``tp``: the representation of
+        each variable of the pattern."""
+        spo = (tp.s, tp.p, tp.o)
+        reps = self.atom(q, b, {pos: (t,) for pos, t in zip("spo", spo) if not _is_var(t)})
+        if reps is None:
+            return None
+        return {t[1:]: rep for t, rep in zip(spo, reps) if _is_var(t)}
+
+    def describe(
+        self, tm: TriplesMap, bounds: dict[str, _Bound | None], nodes: tuple[str, ...]
+    ) -> list[tuple[_Branch, DataFrame]] | None:
+        """The (subj, pred, obj) rows of ``tm`` that mention one of
+        ``nodes``: for position 's' and 'o', the branches ``bounds``
+        keeps there (:func:`.virtual._bind`), restricted at it to the
+        nodes (the patterns ``<n> ?p ?o`` and ``?s ?p <n>``); each
+        branch with its frame. None when a bound branch is outside the
+        covered shapes."""
+        todo = []
+        for pos, bound in bounds.items():
+            if bound is not None:
+                bs = self.branches(tm, bound, _ANY_TRIPLE)
+                if bs is None:
+                    return None
+                todo += [(pos, b) for b in bs]
+        out = []
+        for pos, b in todo:
+            q = _Query(self)
+            reps = self.atom(q, b, {pos: nodes})
+            if reps is not None:
+                out.append((b, q.frame(dict(zip(("subj", "pred", "obj"), reps)))))
+        return out
 
     def union(self, tp: TriplePattern, bs: list[_Branch], keep: list[str]) -> DataFrame:
         """The pattern's atoms built and unioned, a set over the
@@ -628,7 +745,7 @@ class _Translator:
         frames = []
         for b in bs:
             q = _Query(self)
-            reps = self.atom(q, tp, b)
+            reps = self.pattern(q, tp, b)
             if reps is not None:
                 frames.append(q.frame({v: reps[v] for v in cols}))
         if not frames:
@@ -707,7 +824,7 @@ class _Translator:
                 query.empty = True
                 continue
             if len(bs) == 1 and _vars(tp) and self._distinct(bs[0]):
-                reps = self.atom(query, tp, bs[0])
+                reps = self.pattern(query, tp, bs[0])
                 if reps is None:
                     query.empty = True
                     continue

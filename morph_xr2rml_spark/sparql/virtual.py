@@ -59,9 +59,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..compiler.collections import _CONTAINER_CLASS
-from ..compiler.compile import CompileOptions, MappingCompiler
+from ..compiler.compile import CompileOptions, MappingCompiler, _control_free_lexical
 from ..functions import terms
-from ..functions.encoding import _ENCODE_RESERVED_PAIRS, _ENCODE_URL_PAIRS
+from ..functions.encoding import _ENCODE_RESERVED_PAIRS, _ENCODE_URL_PAIRS, _JAVA_TRIM_CHARS
 from ..functions.paths import MixedSyntaxPath, simple_json_field
 from ..functions.templates import get_template_groups, get_template_matching
 from ..compiler.udfs import rewrite_mongo_id
@@ -579,7 +579,9 @@ def _key_in_filter(col_name: str, dtype, values: list[str]) -> Column:
     return lex.isin(values) if values else F.lit(False)
 
 
-def _doc_key_filter(doc: Column, field: str, values: list[str]) -> Column:
+def _doc_key_filter(
+    doc: Column, field: str, values: list[str], dropped: str = ""
+) -> Column:
     """Document-source rendering: keep exactly the documents whose
     ``field`` COULD render as one of the lexical ``values`` during term
     construction — the analogue of the reference's
@@ -603,15 +605,18 @@ def _doc_key_filter(doc: Column, field: str, values: list[str]) -> Column:
       * booleans -> Python renders "True"/"False" vs JSON "true", so
         case-insensitive equality is accepted;
       * arrays/objects (prefix ``[``/``{``) -> evaluation semantics
-        diverge from get_json_object, so such rows are always kept.
+        diverge from get_json_object, so such rows are always kept;
+      * the characters ``dropped`` are taken out of the text before
+        comparing (an IRI drops control characters, see _key_filter).
     """
     if not values:
         return F.lit(False)
     gj = F.get_json_object(doc, "$." + field)
+    text = F.translate(gj, dropped, "") if dropped else gj
     cond = (
         gj.startswith("[")
         | gj.startswith("{")
-        | F.lower(gj).isin([v.lower() for v in values])
+        | F.lower(text).isin([v.lower() for v in values])
     )
     nums: list[float] = []
     for v in values:
@@ -636,22 +641,33 @@ def _key_filter(src: RawSource, term_map, values: list[str]) -> Column | None:
     ref = _reference(term_map)
     if ref is None:
         return None
+    # an IRI template's key renders through the IRI chain, which drops
+    # control characters ('5\n' renders as 5): a key whose lexical form
+    # can hold them is compared with every character up to U+0020
+    # taken out, a superset of the keys that render the value
+    iri = term_map.kind == TEMPLATE
     if src.doc_column is None:
-        if term_map.kind == TEMPLATE:
+        if iri:
             msp = MixedSyntaxPath.parse(ref, "Column")
             ref = msp.referenced_column if msp.is_simple_column else None
         elif term_map.kind != COLUMN:
             return None
         if ref not in src.frame.columns:
             return None
-        return _key_in_filter(ref, src.frame.schema[ref].dataType, values)
+        dtype = src.frame.schema[ref].dataType
+        if iri and not _control_free_lexical(dtype):
+            lex = terms.lex_value_col(F.col(ref), dtype)
+            return F.translate(lex, _JAVA_TRIM_CHARS, "").isin(values)
+        return _key_in_filter(ref, dtype, values)
     if term_map.kind == COLUMN or term_map.ref_formulation != "JSONPath":
         return None
     # $._id reads $._id.$oid, whose $oid segment simple_json_field rejects
     field = simple_json_field(rewrite_mongo_id(ref))
     if field is None:
         return None
-    return _doc_key_filter(F.col(src.doc_column), field, values)
+    return _doc_key_filter(
+        F.col(src.doc_column), field, values, _JAVA_TRIM_CHARS if iri else ""
+    )
 
 
 def _nodes_filter(src: RawSource, term_map, nodes) -> Column | None:
@@ -1354,6 +1370,10 @@ class VirtualGraph(Graph):
         Each triples map is bound twice by the binder's can-emit check
         (:func:`_bind`): with the nodes as subjects and with the nodes
         as objects; a map neither binding keeps is never compiled.
+        Up to ``_ISIN_MAX`` nodes without a blank node, a map whose
+        bound branches the translator covers is not compiled either: its
+        rows come from key-filtered scans and joins
+        (:meth:`.translate._Translator.describe`).
 
         Node-set restriction has two regimes: up to ``_ISIN_MAX`` nodes
         the exact subj/obj filter is a literal isin() and the inverted
@@ -1433,12 +1453,28 @@ class VirtualGraph(Graph):
             if frame is not None:
                 frames.append(node_restrict(frame, cols))
 
+        # a map whose bound branches the translator covers answers from
+        # key-filtered source scans and joins (translate.py), never a
+        # compile of the map; blank nodes have no key to filter on
+        tx = None
+        if use_keys and not has_bnode:
+            from .translate import _Translator
+
+            tx = _Translator(self)
+        translated = []
         for tm in self.doc.triples_maps.values():
             as_subj = _bind(self.doc, tm, nodes, None, None, self.options)
             as_obj = _bind(self.doc, tm, None, None, nodes, self.options)
+            if as_subj is None and as_obj is None:
+                continue
+            got = None if tx is None else tx.describe(
+                tm, {"s": as_subj, "o": as_obj}, tuple(nodes)
+            )
+            if got is not None:
+                translated += got
+                continue
             if as_subj is None:
-                if as_obj is not None:
-                    add(tm, as_obj, parent_filtered_catalog(tm, as_obj))
+                add(tm, as_obj, parent_filtered_catalog(tm, as_obj))
                 continue
             # the nodes can be this map's subjects: push the inverted
             # node keys into the map's own scan when provably exact — a
@@ -1462,11 +1498,22 @@ class VirtualGraph(Graph):
             # parents key-filtered)
             if as_obj is not None:
                 add(tm, as_obj, parent_filtered_catalog(tm, as_obj), ("obj",))
-        if not frames:
+        if not frames and not translated:
             return self.spark.createDataFrame(
                 [], "subj string, pred string, obj string"
             )
-        return functools.reduce(DataFrame.unionByName, frames).dropDuplicates()
+        out = functools.reduce(
+            DataFrame.unionByName, frames + [f for _b, f in translated]
+        )
+        # translated rows are a set when no two branches share a
+        # predicate (a triple with nodes at both ends is bound twice
+        # under one predicate) and each branch's rows are distinct
+        preds = [b.pred for b, _f in translated]
+        if not frames and len(set(preds)) == len(preds) and all(
+            tx._distinct(b) for b, _f in translated
+        ):
+            return out
+        return out.dropDuplicates()
 
     def release(self) -> None:
         for comp in self._compilers:

@@ -213,6 +213,67 @@ def test_translated_queries_run_few_jobs(spark, relational, query, most_jobs):
         vg.release()
 
 
+def test_describe_iri_is_translated_in_few_jobs(spark, relational):
+    """DESCRIBE <order/2> answers from three key-filtered ``orders``
+    atoms (the status, the customer join and the list head grouped
+    over ``lineitem``): no map is compiled, no parent is cached, and
+    the ``lineitem`` scan gets the order key inferred across the join."""
+    from test_job_counts import jobs_run
+
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        q = f"DESCRIBE {ORDER}"
+        out = vg.describe(q)
+        scans, plan = _plan_scans(out)
+        assert "InMemoryRelation" not in plan
+        (lineitem,) = [b for b in scans if "/lineitem]" in b]
+        pushed = re.search(r"PushedFilters: \[(.*)\]", lineitem).group(1)
+        assert re.search(r"(In|EqualTo)\(l_orderkey", pushed), plan
+        with jobs_run(spark) as jobs:
+            got = _rows(out)
+        assert got == _rows(sparql_describe(triples, q))
+        assert 1 <= len(jobs) <= 5
+        assert vg._compilers == []
+    finally:
+        vg.release()
+
+
+def test_list_head_pattern_is_translated(spark, relational):
+    doc, catalog, triples = relational
+    q = ONT + "SELECT ?l WHERE { <http://example.org/order/2> ex:lines ?l }"
+    vg = VirtualGraph(spark, doc, catalog)
+    calls = _fragment_calls(vg)
+    try:
+        got = _rows(vg.select(q))
+        assert calls == []
+        assert got == _rows(sparql_select(triples, q))
+        assert len(got) == 1 and got[0][0].startswith("_:")
+    finally:
+        vg.release()
+
+
+def test_endpoint_point_lookup_runs_one_job(spark, relational):
+    """Under ``build_session``'s take setting, the bounded result
+    collect reads both scans of the point lookup in its first job."""
+    from test_job_counts import jobs_run
+
+    from morph_xr2rml_spark.plans.session import TAKE_PARTITIONS
+    from morph_xr2rml_spark.sparql.endpoint import evaluate
+
+    doc, catalog, _triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    spark.conf.set("spark.sql.limit.initialNumPartitions", str(TAKE_PARTITIONS))
+    try:
+        with jobs_run(spark) as jobs:
+            _ctype, body = evaluate(vg, POINT)
+        assert len(jobs) == 1
+        assert "Customer#1" in body
+    finally:
+        spark.conf.unset("spark.sql.limit.initialNumPartitions")
+        vg.release()
+
+
 def test_rom_2hop_plan_scans_each_table_once(spark, relational):
     """The two ``orders`` patterns are one scan, and the RefObjectMap's
     parent side and ``?c ex:name`` are one ``customer`` scan, filtered

@@ -248,6 +248,51 @@ def test_template_with_an_encoded_literal_part_answers_in_both_modes(spark):
         comp.release()
 
 
+CONTROL_TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+
+<#TMControl>
+    xrr:logicalSource [ rr:tableName "control"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://ex.org/{id}" ];
+    rr:predicateObjectMap [
+        rr:predicate <http://ex.org/p>;
+        rr:objectMap [ rr:column "v" ];
+    ];
+    .
+"""
+
+
+@pytest.mark.parametrize("unique_key", [None, ["id"]])
+def test_key_with_control_characters_answers_in_both_modes(spark, unique_key):
+    """The IRI chain drops the newline of the key '5\\n', so its row is
+    the subject <http://ex.org/5>: a scan filter on the key must keep
+    it, on the translated path, the fragment path and DESCRIBE."""
+    from morph_xr2rml_spark.compiler import MappingCompiler
+
+    table = spark.createDataFrame([("5\n", "x"), ("\t6", "y")], "id string, v string")
+    catalog = SourceCatalog(spark).register("control", table, unique_key=unique_key)
+    doc = parse_mapping(CONTROL_TTL)
+    comp = MappingCompiler(spark, doc, catalog)
+    vg = VirtualGraph(spark, doc, catalog)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    try:
+        materialized = TripleTable(comp.triples())
+        for key, want in (("5", '"x"'), ("6", '"y"')):
+            q = f"SELECT ?o WHERE {{ <http://ex.org/{key}> <http://ex.org/p> ?o }}"
+            assert rows(materialized.select(q)) == [(want,)]
+            assert rows(vg.select(q)) == [(want,)]
+            assert rows(sparql_select(vg.fragment(q), q)) == [(want,)]
+        q = "DESCRIBE <http://ex.org/5>"
+        want = [("<http://ex.org/5>", "<http://ex.org/p>", '"x"')]
+        assert rows(materialized.describe(q)) == want
+        assert rows(vg.describe(q)) == want
+        assert rows(bgp.Graph.describe(vg, q)) == want
+    finally:
+        vg.release()
+        comp.release()
+
+
 def test_blank_node_label_is_a_hidden_variable(graph):
     """A ``_:b`` label in a pattern is a variable that SELECT * does not
     project; the same label twice in one BGP joins."""

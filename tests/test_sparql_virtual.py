@@ -1406,9 +1406,10 @@ _DEPT_ROWS = st.lists(
 )
 
 
-def _staff_graphs(spark, emp_rows, dept_rows):
+def _staff_graphs(spark, emp_rows, dept_rows, keyed=False):
     """(materialized triples, virtual graph, compiler) of STAFF_TTL over
-    the given emp/dept rows and a fixed two-team source."""
+    the given emp/dept rows and a fixed two-team source; ``keyed``
+    registers eid and dno as the unique keys of emp and dept."""
     emp = spark.createDataFrame(
         emp_rows or [(None, None, None, None)],
         "eid int, ename string, salary int, dno int",
@@ -1428,8 +1429,8 @@ def _staff_graphs(spark, emp_rows, dept_rows):
     doc = parse_mapping(STAFF_TTL)
     catalog = (
         SourceCatalog(spark)
-        .register("dept", dept)
-        .register("emp", emp)
+        .register("dept", dept, unique_key=["dno"] if keyed else None)
+        .register("emp", emp, unique_key=["eid"] if keyed else None)
         .register("team", team)
     )
     comp = MappingCompiler(spark, doc, catalog)
@@ -1477,6 +1478,46 @@ def _describe_differential(
 
 def test_differential_virtual_describe(spark):
     _describe_differential(spark)
+
+
+# list heads (dept), list members (emp: their rdf:first arcs need the
+# cells), a bag (team: a nested term map) and a class IRI
+_DESCRIBED = [
+    "<http://example.org/dept/1>",
+    "<http://example.org/dept/2>",
+    "<http://example.org/emp/1>",
+    "<http://example.org/emp/4>",
+    "<http://example.org/team/7>",
+    "<http://example.org/ontology#Department>",
+]
+
+
+@settings(max_examples=3, deadline=None)
+@given(
+    emp_rows=_EMP_ROWS,
+    dept_rows=_DEPT_ROWS,
+    keyed=st.booleans(),
+    named=st.lists(st.sampled_from(_DESCRIBED), min_size=1, max_size=3, unique=True),
+)
+def _describe_paths_differential(spark, emp_rows, dept_rows, keyed, named):
+    """DESCRIBE of named IRIs three ways, compared as bags: the virtual
+    graph (translated maps and compiled fallbacks), the whole-fragment
+    path of :class:`bgp.Graph`, and the materialized triples."""
+    from morph_xr2rml_spark.sparql.bgp import Graph, sparql_describe
+
+    q = "DESCRIBE " + " ".join(named)
+    triples, vg, comp = _staff_graphs(spark, emp_rows, dept_rows, keyed)
+    try:
+        want = _rows(sparql_describe(triples, q))
+        assert _rows(vg.describe(q)) == want, f"q: {q}\nemp: {emp_rows}\ndept: {dept_rows}"
+        assert _rows(Graph.describe(vg, q)) == want, q
+    finally:
+        comp.release()
+        vg.release()
+
+
+def test_differential_describe_paths(spark):
+    _describe_paths_differential(spark)
 
 
 _CONST_OBJECT_QUERIES = [
