@@ -21,8 +21,9 @@ MorphRDBDataTranslator.scala:85, MorphMongoDataTranslator.scala:82):
     Cartesian-then-filter, MorphBaseMaterializer.scala:88-101):
     simple-column conditions -> equi-join (J1); mixed-syntax-path
     conditions -> explode both sides + equi-join + per-condition
-    intersection (J2/J3/J4). Parent scans are reused (and optionally
-    persisted) across RefObjectMaps (S6).
+    intersection (J2/J3/J4), all in one join (``_rom_pairs``) whatever
+    consumes it. Parent scans are reused and persisted across
+    RefObjectMaps (S6).
   * Self-join elimination (AbstractQueryAtomicMongo.mergeForInnerJoin
     :122-186 analogue): when child and parent share the logical source and
     every join condition is childRef == parentRef, the parent subject is
@@ -34,7 +35,6 @@ MorphRDBDataTranslator.scala:85, MorphMongoDataTranslator.scala:82):
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -167,7 +167,6 @@ class CompileOptions:
     encode_unsafe_chars_in_uri: bool = True  # MorphProperties.scala:45
     encode_unsafe_chars_in_db_values: bool = True  # MorphProperties.scala:46
     dedup: bool = True  # Jena model set semantics (S8)
-    cache_parents: bool = True  # S6 query-result cache analogue
     # S5 per-TM slice/offset (mapDataTranslationLimits/Offsets,
     # MorphRDBUnfolder.scala:328-346; SQLQuery.setSlice/setOffset)
     limits: dict[str, int] = field(default_factory=dict)
@@ -566,40 +565,52 @@ class MappingCompiler:
             if not pom.ref_object_maps:
                 continue
             const_graphs = self._constant_graph_terms(tm.subject_map, pom)
+            pred_terms = self._rom_predicates(pom)
             for rom in pom.ref_object_maps:
-                plains, colls = self._ref_object_branches(tm, base, pom, rom)
-                for pred_term, rb in plains:
-                    if collect_keyed and len(const_graphs) == 1:
-                        keyed_rom = (
-                            self._rom_keyed(
-                                tm, raw_base, doc_col, rom, subj,
-                                pred_term, const_graphs[0],
+                routed = collect_keyed and len(const_graphs) == 1
+                coll_tt = rom.collection_term_type()
+                if routed and subj_keyable and not coll_tt:
+                    # the join reads the shared narrow base (see end of
+                    # method); its output is unique per child row only
+                    # when each child row joins one parent subject
+                    rom_key = ukey if self._parent_unique(rom) else None
+                    keep = sorted(set(subj.refs))
+                    reads = tuple(keep) + self._rom_reads(tm, rom)
+                    for p in pred_terms:
+                        keyed_requests.append(
+                            (
+                                lambda b, p=p, g=const_graphs[0], rom=rom,
+                                k=rom_key, keep=keep: (
+                                    self._keyed_branch(
+                                        self._rom_pairs(tm, b, keep, rom),
+                                        subj, self._psubj_term(), p, g, k,
+                                    )
+                                ),
+                                reads,
                             )
-                            if subj_keyable
-                            else None
                         )
-                        if keyed_rom is not None:
-                            # narrow-join pushdown: defer so the child
-                            # side reads the shared narrow base
-                            keyed_requests.append(keyed_rom)
-                        else:
-                            # constant predicate still routes the
-                            # constructed join output to its own
-                            # (subj, obj) dedup group
-                            keyed.append(
-                                _PredBranch(pred_term, const_graphs[0], rb)
-                            )
+                    continue
+                pairs = self._rom_pairs(tm, base, ["__row_id", "__subj"], rom)
+                for p in pred_terms:
+                    if coll_tt:
+                        pool_preds.add(p)  # heads stay pooled
+                        add_collection(
+                            *self._rom_collection(pairs, p, coll_tt), const_graphs
+                        )
                         continue
-                    pool_preds.add(pred_term)
+                    rb = pairs.select(
+                        F.col("__subj").alias("subj"), F.col("__psubj").alias("obj")
+                    )
+                    if routed:
+                        # constant predicate still routes the constructed
+                        # join output to its own (subj, obj) dedup group
+                        keyed.append(_PredBranch(p, const_graphs[0], rb))
+                        continue
+                    pool_preds.add(p)
                     full = rb.select(
-                        F.col("subj"),
-                        F.lit(pred_term).alias("pred"),
-                        F.col("obj"),
+                        F.col("subj"), F.lit(p).alias("pred"), F.col("obj")
                     )
                     branches.extend(_cross_constant_graphs(full, const_graphs))
-                for pred_term, (head, chain) in colls:
-                    pool_preds.add(pred_term)  # heads stay pooled
-                    add_collection(head, chain, const_graphs)
 
         if pair_arrays:
             combined = (
@@ -712,18 +723,23 @@ class MappingCompiler:
         graph: str | None,
         ukey: tuple[str, ...] | None = None,
     ) -> _PredBranch | None:
-        """Dedup-pushdown branch: project the referenced source columns,
-        dedup the narrow projection, THEN construct terms (plus a final
-        (subj, obj) dedup — term construction need not be injective).
-        The wide shuffle of constructed term strings becomes a narrow
-        shuffle of raw source values. When the source rows are unique
-        on ``ukey`` (catalog primary-key hint) and one injective side
-        covers the key, the branch is duplicate-free by construction
-        and every dedup shuffle is elided — the plan a per-key source
-        table (pages keyed by page_id, an RDB table with its primary
-        key) deserves. Returns None when no source columns are
-        referenced (degenerate constant/constant pair — left in the
-        pool)."""
+        """Dedup-pushdown branch over ``raw_base`` (a source scan, or
+        the :meth:`_rom_pairs` of a RefObjectMap, whose parent subject
+        is the injective term ``__psubj``). One of three regimes:
+
+        * elide: the rows are unique on ``ukey`` (catalog primary-key
+          hint) and an injective side covers it, so the (subj, obj)
+          pairs are distinct per row — no shuffle at all, the plan a
+          per-key source table deserves;
+        * narrow: both sides injective, so equal refs <=> equal terms
+          and the dedup of the narrow refs projection IS the triple-set
+          dedup, shuffling raw source values instead of term strings;
+        * term: a non-injective construction dedups on the terms (a
+          preceding refs dedup would be a second full shuffle of the
+          same rows — measured one extra wide stage per branch).
+
+        Returns None when no source columns are referenced (degenerate
+        constant/constant pair — left in the pool)."""
         refs = sorted(set(subj.refs or ()) | set(obj.refs or ()))
         if not refs:
             return None
@@ -731,45 +747,23 @@ class MappingCompiler:
         # raw columns, so it pushes to the scan; filtering on the
         # constructed term would drag the whole construction expression
         # below the dedup and evaluate it once per pre-dedup row
-        filtered = raw_base
+        rows = raw_base
         for cond in (subj.defined, obj.defined):
             if cond is not None:
-                filtered = filtered.where(cond)
+                rows = rows.where(cond)
         keyset = set(ukey) if ukey else None
         row_distinct = keyset is not None and keyset <= set(refs) and (
             (subj.injective and obj.injective)
             or (subj.injective and keyset <= set(subj.refs or ()))
             or (obj.injective and keyset <= set(obj.refs or ()))
         )
-        if row_distinct:
-            # rows unique on the key and an injective construction
-            # covers it: (subj, obj) pairs are distinct per source row
-            # — no shuffle at all
-            built = filtered.select(subj.col.alias("subj"), obj.col.alias("obj"))
-            if subj.defined is None or obj.defined is None:
-                built = built.where(
-                    F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                )
-        elif subj.injective and obj.injective:
-            # equal refs <=> equal terms: the narrow refs dedup IS the
-            # triple-set dedup, shuffling raw source values instead of
-            # constructed term strings
-            narrow = filtered.select(*[F.col(c) for c in refs]).dropDuplicates(refs)
-            built = narrow.select(subj.col.alias("subj"), obj.col.alias("obj"))
-            if subj.defined is None or obj.defined is None:
-                built = built.where(
-                    F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                )
-        else:
-            # non-injective construction must dedup on the terms anyway;
-            # a preceding refs dedup would be a second full shuffle of
-            # the same rows (measured: the two-shuffle shape cost one
-            # extra wide-stage per branch at every parallelism level)
-            built = filtered.select(subj.col.alias("subj"), obj.col.alias("obj"))
-            if subj.defined is None or obj.defined is None:
-                built = built.where(
-                    F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                )
+        narrow = not row_distinct and subj.injective and obj.injective
+        if narrow:
+            rows = rows.select(*[F.col(c) for c in refs]).dropDuplicates(refs)
+        built = rows.select(subj.col.alias("subj"), obj.col.alias("obj"))
+        if subj.defined is None or obj.defined is None:
+            built = built.where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
+        if not row_distinct and not narrow:
             built = built.dropDuplicates(["subj", "obj"])
         return _PredBranch(pred_value, graph, built, distinct=True)
 
@@ -812,142 +806,6 @@ class MappingCompiler:
         except Exception:  # noqa: BLE001
             return False
         return not any(m in plan for m in self._HEAVY_PLAN_MARKERS)
-
-    def _rom_keyed(
-        self,
-        tm: TriplesMap,
-        raw_base: DataFrame,
-        doc_col: str | None,
-        rom: RefObjectMap,
-        subj: _TermExpr,
-        pred_value: str,
-        graph: str | None,
-    ) -> tuple[Callable[[DataFrame], _PredBranch], tuple[str, ...]] | None:
-        """Dedup pushdown through a RefObjectMap equi-join (J1):
-        ``(build(base), child-side columns it reads)``, or None when the
-        ROM does not qualify (value-intersection joins, non-native
-        subject maps). The build projects each side to (subject refs,
-        join keys), constructs the parent subject on the (small,
-        broadcastable) parent side, equi-joins, then dedups ONE narrow
-        (child refs, parent subject) projection — instead of
-        constructing both subjects for every join row and deduplicating
-        the full term strings. ``base`` is ``raw_base`` or a narrow
-        projection of it holding the returned columns, so the parent
-        subject compiled here against ``raw_base`` reads the same
-        columns there."""
-        parent_tm = self.doc.triples_maps[rom.parent_triples_map]
-        ls, pls = tm.logical_source, parent_tm.logical_source
-        conds = rom.join_conditions
-        if not conds:
-            return None
-        if ls == pls and all(jc.child_ref == jc.parent_ref for jc in conds):
-            # self-join-eliminated case (when provably sound — unique
-            # shared ref + non-null proof, see _selfjoin_eliminable):
-            # parent subject is computable on the child row — an
-            # ordinary scalar pushdown pair over the ref-bearing rows
-            if not self._selfjoin_eliminable(ls, pls, conds):
-                return None  # real cross-row join: generic _rom_pairs path
-            nn_cols = self._elim_notnull_cols(conds, ls, doc_col)
-            if nn_cols is None:
-                return None
-            psubj = self._compile_term_map(parent_tm.subject_map, raw_base, doc_col)
-            if psubj.is_array or psubj.refs is None:
-                return None
-
-            def build_eliminated(base: DataFrame) -> _PredBranch:
-                for jc in conds:
-                    base = base.where(self._ref_notnull(jc.child_ref, ls, doc_col))
-                return self._keyed_branch(
-                    base, subj, psubj, pred_value, graph, self._unique_key(tm)
-                )
-
-            needs = set(subj.refs or ()) | set(psubj.refs) | set(nn_cols)
-            return build_eliminated, tuple(needs)
-        if not all(
-            self._is_simple_ref(jc.child_ref, ls)
-            and self._is_simple_ref(jc.parent_ref, pls)
-            for jc in conds
-        ):
-            return None
-        pdf, pdoc = self._parent_side(parent_tm)
-        psubj = self._compile_term_map(parent_tm.subject_map, pdf, pdoc)
-        if psubj.is_array or psubj.refs is None:
-            return None
-        ccols = [
-            MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
-            for jc in conds
-        ]
-        pcols = [
-            MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
-            for jc in conds
-        ]
-
-        def build_join(base: DataFrame) -> _PredBranch:
-            # differently-typed key columns join on their string forms
-            # (childValues.map(_.toString) intersection,
-            # MorphRDBDataTranslator.scala:170-180) — a raw == would make
-            # ANSI mode throw casting a non-numeric child value to the
-            # parent's numeric type
-            mixed = [
-                base.schema[cc].dataType != pdf.schema[pc].dataType
-                for cc, pc in zip(ccols, pcols)
-            ]
-            parent_j = pdf
-            if psubj.defined is not None:
-                parent_j = parent_j.where(psubj.defined)
-            parent_n = parent_j.select(
-                *[
-                    (F.col(pc).cast("string") if mixed[i] else F.col(pc)).alias(
-                        f"__pk{i}"
-                    )
-                    for i, pc in enumerate(pcols)
-                ],
-                psubj.col.alias("__psubj"),
-            )
-            if psubj.defined is None:
-                parent_n = parent_n.where(F.col("__psubj").isNotNull())
-            parent_n = parent_n.dropDuplicates(
-                [f"__pk{i}" for i in range(len(pcols))] + ["__psubj"]
-            )
-            crefs = list(dict.fromkeys(list(subj.refs or ()) + ccols))
-            child_n = base
-            if subj.defined is not None:
-                child_n = child_n.where(subj.defined)
-            child_n = child_n.select(*[F.col(c) for c in crefs])
-            on = None
-            for i, cc in enumerate(ccols):
-                ck = child_n[cc].cast("string") if mixed[i] else child_n[cc]
-                c = ck == parent_n[f"__pk{i}"]
-                on = c if on is None else (on & c)
-            pairs = child_n.join(parent_n, on, "inner").select(
-                *[child_n[c] for c in (subj.refs or ())], parent_n["__psubj"]
-            )
-            ukey = self._unique_key(tm)
-            if (
-                subj.injective
-                and ukey is not None
-                and set(ukey) <= set(subj.refs or ())
-            ):
-                # child rows unique on the key, the deduped parent side
-                # contributes distinct __psubj values per key match, and
-                # the injective child subject covers the key: join output
-                # pairs are distinct by construction — no dedup shuffle
-                pass
-            elif subj.injective:
-                # equal (child refs, parent subj) <=> equal (subj, obj):
-                # dedup the narrow join projection
-                pairs = pairs.dropDuplicates(list(subj.refs or ()) + ["__psubj"])
-            built = pairs.select(
-                subj.col.alias("subj"), F.col("__psubj").alias("obj")
-            )
-            if subj.defined is None:
-                built = built.where(F.col("subj").isNotNull())
-            if not subj.injective:
-                # one term-level dedup instead of narrow + term double shuffle
-                built = built.dropDuplicates(["subj", "obj"])
-            return _PredBranch(pred_value, graph, built, distinct=True)
-
-        return build_join, tuple(set(subj.refs or ()) | set(ccols))
 
     # ------------------------------------------------------------------
     # source resolution
@@ -1261,72 +1119,47 @@ class MappingCompiler:
     # RefObjectMap joins (J1-J5)
     # ------------------------------------------------------------------
 
-    def _ref_object_branches(
-        self, tm: TriplesMap, base: DataFrame, pom, rom: RefObjectMap
-    ) -> list[DataFrame]:
-        parent_tm = self.doc.triples_maps[rom.parent_triples_map]
-        pred_terms = []
-        for pm in pom.predicate_maps:
-            if pm.kind != CONSTANT:
-                raise NotImplementedError(
-                    "non-constant predicates on RefObjectMaps not supported"
-                )
-            pred_terms.append(
-                terms.make_term(
-                    pm.constant,
-                    pm.infer_term_type(),
-                    pm.datatype,
-                    pm.language,
-                    self.options.encode_unsafe_chars_in_uri,
-                )
+    def _rom_predicates(self, pom) -> list[str]:
+        """The predicate terms of a POM with RefObjectMaps, which must
+        all be constants."""
+        out = [self._constant_term_value(pm) for pm in pom.predicate_maps]
+        if any(p is None for p in out):
+            raise NotImplementedError(
+                "non-constant predicates on RefObjectMaps not supported"
             )
+        return out
 
-        rom_df = self._rom_pairs(tm, base, parent_tm, rom)  # (__row_id, __subj, __psubj)
-
-        branches: list[tuple[str, DataFrame]] = []
-        collections: list[tuple[str, tuple[DataFrame, DataFrame]]] = []
-        coll_tt = rom.collection_term_type()
-        for pred_term in pred_terms:
-            if coll_tt:
-                # J5: join results wrapped as one collection per child row.
-                # Member order: reference keeps parent-iteration order; a
-                # distributed engine has none, so members are sorted
-                # (deterministic; documented divergence).
-                grouped = (
-                    rom_df.groupBy("__row_id", "__subj")
-                    .agg(F.sort_array(F.collect_set("__psubj")).alias("members"))
-                    .select(
-                        F.col("__subj").alias("subj"),
-                        F.lit(pred_term).alias("pred"),
-                        F.col("members"),
-                    )
-                )
-                if self.options.dedup:
-                    grouped = dedup_collections(grouped)
-                collections.append(
-                    (pred_term, expand_collections_split(grouped, coll_tt))
-                )
-            else:
-                branches.append(
-                    (
-                        pred_term,
-                        rom_df.select(
-                            F.col("__subj").alias("subj"),
-                            F.col("__psubj").alias("obj"),
-                        ),
-                    )
-                )
-        return branches, collections
+    def _rom_collection(
+        self, pairs: DataFrame, pred_term: str, coll_tt: str
+    ) -> tuple[DataFrame, DataFrame]:
+        """J5: the join results of each child row wrapped as one
+        collection -> (head triples, chain triples). Member order: the
+        reference keeps parent-iteration order; a distributed engine has
+        none, so members are sorted (deterministic; documented
+        divergence)."""
+        grouped = (
+            pairs.groupBy("__row_id", "__subj")
+            .agg(F.sort_array(F.collect_set("__psubj")).alias("members"))
+            .select(
+                F.col("__subj").alias("subj"),
+                F.lit(pred_term).alias("pred"),
+                F.col("members"),
+            )
+        )
+        if self.options.dedup:
+            grouped = dedup_collections(grouped)
+        return expand_collections_split(grouped, coll_tt)
 
     def _parent_side(self, parent_tm: TriplesMap) -> tuple[DataFrame, str | None]:
+        """The parent's source, persisted once and shared by every
+        RefObjectMap of this compiler (S6)."""
         if parent_tm.name in self._parent_cache:
             return self._parent_cache[parent_tm.name]
         pdf, pdoc = self._resolved_base(parent_tm)
-        if self.options.cache_parents:
-            from ..plans.caching import cache
+        from ..plans.caching import cache
 
-            pdf = cache(pdf)
-            self._persisted.append(pdf)
+        pdf = cache(pdf)
+        self._persisted.append(pdf)
         self._parent_cache[parent_tm.name] = (pdf, pdoc)
         return pdf, pdoc
 
@@ -1337,158 +1170,194 @@ class MappingCompiler:
         while self._persisted:
             self._persisted.pop().unpersist()
 
-    def _rom_pairs(
-        self, tm: TriplesMap, base: DataFrame, parent_tm: TriplesMap, rom: RefObjectMap
-    ) -> DataFrame:
-        """Compute (child __row_id, child __subj, parent subject __psubj)
-        pairs for a RefObjectMap."""
-        ls, pls = tm.logical_source, parent_tm.logical_source
+    @staticmethod
+    def _psubj_term() -> _TermExpr:
+        """The parent subject column of :meth:`_rom_pairs` as a term of
+        its own: it is the term, so it is injective and, the pairs being
+        non-null, defined."""
+        return _TermExpr(
+            F.col("__psubj"), False, ("__psubj",), defined=F.lit(True),
+            injective=True,
+        )
 
-        # --- self-join elimination (same-source, same-reference join).
-        # Sound ONLY when (a) some shared reference is provably UNIQUE
-        # across source rows — the reference guards the same rewrite
-        # with xrr:uniqueRef (MorphBaseQueryOptimizer) — since otherwise
-        # two DIFFERENT rows with equal keys also join (round-5 fix: the
-        # unguarded rewrite dropped those cross-row pairs), and (b)
-        # every shared reference provably evaluates to a value on the
-        # row (a nothing-valued reference joins nothing in the value-
-        # intersection semantics). Anything not provable falls through
-        # to the real join below — always correct, just uneliminated.
-        if self._selfjoin_eliminable(ls, pls, rom.join_conditions):
-            _, doc_col = self._resolved_base(tm)
-            nns = [
-                self._ref_notnull(jc.child_ref, ls, doc_col)
-                for jc in rom.join_conditions
-            ]
-            if all(nn is not None for nn in nns):
-                pruned = base
-                for nn in nns:
-                    pruned = pruned.where(nn)
-                psubj = self._compile_term_map(
-                    parent_tm.subject_map, pruned, doc_col
-                )
-                if psubj.is_array:
-                    return pruned.select(
-                        "__row_id", "__subj",
-                        F.explode(psubj.col).alias("__psubj"),
-                    )
-                return pruned.select(
-                    "__row_id", "__subj", psubj.col.alias("__psubj")
-                ).where(F.col("__psubj").isNotNull())
+    def _rom_pairs(
+        self, tm: TriplesMap, child: DataFrame, keep: list[str], rom: RefObjectMap
+    ) -> DataFrame:
+        """The compiler's one RefObjectMap join: the ``keep`` columns of
+        each ``child`` row plus ``__psubj``, the subject of each parent
+        row it joins. The keyed consumer keeps the child subject's
+        source columns, the pooled and collection consumers
+        ``[__row_id, __subj]``. Three ways to the pairs:
+
+        * self-join elimination (AbstractQueryAtomicMongo
+          .mergeForInnerJoin:122-186 analogue), under
+          :meth:`_selfjoin_guards`: the parent subject is computed on
+          the child row itself;
+        * J1, plain-column conditions: an equi-join of the child's join
+          columns with the narrow parent projection (join columns,
+          subject) — SURVEY J1, child ⋈ parent.select(key, subject);
+        * J2/J3/J4, mixed-syntax paths: per-condition value-intersection
+          joins (explode both sides, never the Cartesian), intersected
+          across conditions per child row.
+
+        Keys compare as strings where their types differ
+        (childValues.map(_.toString) intersection,
+        MorphRDBDataTranslator.scala:170-180) — a raw == would make ANSI
+        mode throw casting a non-numeric child value to the parent's
+        numeric type."""
+        parent_tm = self.doc.triples_maps[rom.parent_triples_map]
+        ls, pls = tm.logical_source, parent_tm.logical_source
+        conds = rom.join_conditions
+        _, cdoc = self._resolved_base(tm)
+        guards = self._selfjoin_guards(tm, rom)
+        if guards is not None:
+            for nn in guards:
+                child = child.where(nn)
+            psubj = self._compile_term_map(parent_tm.subject_map, child, cdoc)
+            return self._subject_rows(child, psubj, keep)
 
         pdf, pdoc = self._parent_side(parent_tm)
         psubj = self._compile_term_map(parent_tm.subject_map, pdf, pdoc)
-        if psubj.is_array:
-            parent = pdf.withColumn("__psubj", F.explode(psubj.col))
-        else:
-            parent = pdf.withColumn("__psubj", psubj.col).where(
-                F.col("__psubj").isNotNull()
-            )
-
-        _, cdoc = self._resolved_base(tm)
-
-        conds = rom.join_conditions
-        simple = all(
-            self._is_simple_ref(jc.child_ref, ls) and self._is_simple_ref(jc.parent_ref, pls)
-            for jc in conds
-        )
-        if simple and conds:
-            # J1: multi-condition equi-join on raw columns (same-parent-row
-            # AND semantics, as in the generated SQL join)
-            on = None
-            child_j = base
-            parent_j = parent
+        if self._simple_join(tm, rom):
+            ckeys, pkeys, on = [], [], None
             for i, jc in enumerate(conds):
-                ccol = MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
-                pcol = MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
-                ck, pk = F.col(ccol), F.col(pcol)
-                if child_j.schema[ccol].dataType != parent_j.schema[pcol].dataType:
-                    # differently-typed key columns join on their string
-                    # forms (childValues.map(_.toString) intersection,
-                    # MorphRDBDataTranslator.scala:170-180) — a raw ==
-                    # would make ANSI mode throw casting a non-numeric
-                    # child value to the parent's numeric type
+                cc = MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
+                pc = MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
+                ck, pk = F.col(cc), F.col(pc)
+                if child.schema[cc].dataType != pdf.schema[pc].dataType:
                     ck, pk = ck.cast("string"), pk.cast("string")
-                child_j = child_j.withColumn(f"__ck{i}", ck)
-                parent_j = parent_j.withColumn(f"__pk{i}", pk)
-                c = child_j[f"__ck{i}"] == parent_j[f"__pk{i}"]
+                ckeys.append(ck.alias(f"__ck{i}"))
+                pkeys.append(pk.alias(f"__pk{i}"))
+                c = F.col(f"__ck{i}") == F.col(f"__pk{i}")
                 on = c if on is None else (on & c)
-            joined = child_j.join(parent_j, on, "inner")
-            return joined.select(
-                child_j["__row_id"].alias("__row_id"),
-                child_j["__subj"].alias("__subj"),
-                parent_j["__psubj"].alias("__psubj"),
+            parent = self._subject_rows(pdf, psubj, pkeys)
+            return (
+                child.select(*keep, *ckeys)
+                .join(parent, on, "inner")
+                .select(*keep, "__psubj")
             )
 
-        # J2/J3/J4: per-condition value-intersection joins, then intersect
-        # the (child row, parent subject) candidate sets across conditions.
-        per_cond: list[DataFrame] = []
+        rows = list(dict.fromkeys(["__row_id", *keep]))
+        parent = self._subject_rows(pdf, psubj, pdf.columns)
+        out = None
         for jc in conds:
-            cvals = self._ref_values(jc.child_ref, ls, base, cdoc)
+            cvals = self._ref_values(jc.child_ref, ls, child, cdoc)
             pvals = self._ref_values(jc.parent_ref, pls, parent, pdoc)
-            child_side = base.select(
-                "__row_id", "__subj", F.explode(cvals).alias("__jv")
-            )
+            child_side = child.select(*rows, F.explode(cvals).alias("__jv"))
             parent_side = parent.select(
                 F.explode(pvals).alias("__jv"), "__psubj"
             ).dropDuplicates(["__jv", "__psubj"])
             pairs = (
                 child_side.join(parent_side, "__jv", "inner")
-                .select("__row_id", "__subj", "__psubj")
-                .dropDuplicates(["__row_id", "__subj", "__psubj"])
+                .select(*rows, "__psubj")
+                .dropDuplicates([*rows, "__psubj"])
             )
-            per_cond.append(pairs)
-        out = per_cond[0]
-        for nxt in per_cond[1:]:
-            out = out.join(nxt, ["__row_id", "__subj", "__psubj"], "inner")
-        return out
+            out = pairs if out is None else out.join(pairs, [*rows, "__psubj"])
+        return out.select(*keep, "__psubj")
+
+    @staticmethod
+    def _subject_rows(df: DataFrame, subj: _TermExpr, keep) -> DataFrame:
+        """``keep`` plus the non-null subject ``__psubj`` of each row of
+        ``df``, one row per value of an array-valued subject."""
+        if subj.is_array:
+            return df.select(*keep, F.explode(subj.col).alias("__psubj"))
+        if subj.defined is not None:
+            return df.where(subj.defined).select(*keep, subj.col.alias("__psubj"))
+        return df.select(*keep, subj.col.alias("__psubj")).where(
+            F.col("__psubj").isNotNull()
+        )
+
+    def _rom_reads(self, tm: TriplesMap, rom: RefObjectMap) -> tuple[str, ...]:
+        """The child columns :meth:`_rom_pairs` reads besides the kept
+        ones: each join reference's input, plus the parent subject's
+        columns when the self-join is eliminated (every column when
+        they are not known) or the row id of a value-intersection
+        join."""
+        base, doc = self._resolved_base(tm)
+        ls = tm.logical_source
+        reads = tuple(
+            MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
+            if ls.formulation == "Column"
+            else doc
+            for jc in rom.join_conditions
+        )
+        if self._selfjoin_guards(tm, rom) is not None:
+            parent_tm = self.doc.triples_maps[rom.parent_triples_map]
+            refs = self._compile_term_map(parent_tm.subject_map, base, doc).refs
+            return reads + refs if refs is not None else tuple(base.columns)
+        if not self._simple_join(tm, rom):
+            return reads + ("__row_id",)
+        return reads
+
+    def _parent_unique(self, rom: RefObjectMap) -> bool:
+        """Does each child row join at most one parent subject: is the
+        parent unique on its join columns (catalog unique key or
+        xrr:uniqueRef, the rule of ``translate._distinct``), with a
+        scalar subject?"""
+        parent_tm = self.doc.triples_maps[rom.parent_triples_map]
+        pdf, pdoc = self._resolved_base(parent_tm)
+        return self._unique_on(
+            parent_tm, [jc.parent_ref for jc in rom.join_conditions]
+        ) and not self._compile_term_map(parent_tm.subject_map, pdf, pdoc).is_array
 
     def _is_simple_ref(self, ref: str, ls: LogicalSource) -> bool:
         if ls.formulation != "Column":
             return False
         return MixedSyntaxPath.parse(ref, "Column").is_simple_column
 
-    def _selfjoin_eliminable(self, ls, pls, conds) -> bool:
-        """Same-source same-reference ROM joins collapse to the child
-        row itself ONLY when some shared reference is provably unique
-        across rows (xrr:uniqueRef — the reference's own guard — or the
-        catalog's single-column unique-key hint); with a non-unique key
-        two different rows with equal keys also join."""
-        return (
-            ls == pls
-            and not ls.iterator
-            and bool(conds)
-            and all(jc.child_ref == jc.parent_ref for jc in conds)
-            and any(self._ref_unique(jc.child_ref, ls) for jc in conds)
+    def _simple_join(self, tm: TriplesMap, rom: RefObjectMap) -> bool:
+        """Are all join conditions plain columns on both sides (J1)?"""
+        pls = self.doc.triples_maps[rom.parent_triples_map].logical_source
+        return bool(rom.join_conditions) and all(
+            self._is_simple_ref(jc.child_ref, tm.logical_source)
+            and self._is_simple_ref(jc.parent_ref, pls)
+            for jc in rom.join_conditions
         )
 
-    def _elim_notnull_cols(self, conds, ls, doc_col) -> tuple[str, ...] | None:
-        """Source columns the elimination's non-null guards read, or
-        None when some guard is not cheaply expressible (the caller
-        then falls back to the real join)."""
-        cols: set[str] = set()
-        for jc in conds:
-            if self._ref_notnull(jc.child_ref, ls, doc_col) is None:
-                return None
-            if self._is_simple_ref(jc.child_ref, ls):
-                cols.add(
-                    MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
-                )
-            elif doc_col is not None:
-                cols.add(doc_col)
-        return tuple(cols)
+    def _selfjoin_guards(
+        self, tm: TriplesMap, rom: RefObjectMap
+    ) -> list[Column] | None:
+        """The row filters under which a RefObjectMap join collapses to
+        the child row itself, or None when it does not. Sound ONLY when
+        child and parent share the logical source, every condition is
+        childRef == parentRef, (a) the shared references are provably
+        unique across source rows — the reference guards the same
+        rewrite with xrr:uniqueRef (MorphBaseQueryOptimizer) — since
+        otherwise two DIFFERENT rows with equal keys also join, and (b)
+        every shared reference provably evaluates to a value on the row
+        (a nothing-valued reference joins nothing in the
+        value-intersection semantics): the returned filters. Anything
+        not provable takes the real join — always correct, just
+        uneliminated."""
+        ls = tm.logical_source
+        pls = self.doc.triples_maps[rom.parent_triples_map].logical_source
+        conds = rom.join_conditions
+        if not (
+            ls == pls
+            and not ls.iterator
+            and conds
+            and all(jc.child_ref == jc.parent_ref for jc in conds)
+            and self._unique_on(tm, [jc.child_ref for jc in conds])
+        ):
+            return None
+        _, doc = self._resolved_base(tm)
+        guards = [self._ref_notnull(jc.child_ref, ls, doc) for jc in conds]
+        return None if any(g is None for g in guards) else guards
 
-    def _ref_unique(self, ref: str, ls: LogicalSource) -> bool:
-        """Is the join reference provably unique across source rows?
-        Either declared (xrr:uniqueRef — the reference's own guard for
-        self-join elimination) or, for table sources, the catalog's
-        unique-key hint covering exactly the referenced column."""
-        if ref in ls.unique_refs:
+    def _unique_on(self, tm: TriplesMap, refs: list[str]) -> bool:
+        """Are ``tm``'s source rows provably unique on the references
+        ``refs``: one of them declared (xrr:uniqueRef), or the catalog's
+        unique key covered by their plain columns?"""
+        ls = tm.logical_source
+        if any(r in ls.unique_refs for r in refs):
             return True
-        if ls.kind == "table" and not ls.iterator and self._is_simple_ref(ref, ls):
-            col = MixedSyntaxPath.parse(ref, "Column").referenced_column
-            return self.catalog.unique_keys.get(ls.value) == (col,)
-        return False
+        key = self._unique_key(tm)
+        cols = {
+            MixedSyntaxPath.parse(r, "Column").referenced_column
+            for r in refs
+            if self._is_simple_ref(r, ls)
+        }
+        return key is not None and set(key) <= cols
 
     def _ref_notnull(self, ref: str, ls: LogicalSource, doc_col: str | None):
         """Column proving 'this reference evaluates to at least one

@@ -1205,8 +1205,8 @@ class Graph:
         raise NotImplementedError
 
     def solutions(self, q: SelectQuery) -> DataFrame:
-        """The solution frame of a parsed SELECT, ASK or CONSTRUCT
-        query: one column per projected variable."""
+        """The solution frame of a parsed SELECT, ASK, CONSTRUCT or
+        DESCRIBE query: one column per projected (described) variable."""
         return sparql_select(self.fragment(q), q)
 
     def release(self) -> None:
@@ -1281,7 +1281,7 @@ class Graph:
             ]
             frag = self.fragment(SelectQuery([], Group(patterns=about)))
             return frag.where(F.col("subj").isin(iris) | F.col("obj").isin(iris))
-        bindings = sparql_select(self.fragment(q), q)
+        bindings = self.solutions(q)
         nodes = bindings.select(
             F.explode(F.array(*[F.col(v) for v in q.variables])).alias("n")
         )

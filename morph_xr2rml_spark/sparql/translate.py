@@ -220,7 +220,10 @@ def _covered_query(q: SelectQuery) -> bool:
     """Does the query's WHERE hold only triple patterns, FILTER and BIND,
     over the default graph, with no variable repeated in a pattern?"""
     w = q.where
-    if q.form not in ("SELECT", "ASK", "CONSTRUCT") or q.from_graphs or q.from_named:
+    if (
+        q.form not in ("SELECT", "ASK", "CONSTRUCT", "DESCRIBE")
+        or q.from_graphs or q.from_named
+    ):
         return False
     if (
         w.optionals or w.unions or w.graphs or w.values or w.exists
@@ -713,23 +716,19 @@ class _Translator:
         return {t[1:]: rep for t, rep in zip(spo, reps) if _is_var(t)}
 
     def describe(
-        self, tm: TriplesMap, bounds: dict[str, _Bound | None], nodes: tuple[str, ...]
+        self, tm: TriplesMap, pos: str, bound: _Bound, nodes: tuple[str, ...]
     ) -> list[tuple[_Branch, DataFrame]] | None:
-        """The (subj, pred, obj) rows of ``tm`` that mention one of
-        ``nodes``: for position 's' and 'o', the branches ``bounds``
-        keeps there (:func:`.virtual._bind`), restricted at it to the
-        nodes (the patterns ``<n> ?p ?o`` and ``?s ?p <n>``); each
-        branch with its frame. None when a bound branch is outside the
-        covered shapes."""
-        todo = []
-        for pos, bound in bounds.items():
-            if bound is not None:
-                bs = self.branches(tm, bound, _ANY_TRIPLE)
-                if bs is None:
-                    return None
-                todo += [(pos, b) for b in bs]
+        """The (subj, pred, obj) rows of ``tm`` with one of ``nodes`` at
+        position ``pos`` ('s' or 'o'): the branches ``bound`` keeps
+        there (:func:`.virtual._bind`), restricted at it to the nodes
+        (the pattern ``<n> ?p ?o`` or ``?s ?p <n>``); each branch with
+        its frame. None when a bound branch is outside the covered
+        shapes."""
+        bs = self.branches(tm, bound, _ANY_TRIPLE)
+        if bs is None:
+            return None
         out = []
-        for pos, b in todo:
+        for b in bs:
             q = _Query(self)
             reps = self.atom(q, b, {pos: nodes})
             if reps is not None:

@@ -76,7 +76,7 @@ from ..mapping.model import (
     TriplesMap,
 )
 from ..sources.catalog import RawSource, SourceCatalog
-from .bgp import Graph, _parsed, select_over_bindings, sparql_select
+from .bgp import Graph, _parsed, select_over_bindings
 from .parse import Group, Path, SelectQuery, TriplePattern, _is_var
 from .results import parse_term
 
@@ -1346,7 +1346,7 @@ class VirtualGraph(Graph):
         named = {t for t in q.describe if not _is_var(t)}
         if not q.variables:
             return self._describe_nodes(sorted(named))
-        bindings = sparql_select(self.fragment(q), q)  # phase 1: virtual
+        bindings = self.solutions(q)  # phase 1: virtual
         nodes_df = bindings.select(
             F.explode(F.array(*[F.col(v) for v in q.variables])).alias("n")
         ).distinct()
@@ -1370,10 +1370,11 @@ class VirtualGraph(Graph):
         Each triples map is bound twice by the binder's can-emit check
         (:func:`_bind`): with the nodes as subjects and with the nodes
         as objects; a map neither binding keeps is never compiled.
-        Up to ``_ISIN_MAX`` nodes without a blank node, a map whose
-        bound branches the translator covers is not compiled either: its
-        rows come from key-filtered scans and joins
-        (:meth:`.translate._Translator.describe`).
+        Up to ``_ISIN_MAX`` nodes without a blank node, a binding whose
+        branches the translator covers is not compiled either: its rows
+        come from key-filtered scans and joins
+        (:meth:`.translate._Translator.describe`), and only the other
+        binding, if refused there, is compiled.
 
         Node-set restriction has two regimes: up to ``_ISIN_MAX`` nodes
         the exact subj/obj filter is a literal isin() and the inverted
@@ -1453,7 +1454,7 @@ class VirtualGraph(Graph):
             if frame is not None:
                 frames.append(node_restrict(frame, cols))
 
-        # a map whose bound branches the translator covers answers from
+        # a binding whose branches the translator covers answers from
         # key-filtered source scans and joins (translate.py), never a
         # compile of the map; blank nodes have no key to filter on
         tx = None
@@ -1465,13 +1466,18 @@ class VirtualGraph(Graph):
         for tm in self.doc.triples_maps.values():
             as_subj = _bind(self.doc, tm, nodes, None, None, self.options)
             as_obj = _bind(self.doc, tm, None, None, nodes, self.options)
+            # each binding the translator covers is answered there; only
+            # a refused one goes on to the compile below
+            bounds = {"s": as_subj, "o": as_obj}
+            for pos, bound in bounds.items():
+                got = None if tx is None or bound is None else tx.describe(
+                    tm, pos, bound, tuple(nodes)
+                )
+                if got is not None:
+                    translated += got
+                    bounds[pos] = None
+            as_subj, as_obj = bounds["s"], bounds["o"]
             if as_subj is None and as_obj is None:
-                continue
-            got = None if tx is None else tx.describe(
-                tm, {"s": as_subj, "o": as_obj}, tuple(nodes)
-            )
-            if got is not None:
-                translated += got
                 continue
             if as_subj is None:
                 add(tm, as_obj, parent_filtered_catalog(tm, as_obj))

@@ -239,6 +239,39 @@ def test_describe_iri_is_translated_in_few_jobs(spark, relational):
         vg.release()
 
 
+def test_describe_compiles_only_the_refused_binding(spark, relational):
+    """``<line/2/1>`` is an ``rdf:first`` member of order 2's list: the
+    object binding of ``TMOrderLines`` needs the list cells, which the
+    translator refuses, while its subject binding (the head of order 2's
+    list) is translated. Only the refused binding is compiled, once."""
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        q = f"DESCRIBE {ORDER} <http://example.org/line/2/1>"
+        got = _rows(vg.describe(q))
+        assert got == _rows(sparql_describe(triples, q))
+        assert len(vg._compilers) == 1
+    finally:
+        vg.release()
+
+
+def test_two_phase_describe_where_is_translated(spark, relational):
+    """The WHERE of ``DESCRIBE ?c WHERE {...}`` is a basic graph
+    pattern: phase 1 answers it from joins of source scans, never the
+    fragment path."""
+    doc, catalog, triples = relational
+    vg = VirtualGraph(spark, doc, catalog)
+    calls = _fragment_calls(vg)
+    try:
+        q = ONT + 'DESCRIBE ?c WHERE { ?o ex:customer ?c . ?o ex:status "F" }'
+        got = _rows(vg.describe(q))
+        assert got == _rows(sparql_describe(triples, q))
+        assert got
+        assert calls == []
+    finally:
+        vg.release()
+
+
 def test_list_head_pattern_is_translated(spark, relational):
     doc, catalog, triples = relational
     q = ONT + "SELECT ?l WHERE { <http://example.org/order/2> ex:lines ?l }"

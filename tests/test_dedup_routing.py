@@ -1,5 +1,5 @@
 """Predicate-disjoint dedup routing (compiler/compile.py _assemble /
-_keyed_branch / _rom_keyed).
+_keyed_branch over a source scan or a RefObjectMap's _rom_pairs).
 
 The set-semantic views triples()/quads() may deduplicate a
 constant-predicate branch independently (with the dedup pushed below
@@ -15,7 +15,9 @@ the routing-relevant cases:
   * named graphs: multi-graph POMs stay pooled; quads() keyed per graph
   * non-injective construction (timestamp literal) keeps the
     post-construction dedup
-  * RefObjectMap narrow-join pushdown vs the constructed join
+  * RefObjectMap narrow-join pushdown vs the constructed join, with
+    the J1 parent side never deduplicated and the join's dedup elided only
+    when both sides are unique
 """
 
 import pytest
@@ -323,6 +325,75 @@ def test_unique_key_elides_rom_join_dedup(spark):
         ("<http://example.org/c/1>", "<http://example.org/p/10>"),
         ("<http://example.org/c/2>", "<http://example.org/p/10>"),
     ]
+
+
+ROM_TTL = PREFIX + """
+<#P> xrr:logicalSource [ rr:tableName "parent"; xrr:referenceFormulation xrr:Column ];
+  rr:subjectMap [ rr:template "http://example.org/p/{pid}" ] .
+<#C> xrr:logicalSource [ rr:tableName "child"; xrr:referenceFormulation xrr:Column ];
+  rr:subjectMap [ rr:template "http://example.org/c/{cid}" ];
+  rr:predicateObjectMap [
+      rr:predicate ex:ref;
+      rr:objectMap [ rr:parentTriplesMap <#P>;
+                     rr:joinCondition [ rr:child "fk"; rr:parent "pid" ] ] ] .
+"""
+
+
+def _plan_nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _aggregates(df) -> tuple[int, int]:
+    """(Aggregates in the optimized plan, Aggregates on the parent side
+    of a join — the side that outputs the parent subject)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    total = sum(n.nodeName() == "Aggregate" for n in _plan_nodes(plan))
+    parent = 0
+    for n in _plan_nodes(plan):
+        if n.nodeName() != "Join":
+            continue
+        for i in range(n.children().size()):
+            side = n.children().apply(i)
+            if "__psubj" in side.output().toString():
+                parent += sum(
+                    m.nodeName() == "Aggregate" for m in _plan_nodes(side)
+                )
+    return total, parent
+
+
+def test_unique_parent_is_never_deduplicated(spark):
+    # a parent registered unique on its join column needs no dedup of
+    # its side; the duplicate child rows still collapse exactly
+    child = spark.createDataFrame(
+        [(1, 10), (1, 10), (2, 10), (3, 99)], "cid int, fk int"
+    )
+    parent = spark.createDataFrame([(10,), (20,)], "pid int")
+    tables = {"child": child, "parent": parent}
+    uk = {"parent": ["pid"]}
+    got = _routed_equals_pool(spark, ROM_TTL, tables, unique_keys=uk)
+    assert got == [
+        ("<http://example.org/c/1>", "<http://example.org/ref>", "<http://example.org/p/10>"),
+        ("<http://example.org/c/2>", "<http://example.org/ref>", "<http://example.org/p/10>"),
+    ]
+    total, on_parent = _aggregates(_triples(spark, ROM_TTL, tables, unique_keys=uk).triples())
+    assert total == 1 and on_parent == 0  # the child side's narrow dedup
+
+
+def test_unique_both_sides_elides_every_rom_dedup(spark):
+    # child unique on cid under an injective subject, parent unique on
+    # its join column: one parent subject per child row, so the join's
+    # pairs are distinct and the branch has no Aggregate at all
+    child = spark.createDataFrame([(1, 10), (2, 10), (3, 99)], "cid int, fk int")
+    parent = spark.createDataFrame([(10,), (20,)], "pid int")
+    tables = {"child": child, "parent": parent}
+    uk = {"child": ["cid"], "parent": ["pid"]}
+    got = _routed_equals_pool(spark, ROM_TTL, tables, unique_keys=uk)
+    assert len(got) == 2
+    total, _ = _aggregates(_triples(spark, ROM_TTL, tables, unique_keys=uk).triples())
+    assert total == 0
 
 
 def test_keyed_plan_shape(spark):
