@@ -356,17 +356,21 @@ class MappingCompiler:
         graphs; rr:class triples into subjectMap graphs; no graphs =>
         default graph.
 
-        With ``collect_keyed`` (the set-semantic assembly path),
-        branches whose predicate is a compile-time constant under a
-        single constant graph are returned as `_PredBranch` records
-        instead of joining the pooled dedup; scalar-native term pairs
-        additionally dedup on their referenced source columns BEFORE
-        term construction (dedup pushdown — the narrow projection
-        shuffles instead of the constructed term strings)."""
+        Each branch (a class triple, an object map, a RefObjectMap or a
+        collection) picks its consumer by one rule, ``route``. With
+        ``collect_keyed`` (the set-semantic assembly path), a branch
+        whose predicate is a constant under a single constant graph,
+        with scalar subject and object terms of known source columns,
+        is *keyed*: a `_PredBranch` built by :meth:`_keyed_branch` over
+        the shared narrow base (or over its :meth:`_rom_pairs`), which
+        dedups on the referenced source columns BEFORE term
+        construction (dedup pushdown — the narrow projection shuffles
+        instead of the constructed term strings). Otherwise it goes to
+        the pooled explode, the routed RefObjectMap frame or the
+        collection path."""
         tm = self.doc.triples_maps[tm_name]
         base, doc_col = self._resolved_base(tm)
         raw_base = base  # pre-projection view for dedup pushdown
-        ukey = self._unique_key(tm)
 
         subj = self._compile_term_map(tm.subject_map, base, doc_col)
         if subj.is_array:
@@ -420,11 +424,12 @@ class MappingCompiler:
             )
 
         keyed: list[_PredBranch] = []
-        # deferred keyed-branch builders: each takes the (possibly
-        # persisted) shared narrow base and returns a _PredBranch or
-        # None. Collected first so the source-materialization decision
-        # can see every branch's column needs (see end of method).
-        keyed_requests: list = []
+        # keyed branches as (pred, graph, object term, RefObjectMap or
+        # None), built at the end of the method over the shared narrow
+        # base, once every branch's column needs are known
+        keyed_requests: list[
+            tuple[str, str | None, _TermExpr, RefObjectMap | None]
+        ] = []
         pool_preds: set[str] = set()
         has_unknown_pred = False
 
@@ -436,41 +441,40 @@ class MappingCompiler:
             else:
                 pool_preds.add(v)
 
-        subj_keyable = (
-            collect_keyed and not subj.is_array and subj.refs is not None
-        )
+        def route(
+            pred: str | None, graphs: list | None, obj: _TermExpr,
+            rom: RefObjectMap | None = None,
+        ) -> bool:
+            """The routing rule: record the branch as keyed and return
+            True when its predicate is a constant, its graph a single
+            constant, and both terms are scalar with known source
+            columns, at least one (a constant/constant pair stays
+            pooled)."""
+            if not (
+                collect_keyed
+                and pred is not None
+                and graphs is not None
+                and len(graphs) == 1
+                and not (subj.is_array or obj.is_array)
+                and None not in (subj.refs, obj.refs)
+                and (subj.refs or obj.refs)
+            ):
+                return False
+            keyed_requests.append((pred, graphs[0], obj, rom))
+            return True
 
         # rdf:type triples per rr:class (P8), into the subject graphs
         type_pred = f"<{terms.RDF_TYPE}>"
         subj_const_graphs = self._maybe_constant_graphs(tm.subject_map, None)
         for class_uri in tm.subject_map.class_uris:
-            if (
-                subj_keyable
-                and subj.refs  # non-empty: degenerate const/const stays pooled
-                and subj_const_graphs is not None
-                and len(subj_const_graphs) == 1
-            ):
-                obj_c = _TermExpr(
-                    F.lit(terms.make_iri(class_uri, False)), False, (),
-                    defined=F.lit(True), injective=True,
-                )
-                keyed_requests.append(
-                    (
-                        lambda b, o=obj_c, g=subj_const_graphs[0]: (
-                            self._keyed_branch(b, subj, o, type_pred, g, ukey)
-                        ),
-                        tuple(subj.refs),
-                    )
-                )
+            cls = self._constant_expr(terms.make_iri(class_uri, False))
+            if route(type_pred, subj_const_graphs, cls):
                 continue
             pool_preds.add(type_pred)
             pair_arrays.append(
                 with_graphs(
                     F.array(
-                        F.struct(
-                            F.lit(type_pred).alias("p"),
-                            F.lit(terms.make_iri(class_uri, False)).alias("o"),
-                        )
+                        F.struct(F.lit(type_pred).alias("p"), cls.col.alias("o"))
                     ),
                     graph_array(subj_graphs),
                 )
@@ -479,69 +483,41 @@ class MappingCompiler:
         collection_jobs = []
         for pom in tm.predicate_object_maps:
             pom_const_graphs = self._maybe_constant_graphs(tm.subject_map, pom)
-            # lazily materialized pooled-path expressions (only branches
-            # that actually stay in the pool pay the column plumbing)
-            _graphs_col: list[Column] = []
-            _pred_mats: dict[int, _TermExpr] = {}
-
-            def pooled_graphs(pom=pom, _graphs_col=_graphs_col) -> Column:
-                if not _graphs_col:
-                    pom_graphs = [
+            # pooled-path columns, materialized on first use (only
+            # branches that stay in the pool pay the column plumbing)
+            pooled_graphs = functools.cache(
+                lambda: graph_array(
+                    subj_graphs
+                    + [
                         materialize(self._compile_term_map(gm, base, doc_col))
                         for gm in pom.graph_maps
                     ]
-                    _graphs_col.append(graph_array(subj_graphs + pom_graphs))
-                return _graphs_col[0]
-
-            def pooled_pred(
-                i: int, pm: TermMap, _pred_mats=_pred_mats
-            ) -> _TermExpr:
-                if i not in _pred_mats:
-                    _pred_mats[i] = materialize(
-                        self._compile_term_map(pm, base, doc_col)
-                    )
-                return _pred_mats[i]
-
+                )
+            )
+            pooled_pred = functools.cache(
+                lambda pm: materialize(self._compile_term_map(pm, base, doc_col))
+            )
             for om in pom.object_maps:
                 coll_tt = om.collection_term_type()
                 if coll_tt:
                     const_graphs = self._constant_graph_terms(tm.subject_map, pom)
                     obj = materialize(self._compile_term_map(om, base, doc_col))
-                    for i, pm in enumerate(pom.predicate_maps):
+                    for pm in pom.predicate_maps:
                         note_pool_pred(pm)  # collection heads stay pooled
                         collection_jobs.append(
-                            (pooled_pred(i, pm), obj, coll_tt, const_graphs)
+                            (pooled_pred(pm), obj, coll_tt, const_graphs)
                         )
                     continue
                 obj_expr = self._compile_term_map(om, base, doc_col)
-                obj_mat: list[_TermExpr] = []
-                for i, pm in enumerate(pom.predicate_maps):
-                    pv = self._constant_term_value(pm)
-                    if (
-                        subj_keyable
-                        and pv is not None
-                        and not obj_expr.is_array
-                        and obj_expr.refs is not None
-                        and (subj.refs or obj_expr.refs)
-                        and pom_const_graphs is not None
-                        and len(pom_const_graphs) == 1
-                    ):
-                        keyed_requests.append(
-                            (
-                                lambda b, o=obj_expr, p=pv, g=pom_const_graphs[0]: (
-                                    self._keyed_branch(b, subj, o, p, g, ukey)
-                                ),
-                                tuple(set(subj.refs) | set(obj_expr.refs)),
-                            )
-                        )
+                pooled_obj = functools.cache(lambda e=obj_expr: materialize(e))
+                for pm in pom.predicate_maps:
+                    if route(self._constant_term_value(pm), pom_const_graphs, obj_expr):
                         continue
                     note_pool_pred(pm)
-                    if not obj_mat:
-                        obj_mat.append(materialize(obj_expr))
+                    obj = pooled_obj()  # materialized before the predicate
                     pair_arrays.append(
                         with_graphs(
-                            self._pairs(pooled_pred(i, pm), obj_mat[0]),
-                            pooled_graphs(),
+                            self._pairs(pooled_pred(pm), obj), pooled_graphs()
                         )
                     )
 
@@ -566,32 +542,18 @@ class MappingCompiler:
                 continue
             const_graphs = self._constant_graph_terms(tm.subject_map, pom)
             pred_terms = self._rom_predicates(pom)
+            routed = collect_keyed and len(const_graphs) == 1
+            psubj = self._psubj_term()
             for rom in pom.ref_object_maps:
-                routed = collect_keyed and len(const_graphs) == 1
                 coll_tt = rom.collection_term_type()
-                if routed and subj_keyable and not coll_tt:
-                    # the join reads the shared narrow base (see end of
-                    # method); its output is unique per child row only
-                    # when each child row joins one parent subject
-                    rom_key = ukey if self._parent_unique(rom) else None
-                    keep = sorted(set(subj.refs))
-                    reads = tuple(keep) + self._rom_reads(tm, rom)
-                    for p in pred_terms:
-                        keyed_requests.append(
-                            (
-                                lambda b, p=p, g=const_graphs[0], rom=rom,
-                                k=rom_key, keep=keep: (
-                                    self._keyed_branch(
-                                        self._rom_pairs(tm, b, keep, rom),
-                                        subj, self._psubj_term(), p, g, k,
-                                    )
-                                ),
-                                reads,
-                            )
-                        )
-                    continue
-                pairs = self._rom_pairs(tm, base, ["__row_id", "__subj"], rom)
+                pairs = None
                 for p in pred_terms:
+                    if not coll_tt and route(p, const_graphs, psubj, rom):
+                        continue
+                    if pairs is None:
+                        pairs = self._rom_pairs(
+                            tm, base, ["__row_id", "__subj"], rom
+                        )
                     if coll_tt:
                         pool_preds.add(p)  # heads stay pooled
                         add_collection(
@@ -639,21 +601,30 @@ class MappingCompiler:
         # analogue of a checkpointed stage — and point every keyed
         # branch at it.
         if keyed_requests:
+            keep = sorted(set(subj.refs))
             shared = raw_base
             if (
                 len(keyed_requests) > 1
                 and not self._source_already_cached(tm)
                 and not self._cheap_rescan(raw_base)
             ):
-                needed = sorted(
-                    {c for _b, cols in keyed_requests for c in cols}
-                )
+                needed = set(keep)
+                for _p, _g, obj, rom in keyed_requests:
+                    needed |= set(
+                        obj.refs if rom is None else self._rom_reads(tm, rom)
+                    )
                 from ..plans.caching import cache
 
-                shared = cache(raw_base.select(*needed))
+                shared = cache(raw_base.select(*sorted(needed)))
                 self._persisted.append(shared)
-            for builder, _cols in keyed_requests:
-                keyed.append(builder(shared))
+            for pred, graph, obj, rom in keyed_requests:
+                rows, distinct = shared, self.rows_distinct(tm, subj, obj)
+                if rom is not None:
+                    rows = self._rom_pairs(tm, shared, keep, rom)
+                    distinct = distinct and self.joins_one_parent(rom)
+                keyed.append(
+                    self._keyed_branch(rows, subj, obj, pred, graph, distinct)
+                )
 
         return branches, chain_branches, keyed, pool_preds, has_unknown_pred
 
@@ -705,65 +676,68 @@ class MappingCompiler:
             self.options.encode_unsafe_chars_in_uri,
         )
 
-    def _unique_key(self, tm: TriplesMap) -> tuple[str, ...] | None:
-        """Columns the TM's source rows are provably unique on (catalog
-        primary-key hint), or None. An iterator multiplies rows, so the
-        hint only holds for non-iterator table sources."""
+    def unique_keys(self, tm: TriplesMap) -> tuple[tuple[str, ...], ...]:
+        """The column sets ``tm``'s source rows are provably unique on:
+        the catalog's unique key (a table source with no iterator, which
+        would multiply rows) and each plain-column xrr:uniqueRef."""
         ls = tm.logical_source
-        if ls.kind != "table" or ls.iterator:
-            return None
-        return self.catalog.unique_keys.get(ls.value)
+        key = None
+        if ls.kind == "table" and not ls.iterator:
+            key = self.catalog.unique_keys.get(ls.value)
+        return ((key,) if key else ()) + tuple(
+            (c,) for r in ls.unique_refs if (c := self._plain_column(r, ls))
+        )
+
+    def rows_distinct(self, tm: TriplesMap, *exprs: _TermExpr) -> bool:
+        """Do distinct rows of ``tm``'s source emit distinct tuples of
+        the terms ``exprs``: does one injective term cover a column set
+        the rows are unique on (:meth:`unique_keys`), or do all of them,
+        injective, cover one together?"""
+        refs = [set(e.refs or ()) for e in exprs]
+        every = all(e.injective for e in exprs)
+        return any(
+            (every and set(k) <= set().union(*refs))
+            or any(e.injective and set(k) <= r for e, r in zip(exprs, refs))
+            for k in self.unique_keys(tm)
+        )
 
     def _keyed_branch(
         self,
-        raw_base: DataFrame,
+        rows: DataFrame,
         subj: _TermExpr,
         obj: _TermExpr,
         pred_value: str,
         graph: str | None,
-        ukey: tuple[str, ...] | None = None,
-    ) -> _PredBranch | None:
-        """Dedup-pushdown branch over ``raw_base`` (a source scan, or
-        the :meth:`_rom_pairs` of a RefObjectMap, whose parent subject
-        is the injective term ``__psubj``). One of three regimes:
+        distinct: bool,
+    ) -> _PredBranch:
+        """Dedup-pushdown branch over ``rows`` (a source scan, or the
+        :meth:`_rom_pairs` of a RefObjectMap, whose parent subject is
+        the injective term ``__psubj``). One of three regimes:
 
-        * elide: the rows are unique on ``ukey`` (catalog primary-key
-          hint) and an injective side covers it, so the (subj, obj)
-          pairs are distinct per row — no shuffle at all, the plan a
+        * elide: ``distinct`` rows emit distinct (subj, obj) pairs
+          (:meth:`rows_distinct`) — no shuffle at all, the plan a
           per-key source table deserves;
         * narrow: both sides injective, so equal refs <=> equal terms
           and the dedup of the narrow refs projection IS the triple-set
           dedup, shuffling raw source values instead of term strings;
         * term: a non-injective construction dedups on the terms (a
           preceding refs dedup would be a second full shuffle of the
-          same rows — measured one extra wide stage per branch).
-
-        Returns None when no source columns are referenced (degenerate
-        constant/constant pair — left in the pool)."""
-        refs = sorted(set(subj.refs or ()) | set(obj.refs or ()))
-        if not refs:
-            return None
+          same rows — measured one extra wide stage per branch)."""
+        refs = sorted(set(subj.refs) | set(obj.refs))
         # definedness filter BEFORE the narrow dedup: it references only
         # raw columns, so it pushes to the scan; filtering on the
         # constructed term would drag the whole construction expression
         # below the dedup and evaluate it once per pre-dedup row
-        rows = raw_base
         for cond in (subj.defined, obj.defined):
             if cond is not None:
                 rows = rows.where(cond)
-        keyset = set(ukey) if ukey else None
-        row_distinct = keyset is not None and keyset <= set(refs) and (
-            (subj.injective and obj.injective)
-            or (subj.injective and keyset <= set(subj.refs or ()))
-            or (obj.injective and keyset <= set(obj.refs or ()))
-        )
-        narrow = not row_distinct and subj.injective and obj.injective
+        narrow = not distinct and subj.injective and obj.injective
         if narrow:
             rows = rows.select(*[F.col(c) for c in refs]).dropDuplicates(refs)
         built = rows.select(subj.col.alias("subj"), obj.col.alias("obj"))
         if subj.defined is None or obj.defined is None:
             built = built.where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
-        if not row_distinct and not narrow:
+        if not distinct and not narrow:
             built = built.dropDuplicates(["subj", "obj"])
         return _PredBranch(pred_value, graph, built, distinct=True)
 
@@ -850,18 +824,17 @@ class MappingCompiler:
         member_tt, datatype, language = term_map.member_term_info()
 
         if term_map.kind == CONSTANT:
-            value = terms.make_term(
-                term_map.constant,
-                member_tt,
-                datatype,
-                language,
-                # constants are mapping-author IRIs: the reference passes them
-                # through translateSingleValue -> createIRI with the global flag
-                opts.encode_unsafe_chars_in_uri,
-            )
-            return _TermExpr(
-                F.lit(value), is_array=False, refs=(),
-                defined=F.lit(value is not None), injective=True,
+            return self._constant_expr(
+                terms.make_term(
+                    term_map.constant,
+                    member_tt,
+                    datatype,
+                    language,
+                    # constants are mapping-author IRIs: the reference passes
+                    # them through translateSingleValue -> createIRI with the
+                    # global flag
+                    opts.encode_unsafe_chars_in_uri,
+                )
             )
 
         if term_map.kind == COLUMN:
@@ -909,6 +882,15 @@ class MappingCompiler:
             return _TermExpr(udfs.make_array_udf(evaluator)(*args), is_array=True)
 
         raise ValueError(f"unknown term map kind {term_map.kind}")
+
+    @staticmethod
+    def _constant_expr(value: str | None) -> _TermExpr:
+        """The term ``value`` of a constant map: it reads no source
+        column, so it is injective."""
+        return _TermExpr(
+            F.lit(value), is_array=False, refs=(),
+            defined=F.lit(value is not None), injective=True,
+        )
 
     def _field_type(self, df: DataFrame, column: str) -> T.DataType:
         for f in df.schema.fields:
@@ -1030,9 +1012,6 @@ class MappingCompiler:
             else:
                 parts.append(F.lit(part))
         value = F.concat(*parts) if len(parts) > 1 else parts[0]
-        if member_tt == terms.TERM_LITERAL and datatype is None and language is None:
-            # template output is a string; no runtime type to infer
-            pass
         if chain_free and member_tt == terms.TERM_IRI:
             term = F.concat(F.lit("<"), value, F.lit(">"))
         elif chain_free and member_tt == terms.TERM_BLANKNODE:
@@ -1192,7 +1171,9 @@ class MappingCompiler:
         * self-join elimination (AbstractQueryAtomicMongo
           .mergeForInnerJoin:122-186 analogue), under
           :meth:`_selfjoin_guards`: the parent subject is computed on
-          the child row itself;
+          the child row itself — always so with no join condition, which
+          R2RML (§8) allows only when both read the same logical source
+          (ValueError otherwise);
         * J1, plain-column conditions: an equi-join of the child's join
           columns with the narrow parent projection (join columns,
           subject) — SURVEY J1, child ⋈ parent.select(key, subject);
@@ -1200,11 +1181,7 @@ class MappingCompiler:
           joins (explode both sides, never the Cartesian), intersected
           across conditions per child row.
 
-        Keys compare as strings where their types differ
-        (childValues.map(_.toString) intersection,
-        MorphRDBDataTranslator.scala:170-180) — a raw == would make ANSI
-        mode throw casting a non-numeric child value to the parent's
-        numeric type."""
+        Keys of different types compare as strings (:meth:`join_columns`)."""
         parent_tm = self.doc.triples_maps[rom.parent_triples_map]
         ls, pls = tm.logical_source, parent_tm.logical_source
         conds = rom.join_conditions
@@ -1215,16 +1192,21 @@ class MappingCompiler:
                 child = child.where(nn)
             psubj = self._compile_term_map(parent_tm.subject_map, child, cdoc)
             return self._subject_rows(child, psubj, keep)
+        if not conds:
+            raise ValueError(
+                f"triples map {tm.name}: a RefObjectMap with no "
+                f"rr:joinCondition must have a parent ({parent_tm.name}) "
+                "that reads the same logical source"
+            )
 
         pdf, pdoc = self._parent_side(parent_tm)
         psubj = self._compile_term_map(parent_tm.subject_map, pdf, pdoc)
         if self._simple_join(tm, rom):
             ckeys, pkeys, on = [], [], None
-            for i, jc in enumerate(conds):
-                cc = MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
-                pc = MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
+            cols = self.join_columns(rom, child.schema, pdf.schema)
+            for i, (cc, pc, as_strings) in enumerate(cols):
                 ck, pk = F.col(cc), F.col(pc)
-                if child.schema[cc].dataType != pdf.schema[pc].dataType:
+                if as_strings:
                     ck, pk = ck.cast("string"), pk.cast("string")
                 ckeys.append(ck.alias(f"__ck{i}"))
                 pkeys.append(pk.alias(f"__pk{i}"))
@@ -1254,6 +1236,23 @@ class MappingCompiler:
             )
             out = pairs if out is None else out.join(pairs, [*rows, "__psubj"])
         return out.select(*keep, "__psubj")
+
+    @staticmethod
+    def join_columns(
+        rom: RefObjectMap, child: T.StructType, parent: T.StructType
+    ) -> list[tuple[str, str, bool]]:
+        """(child column, parent column, compare as strings) for each
+        plain-column join condition of ``rom`` over these schemas. Keys
+        of different types compare as strings (childValues.map(_.toString)
+        intersection, MorphRDBDataTranslator.scala:170-180): a raw ==
+        would make ANSI mode throw casting a non-numeric child value to
+        the parent's numeric type."""
+        out = []
+        for jc in rom.join_conditions:
+            cc = MixedSyntaxPath.parse(jc.child_ref, "Column").referenced_column
+            pc = MixedSyntaxPath.parse(jc.parent_ref, "Column").referenced_column
+            out.append((cc, pc, child[cc].dataType != parent[pc].dataType))
+        return out
 
     @staticmethod
     def _subject_rows(df: DataFrame, subj: _TermExpr, keep) -> DataFrame:
@@ -1289,28 +1288,38 @@ class MappingCompiler:
             return reads + ("__row_id",)
         return reads
 
-    def _parent_unique(self, rom: RefObjectMap) -> bool:
-        """Does each child row join at most one parent subject: is the
-        parent unique on its join columns (catalog unique key or
-        xrr:uniqueRef, the rule of ``translate._distinct``), with a
-        scalar subject?"""
+    def joins_one_parent(
+        self, rom: RefObjectMap, psubj: _TermExpr | None = None
+    ) -> bool:
+        """Does each child row join at most one parent subject: are the
+        parent's rows unique on its join references (or is the parent
+        row the child row, with no join condition), and is its subject
+        ``psubj`` (compiled over the parent's source when not given)
+        scalar?"""
         parent_tm = self.doc.triples_maps[rom.parent_triples_map]
-        pdf, pdoc = self._resolved_base(parent_tm)
-        return self._unique_on(
-            parent_tm, [jc.parent_ref for jc in rom.join_conditions]
-        ) and not self._compile_term_map(parent_tm.subject_map, pdf, pdoc).is_array
+        if psubj is None:
+            pdf, pdoc = self._resolved_base(parent_tm)
+            psubj = self._compile_term_map(parent_tm.subject_map, pdf, pdoc)
+        conds = rom.join_conditions
+        return not psubj.is_array and (
+            not conds or self._unique_on(parent_tm, [jc.parent_ref for jc in conds])
+        )
 
-    def _is_simple_ref(self, ref: str, ls: LogicalSource) -> bool:
+    @staticmethod
+    def _plain_column(ref: str, ls: LogicalSource) -> str | None:
+        """The column ``ref`` names when it is a plain column of a
+        Column-formulation source."""
         if ls.formulation != "Column":
-            return False
-        return MixedSyntaxPath.parse(ref, "Column").is_simple_column
+            return None
+        msp = MixedSyntaxPath.parse(ref, "Column")
+        return msp.referenced_column if msp.is_simple_column else None
 
     def _simple_join(self, tm: TriplesMap, rom: RefObjectMap) -> bool:
         """Are all join conditions plain columns on both sides (J1)?"""
         pls = self.doc.triples_maps[rom.parent_triples_map].logical_source
         return bool(rom.join_conditions) and all(
-            self._is_simple_ref(jc.child_ref, tm.logical_source)
-            and self._is_simple_ref(jc.parent_ref, pls)
+            self._plain_column(jc.child_ref, tm.logical_source)
+            and self._plain_column(jc.parent_ref, pls)
             for jc in rom.join_conditions
         )
 
@@ -1318,8 +1327,10 @@ class MappingCompiler:
         self, tm: TriplesMap, rom: RefObjectMap
     ) -> list[Column] | None:
         """The row filters under which a RefObjectMap join collapses to
-        the child row itself, or None when it does not. Sound ONLY when
-        child and parent share the logical source, every condition is
+        the child row itself, or None when it does not. With no join
+        condition over a shared logical source it always does, with no
+        filter (R2RML §8). Otherwise it is sound ONLY when child and
+        parent share the logical source, every condition is
         childRef == parentRef, (a) the shared references are provably
         unique across source rows — the reference guards the same
         rewrite with xrr:uniqueRef (MorphBaseQueryOptimizer) — since
@@ -1332,10 +1343,11 @@ class MappingCompiler:
         ls = tm.logical_source
         pls = self.doc.triples_maps[rom.parent_triples_map].logical_source
         conds = rom.join_conditions
+        if ls == pls and not conds:
+            return []
         if not (
             ls == pls
             and not ls.iterator
-            and conds
             and all(jc.child_ref == jc.parent_ref for jc in conds)
             and self._unique_on(tm, [jc.child_ref for jc in conds])
         ):
@@ -1346,18 +1358,14 @@ class MappingCompiler:
 
     def _unique_on(self, tm: TriplesMap, refs: list[str]) -> bool:
         """Are ``tm``'s source rows provably unique on the references
-        ``refs``: one of them declared (xrr:uniqueRef), or the catalog's
-        unique key covered by their plain columns?"""
+        ``refs``: one of them declared (xrr:uniqueRef, in any reference
+        syntax), or one of :meth:`unique_keys` covered by their plain
+        columns?"""
         ls = tm.logical_source
         if any(r in ls.unique_refs for r in refs):
             return True
-        key = self._unique_key(tm)
-        cols = {
-            MixedSyntaxPath.parse(r, "Column").referenced_column
-            for r in refs
-            if self._is_simple_ref(r, ls)
-        }
-        return key is not None and set(key) <= cols
+        cols = {self._plain_column(r, ls) for r in refs}
+        return any(set(k) <= cols for k in self.unique_keys(tm))
 
     def _ref_notnull(self, ref: str, ls: LogicalSource, doc_col: str | None):
         """Column proving 'this reference evaluates to at least one
@@ -1365,10 +1373,9 @@ class MappingCompiler:
         None when not cheaply expressible."""
         from ..functions.paths import simple_json_field
 
-        if self._is_simple_ref(ref, ls):
-            return F.col(
-                MixedSyntaxPath.parse(ref, "Column").referenced_column
-            ).isNotNull()
+        col = self._plain_column(ref, ls)
+        if col is not None:
+            return F.col(col).isNotNull()
         if ls.formulation == "JSONPath" and doc_col is not None:
             field = simple_json_field(ref)
             if field is not None:

@@ -262,7 +262,7 @@ class _Query:
 
     def scan(self, tm: TriplesMap) -> int:
         src = self.tx.catalog.raw_source(tm.logical_source)
-        self.items.append(_Scan(src.table, src.frame, self.tx.keys(tm)))
+        self.items.append(_Scan(src.table, src.frame, self.tx.compiler.unique_keys(tm)))
         return len(self.items) - 1
 
     def built(self, df: DataFrame) -> dict[str, _Built]:
@@ -478,13 +478,6 @@ class _Translator:
     def raw(self, tm: TriplesMap) -> DataFrame:
         return self.catalog.raw_source(tm.logical_source).frame
 
-    def keys(self, tm: TriplesMap) -> tuple[tuple[str, ...], ...]:
-        """The column sets the rows of ``tm``'s table are unique on: the
-        catalog's unique key and each plain-column xrr:uniqueRef."""
-        key = self.catalog.unique_keys.get(self.catalog.table_of(tm.logical_source))
-        refs = [(c,) for ref in tm.logical_source.unique_refs if (c := _column(ref))]
-        return tuple(([key] if key else []) + refs)
-
     # -- coverage -----------------------------------------------------------
 
     def _has(self, tm: TriplesMap, cols) -> bool:
@@ -608,27 +601,20 @@ class _Translator:
     # -- atoms --------------------------------------------------------------
 
     def _distinct(self, b: _Branch) -> bool:
-        """Do distinct rows of the branch's scan emit distinct triples?
-        The subject (or the object on the same row) renders injectively
-        from columns covering a unique key, and a RefObjectMap's parent
-        is unique on its join columns (a collection head is one row per
-        subject without that)."""
-        raw, keys = self.raw(b.tm), self.keys(b.tm)
+        """Do distinct rows of the branch's scan emit distinct triples,
+        by the compiler's rules (:meth:`MappingCompiler.rows_distinct`,
+        :meth:`MappingCompiler.joins_one_parent`)? A collection head is
+        one row per subject and join key."""
+        raw, c = self.raw(b.tm), self.compiler
         exprs = [self.term(b.tm.subject_map, raw)]
         if isinstance(b.obj, TermMap):
             exprs.append(self.term(b.obj, raw))
-        if not any(
-            e.injective and set(k) <= set(e.refs) for e in exprs for k in keys
-        ) and not (
-            len(exprs) == 2 and all(e.injective for e in exprs)
-            and any(set(k) <= set(exprs[0].refs) | set(exprs[1].refs) for k in keys)
-        ):
+        if not c.rows_distinct(b.tm, *exprs):
             return False
-        if isinstance(b.obj, (str, TermMap)) or b.obj.collection_term_type():
-            return True
-        pcols = {_column(jc.parent_ref) for jc in b.obj.join_conditions}
-        ptm = self.doc.triples_maps[b.obj.parent_triples_map]
-        return any(set(k) <= pcols for k in self.keys(ptm))
+        if isinstance(b.obj, RefObjectMap) and not b.obj.collection_term_type():
+            ptm = self.doc.triples_maps[b.obj.parent_triples_map]
+            return c.joins_one_parent(b.obj, self.term(ptm.subject_map, self.raw(ptm)))
+        return True
 
     def _parent(self, q: _Query, a: int, rom: RefObjectMap):
         """Join the parent scan of ``rom`` to scan ``a`` on its join
@@ -636,10 +622,8 @@ class _Translator:
         ptm = self.doc.triples_maps[rom.parent_triples_map]
         p = q.scan(ptm)
         child, parent = q.items[a].raw.schema, q.items[p].raw.schema
-        for jc in rom.join_conditions:
-            cc, pc = _column(jc.child_ref), _column(jc.parent_ref)
-            same = child[cc].dataType == parent[pc].dataType
-            q.eqs.append((a, cc, p, pc, "eq" if same else "str"))
+        for cc, pc, as_strings in self.compiler.join_columns(rom, child, parent):
+            q.eqs.append((a, cc, p, pc, "str" if as_strings else "eq"))
         return q.rep(ptm.subject_map, p)
 
     def _defined(self, q: _Query, *reps) -> None:

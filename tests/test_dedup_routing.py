@@ -15,6 +15,7 @@ the routing-relevant cases:
   * named graphs: multi-graph POMs stay pooled; quads() keyed per graph
   * non-injective construction (timestamp literal) keeps the
     post-construction dedup
+  * a catalog unique key or a declared xrr:uniqueRef eliding the dedup
   * RefObjectMap narrow-join pushdown vs the constructed join, with
     the J1 parent side never deduplicated and the join's dedup elided only
     when both sides are unique
@@ -245,6 +246,26 @@ def test_unique_key_elides_all_dedup_shuffles(spark):
         .toString()
     )
     assert "Deduplicate" not in plan and "Aggregate" not in plan
+
+
+def test_unique_ref_elides_dedup_like_a_catalog_key(spark):
+    """A declared xrr:uniqueRef is a row key for elision, the same rule
+    the rewriting-mode translator applies: no catalog key, and the
+    branch still has no Aggregate."""
+    df = spark.createDataFrame([(1, "x"), (2, "x"), (3, None)], "id int, v string")
+    ttl = PREFIX + """
+<#TM> xrr:logicalSource [ rr:tableName "t"; xrr:referenceFormulation xrr:Column;
+                          xrr:uniqueRef "id" ];
+  rr:subjectMap [ rr:template "http://example.org/s/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rr:column "v" ] ] .
+"""
+    got = _routed_equals_pool(spark, ttl, {"t": df})
+    assert got == [
+        ("<http://example.org/s/1>", "<http://example.org/v>", '"x"'),
+        ("<http://example.org/s/2>", "<http://example.org/v>", '"x"'),
+    ]
+    total, _ = _aggregates(_triples(spark, ttl, {"t": df}).triples())
+    assert total == 0
 
 
 def test_unique_key_noninjective_subject_keeps_dedup(spark):

@@ -8,6 +8,7 @@ tests pin that down against regressions.
 
 from __future__ import annotations
 
+import re
 import uuid
 
 import pytest
@@ -128,3 +129,71 @@ def test_ivf_probe_side_broadcast(spark):
     df = similarity.ivf_topk(corpus, queries, dim=64)
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
+
+
+
+def _plan_counts(plan: str) -> tuple[int, int]:
+    """(source scans, exchanges) of a formatted plan, each node counted
+    once by its id, so a cached relation read by several branches
+    counts once (as perfbench counts them)."""
+    nodes = dict(re.findall(r"^\((\d+)\) (\S+)", plan, re.M)).values()
+    scans = sum(n in ("Scan", "BatchScan", "FileScan", "LocalTableScan") for n in nodes)
+    return scans, sum(n in ("Exchange", "BroadcastExchange") for n in nodes)
+
+
+def test_kg_mapping_plan_bound(spark, tmp_path):
+    """The KG mapping compiled over three parquet tables: at most the 7
+    scans and 6 exchanges it takes today (a compiler change that adds a
+    scan or a shuffle fails here), and exactly the hand-written
+    triples (duplicate mention rows collapse)."""
+    import datetime
+
+    from morph_xr2rml_spark.pipeline.run import emit_triples
+
+    def parquet(name, rows, schema):
+        spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    pages = parquet(
+        "pages",
+        [(1, "http://a.example/x", "en", ts), (2, "http://b.example/y", "fr", ts)],
+        "page_id bigint, url string, lang string, warc_ts timestamp",
+    )
+    mentions = parquet(
+        "mentions",
+        [(1, "e1", 2), (1, "e1", 2), (1, "e2", 1), (2, "e1", 1)],
+        "page_id bigint, entity_id string, n_occurrences bigint",
+    )
+    entities = parquet(
+        "entities", [("e1", "Alpha"), ("e2", "Beta")], "entity_id string, label string"
+    )
+    triples = emit_triples(spark, pages, mentions, entities)
+    scans, exchanges = _plan_counts(plan_of(triples))
+    assert scans <= 7 and exchanges <= 6, (scans, exchanges)
+
+    page, ent = "<http://kg.example.org/page/{}>", "<http://kg.example.org/entity/{}>"
+    kg, schema = "<http://kg.example.org/ontology#{}>", "<http://schema.org/{}>"
+    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+    label = "<http://www.w3.org/2000/01/rdf-schema#label>"
+    integer = '"{}"^^<http://www.w3.org/2001/XMLSchema#integer>'
+    # timestamps render as java.sql.Timestamp.toString does, as in the reference
+    when = '"2024-01-02 03:04:05.0"^^<http://www.w3.org/2001/XMLSchema#dateTime>'
+    want = []
+    for pid, url, lang in ((1, "http://a.example/x", "en"), (2, "http://b.example/y", "fr")):
+        want += [
+            (page.format(pid), rdf_type, schema.format("WebPage")),
+            (page.format(pid), schema.format("url"), f"<{url}>"),
+            (page.format(pid), schema.format("inLanguage"), f'"{lang}"'),
+            (page.format(pid), schema.format("dateModified"), when),
+        ]
+    for pid, eid in ((1, "e1"), (1, "e2"), (2, "e1")):
+        want.append((page.format(pid), kg.format("mentions"), ent.format(eid)))
+    for pid, n in ((1, 2), (1, 1), (2, 1)):
+        want.append((page.format(pid), kg.format("mentionCount"), integer.format(n)))
+    for eid, name in (("e1", "Alpha"), ("e2", "Beta")):
+        want += [
+            (ent.format(eid), rdf_type, kg.format("Entity")),
+            (ent.format(eid), label, f'"{name}"'),
+        ]
+    assert sorted(map(tuple, triples.collect())) == sorted(want)

@@ -149,3 +149,73 @@ def test_undeclared_doc_source_falls_back_to_real_join(spark):
         (f"<{A}/a2>", f"<{B}/p>"),
         (f"<{A}/a2>", f"<{B}/q>"),
     ]
+
+
+NO_COND_TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix ex:  <http://example.org/> .
+
+<#P>
+    xrr:logicalSource [ rr:tableName "PARENT"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/b/{b}" ];
+    .
+
+<#C>
+    xrr:logicalSource [ rr:tableName "t"; xrr:referenceFormulation xrr:Column ];
+    rr:subjectMap [ rr:template "http://example.org/a/{a}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:rel;
+        rr:objectMap [ rr:parentTriplesMap <#P> ];
+    ];
+    .
+"""
+
+NO_COND_REL = "SELECT ?s ?o WHERE { ?s <http://example.org/rel> ?o }"
+
+
+@pytest.mark.parametrize("dedup", [True, False])
+def test_no_join_condition_builds_parent_subject_on_the_child_row(spark, dedup):
+    """R2RML §8: a RefObjectMap with no rr:joinCondition over the same
+    logical source takes the parent subject from the child row itself,
+    with no join and no uniqueness proof (x repeats here)."""
+    from morph_xr2rml_spark.compiler import CompileOptions
+    from morph_xr2rml_spark.sparql.virtual import VirtualGraph
+
+    doc = parse_mapping(NO_COND_TTL.replace('"PARENT"', '"t"'))
+    t = spark.createDataFrame([("a1", 1, "p"), ("a2", 1, "q")], "a string, x int, b string")
+    catalog = SourceCatalog(spark).register("t", t)
+    want = [(f"<{A}/a1>", f"<{B}/p>"), (f"<{A}/a2>", f"<{B}/q>")]
+    comp = MappingCompiler(spark, doc, catalog, CompileOptions(dedup=dedup))
+    try:
+        got = sorted((s, o) for s, p, o in (tuple(r) for r in comp.triples().collect()))
+    finally:
+        comp.release()
+    assert got == want
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        assert sorted(tuple(r) for r in vg.select(NO_COND_REL).collect()) == want
+    finally:
+        vg.release()
+
+
+def test_no_join_condition_over_another_source_is_rejected(spark):
+    """Over a different logical source the mapping is invalid R2RML: both
+    graphs raise a ValueError naming the triples map."""
+    from morph_xr2rml_spark.sparql.virtual import VirtualGraph
+
+    doc = parse_mapping(NO_COND_TTL.replace('"PARENT"', '"u"'))
+    catalog = (
+        SourceCatalog(spark)
+        .register("t", spark.createDataFrame([("a1", 1)], "a string, x int"))
+        .register("u", spark.createDataFrame([("p",)], "b string"))
+    )
+    comp = MappingCompiler(spark, doc, catalog)
+    with pytest.raises(ValueError, match="C: a RefObjectMap with no rr:joinCondition"):
+        comp.triples()
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        with pytest.raises(ValueError, match="C: a RefObjectMap with no rr:joinCondition"):
+            vg.select(NO_COND_REL).collect()
+    finally:
+        vg.release()
