@@ -204,8 +204,16 @@ class SparqlEndpoint:
                 self._run(params.get("query", [None])[0], dg, ng)
 
             def do_POST(self) -> None:  # noqa: N802
-                length = int(self.headers.get("Content-Length", "0"))
-                raw = self.rfile.read(length).decode("utf-8")
+                # a malformed request gets a 400, never a dropped
+                # connection (UnicodeDecodeError is a ValueError)
+                try:
+                    length = int(self.headers.get("Content-Length", "0"))
+                    if length < 0:
+                        raise ValueError(f"negative Content-Length {length}")
+                    raw = self.rfile.read(length).decode("utf-8")
+                except ValueError as e:
+                    self._respond(400, "text/plain", f"malformed request: {e}")
+                    return
                 ctype = self.headers.get("Content-Type", "")
                 if "application/sparql-query" in ctype:
                     q: str | None = raw

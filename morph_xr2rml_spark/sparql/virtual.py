@@ -904,23 +904,6 @@ class VirtualGraph(Graph):
         ls = tm.logical_source
         return None if ls.iterator else self.catalog.raw_source(ls)
 
-    def _rom_parent_reads(self, pruned: TriplesMap, table: str) -> bool:
-        """True when any retained RefObjectMap's parent triples map may
-        read ``table`` — pushdown must then be skipped, because the
-        filtered catalog entry would starve the parent side of the join
-        (a self-join ROM's parent rows rarely satisfy the child's
-        subject constraint). SQL-query parents are treated as 'may
-        read' (their table set is not statically known here)."""
-        parents = (
-            self.doc.triples_maps.get(rom.parent_triples_map)
-            for pom in pruned.predicate_object_maps
-            for rom in pom.ref_object_maps
-        )
-        return any(
-            ptm is None or self.catalog.table_of(ptm.logical_source) in (None, table)
-            for ptm in parents
-        )
-
     def _compile_tm(
         self,
         tm: TriplesMap,
@@ -940,6 +923,57 @@ class VirtualGraph(Graph):
         if frame is None or quads:
             return frame
         return frame.select("subj", "pred", "obj")
+
+    def _compile_bindings(
+        self,
+        tm: TriplesMap,
+        bindings: list[tuple[_Bound, list[tuple[str | None, Column | None]]]],
+        quads: bool = False,
+    ) -> DataFrame | None:
+        """The one compile of every binding a query gives ``tm``: each a
+        :class:`_Bound` with the scan filters it allows, as (table,
+        condition) pairs, None for a table the binding reads whole.
+
+        - The branches are the merged bound (:func:`_merge_bounds`; one
+          binding stays as it is), so the map is compiled, and its
+          source scanned, once per query: the reference's self-union
+          elimination (OR-ed conditions over one logical-source query).
+        - A table is filtered by the OR of the bindings' conditions on
+          it, and only when every binding filters it.
+        - A filter on the map's own table is dropped when a kept
+          RefObjectMap's parent may read that table. The filter replaces
+          the catalog entry, so the parent side of the join would be
+          starved too (a self-join's parent rows rarely satisfy the
+          child's key), and a SQL-query parent's tables are not known
+          statically."""
+        bound = (
+            bindings[0][0] if len(bindings) == 1
+            else _merge_bounds(tm, [b for b, _f in bindings])
+        )
+        conds: dict[str | None, list[Column | None]] = {}
+        for _b, pairs in bindings:
+            for table, cond in pairs:
+                conds.setdefault(table, []).append(cond)
+        own = self.catalog.table_of(tm.logical_source)
+        parents = (
+            self.doc.triples_maps.get(rom.parent_triples_map)
+            for _i, pom in bound.poms
+            for rom in pom.ref_object_maps
+        )
+        if own in conds and any(
+            ptm is None or self.catalog.table_of(ptm.logical_source) in (None, own)
+            for ptm in parents
+        ):
+            del conds[own]
+        catalog = self.catalog
+        for table, cs in conds.items():
+            if (
+                table is not None
+                and all(c is not None for c in cs)
+                and all(any(t == table for t, _c in f) for _b, f in bindings)
+            ):
+                catalog = catalog.filtered(table, functools.reduce(Column.__or__, cs))
+        return self._compile_tm(tm, bound, catalog, quads)
 
     @staticmethod
     def _residual(
@@ -1031,17 +1065,14 @@ class VirtualGraph(Graph):
         a subset of ``MappingCompiler.triples()`` sufficient to answer
         the query exactly.
 
-        Patterns that bind the same triples map without an
-        inverted-constant scan filter share ONE compilation of the
-        union of their prunings (persisted, so the source is scanned
-        once and each pattern's residual reads the cached fragment) —
-        the rewriting-mode twin of the reference's self-join
-        elimination over a shared logical-source query. Filtered
-        bindings compile individually for TABLE sources (a key-pruned
-        parquet scan is near-free) but fold into the shared compile for
-        DOCUMENT sources when an unfiltered binding forces the full
-        JSON parse anyway (the parse dominates; see the source-kind
-        A/B note at the compile-decision site below).
+        Each triples map the query's patterns bind is compiled once
+        (:meth:`_compile_bindings`): the union of the bindings' prunings,
+        over a scan filtered by the OR of their inverted constants when
+        every binding has one. When more than one pattern reads the
+        compile it is persisted, so the source is scanned once and each
+        pattern's residual reads the cached fragment — the
+        rewriting-mode twin of the reference's self-join elimination
+        over a shared logical-source query.
 
         View selection mirrors materialize-then-query usage: a query
         with no GRAPH pattern runs over the merged-triples view
@@ -1054,9 +1085,9 @@ class VirtualGraph(Graph):
         quads = dataset or self._has_graphs(q.where)
         prop = self._propagation_constraints(q, quads, dataset)
         frames: list[DataFrame] = []
-        # tm name -> [(pattern, graph ctx, binding, scan cond)]
+        # tm name -> [(pattern, graph ctx, binding, scan filters)]
         collected: dict[
-            str, list[tuple[TriplePattern, object, _Bound, Column | None]]
+            str, list[tuple[TriplePattern, object, _Bound, list]]
         ] = {}
         for gctx, tp in collect_patterns_g(q.where):
             if not quads:
@@ -1098,83 +1129,28 @@ class VirtualGraph(Graph):
                         # constrained)
                         _prop_scan_filter(src, pruned, tp, prop),
                     ))
-                    # the filter replaces the CATALOG entry, so a
-                    # RefObjectMap whose parent reads the same table
-                    # would see its parent side starved (a self-join
-                    # ROM's parent rows rarely satisfy the child's
-                    # subject constraint) — keep such maps unfiltered
-                    if cond is not None and self._rom_parent_reads(pruned, src.table):
-                        cond = None
-                collected.setdefault(tm.name, []).append((tp, gctx, bound, cond))
-        for tm_name, entries in collected.items():
-            tm = self.doc.triples_maps[tm_name]
-            # Which entries compile individually with their scan filter,
-            # and which fold into one shared compile? Source-kind-aware
-            # (measured A/B at sf0.01, warm):
-            # - TABLE sources: a filtered branch is a near-free
-            #   key-pruned parquet scan (typed PushedFilters), so
-            #   filtered branches always compile individually and only
-            #   the unfiltered ones share (folding everything regressed
-            #   the describe/join entries ~30%).
-            # - DOCUMENT sources: every branch re-parses the raw JSON,
-            #   which dominates — when an unfiltered binding forces the
-            #   full parse anyway, filtered branches fold into the one
-            #   shared compile instead of parsing the collection twice
-            #   (measured 3.2s -> 2.0s on the find()-source entry).
-            if tm.logical_source.kind == "table":
-                filtered = [e for e in entries if e[3] is not None]
-                shared = [e for e in entries if e[3] is None]
-            elif all(e[3] is not None for e in entries):
-                filtered, shared = entries, []
-            else:
-                filtered, shared = [], entries
-            # filtered entries with the SAME pruning and the SAME filter
-            # expression share one compile (e.g. two patterns over one
-            # map constrained by the same propagated variable —
-            # ``?t :alt ?a . ?t :alt ?b`` — would otherwise scan the
-            # filtered source once per pattern); expression-string
-            # equality is the grouping key, conservative but exact
-            fgroups: dict[tuple[str, str], list] = {}
-            for e in filtered:
-                key = (repr(e[2]), str(e[3]._jc))
-                fgroups.setdefault(key, []).append(e)
-            for group in fgroups.values():
-                _tp0, _g0, bound, cond = group[0]
-                if len(group) > 1:
-                    bound = _merge_bounds(tm, [b for _t, _g, b, _c in group])
-                table = self.catalog.table_of(tm.logical_source)
-                frame = self._compile_tm(
-                    tm, bound, self.catalog.filtered(table, cond), quads=quads
+                collected.setdefault(tm.name, []).append(
+                    (tp, gctx, bound, [] if cond is None else [(src.table, cond)])
                 )
-                if frame is None:
-                    continue
-                if len(group) > 1:
-                    frame = caching.cache(frame)
-                    self._persisted.append(frame)
-                for tp, gctx, _d, _c in group:
-                    frames.append(self._residual(frame, tp, gctx))
-            if not shared:
+        for tm_name, entries in collected.items():
+            frame = self._compile_bindings(
+                self.doc.triples_maps[tm_name],
+                [(b, f) for _tp, _g, b, f in entries],
+                quads,
+            )
+            if frame is None:
                 continue
-            if len(shared) == 1:
-                tp, gctx, bound, _cond = shared[0]
-                frame = self._compile_tm(tm, bound, self.catalog, quads=quads)
-                if frame is not None:
-                    frames.append(self._residual(frame, tp, gctx))
-                continue
-            merged = _merge_bounds(tm, [b for _tp, _g, b, _c in shared])
-            base = self._compile_tm(tm, merged, self.catalog, quads=quads)
-            if base is None:
-                continue
-            # register through the session cache registry (not a bare
-            # persist) so request-scoped release hooks — the endpoint's
-            # release_since at its request boundary — reclaim the block
-            # even when nothing calls VirtualGraph.release(); a
-            # long-lived serve_virtual otherwise leaks one cached frame
-            # per multi-pattern request
-            base = caching.cache(base)
-            self._persisted.append(base)
-            for tp, gctx, _d, _c in shared:
-                frames.append(self._residual(base, tp, gctx))
+            if len(entries) > 1:
+                # register through the session cache registry (not a bare
+                # persist) so request-scoped release hooks — the endpoint's
+                # release_since at its request boundary — reclaim the block
+                # even when nothing calls VirtualGraph.release(); a
+                # long-lived serve_virtual otherwise leaks one cached frame
+                # per multi-pattern request
+                frame = caching.cache(frame)
+                self._persisted.append(frame)
+            for tp, gctx, _b, _f in entries:
+                frames.append(self._residual(frame, tp, gctx))
         if not frames:
             schema = "subj string, pred string, obj string"
             if quads:
@@ -1373,16 +1349,21 @@ class VirtualGraph(Graph):
         Up to ``_ISIN_MAX`` nodes without a blank node, a binding whose
         branches the translator covers is not compiled either: its rows
         come from key-filtered scans and joins
-        (:meth:`.translate._Translator.describe`), and only the other
-        binding, if refused there, is compiled.
+        (:meth:`.translate._Translator.describe`).
 
-        Node-set restriction has two regimes: up to ``_ISIN_MAX`` nodes
-        the exact subj/obj filter is a literal isin() and the inverted
-        node KEYS push into the source scans as typed IN filters (a
-        k-node DESCRIBE reads O(k) rows); above it the node set rides
-        along as a broadcast frame and every restriction is a broadcast
-        LEFT SEMI join (one tiny hash table per executor instead of a
-        10k-element expression serialized into every task)."""
+        The bindings left are compiled once per map
+        (:meth:`_compile_bindings`, the rule ``fragment`` follows): the
+        subject binding filters the map's own source to the inverted
+        node keys, the object binding filters each RefObjectMap's
+        parent source (the parent subject IS the described object), and
+        a table is filtered only when every binding filters it. Up to
+        ``_ISIN_MAX`` nodes the keys push into the scans as typed IN
+        filters (a k-node DESCRIBE reads O(k) rows) and the exact
+        subj/obj restriction is a literal isin(); above it the node set
+        rides along as a broadcast frame, no key is pushed and the
+        restriction is a broadcast LEFT SEMI join (one tiny hash table
+        per executor instead of a 10k-element expression serialized
+        into every task)."""
         if not nodes:
             return self.spark.createDataFrame(
                 [], "subj string, pred string, obj string"
@@ -1397,62 +1378,25 @@ class VirtualGraph(Graph):
             )
         )
 
-        def node_restrict(frame: DataFrame, cols=("subj", "obj")) -> DataFrame:
-            """Exact 'one of cols is a node' restriction in the regime's
+        def node_restrict(frame: DataFrame) -> DataFrame:
+            """Exact 'subj or obj is a node' restriction in the regime's
             idiom; the final dropDuplicates dedups rows matched by both
             columns in the semi-join regime."""
             if use_keys:
-                cond = F.col(cols[0]).isin(nodes)
-                for c in cols[1:]:
-                    cond = cond | F.col(c).isin(nodes)
-                return frame.where(cond)
-            parts = [
+                return frame.where(F.col("subj").isin(nodes) | F.col("obj").isin(nodes))
+            return functools.reduce(DataFrame.unionByName, (
                 frame.join(nodes_df, frame[c] == nodes_df["n"], "leftsemi")
-                for c in cols
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+                for c in ("subj", "obj")
+            ))
 
-        def node_cond(tm: TriplesMap) -> Column | None:
-            """Source filter implied by 'this map's SUBJECT is in
-            nodes', when provably exact; none in the semi-join regime."""
-            src = self._scan(tm) if use_keys else None
-            return None if src is None else _nodes_filter(src, tm.subject_map, nodes)
-
-        def parent_filtered_catalog(tm: TriplesMap, bound: _Bound) -> SourceCatalog:
-            """Catalog with each kept RefObjectMap's PARENT source
-            filtered to the node keys (the parent subject IS the
-            described object, so only key-matched parent rows can join
-            into a kept triple) — never the map's own source, whose
-            child rows are unconstrained, and never the parent of a
-            collection, whose every member labels the collection's
-            blank nodes."""
-            own = self.catalog.table_of(tm.logical_source)
-            # parent table -> pushdown conds (None poisons the table)
-            conds: dict[str, list[Column | None]] = {}
-            for _i, pom in bound.poms:
-                for rom in pom.ref_object_maps:
-                    ptm = self.doc.triples_maps[rom.parent_triples_map]
-                    ptable = self.catalog.table_of(ptm.logical_source)
-                    if ptable is None or ptable == own:
-                        continue
-                    conds.setdefault(ptable, []).append(
-                        None if rom.collection_term_type() else node_cond(ptm)
-                    )
-            cat = self.catalog
-            for ptable, cs in conds.items():
-                if all(c is not None for c in cs):
-                    cat = cat.filtered(ptable, functools.reduce(Column.__or__, cs))
-            return cat
-
-        frames: list[DataFrame] = []
-
-        def add(tm, bound, catalog, cols=("subj", "obj")) -> None:
-            frame = self._compile_tm(tm, bound, catalog)
-            if frame is not None:
-                frames.append(node_restrict(frame, cols))
+        def node_keys(tm: TriplesMap, keyed: bool) -> tuple[str | None, Column | None]:
+            """(table, scan filter) implied by 'this map's SUBJECT is a
+            node', the filter None unless ``keyed`` and provably exact;
+            none in the semi-join regime."""
+            src = self._scan(tm) if keyed and use_keys else None
+            return self.catalog.table_of(tm.logical_source), (
+                None if src is None else _nodes_filter(src, tm.subject_map, nodes)
+            )
 
         # a binding whose branches the translator covers answers from
         # key-filtered source scans and joins (translate.py), never a
@@ -1462,48 +1406,43 @@ class VirtualGraph(Graph):
             from .translate import _Translator
 
             tx = _Translator(self)
+        frames: list[DataFrame] = []
         translated = []
         for tm in self.doc.triples_maps.values():
-            as_subj = _bind(self.doc, tm, nodes, None, None, self.options)
-            as_obj = _bind(self.doc, tm, None, None, nodes, self.options)
-            # each binding the translator covers is answered there; only
-            # a refused one goes on to the compile below
-            bounds = {"s": as_subj, "o": as_obj}
-            for pos, bound in bounds.items():
+            bindings = []
+            for pos, bound in (
+                ("s", _bind(self.doc, tm, nodes, None, None, self.options)),
+                ("o", _bind(self.doc, tm, None, None, nodes, self.options)),
+            ):
                 got = None if tx is None or bound is None else tx.describe(
                     tm, pos, bound, tuple(nodes)
                 )
                 if got is not None:
                     translated += got
-                    bounds[pos] = None
-            as_subj, as_obj = bounds["s"], bounds["o"]
-            if as_subj is None and as_obj is None:
-                continue
-            if as_subj is None:
-                add(tm, as_obj, parent_filtered_catalog(tm, as_obj))
-                continue
-            # the nodes can be this map's subjects: push the inverted
-            # node keys into the map's own scan when provably exact — a
-            # k-node DESCRIBE then scans O(k) source rows, not the
-            # table. Blank nodes can't be inverted (content-derived),
-            # and a self-join ROM parent reading the same table must
-            # not be starved.
-            table = self.catalog.table_of(tm.logical_source)
-            cond = None if has_bnode else node_cond(tm)
-            if cond is not None and self._rom_parent_reads(tm, table):
-                cond = None
-            if cond is None:
-                if as_obj is not None:
-                    as_subj = _merge_bounds(tm, [as_subj, as_obj])
-                add(tm, as_subj, self.catalog)
-                continue
-            add(tm, as_subj, self.catalog.filtered(table, cond))
-            # rows whose OBJECT is a node but whose subject is not were
-            # dropped by the subject-key scan filter: compile the
-            # object-emitting branches separately (own scan unfiltered,
-            # parents key-filtered)
-            if as_obj is not None:
-                add(tm, as_obj, parent_filtered_catalog(tm, as_obj), ("obj",))
+                elif bound is None:
+                    continue
+                elif pos == "s":
+                    # the nodes as this map's subjects: its own source
+                    # filtered to their keys (a blank node has none, and
+                    # a collection cell has a blank-node subject)
+                    bindings.append((bound, [node_keys(tm, not has_bnode)]))
+                else:
+                    # the nodes as objects: each RefObjectMap's parent
+                    # source filtered to their keys — but not a
+                    # collection's parent, whose every member labels the
+                    # collection's blank nodes
+                    bindings.append((bound, [
+                        node_keys(
+                            self.doc.triples_maps[rom.parent_triples_map],
+                            not rom.collection_term_type(),
+                        )
+                        for _i, pom in bound.poms
+                        for rom in pom.ref_object_maps
+                    ]))
+            if bindings:
+                frame = self._compile_bindings(tm, bindings)
+                if frame is not None:
+                    frames.append(node_restrict(frame))
         if not frames and not translated:
             return self.spark.createDataFrame(
                 [], "subj string, pred string, obj string"

@@ -337,3 +337,35 @@ def test_optional_takes_the_fragment_path(spark, relational):
         assert len(calls) == 1
     finally:
         vg.release()
+
+
+def _compiled_maps(vg) -> list[str]:
+    """Record the triples-map name of each ``vg._compile_tm`` call."""
+    names: list[str] = []
+    original = vg._compile_tm
+    vg._compile_tm = lambda tm, *a, **k: names.append(tm.name) or original(tm, *a, **k)
+    return names
+
+
+def test_union_of_constant_subjects_compiles_the_map_once(spark, relational):
+    """Two UNION branches bind ``TMOrder`` with different constant
+    subjects: one compile, over one ``orders`` scan filtered by the OR
+    of both keys."""
+    doc, catalog, triples = relational
+    q = (ONT + "SELECT ?s WHERE { { <http://example.org/order/1> ex:status ?s } "
+         "UNION { <http://example.org/order/2> ex:status ?s } }")
+    vg = VirtualGraph(spark, doc, catalog)
+    compiled = _compiled_maps(vg)
+    try:
+        out = vg.select(q)
+        assert compiled == ["#TMOrder"]
+        scans, plan = _plan_scans(out)
+        (orders,) = [b for b in scans if "/orders]" in b]
+        pushed = re.search(r"PushedFilters: \[(.*)\]", orders).group(1)
+        assert re.search(r"o_orderkey,1\b", pushed), orders
+        assert re.search(r"o_orderkey,2\b", pushed), orders
+        got = _rows(out)
+        assert got == _rows(sparql_select(triples, q))
+        assert len(got) == 2
+    finally:
+        vg.release()

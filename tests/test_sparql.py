@@ -535,8 +535,33 @@ def test_sparql_endpoint(spark, triples):
             raise AssertionError("expected HTTP 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400
+        # a malformed POST -> 400, not a dropped connection
+        for length, body in (("abc", b"ASK {}"), ("-1", b"ASK {}"),
+                             ("3", b"\xff\xfe\xfd")):
+            status = _raw_post(ep.port, length, body).split(b"\r\n", 1)[0]
+            assert status.split()[1:2] == [b"400"], (length, body, status)
     finally:
         ep.stop()
+
+
+def _raw_post(port: int, length: str, body: bytes) -> bytes:
+    """The whole reply to a raw sparql-query POST with the given
+    ``Content-Length`` header and body; the request side is shut after
+    the body, so a server that reads to the end sees it end."""
+    import socket
+
+    head = (
+        "POST /sparql HTTP/1.1\r\nHost: localhost\r\n"
+        "Content-Type: application/sparql-query\r\n"
+        f"Content-Length: {length}\r\n\r\n"
+    )
+    with socket.create_connection(("127.0.0.1", port), timeout=30) as sock:
+        sock.sendall(head.encode() + body)
+        sock.shutdown(socket.SHUT_WR)
+        reply = b""
+        while chunk := sock.recv(4096):
+            reply += chunk
+    return reply
 
 
 def test_bind_expression(triples):

@@ -519,7 +519,7 @@ def test_rdf_list_patterns_bind_collection_pom(spark):
 # differential: virtual vs materialized on randomized sources + queries
 # ---------------------------------------------------------------------------
 
-from hypothesis import given, settings, strategies as st  # noqa: E402
+from hypothesis import example, given, settings, strategies as st  # noqa: E402
 
 _NAMES = ["alice", "bob", "x y", "née", ""]
 
@@ -542,10 +542,16 @@ _NAMES = ["alice", "bob", "x y", "née", ""]
         max_size=4,
         unique_by=lambda r: r[0],
     ),
-    qidx=st.integers(min_value=0, max_value=7),
+    qidx=st.integers(min_value=0, max_value=9),
     const_id=st.integers(min_value=0, max_value=6),
     const_name=st.sampled_from(_NAMES),
 )
+# the two shapes that compile one map once run on every pass: both
+# constant subjects name a row, and two rows share a name
+@example(emp_rows=[(1, "bob", 90, 1), (2, "bob", 120, 2), (3, "alice", 95, 9)],
+         dept_rows=[(1, "alice")], qidx=8, const_id=1, const_name="bob")
+@example(emp_rows=[(1, "bob", 90, 1), (2, "bob", 120, 2), (3, "alice", 95, 9)],
+         dept_rows=[(1, "alice")], qidx=9, const_id=1, const_name="bob")
 def _virtual_differential(spark, emp_rows, dept_rows, qidx, const_id, const_name):
     emp = spark.createDataFrame(
         emp_rows or [(None, None, None, None)],
@@ -584,6 +590,19 @@ def _virtual_differential(spark, emp_rows, dept_rows, qidx, const_id, const_name
         PREFIX
         + f"SELECT ?dn WHERE {{ <http://example.org/emp/{const_id}> "
         "ex:dept/ex:deptName ?dn }",
+        # two constant subjects on one map: one compile, OR-ed key filter
+        PREFIX
+        + f"""SELECT ?n WHERE {{
+            {{ <http://example.org/emp/{const_id}> ex:name ?n }} UNION
+            {{ <http://example.org/emp/{(const_id + 1) % 7}> ex:salary ?n }}
+        }}""",
+        # a constant subject and variable patterns on one map: one
+        # compile over the whole table
+        PREFIX
+        + f"""SELECT ?n ?e ?s WHERE {{
+            <http://example.org/emp/{const_id}> ex:name ?n
+            OPTIONAL {{ ?e ex:name ?n . ?e ex:salary ?s }}
+        }}""",
     ]
     q = queries[qidx]
     triples = MappingCompiler(spark, doc, catalog).triples()
@@ -2191,6 +2210,52 @@ def _doc_describe_differential(spark, rows, qidx, cut, bound):
 
 def test_differential_doc_describe(spark):
     _doc_describe_differential(spark)
+
+
+BOSS_TTL = """\
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix ex:  <http://example.org/ontology#> .
+
+<#TMEmp>
+    xrr:logicalSource [ xrr:query "db.staff.find({})" ];
+    rr:subjectMap [ rr:template "http://example.org/emp/{$.id}" ];
+    rr:predicateObjectMap [
+        rr:predicate ex:name; rr:objectMap [ xrr:reference "$.name" ] ];
+    rr:predicateObjectMap [
+        rr:predicate ex:boss;
+        rr:objectMap [ rr:template "http://example.org/emp/{$.boss}" ] ];
+    .
+"""
+
+
+def test_describe_fallback_compiles_a_document_map_once(spark):
+    """The nodes are both subjects and objects of one document map, so
+    its subject binding (filtered to the node keys) and its object
+    binding (reading every document) are one compile over the whole
+    collection, restricted to the nodes afterwards."""
+    import json as _json
+
+    from morph_xr2rml_spark.sparql.bgp import sparql_describe
+
+    docs = [{"id": 1, "name": "a"}] + [
+        {"id": i, "name": n, "boss": b}
+        for i, n, b in ((2, "b", 1), (3, "c", 2), (4, "d", 2), (5, "e", 4), (6, "f", 4))
+    ]
+    df = spark.createDataFrame([(_json.dumps(d),) for d in docs], "doc string")
+    catalog = SourceCatalog(spark).register("staff", df, doc_column="doc")
+    doc = parse_mapping(BOSS_TTL, default_formulation="JSONPath")
+    q = "DESCRIBE <http://example.org/emp/2>"
+    comp = MappingCompiler(spark, doc, catalog)
+    vg = VirtualGraph(spark, doc, catalog)
+    try:
+        got = _rows(vg.describe(q))
+        assert len(vg._compilers) == 1
+        assert got == _rows(sparql_describe(comp.triples(), q))
+        assert len(got) == 4
+    finally:
+        comp.release()
+        vg.release()
 
 
 DOC_GRAPHS_TTL = """\
