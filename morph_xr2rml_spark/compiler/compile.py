@@ -35,7 +35,7 @@ MorphRDBDataTranslator.scala:85, MorphMongoDataTranslator.scala:82):
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 from ..functions import encoding as _encoding
 from ..functions import terms
 from ..functions.encoding import encode_reserved_chars_col
-from ..functions.paths import MixedSyntaxPath
+from ..functions.paths import MixedSyntaxPath, simple_json_field
 from ..functions.templates import get_template_groups, template_parts
 from ..mapping.model import (
     COLUMN,
@@ -57,7 +57,7 @@ from ..mapping.model import (
     TermMap,
     TriplesMap,
 )
-from ..sources.catalog import SourceCatalog
+from ..sources.catalog import SourceCatalog, typed_column
 from . import udfs
 from .collections import dedup_collections, expand_collections_split
 
@@ -160,6 +160,56 @@ def _separators_unambiguous(parts: list) -> bool:
                 return False
             prev_was_group = False
     return True
+
+
+def json_fields(term_map: TermMap) -> list[str] | None:
+    """The simple JSONPath fields (:func:`..functions.paths.simple_json_field`)
+    a JSONPath reference or template reads, in group order; None when
+    one of its references is not one, or for any other term map."""
+    if term_map.ref_formulation != "JSONPath" or term_map.kind not in (
+        REFERENCE, TEMPLATE,
+    ):
+        return None
+    if term_map.kind == REFERENCE:
+        refs = [term_map.reference]
+    elif any(
+        isinstance(p, str) and set(p) & set("{}\\")
+        for p in template_parts(term_map.template)
+    ):
+        return None  # escaped braces: the template is not rebuilt from parts
+    else:
+        refs = get_template_groups(term_map.template)
+    fields = [simple_json_field(udfs.rewrite_mongo_id(r)) for r in refs]
+    return None if None in fields else fields
+
+
+def typed_term_map(term_map: TermMap, df: DataFrame) -> TermMap:
+    """``term_map`` reading the typed columns of its JSONPath fields
+    (:func:`..sources.catalog.typed_column`) in Column formulation, when
+    ``df`` has every one of them; else ``term_map`` itself. A
+    reference becomes an ``rr:column``, a template's groups name the
+    columns. The catalog adds a field's column only where its proof
+    shows that the native term builders render it exactly as the
+    pure-Python evaluators do (:meth:`SourceCatalog.typed_fields`), so
+    this is the one rewrite from document maps to the column code: the
+    compiler's native terms, and the translator's key filters, joins on
+    source columns and self-join elimination."""
+    fields = json_fields(term_map)
+    if fields is None:
+        return term_map
+    cols = [typed_column(f) for f in fields]
+    if not set(cols) <= set(df.columns):
+        return term_map
+    if term_map.kind == REFERENCE:
+        return replace(
+            term_map, kind=COLUMN, column=cols[0], reference=None,
+            ref_formulation="Column",
+        )
+    text = "".join(
+        p if isinstance(p, str) else "{" + cols[p] + "}"
+        for p in template_parts(term_map.template)
+    )
+    return replace(term_map, template=text, ref_formulation="Column")
 
 
 @dataclass
@@ -785,12 +835,38 @@ class MappingCompiler:
     # source resolution
     # ------------------------------------------------------------------
 
+    def json_paths(self, table: str | None) -> tuple[set[str], set[str]]:
+        """The simple JSONPath fields that the term maps of the mapping's
+        iterator-free JSONPath triples maps over ``table`` read, and
+        those their subject maps read: the fields a compile asks the
+        catalog to prove typed, and those the translator also asks to
+        prove unique (:meth:`SourceCatalog.typed_fields`)."""
+        paths: set[str] = set()
+        keys: set[str] = set()
+        for tm in self.doc.triples_maps.values():
+            ls = tm.logical_source
+            if (
+                table is None or ls.formulation != "JSONPath" or ls.iterator
+                or self.catalog.table_of(ls) != table
+            ):
+                continue
+            sm = tm.subject_map
+            keys.update(json_fields(sm) or ())
+            maps = [sm, *sm.graph_maps]
+            for pom in tm.predicate_object_maps:
+                maps += [*pom.predicate_maps, *pom.object_maps, *pom.graph_maps]
+            for m in maps:
+                paths.update(json_fields(m) or ())
+        return paths, keys
+
     def _resolved_base(self, tm: TriplesMap) -> tuple[DataFrame, str | None]:
         key = tm.name
         if key in self._source_cache:
             return self._source_cache[key]
         ls = tm.logical_source
-        df, doc_col = self.catalog.resolve(ls)
+        # below an iterator, references are read in the sub-documents
+        paths = () if ls.iterator else self.json_paths(self.catalog.table_of(ls))[0]
+        df, doc_col = self.catalog.resolve(ls, paths)
         if ls.iterator and doc_col is not None:
             it_udf = udfs.make_array_udf(
                 udfs.iterator_evaluator(ls.iterator, ls.formulation)
@@ -821,6 +897,7 @@ class MappingCompiler:
         self, term_map: TermMap, df: DataFrame, doc_col: str | None
     ) -> _TermExpr:
         opts = self.options
+        term_map = typed_term_map(term_map, df)
         member_tt, datatype, language = term_map.member_term_info()
 
         if term_map.kind == CONSTANT:

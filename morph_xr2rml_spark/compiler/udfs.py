@@ -1,6 +1,9 @@
 """Pandas-UDF term evaluation — the slow path, used only where built-in
 column functions cannot express the semantics (multi-valued mixed-syntax
-paths, JSONPath/XPath references, templates with multi-valued groups).
+paths, XPath references, templates with multi-valued groups, and the
+JSONPath references the source catalog does not prove to be typed
+columns: a simple field whose values are all non-empty strings or all
+integers is read natively, see ``SourceCatalog.typed_fields``).
 
 Each UDF maps one Arrow batch of source values to lists of *final*
 N-Triples term strings (ArrayType(StringType)); the surrounding plan
@@ -146,15 +149,16 @@ def template_evaluator(
         replacements: list[list[object]] = []
         all_empty = True
         for gi, msp in enumerate(msps):
-            values = msp.evaluate(_py_value(cells[group_input[gi]]))
+            values = [
+                _py_value(v) for v in msp.evaluate(_py_value(cells[group_input[gi]]))
+            ]
             values = [v for v in values if v is not None]
             if member_tt == terms.TERM_IRI and encode_unsafe_chars_in_db_values:
                 # encodeResvdCharsIfUri per replacement value
                 values = [
-                    encoding.encode_reserved_chars(str(_py_value(v))) for v in values
+                    encoding.encode_reserved_chars(terms.lex_value_to_string(v))
+                    for v in values
                 ]
-            else:
-                values = [_py_value(v) for v in values]
             if values:
                 all_empty = False
             replacements.append(values)

@@ -23,6 +23,7 @@ import itertools
 import re
 
 from .paths import MIXED_SYNTAX_PATH_RE, MixedSyntaxPath, REFFORMULATION_COLUMN
+from .terms import lex_value_to_string
 
 _PLACEHOLDER = "xR2RML_replacer"
 _GROUP_RE = re.compile(r"\{([^{}]+)\}")
@@ -75,7 +76,9 @@ def replace_template_groups(
     template: str, replacements: list[list[object]]
 ) -> list[str]:
     """Expand the template with the Cartesian product of group values
-    (replaceTemplateGroups :148-202).
+    (replaceTemplateGroups :148-202), each rendered by Java toString
+    conventions (:func:`.terms.lex_value_to_string`: ``true``, not
+    Python's ``True``).
 
     Mirrors the reference edge cases: no replacements, or more groups than
     replacement lists => [template] unchanged.
@@ -93,7 +96,7 @@ def replace_template_groups(
         prev_end = 0
         for gi, m in enumerate(group_spans):
             buf.append(masked[prev_end : m.start()])
-            buf.append(str(combo[gi]))
+            buf.append(lex_value_to_string(combo[gi]))
             prev_end = m.end()
         # The reference appends the tail only when appendIdx < len-1 — a
         # subtle off-by-one that drops a single trailing char after the last

@@ -29,11 +29,13 @@ import functools
 import json
 import operator
 import re
+from collections.abc import Iterable
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..mapping.model import LogicalSource
 
@@ -93,6 +95,35 @@ def _parse_find_json(q: str) -> dict:
         raise ValueError(f"cannot parse MongoDB find() query: {q!r}") from e
 
 
+# variant kinds (schema_of_variant) read exactly as a bigint column
+_INTEGRAL_KINDS = frozenset({"TINYINT", "SMALLINT", "INT", "BIGINT"})
+
+# a \uD800-\uDFFF escape that is not half of a surrogate pair: json.loads
+# keeps it as a lone surrogate, try_parse_json reads it as '?' (an
+# escaped backslash before it also matches: such a document is only
+# left to the evaluators)
+_LONE_SURROGATE = (
+    r"\\u[dD][89abAB][0-9a-fA-F]{2}(?!\\u[dD][c-fC-F][0-9a-fA-F]{2})"
+    r"|(?<!\\u[dD][89abAB][0-9a-fA-F]{2})\\u[dD][c-fC-F][0-9a-fA-F]{2}"
+)
+
+
+def typed_column(field: str) -> str:
+    """The column :meth:`SourceCatalog.resolve` adds for the proven
+    simple JSONPath field ``field`` (``a.b``, for ``$.a.b``): ``$a$b``,
+    a name that no field path shares (fields hold no ``$``) and that
+    ``F.col`` and template groups take as it is."""
+    return "$" + field.replace(".", "$")
+
+
+class TypedField(NamedTuple):
+    """What :meth:`SourceCatalog.typed_fields` proves of one JSONPath
+    field of a document source."""
+
+    type: str | None  # 'string' | 'bigint'; None: left to the evaluators
+    unique: bool | None  # no two documents share a value; None: not asked
+
+
 class RawSource(NamedTuple):
     """What a logical source scans before :meth:`SourceCatalog.resolve`
     applies find() predicates or synthesizes a document column: the
@@ -118,6 +149,10 @@ class SourceCatalog:
                     The compiler uses it to prove per-row distinctness
                     of emitted triples and elide set-dedup shuffles
                     entirely (S8); the caller asserts its truth.
+
+    A document source also carries, once a compile first asks for it,
+    the proof of which JSONPath fields are typed columns
+    (:meth:`typed_fields`).
     """
 
     def __init__(
@@ -130,6 +165,10 @@ class SourceCatalog:
         self.tables = dict(tables or {})
         self.doc_columns = dict(doc_columns or {})
         self.unique_keys: dict[str, tuple[str, ...]] = {}
+        # name -> {field: TypedField}, shared with the filtered()
+        # copies, which prove over the unfiltered frame kept in _bases
+        self._proofs: dict[str, dict[str, TypedField]] = {}
+        self._bases: dict[str, DataFrame] = {}
 
     def register(
         self,
@@ -143,6 +182,9 @@ class SourceCatalog:
             self.doc_columns[name] = doc_column
         if unique_key:
             self.unique_keys[name] = tuple(unique_key)
+        # a new dict: filtered() copies keep the proofs of their frames
+        self._proofs = {k: v for k, v in self._proofs.items() if k != name}
+        self._bases.pop(name, None)
         return self
 
     def _table(self, name: str) -> DataFrame:
@@ -192,13 +234,113 @@ class SourceCatalog:
         rows matching ``cond``; every other entry is shared."""
         cat = SourceCatalog(self.spark, self.tables, self.doc_columns)
         cat.unique_keys = dict(self.unique_keys)
+        # a proof over the table holds for any filter of it
+        cat._proofs = self._proofs
+        cat._bases = {**self._bases, name: self._base(name)}
         cat.tables[name] = self._table(name).filter(cond)
         return cat
 
-    def resolve(self, ls: LogicalSource) -> tuple[DataFrame, str | None]:
+    def typed_fields(
+        self, name: str, paths: Iterable[str], keys: Iterable[str] = ()
+    ) -> dict[str, TypedField]:
+        """The simple JSONPath fields among ``paths`` (``a.b`` for
+        ``$.a.b``) that document source ``name`` proves to be typed
+        columns, each with its type, ``'string'`` or ``'bigint'``, and,
+        for the fields of ``keys``, whether it is unique.
+
+        One aggregate job over the unfiltered table parses each
+        document once with ``try_parse_json`` and takes, per field, the
+        merged kind of its values (``schema_of_variant_agg``) and the
+        count of its empty strings. It also counts the documents the
+        pure-Python evaluators read differently: JSON that
+        ``try_parse_json`` rejects (invalid text, duplicate keys,
+        ``NaN``), that is followed by more text, which it ignores and
+        ``json.loads`` rejects, or that escapes a lone surrogate, which
+        it reads as ``?``. A field is typed when no document is
+        such, and its kind is ``STRING`` with no empty string (a native
+        template drops an all-empty term, the evaluator keeps it) or
+        integral; a field missing or null everywhere is a string column
+        of nulls. Decimals, doubles, booleans, objects, arrays and mixed
+        kinds stay with the evaluators: Python's float and boolean
+        printing and its key order have no exact native rendering.
+        A field of ``keys`` is unique when no two documents share a
+        non-null value (``count_distinct = count``, a second aggregate
+        in the same job): it is then a row key of the source, as a
+        registered ``unique_key`` is, and of any filter of it.
+
+        Memoized per field: a later call proves only fields no earlier
+        call has, or the uniqueness of typed fields no earlier call
+        asked."""
+        proven = self._proofs.setdefault(name, {})
+        keys = set(keys)
+        fields = set(paths) | keys
+        todo = sorted(
+            p for p in fields
+            if p not in proven
+            or p in keys and proven[p].type and proven[p].unique is None
+        )
+        if todo:
+            df = self._base(name)
+            doc_col = self._doc_column(name, df)
+            if doc_col not in df.columns or not isinstance(
+                df.schema[doc_col].dataType, T.StringType
+            ):
+                proven.update(dict.fromkeys(todo, TypedField(None, None)))
+                return {}
+            # parsed once per document: Catalyst keeps an expensive
+            # column that several aggregates read in the Project below
+            df = df.select(F.col(doc_col).alias("doc"), F.try_parse_json(doc_col).alias("v"))
+            doc, v = F.col("doc"), F.col("v")
+            # a lenient parse stops after the first value: wrapped in an
+            # array and in an object, the document must be one element
+            # and one member, so no text follows the value
+            whole = (
+                (F.json_array_length(F.concat(F.lit("["), doc, F.lit("]"))) == 1)
+                & (F.size(F.json_object_keys(F.concat(F.lit('{"k":'), doc, F.lit("}")))) == 1)
+            )
+            rejected = doc.isNotNull() & ~F.coalesce(
+                v.isNotNull() & whole & ~doc.rlike(_LONE_SURROGATE), F.lit(False)
+            )
+            text = {p: F.try_variant_get(v, "$." + p, "string") for p in todo}
+            proof = df.select(
+                F.count_if(rejected),
+                *[F.schema_of_variant_agg(F.variant_get(v, "$." + p, "variant")) for p in todo],
+                *[F.count_if(text[p] == "") for p in todo],
+            )
+            ask = [p for p in todo if p in keys]
+            if ask:
+                # its own aggregate, joined to the one row of the kinds:
+                # in one, every distinct value would keep kind buffers
+                # (a typed value is one kind, which renders injectively)
+                proof = proof.crossJoin(df.select(
+                    *[F.count_distinct(text[p]) == F.count(text[p]) for p in ask]
+                ))
+            row = proof.first()
+            n = len(todo)
+            unique = dict(zip(ask, row[2 * n + 1 :]))
+            for p, kind, empty in zip(todo, row[1 : n + 1], row[n + 1 : 2 * n + 1]):
+                typed = None
+                if row[0] == 0 and kind in _INTEGRAL_KINDS:
+                    typed = "bigint"
+                elif row[0] == 0 and (kind == "VOID" or kind == "STRING" and not empty):
+                    typed = "string"
+                proven[p] = TypedField(typed, unique.get(p))
+        return {p: proven[p] for p in fields if proven[p].type}
+
+    def _base(self, name: str) -> DataFrame:
+        """The unfiltered frame of ``name``, which its proofs read."""
+        return self._bases[name] if name in self._bases else self._table(name)
+
+    def resolve(
+        self, ls: LogicalSource, paths: Iterable[str] = (), keys: Iterable[str] = ()
+    ) -> tuple[DataFrame, str | None]:
         """Return (DataFrame, doc_column) for a logical source.
 
         doc_column is None for row-shaped (Column-formulation) sources.
+        For a JSONPath source with its own document column, each field
+        of ``paths`` that :meth:`typed_fields` proves becomes the column
+        :func:`typed_column` (``variant_get`` of the parsed document);
+        ``keys`` are the fields whose uniqueness the same proof takes.
         """
         name = self.table_of(ls)
         if name is None:
@@ -229,6 +371,18 @@ class SourceCatalog:
         if doc_col is None:
             df = df.withColumn("__doc__", F.to_json(F.struct(*df.columns)))
             doc_col = "__doc__"
+        elif name is not None and ls.formulation == "JSONPath" and paths:
+            typed = self.typed_fields(name, paths, keys)
+            if typed:
+                # the parsed document comes out of a Generate, one row
+                # per row: a Filter on typed columns stops above it,
+                # where pushed below a Project it would parse the
+                # document again for each column it reads
+                df = df.select("*", F.explode(F.array(F.try_parse_json(doc_col))).alias("$"))
+                df = df.withColumns({
+                    typed_column(p): F.variant_get("$", "$." + p, f.type)
+                    for p, f in sorted(typed.items())
+                }).drop("$")
         return df, doc_col
 
     def _apply_find_predicate(self, df: DataFrame, name: str, query: str) -> DataFrame:

@@ -48,14 +48,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..compiler.collections import collection_heads
-from ..compiler.compile import MappingCompiler, _TermExpr
+from ..compiler.compile import MappingCompiler, _TermExpr, json_fields, typed_term_map
 from ..functions import terms
 from ..functions.paths import MixedSyntaxPath
 from ..functions.templates import get_template_groups, template_parts
 from ..mapping.model import (
     COLUMN, CONSTANT, REFERENCE, TEMPLATE, RefObjectMap, TermMap, TriplesMap,
 )
-from ..sources.catalog import RawSource
+from ..sources.catalog import RawSource, typed_column
 from .parse import FilterNode, Path, SelectQuery, TriplePattern, _is_var
 from .virtual import (
     _NOT_THIS,
@@ -106,10 +106,11 @@ class _Branch(NamedTuple):
 
 @dataclass
 class _Scan:
-    """One scan of a registered table, with the filters (over the raw
-    columns) that every row it contributes passes."""
+    """One scan of a logical source (:meth:`_Translator.source`), with
+    the filters (over its columns) that every row it contributes
+    passes."""
 
-    table: str
+    table: tuple[str, ...]
     raw: DataFrame
     keys: tuple[tuple[str, ...], ...]
     filters: list[Column] = field(default_factory=list)
@@ -261,8 +262,8 @@ class _Query:
         return i
 
     def scan(self, tm: TriplesMap) -> int:
-        src = self.tx.catalog.raw_source(tm.logical_source)
-        self.items.append(_Scan(src.table, src.frame, self.tx.compiler.unique_keys(tm)))
+        table, frame = self.tx.source(tm)
+        self.items.append(_Scan(table, frame, self.tx.compiler.unique_keys(tm)))
         return len(self.items) - 1
 
     def built(self, df: DataFrame) -> dict[str, _Built]:
@@ -290,7 +291,7 @@ class _Query:
         )
         if not consts:
             return False
-        pushed = _nodes_filter(RawSource(scan.table, scan.raw, None), tm, consts)
+        pushed = _nodes_filter(RawSource(scan.table[1], scan.raw, None), tm, consts)
         if pushed is not None:
             scan.filters.append(pushed)
             scan.keyed = True
@@ -457,6 +458,8 @@ class _Translator:
         self.options = vg.options
         # every scan reads only the rows a constant's key selects
         self.keyed = True
+        self._sources: dict[str, tuple[tuple[str, ...], DataFrame] | None] = {}
+        self._views: dict[str, TriplesMap | None] = {}
 
     @functools.cached_property
     def compiler(self) -> MappingCompiler:
@@ -475,8 +478,65 @@ class _Translator:
             self.vg._terms[key] = expr
         return expr
 
+    def source(self, tm: TriplesMap) -> tuple[tuple[str, ...], DataFrame] | None:
+        """The identity and the frame of the scan of ``tm``'s logical
+        source: a registered Column-formulation table, or an
+        iterator-free document source over a registered table, as
+        :meth:`SourceCatalog.resolve` shapes it (find() predicate
+        applied, proven JSONPath fields as typed columns); None for
+        any other source."""
+        if tm.name not in self._sources:
+            ls = self.doc.triples_maps[tm.name].logical_source
+            src = None if ls.iterator else self.catalog.raw_source(ls)
+            out = None
+            if src is not None and ls.formulation == "Column" and ls.kind == "table":
+                out = (ls.kind, ls.value, ls.formulation), src.frame
+            elif src is not None and ls.formulation == "JSONPath":
+                paths, keys = self.compiler.json_paths(src.table)
+                out = (ls.kind, ls.value, ls.formulation), self.catalog.resolve(
+                    ls, paths, keys
+                )[0]
+            self._sources[tm.name] = out
+        return self._sources[tm.name]
+
     def raw(self, tm: TriplesMap) -> DataFrame:
-        return self.catalog.raw_source(tm.logical_source).frame
+        return self.source(tm)[1]
+
+    def typed(self, tm: TriplesMap, m: TermMap) -> TermMap:
+        """Term map ``m`` of ``tm`` over the typed columns of its source
+        (:func:`.compile.typed_term_map`)."""
+        return typed_term_map(m, self.raw(tm))
+
+    def view(self, tm: TriplesMap) -> TriplesMap | None:
+        """``tm`` as the translator reads it: its subject map over typed
+        columns, its unique references the typed ones, declared or
+        proven (the subject's fields :meth:`SourceCatalog.typed_fields`
+        proves unique); None when its source is not one :meth:`source`
+        scans."""
+        if tm.name not in self._views:
+            view = None if self.source(tm) is None else tm
+            ls = tm.logical_source
+            if view is not None and ls.formulation == "JSONPath":
+                # a uniqueness claim on an untyped field is dropped
+                refs = [
+                    self.typed(tm, TermMap(REFERENCE, "subject", reference=r,
+                                           ref_formulation="JSONPath"))
+                    for r in ls.unique_refs
+                ]
+                name = self.catalog.table_of(ls)
+                proof = self.catalog.typed_fields(name, *self.compiler.json_paths(name))
+                unique = sorted(
+                    f for f in json_fields(tm.subject_map) or ()
+                    if f in proof and proof[f].unique
+                )
+                ls = replace(ls, formulation="Column", unique_refs=tuple(
+                    m.column for m in refs if m.kind == COLUMN
+                ) + tuple(typed_column(f) for f in unique))
+                view = replace(
+                    tm, logical_source=ls, subject_map=self.typed(tm, tm.subject_map)
+                )
+            self._views[tm.name] = view
+        return self._views[tm.name]
 
     # -- coverage -----------------------------------------------------------
 
@@ -484,15 +544,11 @@ class _Translator:
         return None not in cols and set(cols) <= set(self.raw(tm).columns)
 
     def _scans_ok(self, tm: TriplesMap, term_maps) -> bool:
-        """Is ``tm`` over a registered Column-formulation table, with no
-        iterator, slice or graph map, and are ``term_maps`` scalar maps
-        of its columns?"""
-        ls = tm.logical_source
+        """Is ``tm`` a :meth:`view`, with no slice or graph map, and are
+        ``term_maps`` scalar maps of its columns?"""
         if (
-            ls.kind != "table" or ls.formulation != "Column" or ls.iterator
-            or tm.name in self.options.limits or tm.name in self.options.offsets
+            tm.name in self.options.limits or tm.name in self.options.offsets
             or tm.subject_map.graph_maps
-            or self.catalog.raw_source(ls) is None
         ):
             return False
         return all(_columns(m) is not None and self._has(tm, _columns(m)) for m in term_maps)
@@ -500,22 +556,24 @@ class _Translator:
     def branches(self, tm: TriplesMap, bound, tp: TriplePattern) -> list[_Branch] | None:
         """The branches of a bound triples map that can match ``tp``;
         None when one of them is outside the covered shapes."""
-        if bound.cells or not self._scans_ok(tm, [tm.subject_map]):
+        tm = self.view(tm)
+        if tm is None or bound.cells or not self._scans_ok(tm, [tm.subject_map]):
             return None
         out = [_Branch(tm, _RDF_TYPE, terms.make_iri(c, False)) for c in bound.classes]
         for _i, pom in bound.poms:
             if pom.graph_maps or any(pm.kind != CONSTANT for pm in pom.predicate_maps):
                 return None
-            if not self._scans_ok(tm, pom.object_maps):
+            oms = [self.typed(tm, m) for m in pom.object_maps]
+            if not self._scans_ok(tm, oms):
                 return None
             for rom in pom.ref_object_maps:
-                ptm = self.doc.triples_maps[rom.parent_triples_map]
+                ptm = self.view(self.doc.triples_maps[rom.parent_triples_map])
                 cols = [
                     (_column(jc.child_ref), _column(jc.parent_ref))
                     for jc in rom.join_conditions
                 ]
                 if (
-                    not cols
+                    not cols or ptm is None
                     or not self._scans_ok(ptm, [ptm.subject_map])
                     or not self._has(tm, [c for c, _p in cols])
                     or not self._has(ptm, [p for _c, p in cols])
@@ -525,7 +583,7 @@ class _Translator:
                 pred = _constant_term(pm, self.options)
                 if not _is_var(tp.p) and pred != tp.p:
                     continue
-                out += [_Branch(tm, pred, m) for m in pom.object_maps + pom.ref_object_maps]
+                out += [_Branch(tm, pred, m) for m in oms + list(pom.ref_object_maps)]
         return out
 
     # -- binding reduction --------------------------------------------------
@@ -544,7 +602,7 @@ class _Translator:
         elif b.obj.collection_term_type():
             return None
         else:
-            m = self.doc.triples_maps[b.obj.parent_triples_map].subject_map
+            m = self.view(self.doc.triples_maps[b.obj.parent_triples_map]).subject_map
         return _constant_term(m, self.options) if m.kind == CONSTANT else m
 
     def _disjoint(self, a, b) -> bool:
@@ -612,14 +670,14 @@ class _Translator:
         if not c.rows_distinct(b.tm, *exprs):
             return False
         if isinstance(b.obj, RefObjectMap) and not b.obj.collection_term_type():
-            ptm = self.doc.triples_maps[b.obj.parent_triples_map]
+            ptm = self.view(self.doc.triples_maps[b.obj.parent_triples_map])
             return c.joins_one_parent(b.obj, self.term(ptm.subject_map, self.raw(ptm)))
         return True
 
     def _parent(self, q: _Query, a: int, rom: RefObjectMap):
         """Join the parent scan of ``rom`` to scan ``a`` on its join
         conditions; the representation of the parent's subject."""
-        ptm = self.doc.triples_maps[rom.parent_triples_map]
+        ptm = self.view(self.doc.triples_maps[rom.parent_triples_map])
         p = q.scan(ptm)
         child, parent = q.items[a].raw.schema, q.items[p].raw.schema
         for cc, pc, as_strings in self.compiler.join_columns(rom, child, parent):

@@ -18,6 +18,7 @@ from morph_xr2rml_spark import driver_contract as dc
 from morph_xr2rml_spark.compiler import MappingCompiler
 from morph_xr2rml_spark.mapping import parse_mapping
 from morph_xr2rml_spark.sources import SourceCatalog
+from morph_xr2rml_spark.sources.catalog import TypedField
 from morph_xr2rml_spark.sparql import VirtualGraph, sparql_select
 from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
@@ -367,5 +368,117 @@ def test_union_of_constant_subjects_compiles_the_map_once(spark, relational):
         got = _rows(out)
         assert got == _rows(sparql_select(triples, q))
         assert len(got) == 2
+    finally:
+        vg.release()
+
+
+# -- document sources whose JSONPath fields are proven typed columns --
+
+TXP = "PREFIX txp: <http://ex.org/txp/>\n"
+_TAXA_TTL = """
+@prefix rr:  <http://www.w3.org/ns/r2rml#> .
+@prefix xrr: <http://i3s.unice.fr/xr2rml#> .
+@prefix txp: <http://ex.org/txp/> .
+""" + "".join(f"""
+<#TMWide{i}>
+    xrr:logicalSource [ xrr:query "db.taxa.find({{}})";
+                        xrr:referenceFormulation xrr:JSONPath ];
+    rr:subjectMap [ rr:template "http://ex.org/taxon/m{i}/{{$.codeTaxon}}" ];
+    rr:predicateObjectMap [
+        rr:predicate txp:p{i}; rr:objectMap [ xrr:reference "$.f{i}" ] ];
+    rr:predicateObjectMap [
+        rr:predicate txp:taxon{i};
+        rr:objectMap [ rr:template "http://ex.org/taxon/{{$.codeTaxon}}" ] ];
+    rr:predicateObjectMap [
+        rr:predicate txp:mixed{i}; rr:objectMap [ xrr:reference "$.mixed" ] ] .
+""" for i in range(2))
+
+
+@pytest.fixture(scope="module")
+def taxa(spark, tmp_path_factory):
+    """A taxref-shaped document collection: ``codeTaxon`` and ``f0``/
+    ``f1`` are scalar everywhere, ``mixed`` holds numbers and strings."""
+    import json
+
+    path = str(tmp_path_factory.mktemp("taxa") / "taxa")
+    docs = [
+        json.dumps({"codeTaxon": t, "f0": f"a{t}", "f1": f"b{t}",
+                    "mixed": t if t % 2 else f"s{t}"})
+        for t in range(1, 41)
+    ]
+    spark.createDataFrame([(d,) for d in docs], "doc string").coalesce(1) \
+        .write.parquet(path)
+    catalog = SourceCatalog(spark).register("taxa", spark.read.parquet(path),
+                                            doc_column="doc")
+    doc = parse_mapping(_TAXA_TTL)
+    comp = MappingCompiler(spark, doc, catalog)
+    yield doc, catalog, comp.triples()
+    comp.release()
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_typed_document_query_is_translated_without_python(spark, taxa):
+    """``?t txp:p1 "v" . ?t txp:taxon1 ?x`` over typed fields: one
+    key-filtered scan, the self-join on ``codeTaxon`` eliminated since
+    the proof shows that no two documents share it, with no Python
+    stage and no exchange; a second query over the same catalog proves
+    nothing again."""
+    from test_job_counts import jobs_run
+
+    doc, catalog, triples = taxa
+    taxa_df = catalog.tables["taxa"]
+    paths, keys = MappingCompiler(spark, doc, catalog).json_paths("taxa")
+    assert keys == {"codeTaxon"}
+    with jobs_run(spark) as proof:
+        probe = SourceCatalog(spark).register("taxa", taxa_df, doc_column="doc")
+        # the translator proves the types, and the uniqueness of the
+        # fields of the subject maps, in one aggregate
+        proven = probe.typed_fields("taxa", paths, keys)
+    assert proven["codeTaxon"] == TypedField("bigint", True)
+    assert "mixed" not in proven
+    # a catalog of its own, so that its first query proves the fields
+    fresh = SourceCatalog(spark).register("taxa", taxa_df, doc_column="doc")
+    vg = VirtualGraph(spark, doc, fresh)
+    calls = _fragment_calls(vg)
+    try:
+        jobs = []
+        for value in ("b7", "b8"):
+            q = TXP + f'SELECT ?t ?x WHERE {{ ?t txp:p1 "{value}" . ?t txp:taxon1 ?x }}'
+            with jobs_run(spark) as run:
+                out = vg.select(q)
+                got = _rows(out)
+            jobs.append(len(run))
+            assert got == _rows(sparql_select(triples, q))
+            assert len(got) == 1
+            plan = _executed(out)
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+            assert "Exchange" not in plan and plan.count("Scan ") == 1, plan
+            # each document is parsed once, not once per typed column read
+            assert plan.count("parseJson(") == 1, plan
+        assert calls == []
+        # the proof runs in the first query only (one action: the kinds'
+        # aggregate joined to the uniqueness aggregate, whose exchanges
+        # and broadcast adaptive execution runs as jobs of their own)
+        assert 0 < len(proof) <= 5
+        assert jobs[0] == jobs[1] + len(proof) and jobs[1] == 1, (jobs, proof)
+    finally:
+        vg.release()
+
+
+def test_mixed_kind_path_keeps_its_udf(spark, taxa):
+    doc, catalog, triples = taxa
+    q = TXP + "SELECT ?t ?m WHERE { ?t txp:mixed0 ?m }"
+    vg = VirtualGraph(spark, doc, catalog)
+    calls = _fragment_calls(vg)
+    try:
+        out = vg.select(q)
+        got = _rows(out)
+        assert got == _rows(sparql_select(triples, q))
+        assert len(got) == 40
+        assert len(calls) == 1
+        assert "ArrowEvalPython" in _executed(out)
     finally:
         vg.release()

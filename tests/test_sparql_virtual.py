@@ -327,9 +327,11 @@ def kinds(request, spark, tmp_path_factory):
 def _key_pushed(spark, df, kind: str, key: str) -> tuple[bool, str]:
     """(whether a filter on the source key ``key`` runs at the scan, the
     formatted plan). A row source shows it as a parquet PushedFilter on
-    the column. A document source shows it as the get_json_object test
-    on the raw document in a Filter below the Python UDF that builds
-    the terms."""
+    the column. A document source shows it in the Filter right above
+    the scan, below every term construction (native or a Python UDF):
+    as the get_json_object test on the raw document, or, for a field
+    proven typed, as the comparison of its variant_get column with the
+    keys, right above the Generate that parses each document once."""
     fmt = spark._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -342,20 +344,13 @@ def _key_pushed(spark, df, kind: str, key: str) -> tuple[bool, str]:
         re.findall(r"^\((\d+)\) Filter.*\n.*\nCondition : (.*)$", fmt, re.M)
     )
     tree = fmt.split("\n\n\n")[0].splitlines()
-
-    def depth(line: str) -> int:
-        return re.search(r"[A-Za-z]", line).start()
-
-    for i, line in enumerate(tree):
-        if "EvalPython" not in line:
-            continue
-        for below in tree[i + 1:]:
-            if depth(below) <= depth(line):
-                break
-            m = re.search(r"Filter \((\d+)\)", below)
-            cond = conds.get(m.group(1), "") if m else ""
-            if "StartsWith(get_json_object(doc#" in cond and f"$.{key})" in cond:
-                return True, fmt
+    for line, below in zip(tree, tree[1:]):
+        m = re.search(r"Filter \((\d+)\)", line)
+        cond = conds.get(m.group(1), "") if m else ""
+        raw = "StartsWith(get_json_object(doc#" in cond and f"$.{key})" in cond
+        typed = re.search(rf"\$\.{key}, \w+Type, true, Some\(\w+\)\) (= |IN \(|INSET )", cond)
+        if raw and "Scan " in below or typed and "Generate" in below:
+            return True, fmt
     return False, fmt
 
 
@@ -2229,16 +2224,22 @@ BOSS_TTL = """\
 """
 
 
-def test_describe_fallback_compiles_a_document_map_once(spark):
+@pytest.mark.parametrize("first_id", [1, "1"], ids=["integer_ids", "mixed_kind_ids"])
+def test_describe_fallback_compiles_a_document_map_once(spark, first_id):
     """The nodes are both subjects and objects of one document map, so
     its subject binding (filtered to the node keys) and its object
     binding (reading every document) are one compile over the whole
-    collection, restricted to the nodes afterwards."""
+    collection, restricted to the nodes afterwards. That fallback is
+    taken when one ``id`` is a string and the others integers: the
+    source's proof leaves a mixed-kind field to the evaluators. With
+    integer ids only, the fields are typed columns and the DESCRIBE is
+    translated, with no compile. Both answer as materialize-then-
+    describe does."""
     import json as _json
 
     from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
-    docs = [{"id": 1, "name": "a"}] + [
+    docs = [{"id": first_id, "name": "a"}] + [
         {"id": i, "name": n, "boss": b}
         for i, n, b in ((2, "b", 1), (3, "c", 2), (4, "d", 2), (5, "e", 4), (6, "f", 4))
     ]
@@ -2250,7 +2251,7 @@ def test_describe_fallback_compiles_a_document_map_once(spark):
     vg = VirtualGraph(spark, doc, catalog)
     try:
         got = _rows(vg.describe(q))
-        assert len(vg._compilers) == 1
+        assert len(vg._compilers) == (1 if first_id == "1" else 0)
         assert got == _rows(sparql_describe(comp.triples(), q))
         assert len(got) == 4
     finally:
@@ -2520,9 +2521,9 @@ def _items(spark, n: int) -> SourceCatalog:
 @pytest.mark.parametrize("k", [65, VirtualGraph._ISIN_MAX])
 def test_doc_describe_node_keys_have_no_cap(spark, k):
     """A DESCRIBE of more than 64 IRIs over a find() collection still
-    filters the raw documents on the node keys, below the Python UDF
-    that builds the terms (the filter does not grow per key), and
-    answers as materialize-then-describe does."""
+    filters the documents on the node keys at the scan, below the
+    terms (the filter does not grow per key), and answers as
+    materialize-then-describe does."""
     from morph_xr2rml_spark.sparql.bgp import sparql_describe
 
     doc = parse_mapping(DOC_DESCRIBE_TTL, default_formulation="JSONPath")
